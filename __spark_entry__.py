@@ -5021,7 +5021,7 @@ def oracle_sql() -> dict[str, str]:
                      AS contaminated
             FROM agg
         """,
-        "robots_filter": """
+        "robots_filter": r"""
             WITH robots(host, robots_txt) AS (VALUES
               ('h0', 'User-agent: *' || chr(10) || 'Disallow: /private'
                      || chr(10) || 'Disallow: /tmp' || chr(10)),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .split import host_of
 
 __all__ = [
@@ -130,8 +131,8 @@ def distributed_rank(
     for b in sorted(counts):
         offsets[b] = acc
         acc += counts[b]
-    off_df = spark.createDataFrame(
-        [(b, o) for b, o in offsets.items()], "_bkt int, _off bigint"
+    off_df = local_frame(
+        spark, [(b, o) for b, o in offsets.items()], "_bkt int, _off bigint"
     )
     w = W.partitionBy("_bkt").orderBy(F.asc(score), F.asc(tiebreak))
     return (
@@ -215,9 +216,7 @@ def histogram_quantiles(
             W.orderBy("bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
         ),  # ≤ n_buckets rows total: the tiny-window exception is by design
     )
-    probs = spark.createDataFrame(
-        [(p,) for p in probs_permille], "p_permille int"
-    )
+    probs = local_frame(spark, [(p,) for p in probs_permille], "p_permille int")
     hit = (
         cum.crossJoin(F.broadcast(probs))
         .crossJoin(F.broadcast(mm))

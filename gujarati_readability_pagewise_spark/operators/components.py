@@ -14,7 +14,8 @@ expressed in DataFrame ops:
 Scale notes: each round is one join + one groupBy on the edge list (both
 key-partitioned — at 10^12 edges pre-bucket by node id to make every round
 co-located); ``localCheckpoint`` cuts the lineage so plans don't grow with
-iterations (use a reliable checkpoint dir on a cluster).  The driver-side
+iterations (use a reliable checkpoint dir on a cluster), and
+``dedup.release_persisted()`` frees the checkpointed blocks.  The driver-side
 loop carries only the convergence COUNT, never data.
 """
 
@@ -22,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _register_checkpoint
 
 __all__ = ["connected_components", "cluster_representatives"]
 
@@ -39,11 +42,18 @@ def connected_components(
     Raises ``RuntimeError`` if labels have not converged after
     ``max_iter`` rounds (graph diameter > max_iter) — silently returning
     split components would make dedup keep extra copies."""
-    fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = edges.localCheckpoint()
+    # both directions from one explode, so the plan behind ``pairs`` (the
+    # verify joins, in the release) runs once rather than once per side
+    both = F.array(
+        F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+        F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+    )
+    edges = _register_checkpoint(
+        pairs.select(F.explode(both).alias("e"))
+        .select("e.src", "e.dst")
+        .distinct()
+        .localCheckpoint()
+    )
     labels = (
         edges.select(F.col("src").alias("n")).distinct().withColumn("label", F.col("n"))
     )
@@ -57,7 +67,7 @@ def connected_components(
         # carry the old label through the checkpoint so the convergence
         # count is a scan of the checkpointed rows — the old form
         # re-joined new vs old labels, one extra shuffle per round
-        stepped = (
+        stepped = _register_checkpoint(
             labels.join(nb_min, labels["n"] == nb_min["src"], "left")
             .select(
                 labels["n"],
@@ -66,7 +76,8 @@ def connected_components(
                 ).alias("label"),
                 labels["label"].alias("_old"),
             )
-        ).localCheckpoint()
+            .localCheckpoint()
+        )
         changed = stepped.filter(F.col("label") != F.col("_old")).count()
         labels = stepped.select("n", "label")
         if changed == 0:

@@ -22,6 +22,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -45,21 +47,44 @@ __all__ = [
     "duplicate_spans_incremental",
     "cut_spans",
     "release_persisted",
+    "skew_impossible",
 ]
 
 # ``lsh_candidate_pairs`` / ``jaccard_on_candidates`` persist small
 # intermediates that the returned (lazy) plan references, so they cannot be
-# unpersisted before the caller's action runs.  Every such persist is
-# registered here; long-lived sessions call ``release_persisted()`` after
-# the consuming action (or ``spark.catalog.clearCache()``, which the bench
-# and the contract gate already do per query) to avoid accumulating cached
+# unpersisted before the caller's action runs.  Every such persist (and
+# every local checkpoint of ``components.connected_components``) is
+# registered here as the call that frees it; long-lived sessions call
+# ``release_persisted()`` after the consuming action (or
+# ``spark.catalog.clearCache()``, which the bench and the contract gate
+# already do per query, for the persists) to avoid accumulating cached
 # partitions until LRU pressure.
-_PERSISTED: list[DataFrame] = []
+_PERSISTED: list[Callable[[], object]] = []
 
 
 def _persist(df: DataFrame) -> DataFrame:
     df = df.persist()
-    _PERSISTED.append(df)
+    _PERSISTED.append(df.unpersist)
+    return df
+
+
+def _register_checkpoint(df: DataFrame) -> DataFrame:
+    """Register the blocks of a ``localCheckpoint``-ed frame with
+    ``release_persisted()`` and return the frame.
+
+    The checkpointed RDD is not in the cache manager, so neither
+    ``unpersist`` nor ``clearCache`` reaches it.  Only its id is held, so
+    Spark can still clean it up once the caller drops the frame.  Spark
+    logs a WARN for each one freed: its lineage is gone by design."""
+    jsc = df.sparkSession.sparkContext._jsc
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+
+    def free() -> None:
+        rdd = jsc.getPersistentRDDs().get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist()
+
+    _PERSISTED.append(free)
     return df
 
 
@@ -67,15 +92,15 @@ def release_persisted() -> int:
     """Unpersist every intermediate cached by this module's operators.
 
     Safe to call at any time after the consuming action; returns the number
-    of DataFrames released.  Composed pipelines that invoke the dedup
+    of intermediates released.  Composed pipelines that invoke the dedup
     cascade more than once per session (e.g. verified-components runs
     LSH + verify twice) should call this between invocations.
     """
     n = 0
     while _PERSISTED:
-        df = _PERSISTED.pop()
+        free = _PERSISTED.pop()
         try:
-            df.unpersist()
+            free()
             n += 1
         except Exception:
             pass
@@ -611,6 +636,15 @@ def _auto_head_k(spark, matches: DataFrame) -> int | None:
     tot = row["tot"] or 0
     parts = spark.sparkContext.defaultParallelism or 1
     return DEFAULT_HEAD_K if mx > HOT_FACTOR * max(tot / parts, HOT_MIN_ROWS) else None
+
+
+def skew_impossible(n_chars: int) -> bool:
+    """Whether a corpus of ``n_chars`` characters can never engage the
+    split :func:`_auto_head_k` decides on.  A window hash occurs at most
+    once per character, so at or below HOT_FACTOR x HOT_MIN_ROWS
+    characters the top-1 count cannot pass the threshold and
+    ``head_k=None`` is the probe's known answer."""
+    return n_chars <= HOT_FACTOR * HOT_MIN_ROWS
 
 
 def _split_hot_hash_join(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = ["pack_sequences"]
 
 
@@ -138,8 +140,8 @@ def pack_sequences(
     for b in sorted(sums):
         offsets[b] = acc
         acc += int(sums[b] or 0)
-    off_df = spark.createDataFrame(
-        [(b, o) for b, o in offsets.items()], "_bkt int, _off bigint"
+    off_df = local_frame(
+        spark, [(b, o) for b, o in offsets.items()], "_bkt int, _off bigint"
     )
     w = (
         W.partitionBy("_bkt")

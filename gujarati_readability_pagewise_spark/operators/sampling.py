@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "stable_order",
     "host_quota_sample",
@@ -109,7 +111,8 @@ def mixture_sample(
     t_max = min(counts[s] / shares[s] for s in counts if shares[s] > 0)
     quotas = {s: int(t_max * shares[s]) for s in counts}
     quota_df = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [(s, q) for s, q in sorted(quotas.items())],
             f"{stratum_col} string, _quota int",
         )
@@ -252,7 +255,7 @@ def training_order(
             offsets[(e, b)] = acc
             acc += int(sizes.get((e, b), 0))
             rows.append((e, b, offsets[(e, b)]))
-    off = spark.createDataFrame(rows, "epoch int, _bkt int, _off bigint")
+    off = local_frame(spark, rows, "epoch int, _bkt int, _off bigint")
     w = W.partitionBy("epoch", "_bkt").orderBy("_h", key_col)
     return (
         t.join(F.broadcast(off), ["epoch", "_bkt"])

@@ -26,6 +26,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "cosine",
     "brute_force_topk",
@@ -208,7 +210,8 @@ def ivf_topk(
     # centroid table: tiny (n_cells x dim) — crossJoin broadcasts it
     cents = model.clusterCenters()
     cent_df = F.broadcast(
-        emb.sparkSession.createDataFrame(
+        local_frame(
+            emb.sparkSession,
             [(i, [float(x) for x in v]) for i, v in enumerate(cents)],
             "cell int, cent array<double>",
         )
@@ -319,9 +322,7 @@ def ivf_train_fixedpoint(
             )
         for _ in range(n_iter):
             cdf = F.broadcast(
-                spark.createDataFrame(
-                    sorted(cents.items()), "cell int, cent array<bigint>"
-                )
+                local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
             )
             assign = (
                 e.crossJoin(cdf)
@@ -378,7 +379,7 @@ def ivf_topk_deterministic(
     )
     spark = emb.sparkSession
     cdf = F.broadcast(
-        spark.createDataFrame(sorted(cents.items()), "cell int, cent array<bigint>")
+        local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
     )
     fp = F.expr(_fp_expr(vec_col, dim, fp_scale))
     c = emb.select(
@@ -667,7 +668,7 @@ def semantic_dedup(
         emb, n_cells, n_iter, id_col, vec_col, dim, fp_scale
     )
     cdf = F.broadcast(
-        spark.createDataFrame(sorted(cents.items()), "cell int, cent array<bigint>")
+        local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
     )
     fp = F.expr(_fp_expr(vec_col, dim, fp_scale))
     assign = (

@@ -13,8 +13,14 @@ latest).  At crawl scale that becomes:
 * **resume** = read manifest, subtract completed buckets, process the rest.
 
 The completed-bucket set is tiny (≤ B rows) so resume filtering is a
-driver-side ``isin`` — which Catalyst turns into partition pruning against
-the bucketed input, not an anti-join shuffle.
+driver-side ``isin`` on the computed bucket column, not an anti-join
+shuffle.  The pages input is not stored bucketed, so that filter prunes
+nothing at the source: every bucket group rescans the whole input and
+drops the rows of other buckets after hashing their urls.
+
+A manifest row's ``wall_sec`` is the group's time from the start of its
+transform to the end of its data write, split evenly over the group's
+buckets; the manifest write itself is not included.
 """
 
 from __future__ import annotations
@@ -25,6 +31,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+from ..session import local_frame
 
 __all__ = ["bucket_expr", "completed_buckets", "run_checkpointed", "read_manifest"]
 
@@ -38,17 +47,21 @@ def bucket_expr(url_col: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
-def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
+def _manifest_absent(manifest_dir: str) -> bool:
     # Probe the filesystem first: a fresh job has no manifest yet, and
     # letting the parquet reader discover that logs a scary (but benign)
-    # path-not-found WARN on every cold start.  The try remains for
-    # non-local filesystems where os.path can't see the dir.
-    if "://" not in manifest_dir and not os.path.isdir(manifest_dir):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    # path-not-found WARN on every cold start.  Non-local filesystems,
+    # where os.path can't see the dir, fall through to the reader.
+    return "://" not in manifest_dir and not os.path.isdir(manifest_dir)
+
+
+def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
+    if _manifest_absent(manifest_dir):
+        return local_frame(spark, [], MANIFEST_SCHEMA)
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
@@ -87,13 +100,17 @@ def run_checkpointed(
     """
     spark = pages.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    prior = {
-        r["transform_id"]
-        for r in read_manifest(spark, manifest_dir)
-        .select("transform_id")
-        .distinct()
-        .collect()  # bounded: one row per distinct config ever written
-    } - {None, ""}  # unrecorded ids cannot prove a mismatch
+    # one collect serves both the config guard and the resume set; a fresh
+    # root has nothing to read, so it launches no job at all
+    recorded = (
+        []
+        if _manifest_absent(manifest_dir)
+        else read_manifest(spark, manifest_dir)
+        .select("bucket", "transform_id")
+        .collect()  # bounded: one row per completed bucket
+    )
+    prior = {r["transform_id"] for r in recorded} - {None, ""}
+    # unrecorded ids cannot prove a mismatch
     if prior and transform_id and prior != {transform_id}:
         raise ValueError(
             f"manifest at {manifest_dir} was written with transform_id="
@@ -101,7 +118,7 @@ def run_checkpointed(
             f"{transform_id!r} would mix configurations — use a fresh "
             "out_root/manifest or re-run with the original settings"
         )
-    done = completed_buckets(spark, manifest_dir)
+    done = {r["bucket"] for r in recorded}
     todo = [b for b in range(n_buckets) if b not in done]
     bucketed = pages.withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
     processed = 0
@@ -114,6 +131,7 @@ def run_checkpointed(
             result = result.withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
         # idempotent: overwrite exactly the bucket partitions in `group`
         result.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+        wall = time.time() - t0
         # Manifest stats come from reading the JUST-WRITTEN bucket
         # partitions back (partition-pruned, 3 columns) — never from
         # re-running `transform`, whose kernel is the expensive stage and
@@ -121,36 +139,32 @@ def run_checkpointed(
         # tests).  An Observation riding the write would also work but
         # instantiates the session's non-serializable ObservationManager,
         # which poisons any later closure that captures the session (e.g.
-        # Spark ML training summaries).
-        written = spark.read.parquet(out_dir).filter(F.col("bucket").isin(group))
-        stats = (
-            written.groupBy("bucket")
+        # Spark ML training summaries).  The read carries the written
+        # schema, so no footer-inference job runs, and the aggregate goes
+        # straight to the manifest as one file: one action per group.
+        written_schema = StructType(
+            [result.schema["text"], result.schema["n_bytes"],
+             StructField("bucket", IntegerType())]
+        )
+        (
+            spark.read.schema(written_schema)
+            .parquet(out_dir)
+            .filter(F.col("bucket").isin(group))
+            .groupBy("bucket")
             .agg(
                 F.count("*").alias("n_rows"),
-                F.sum(F.length("text")).alias("n_text_bytes"),
-                F.sum("n_bytes").alias("n_input_bytes"),
+                F.coalesce(F.sum(F.length("text")), F.lit(0))
+                .cast("bigint").alias("n_text_bytes"),
+                F.coalesce(F.sum("n_bytes"), F.lit(0))
+                .cast("bigint").alias("n_input_bytes"),
+                F.lit(float(wall / max(len(group), 1))).alias("wall_sec"),
+                F.lit(job_id).alias("job_id"),
+                F.lit(transform_id).alias("transform_id"),
+                F.current_timestamp().alias("finished_at"),
             )
-            .collect()
-        )
-        wall = time.time() - t0
-        rows = [
-            (
-                int(s["bucket"]),
-                int(s["n_rows"]),
-                int(s["n_text_bytes"] or 0),
-                int(s["n_input_bytes"] or 0),
-                float(wall / max(len(group), 1)),
-                job_id,
-                transform_id,
-            )
-            for s in stats
-        ]
-        spark.createDataFrame(
-            rows,
-            "bucket int, n_rows bigint, n_text_bytes bigint, n_input_bytes bigint, "
-            "wall_sec double, job_id string, transform_id string",
-        ).withColumn("finished_at", F.current_timestamp()).write.mode("append").parquet(
-            manifest_dir
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(manifest_dir)
         )
         processed += len(group)
         if fail_after is not None and processed >= fail_after:

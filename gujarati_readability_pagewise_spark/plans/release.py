@@ -47,8 +47,10 @@ from ..operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     release_persisted,
+    skew_impossible,
 )
 from ..operators.packing import pack_sequences
+from ..session import local_frame
 from .reports import write_metrics
 
 __all__ = ["run_release"]
@@ -133,14 +135,20 @@ def run_release(
         audit.filter(F.col("is_survivor") == 1).select(key_col), key_col, "left_semi"
     ).persist()  # consumed by count + optional cutting + scrub/write/packing
     surv_cached = survivors  # the persisted frame (survivors is rebound below)
-    funnel["n_survivors"] = float(survivors.count())
+    surv_row = survivors.agg(
+        F.count("*").alias("n"), F.sum(F.length(text_col)).alias("chars")
+    ).first()
+    funnel["n_survivors"] = float(surv_row["n"])
     _stage("near_dup_survivors")
 
     # 3. optional ExactSubstr cutting inside the surviving docs
     if cut_spans_window:
+        # the survivors' size can already rule out the skewed split that
+        # head_k="auto" would probe for; the probe only runs when it can't
         spans = duplicate_spans(
             survivors, text_col, key_col, window=cut_spans_window,
             n_partitions=spark.sparkContext.defaultParallelism,
+            head_k=None if skew_impossible(surv_row["chars"] or 0) else "auto",
         )
         # persist the CUT result before the funnel count: the scrub/pack
         # stage's first action would otherwise re-execute the whole span
@@ -171,8 +179,9 @@ def run_release(
     released.write.mode("overwrite").parquet(f"{out_root}/released")
     # one scan of the WRITTEN parquet yields both funnel rows — the old
     # form re-ran the packing window for max(end_chunk) (released
-    # already carries the column)
-    rel_row = spark.read.parquet(f"{out_root}/released").agg(
+    # already carries the column); the schema is the one just written, so
+    # no footer-inference job runs
+    rel_row = spark.read.schema(released.schema).parquet(f"{out_root}/released").agg(
         F.count("*").alias("n"),
         (F.max(F.col("end_chunk")) + 1).cast("double").alias("s"),
     ).first()
@@ -180,8 +189,8 @@ def run_release(
     _stage("scrub_pack_write")
     funnel["n_sequences"] = float(rel_row["s"] or 0.0)
 
-    spark.createDataFrame(
-        [(k, v) for k, v in sorted(funnel.items())], "stage string, n double"
+    local_frame(
+        spark, [(k, v) for k, v in sorted(funnel.items())], "stage string, n double"
     ).write.mode("overwrite").parquet(f"{out_root}/funnel")
     funnel["wall_sec"] = time.time() - t0
     write_metrics(spark, funnel, job_id, f"{out_root}/metrics")

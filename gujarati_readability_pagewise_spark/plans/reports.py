@@ -23,6 +23,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "write_metrics",
     "read_metrics",
@@ -46,8 +48,8 @@ def write_metrics(
     from ..sources import iceberg as ice
 
     rows = [(job_id, k, float(v)) for k, v in metrics.items()]
-    df = spark.createDataFrame(
-        rows, "job_id string, metric string, value double"
+    df = local_frame(
+        spark, rows, "job_id string, metric string, value double"
     ).withColumn("created_at", F.current_timestamp())
     if ice.is_table_ref(path):
         ice.append_table(df, path)
@@ -151,7 +153,8 @@ def roc_points(
         off[b] = (tp_acc, fp_acc)
         tp_acc += totals_by_bkt[b][0]
         fp_acc += totals_by_bkt[b][1]
-    off_df = agg.sparkSession.createDataFrame(
+    off_df = local_frame(
+        agg.sparkSession,
         [(b, t, f) for b, (t, f) in off.items()],
         "_bkt int, _tp_off bigint, _fp_off bigint",
     )
@@ -241,9 +244,7 @@ def cv_results_table(spark: SparkSession, results: list[dict]) -> DataFrame:
         )
         for i, r in enumerate(results)
     ]
-    return spark.createDataFrame(
-        rows, "combo_idx int, params string, mean_score double"
-    )
+    return local_frame(spark, rows, "combo_idx int, params string, mean_score double")
 
 
 def feature_importance_table(spark: SparkSession, model) -> DataFrame:
@@ -257,6 +258,6 @@ def feature_importance_table(spark: SparkSession, model) -> DataFrame:
         (i, FEATURE_NAMES[i] if i < len(FEATURE_NAMES) else f"f{i}", float(v))
         for i, v in enumerate(imps)
     ]
-    return spark.createDataFrame(
-        rows, "feature_idx int, feature string, importance double"
+    return local_frame(
+        spark, rows, "feature_idx int, feature string, importance double"
     ).orderBy(F.desc("importance"), F.asc("feature_idx"))

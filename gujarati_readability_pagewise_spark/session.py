@@ -8,10 +8,14 @@ point — tests, bench, driver contract — runs the same way.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-__all__ = ["get_spark", "ARROW_BATCH_SIZE"]
+__all__ = ["get_spark", "local_frame", "ARROW_BATCH_SIZE"]
 
 # The Arrow batch is the analogue of the reference's DataLoader batch
 # (batch_size=16 at extract_pagewise_features.py:450) — but text kernels are
@@ -63,3 +67,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """DataFrame of driver-built ``rows`` (tuples in ``ddl`` column order).
+
+    The rows reach the JVM as one Arrow table and plan as a
+    ``LocalRelation``.  ``createDataFrame(list, ddl)`` would pickle them
+    into a Python RDD instead, and every action over it would start a job
+    that reads them back through Python workers.  The schema, nullability
+    included, is the one ``createDataFrame(list, ddl)`` gives."""
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

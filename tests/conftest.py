@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import sys
+import uuid
 
 import pytest
 
@@ -30,3 +32,29 @@ def pages_df(spark, pages_pdf):
     return spark.createDataFrame(
         pages_pdf[["url", "warc_ts", "html", "text", "lang"]], schema=PAGES_SCHEMA_DDL
     )
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as names:`` collects the names (call sites) of
+    the Spark jobs launched inside the block; the list fills on exit."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def record():
+        group = f"jobs-{uuid.uuid4().hex}"
+        names: list[str] = []
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            yield names
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jsc = sc._jsc.sc()
+            jsc.listenerBus().waitUntilEmpty()  # the status store lags the jobs
+            it = jsc.statusStore().jobsList(None).iterator()
+            while it.hasNext():
+                job = it.next()
+                if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+                    names.append(job.name())
+
+    return record

@@ -1,5 +1,6 @@
 """Checkpoint/resume under simulated crash; salted aggregation equivalence."""
 
+import os
 import shutil
 
 import pandas as pd
@@ -145,6 +146,52 @@ def test_transform_kernel_runs_once_per_row(spark, pages_df, dirs):
     m = read_manifest(spark, man).toPandas()
     assert m.n_rows.sum() == n_rows
     assert (m.n_text_bytes > 0).all() and (m.n_input_bytes > 0).all()
+
+
+def test_fresh_root_launches_no_job_before_first_write(spark, pages_df, dirs, spark_jobs):
+    """With no manifest yet there is nothing to resume or guard against:
+    the first Spark job is the first group's write."""
+    out, man = dirs
+
+    class Stop(Exception):
+        pass
+
+    def stop(df):
+        raise Stop
+
+    with spark_jobs() as names, pytest.raises(Stop):
+        run_checkpointed(pages_df, stop, out, man, n_buckets=4, transform_id="t")
+    assert names == []
+
+
+def test_manifest_rows_equal_direct_aggregate_one_file_per_append(spark, pages_df, dirs):
+    out, man = dirs
+    run_checkpointed(
+        pages_df, _transform, out, man,
+        n_buckets=8, buckets_per_job=4, job_id="agg", transform_id="scrub=False",
+    )
+    cols = ["bucket", "n_rows", "n_text_bytes", "n_input_bytes", "job_id", "transform_id"]
+    got = sorted(map(tuple, read_manifest(spark, man).select(cols).collect()))
+    want = sorted(
+        map(
+            tuple,
+            spark.read.parquet(out)
+            .groupBy("bucket")
+            .agg(
+                F.count("*"),
+                F.sum(F.length("text")),
+                F.sum("n_bytes"),
+                F.lit("agg"),
+                F.lit("scrub=False"),
+            )
+            .collect(),
+        )
+    )
+    assert got == want and len(got) == 8
+    m = read_manifest(spark, man).toPandas()
+    assert (m.wall_sec > 0).all() and m.finished_at.notna().all()
+    files = [f for f in os.listdir(man) if f.endswith(".parquet")]
+    assert len(files) == 2  # one per bucket-group append
 
 
 def test_heavy_hitter_detected(spark, pages_df):

@@ -1,5 +1,8 @@
 """End-to-end production pipeline: extract -> salted summary -> metrics -> snapshot."""
 
+import random
+import re
+
 from pyspark.sql import functions as F
 
 from gujarati_readability_pagewise_spark.plans.pipeline import run_pipeline
@@ -172,3 +175,48 @@ def test_corpus_release_string_keyed_corpus(spark, tmp_path):
     for r in sorted(rel, key=lambda r: r["url"].encode("utf-8")):
         assert r["cum_before"] == acc
         acc += 0 if not r["text"].strip() else len(r["text"].split())
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_corpus_release_skips_head_k_probe_below_floor(spark, tmp_path, spark_jobs, monkeypatch):
+    """A survivor corpus too small for any window hash to reach the skew
+    threshold runs no head_k probe job, yet releases exactly what the
+    probed (head_k="auto") plan releases, and leaves nothing persisted."""
+    import gujarati_readability_pagewise_spark.operators.dedup as D
+    from gujarati_readability_pagewise_spark.plans.release import run_release
+
+    vocab = (
+        "a agg batch big column customer data fast filter group hash join key "
+        "line merge order part query row scan slow small sort spark stream table "
+        "the value vector window"
+    ).split()
+    rng = random.Random(7)
+    shared = "this exact shared paragraph is certainly longer than forty chars."
+    corpus = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(20, 100))))
+        for i in range(40)
+    ]
+    for i in (7, 23):  # one copied paragraph gives the span cut work
+        corpus[i] = (i, f"{corpus[i][1]} {shared}")
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+
+    def release(out):
+        before = _persistent_rdd_ids(spark)
+        with spark_jobs() as names:
+            res = run_release(spark, docs, out, cut_spans_window=40, job_id="rel-probe")
+        assert _persistent_rdd_ids(spark) <= before
+        rows = sorted(map(tuple, spark.read.parquet(f"{out}/released").collect()))
+        funnel = {k: v for k, v in res.items() if k.startswith("n_")}
+        probes = [n for n in names if re.match(r"first at .*operators/dedup\.py", n)]
+        return rows, funnel, probes
+
+    rows, funnel, probes = release(str(tmp_path / "known"))
+    assert probes == [] and funnel["n_span_cut_chars"] > 0
+    # with no floor every non-empty corpus may skew, so the probe runs again
+    monkeypatch.setattr(D, "HOT_MIN_ROWS", 0)
+    rows_auto, funnel_auto, probes_auto = release(str(tmp_path / "auto"))
+    assert probes_auto
+    assert rows == rows_auto and funnel == funnel_auto
