@@ -1056,7 +1056,7 @@ def q_dedup_simhash_pairs(spark, sf):
     Pigeonhole: any pair within Hamming distance 3 of a 16-bit fingerprint
     shares ≥1 of 4 bands, so candidates come from an equi-join on
     (band, band_val) — never an all-pairs scan — with perfect recall at
-    the ≤3-bit radius.  Fixes simhash_candidates' identical-only blocking."""
+    the ≤3-bit radius, identical fingerprints (distance 0) included."""
     from gujarati_readability_pagewise_spark.operators.dedup import (
         simhash,
         simhash_near_pairs,
@@ -1073,10 +1073,11 @@ def q_dedup_verified_pairs(spark, sf):
     """Full near-dup pipeline: MinHash-LSH candidates → exact-Jaccard verify.
 
     The LSH stage prunes the quadratic pair space BELOW the pair
-    aggregation: `jaccard_on_candidates` semi-joins the shingle stream to
-    the candidate doc-id set and the (a,b,shingle) stream to the candidate
-    pairs before any groupBy, so only candidates pay the exact shingle-set
-    comparison — the shape that stays near-linear at 10^12 docs."""
+    aggregation: `jaccard_on_candidates_arrays` semi-joins the shingle
+    stream to the candidate doc-id set before any groupBy, builds one
+    shingle set per candidate doc, and intersects sets per candidate pair,
+    so only candidates pay the exact shingle-set comparison — the shape
+    that stays near-linear at 10^12 docs."""
     from gujarati_readability_pagewise_spark.operators.dedup import (
         char_shingles,
         jaccard_on_candidates_arrays,
@@ -1341,8 +1342,7 @@ def q_similarity_ivf_topk(spark, sf):
     — 3 unrolled training iterations (integer distances, integer-mean
     updates, (d2, cell) tie-breaks), corpus assignment, 2-cell probe, and
     the exact cosine re-rank (float-multiply/double-accumulate parity).
-    The Spark ML k-means variant (ivf_topk) stays pytest-covered
-    (full-probe ≡ brute force)."""
+    Full-probe ≡ brute force is pytest-covered."""
     from gujarati_readability_pagewise_spark.operators.similarity import (
         ivf_topk_deterministic,
     )
@@ -1734,7 +1734,7 @@ def q_streaming_dedup_urls(spark, sf):
 
 
 def q_pipeline_extract(spark, sf):
-    """The flagship extraction kernel (mapInPandas golden extractor),
+    """The flagship extraction kernel (mapInArrow golden extractor),
     oracle-checked to BYTE IDENTITY per url: the DuckDB oracle re-derives
     the extracted text independently in pure SQL — paragraph split at the
     generator's sentence boundaries, Boilerpipe word-count classification

@@ -1,7 +1,7 @@
 """Golden main-content extractor: HTML bytes -> (text, spans, status).
 
 This is THE oracle of the whole engine.  Every Spark path (the Arrow-batched
-``mapInPandas`` kernel in ``operators/udfs.py``) must emit text that is
+``mapInArrow`` kernel in ``operators/udfs.py``) must emit text that is
 **byte-identical per url** to :func:`extract_text` run standalone on the same
 ``html`` payload (BASELINE.json ``input_hint``).
 
@@ -146,10 +146,6 @@ def _clean_words(raw: str) -> list[str]:
     return s.split()
 
 
-def _clean_text(raw: str) -> str:
-    return " ".join(_clean_words(raw))
-
-
 # blocks are plain (text, n_words, link_density) tuples — NamedTuple
 # construction measured ~5% of the segment loop at 70k blocks/batch
 _Block = tuple
@@ -223,29 +219,15 @@ def _segment(html: str, lower: bool = False) -> list[tuple]:
     return blocks
 
 
-def _classify(blocks: list[_Block]) -> list[bool]:
-    keep = [
-        b[1] >= MIN_CONTENT_WORDS and b[2] <= MAX_LINK_DENSITY for b in blocks
-    ]
-    # one deterministic smoothing pass against the *first-pass* labels
-    rescued = list(keep)
-    for i, b in enumerate(blocks):
-        if keep[i] or b[1] < MIN_RESCUE_WORDS or b[2] > MAX_LINK_DENSITY:
-            continue
-        prev_ok = i > 0 and keep[i - 1]
-        next_ok = i + 1 < len(blocks) and keep[i + 1]
-        if prev_ok or next_ok:
-            rescued[i] = True
-    return rescued
-
-
 def _kept_spans(blocks: list[_Block]) -> list[str]:
-    """Fused form of ``_classify`` + span selection: one pass emits the
-    kept block texts directly instead of materializing two label lists
-    and zipping.  The rescue test reads the FIRST-PASS ``keep`` labels of
-    both neighbors, exactly like ``_classify``'s smoothing pass (which is
-    the semantic oracle and stays for documentation/tests); ~2x the
-    classify+select cost on the bench corpus."""
+    """The kept block texts, in document order: the span rule.
+
+    First pass: a block is content when it has at least
+    ``MIN_CONTENT_WORDS`` words and link density at most
+    ``MAX_LINK_DENSITY``.  One smoothing pass then also keeps a block with
+    at least ``MIN_RESCUE_WORDS`` words and the same link-density cap when
+    a neighbour passed the FIRST pass (rescues never chain).  One loop
+    emits the kept texts directly, with no label lists to zip."""
     n = len(blocks)
     keep = [
         b[1] >= MIN_CONTENT_WORDS and b[2] <= MAX_LINK_DENSITY for b in blocks

@@ -3,8 +3,8 @@
 The graft analogue of the reference's backbone embedding (image -> 384/1280-d
 vector, ``/root/reference/scripts/extract_pagewise_features.py:249-348``):
 page text in, fixed-order ``FEATURE_NAMES``-dimensional float64 vector out,
-computed for a whole Arrow batch at once (pandas ``.str`` ops — compiled
-regex executed in a C loop — never a per-row Spark UDF).
+computed for a whole Arrow batch at once (numpy passes over one codepoint
+decode of the batch — never a per-row Spark UDF).
 
 Gujarati specifics:
 
@@ -23,9 +23,8 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 
-__all__ = ["FEATURE_NAMES", "N_FEATURES", "compute_features", "compute_features_one"]
+__all__ = ["FEATURE_NAMES", "N_FEATURES", "compute_features"]
 
 # Fixed feature order — tests and the RF model pin against this list.
 FEATURE_NAMES = [
@@ -79,11 +78,6 @@ _STOPWORDS = frozenset(
 )
 
 
-def compute_features_one(text: str) -> np.ndarray:
-    """Feature vector for a single document (the scalar oracle for tests)."""
-    return compute_features(pd.Series([text if text is not None else ""]))[0]
-
-
 # --- single-char class counting via codepoint table -------------------------
 # Counting `[class]` occurrences with a regex re-scans the batch once per
 # class; instead we decode the whole batch to a uint32 codepoint array ONCE
@@ -115,16 +109,15 @@ _MASK_CACHE: dict[tuple, np.ndarray] = {}
 
 
 def _mask_table(patterns: dict[str, "re.Pattern"]) -> np.ndarray:
-    """All class tables packed into one bitmask table (bit b = class b);
-    uint8 up to 8 classes, uint16 up to 16 — one gather serves them all."""
+    """All class tables packed into one uint8 bitmask table (bit b =
+    class b, up to 8 classes) — one gather serves them all."""
     key = tuple(patterns.values())
     tab = _MASK_CACHE.get(key)
     if tab is None:
-        assert len(patterns) <= 16
-        dtype = np.uint8 if len(patterns) <= 8 else np.uint16
-        tab = np.zeros(_BMP, dtype=dtype)
+        assert len(patterns) <= 8
+        tab = np.zeros(_BMP, dtype=np.uint8)
         for b, pat in enumerate(patterns.values()):
-            tab |= _table(pat).astype(dtype) << dtype(b)
+            tab |= _table(pat).astype(np.uint8) << np.uint8(b)
         _MASK_CACHE[key] = tab
     return tab
 
@@ -142,11 +135,17 @@ class _CpView:
 
     __slots__ = ("n", "lens", "cp", "cp_lo", "doc_id", "astral_idx", "starts", "texts")
 
-    def __init__(self, t):
-        texts = t.tolist() if hasattr(t, "tolist") else list(t)
+    def __init__(self, texts: list[str]):
         self.n = len(texts)
         self.texts = texts
-        joined = "".join(texts)
+        try:
+            joined = "".join(texts)
+        except TypeError:
+            # only the failing batch pays for the scan that names the culprit
+            i, bad = next((i, s) for i, s in enumerate(texts) if not isinstance(s, str))
+            raise TypeError(
+                f"compute_features: texts[{i}] is {type(bad).__name__}, not str"
+            ) from None
         self.cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
         self.lens = np.array([len(s) for s in texts], dtype=np.int64)
         # fast path: no astral codepoint in the batch (the overwhelmingly
@@ -166,49 +165,6 @@ class _CpView:
             offs = np.cumsum(self.lens)[:-1]
             self.starts[0] = True
             self.starts[offs[offs < len(self.cp)]] = True
-
-
-def _class_counts(
-    t: pd.Series, patterns: dict[str, "re.Pattern"], view: _CpView | None = None
-) -> dict[str, np.ndarray]:
-    """Per-doc count of each single-char class, in ONE histogram pass.
-
-    Each character maps to a bitmask of the classes it belongs to (classes
-    overlap, e.g. guj ⊇ guj_letter), so `(doc_id << nbits) | mask` is a
-    unique bin and one ``np.bincount`` yields the full (doc × mask)
-    histogram; a tiny (2^nbits × nbits) matmul unpacks it to per-class
-    counts.  ~1.4x the 6-x-``np.add.reduceat`` formulation it replaces,
-    and empty docs need no special casing (their bins just stay zero).
-    """
-    v = view if view is not None else _CpView(t)
-    n = v.n
-    out: dict[str, np.ndarray] = {"len": v.lens.astype(np.float64)}
-    if len(v.cp) == 0:
-        zero = np.zeros(n, dtype=np.float64)
-        out.update({k: zero.copy() for k in patterns})
-        return out
-    nbits = len(patterns)
-    combo = _mask_table(patterns)[v.cp_lo]  # uint8; int64 upcast was ~40% of this pass
-    if len(v.astral_idx):
-        for i in v.astral_idx:
-            ch = chr(int(v.cp[i]))
-            m = 0
-            for b, pat in enumerate(patterns.values()):
-                if pat.fullmatch(ch) is not None:
-                    m |= 1 << b
-            combo[i] = m
-    # int32 * int32 + uint8 promotes to int32: fits for any real batch
-    hist = np.bincount(
-        v.doc_id * np.int32(1 << nbits) + combo, minlength=n << nbits
-    )
-    hist = hist.reshape(n, 1 << nbits).astype(np.float64)
-    bitmat = ((np.arange(1 << nbits)[:, None] >> np.arange(nbits)[None, :]) & 1).astype(
-        np.float64
-    )
-    counts = hist @ bitmat
-    for b, name in enumerate(patterns):
-        out[name] = counts[:, b]
-    return out
 
 
 def _prev(mask: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -236,72 +192,9 @@ _VIRAMA_CH = re.compile(_VIRAMA)
 _INDEP_CH = re.compile(_INDEP_V)
 
 
-def _sentence_counts(v: _CpView) -> np.ndarray:
-    """Per-doc count of ``[.!?…।॥]+`` runs — each maximal run of the class
-    is one match, so the count is the number of RUN STARTS (in-class char
-    whose predecessor, within the doc, is not in-class).  One table
-    lookup + one shift replaces a findall that materialized every match.
-    """
-    if len(v.cp) == 0:
-        return np.zeros(v.n, dtype=np.float64)
-    m = _table(_SENT_CH)[v.cp_lo]
-    starts_run = m & ~_prev(m, v.starts)
-    return np.bincount(
-        v.doc_id[starts_run], minlength=v.n
-    ).astype(np.float64)
-
-
-def _akshara_counts(v: _CpView) -> np.ndarray:
-    """Per-doc count of ``_AKSHARA`` cluster matches without running the
-    cluster regex.
-
-    Scanning the grammar left-to-right non-overlapping, every match
-    begins at exactly one of:
-
-    * an independent vowel (the second alternation branch), or
-    * a consonant NOT absorbed into the previous cluster — absorption
-      happens only via the ``(virama C nukta?)*`` tail, i.e. when the
-      immediately preceding char is a virama that itself directly follows
-      a consonant or a consonant+nukta (an "attached" virama).  An orphan
-      virama (start of doc, or after a matra/space/vowel/second virama)
-      attaches to nothing, so the consonant after it starts a new
-      cluster, exactly as the scanner would.
-
-    Matras and modifiers never start a match (they only extend one), and
-    out-of-grammar chars are skipped by findall — so counting the two
-    start kinds IS the match count.  Equivalence with the scanning regex
-    is pinned by a randomized property test over adversarial Gujarati
-    strings (orphan viramas, nukta chains, astral chars, mixed scripts).
-    """
-    if len(v.cp) == 0:
-        return np.zeros(v.n, dtype=np.float64)
-    # one packed-bitmask gather for all four classes; all the shift logic
-    # stays in uint8 0/1 arrays (bool astype per class was pure overhead)
-    m = _mask_table(
-        {"c": _C_CH, "nukta": _NUKTA_CH, "virama": _VIRAMA_CH, "indep": _INDEP_CH}
-    )[v.cp_lo]
-    is_c = m & 1
-    is_nukta = (m & 2) >> 1
-    is_virama = (m & 4) >> 2
-    is_indep = (m & 8) >> 3
-    prev_c = _prev(is_c, v.starts)
-    prev_nukta = _prev(is_nukta, v.starts)
-    prev2_c = _prev(prev_c, v.starts)
-    attached_virama = is_virama & (prev_c | (prev_nukta & prev2_c))
-    new_c = is_c & (1 - _prev(attached_virama, v.starts))
-    starts_cluster = (new_c | is_indep) != 0
-    return np.bincount(
-        v.doc_id[starts_cluster], minlength=v.n
-    ).astype(np.float64)
-
-
-def _stopword_count(words: list[str]) -> int:
-    return sum(1 for w in words if w.lower() in _STOPWORDS)
-
-
-# The histogram classes (exactly the dict `_class_counts` used) and a
-# second packed uint8 table for the scan classes: sentence runs, the
-# akshara grammar, and the whitespace bit for the word-boundary scan.
+# The histogram classes and a second packed uint8 table for the scan
+# classes: sentence runs, the akshara grammar, and the whitespace bit for
+# the word-boundary scan.
 # Two uint8 gathers per batch replace the three separate table lookups
 # (a packed uint16 variant measured SLOWER: every bit extraction then
 # runs 2-byte lanes with an extra astype pass; uint8 masks stay 1-byte
@@ -338,32 +231,36 @@ def _astral_fix(combo: np.ndarray, view: _CpView, patterns: dict) -> None:
         combo[i] = m
 
 
-def compute_features(texts: "pd.Series | list[str]") -> np.ndarray:
-    """Vectorized kernel: Series[str] -> float64 array (len(texts), N_FEATURES).
+def compute_features(texts: list[str]) -> np.ndarray:
+    """Vectorized kernel: list[str] -> float64 array (len(texts), N_FEATURES).
 
     One utf-32 decode (`_CpView`) + two packed class-table gathers feed
     the class histogram, the sentence-run count, the akshara cluster
     count, and the word-boundary scan — no per-row Spark UDF (input_hint
-    mandate), no per-doc pandas ``.str`` loops.
+    mandate), no per-doc Python loops.
 
-    A plain ``list[str]`` input (the Arrow kernel's path — it already
-    holds the texts as a Python list) skips the Series construction +
-    fillna/astype/tolist round-trip (~0.5 ms/2048-doc batch); list
-    callers guarantee str-only elements (``extract_text`` never returns
-    None).  The Series path remains the oracle surface for tests.
+    The input is a plain ``list`` of ``str`` (the Arrow kernel already
+    holds the texts as one); anything else raises ``TypeError`` — a
+    non-list argument at entry, a non-``str`` element naming its index.
     """
-    t = texts if isinstance(texts, list) else texts.fillna("").astype(str)
-    n = len(t)
+    if not isinstance(texts, list):
+        raise TypeError(
+            f"compute_features takes a list of str, not {type(texts).__name__}"
+        )
+    n = len(texts)
     out = np.zeros((n, N_FEATURES), dtype=np.float64)
 
     # ONE codepoint decode of the batch feeds every per-character pass.
-    view = _CpView(t)
+    view = _CpView(texts)
     starts = view.starts
     doc_id = view.doc_id
     n_chars = view.lens.astype(np.float64)
     if len(view.cp):
-        # class histogram (identical bins to `_class_counts`:
-        # (doc_id << 6) | mask is a unique bin)
+        # class histogram: each char maps to the bitmask of the classes
+        # it belongs to (classes overlap, e.g. guj ⊇ guj_letter), so
+        # (doc_id << 6) | mask is a unique bin and one bincount yields
+        # the (doc × mask) histogram; a (64 × 6) matmul unpacks it to
+        # per-class counts
         combo = _mask_table(_CLASS_PATTERNS)[view.cp_lo]  # uint8
         if len(view.astral_idx):
             _astral_fix(combo, view, _CLASS_PATTERNS)
@@ -388,8 +285,8 @@ def compute_features(texts: "pd.Series | list[str]") -> np.ndarray:
         # commute (see `_prev`), so every per-class identity below is the
         # old five-shift form verbatim, just read through p1/p2.  Bits:
         # sent=1, c=2, nukta=4, virama=8, indep=16, space=32.  (astral
-        # chars keep the chr(0) lookup = no scan class, exactly the
-        # semantics `_sentence_counts`/`_akshara_counts` pin)
+        # chars keep the chr(0) lookup = no scan class: they end a
+        # sentence run and break a virama chain like any other char)
         m2 = _mask_table(_SCAN_PATTERNS)[view.cp_lo]  # uint8
         p1 = _prev(m2, starts)
         p2 = _prev(p1, starts)
@@ -399,7 +296,12 @@ def compute_features(texts: "pd.Series | list[str]") -> np.ndarray:
         n_sent = np.bincount(
             doc_id[starts_run.view(np.bool_)], minlength=n
         ).astype(np.float64)
-        # akshara cluster starts (same grammar as `_akshara_counts`):
+        # akshara cluster starts = the `_AKSHARA` findall count.  Every
+        # match begins at an independent vowel or at a consonant NOT
+        # absorbed by the previous cluster's (virama C nukta?)* tail, i.e.
+        # not right after an "attached" virama (one that directly follows
+        # a consonant or consonant+nukta); matras and modifiers only
+        # extend a match.
         # attached_virama = virama & (prev_c | (prev_nukta & prev2_c)),
         # computed in bit 3: (p1 << 2) moves prev-c (bit 1) to bit 3;
         # (p2 << 1) & 4 moves prev2-c to bit 2, & p1 ANDs it with

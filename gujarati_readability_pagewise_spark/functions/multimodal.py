@@ -7,8 +7,8 @@ clearly marked — behind ``decode_image``; everything Spark-side (schema,
 Arrow batch shape, partition behavior, deterministic fake features) is real
 and tested.
 
-Batch contract mirrors the engine's text kernel (one ``mapInPandas`` stage,
-whole batch in/out, no per-row Python at the Spark level).
+Batch contract mirrors the engine's text kernel (one Arrow-batched stage,
+here ``mapInPandas``; whole batch in/out, no per-row Python at the Spark level).
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ import pickle
 from pathlib import Path
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.pages import gen_labels_pdf, gen_pages_pdf
@@ -71,14 +71,12 @@ def _default_training_data() -> tuple[np.ndarray, np.ndarray]:
     generated pages table) so the default model is identical no matter
     which process trains it — pytest, bench subprocess, or the driver.
     """
-    import pandas as pd
-
     from ..functions.extract import extract_text
     from ..functions.features import compute_features
 
     pdf = gen_pages_pdf(1500, seed=42)
     labels = gen_labels_pdf(pdf, seed=42)
-    texts = pd.Series([extract_text(h).text for h in pdf.html])
+    texts = [extract_text(h).text for h in pdf.html]
     X = compute_features(texts)
     y = labels["label"].to_numpy()
     keep = ~np.isnan(y)

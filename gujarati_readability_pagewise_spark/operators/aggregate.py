@@ -2,8 +2,7 @@
 
 Ports of SURVEY.md §2.4 — the per-book Summary sheet
 (``/root/reference/scripts/predict_single_book.py:377-413``), the book-level
-mean-probability>0.5 decision (``:391-392``), the class-distribution count
-(A1), the confusion matrix + scalar metrics with pos_label=0
+mean-probability>0.5 decision (``:391-392``), the confusion matrix + scalar metrics with pos_label=0
 (``train_pagewise_xgboost.py:245-266``), and the verify_metrics
 self-consistency recompute (``scripts/verify_metrics.py:30-51``).
 
@@ -21,17 +20,11 @@ from ..session import local_frame
 from .split import host_of
 
 __all__ = [
-    "class_distribution",
     "host_summary",
     "confusion_matrix",
     "binary_metrics",
     "histogram_quantiles",
 ]
-
-
-def class_distribution(scored: DataFrame, col: str = "pred_label") -> DataFrame:
-    """A1: groupBy(label).count()."""
-    return scored.groupBy(col).count().orderBy(col)
 
 
 def host_summary(scored: DataFrame, label_col: str | None = "label") -> DataFrame:

@@ -36,11 +36,9 @@ __all__ = [
     "lsh_banded",
     "lsh_cross_candidates",
     "jaccard_pairs",
-    "jaccard_on_candidates",
     "jaccard_on_candidates_arrays",
     "simhash",
     "simhash_bands",
-    "simhash_candidates",
     "simhash_near_pairs",
     "duplicate_spans",
     "window_hash_index",
@@ -50,7 +48,7 @@ __all__ = [
     "skew_impossible",
 ]
 
-# ``lsh_candidate_pairs`` / ``jaccard_on_candidates`` persist small
+# ``lsh_candidate_pairs`` / ``jaccard_on_candidates_arrays`` persist small
 # intermediates that the returned (lazy) plan references, so they cannot be
 # unpersisted before the caller's action runs.  Every such persist (and
 # every local checkpoint of ``components.connected_components``) is
@@ -302,7 +300,7 @@ def lsh_cross_candidates(
     band index (``lsh_banded`` written at the previous crawl), so a daily
     ingest bands only its own documents and equi-joins on (band, bh) —
     cost proportional to the NEW snapshot, not the accumulated corpus;
-    verify with ``jaccard_on_candidates`` exactly as in the batch path.
+    verify with ``jaccard_on_candidates_arrays`` exactly as in the batch path.
     """
     new_b = lsh_banded(sig_new, key_col, bands, n_hashes).alias("n")
     old_b = lsh_banded(sig_old, key_col, bands, n_hashes).alias("o")
@@ -347,64 +345,6 @@ def jaccard_pairs(
     )
 
 
-def jaccard_on_candidates(
-    shingles: DataFrame,
-    cands: DataFrame,
-    key_col: str = "doc_id",
-    min_jaccard: float = 0.0,
-) -> DataFrame:
-    """Exact Jaccard restricted to LSH candidate pairs — pruning that prunes.
-
-    ``jaccard_pairs`` alone materializes every co-shingled pair before any
-    candidate filter can apply (Catalyst cannot push a semi-join on (a, b)
-    below the pair aggregation).  Here the candidate pairs DRIVE the join:
-
-        cands ⋈ shingles(a-side) ⋈ shingles(b-side on (b, shingle))
-
-    so the rows streamed are O(|cands| · shingles-per-doc) — independent of
-    global shingle frequency.  A shingle-keyed self-join (even semi-pruned
-    before the groupBy) still streams Σ_s m_s² rows for every shingle held
-    by m_s docs, which a common 5-gram turns quadratic at 10^12 docs; the
-    pair-driven form never enumerates a non-candidate pair at all.
-    ``cands`` is persisted: it is the small LSH output reused by the
-    intersect join and both sides of the size restriction.  Same output
-    contract as ``jaccard_pairs`` filtered to candidates:
-    (a, b, n_common, jaccard).
-    """
-    pair_keys = _persist(cands.select("a", "b"))
-    cand_keys = (
-        pair_keys.select(F.col("a").alias(key_col))
-        .union(pair_keys.select(F.col("b").alias(key_col)))
-        .distinct()
-    )
-    # Restrict the shingle stream to candidate docs ONCE and persist THAT:
-    # sizes, the a-side and the b-side all read it, and the restricted set
-    # is bounded by the candidate fraction of the corpus (persisting the
-    # full shingle table would not scale; persisting the LSH-surviving
-    # slice is exactly what a real near-dup verify stage materializes).
-    sh_cand = _persist(shingles.join(cand_keys, key_col, "left_semi"))
-    sizes = sh_cand.groupBy(key_col).agg(F.count("*").alias("sz"))
-    s1 = sh_cand.select(F.col(key_col).alias("a"), "shingle")
-    s2 = sh_cand.select(F.col(key_col).alias("b"), "shingle")
-    inter = (
-        pair_keys.join(s1, "a")  # expand each candidate pair by a's shingles
-        .join(s2, ["b", "shingle"])  # keep only shingles present in b too
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        inter.join(sizes.select(F.col(key_col).alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(key_col).alias("b"), F.col("sz").alias("sz_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("a", "b", "n_common", "jaccard")
-    )
-
-
 def jaccard_on_candidates_arrays(
     shingles: DataFrame,
     cands: DataFrame,
@@ -414,23 +354,23 @@ def jaccard_on_candidates_arrays(
     text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
-    """Exact Jaccard on candidate pairs via per-doc shingle-hash ARRAYS.
+    """Exact Jaccard restricted to LSH candidate pairs, via per-doc
+    shingle ARRAYS.  Output: ``jaccard_pairs`` semi-joined to ``cands``,
+    (a, b, n_common, jaccard).
 
-    Same contract and identical output as ``jaccard_on_candidates`` —
-    measured 2.6× faster at sf0.1 (4.5 s vs 11.7 s over 42 k candidate
-    pairs): one ``collect_set(md5(shingle))`` per candidate doc replaces
-    the (pair × shingle) row stream, and the intersection runs as a
-    single JVM ``array_intersect`` per pair instead of a join + count
-    aggregation over |cands|·shingles/doc rows.  Data shipped is the same
-    bytes (a doc in P pairs ships its array P times, exactly as the
-    pair-driven form streams its shingles P times); the win is per-row
-    overhead.
+    ``jaccard_pairs`` alone materializes every co-shingled pair before any
+    candidate filter can apply (Catalyst cannot push a semi-join on (a, b)
+    below the pair aggregation).  Here the candidate pairs DRIVE the work:
+    the shingle stream is restricted to candidate docs first, one
+    ``collect_set(shingle)`` per candidate doc builds its set, and each
+    pair's intersection is a single JVM ``array_intersect`` — so no
+    non-candidate pair is ever enumerated.  Measured 2.6× faster at sf0.1
+    (4.5 s vs 11.7 s over 42 k candidate pairs) than a pair-driven join +
+    count aggregation over |cands|·shingles/doc rows.
 
-    Trade-off at the tail: per-doc arrays are bounded by shingles/doc
-    (≈ doc length) — fine for crawl pages; for pathological multi-MB
-    documents the row-streaming ``jaccard_on_candidates`` keeps peak
-    memory flat and should be preferred.  Both forms restrict work to
-    candidate docs first, so neither enumerates a non-candidate pair.
+    Trade-off at the tail: each pair row carries both docs' arrays, which
+    are bounded by shingles/doc (≈ doc length) — fine for crawl pages, but
+    peak row memory grows with the longest candidate document.
 
     ``docs`` (optional): the doc table ``shingles`` was built from.  When
     given, the candidate shingle stream is REBUILT from the semi-joined
@@ -523,19 +463,6 @@ def simhash(
         term = F.when(F.col(f"s{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
     return sums.select(key_col, fp.cast("long").alias("simhash"))
-
-
-def simhash_candidates(fp: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """Near-dup candidates: identical simhash fingerprints (block join).
-
-    Exact-match blocking only — misses near-dups differing in 1+ bits; use
-    ``simhash_near_pairs`` for Hamming-ball matching at the same join cost.
-    """
-    a = fp.select(F.col(key_col).alias("a"), "simhash")
-    b = fp.select(F.col(key_col).alias("b"), "simhash")
-    return (
-        a.join(b, "simhash").filter(F.col("a") < F.col("b")).select("a", "b", "simhash")
-    )
 
 
 def simhash_bands(

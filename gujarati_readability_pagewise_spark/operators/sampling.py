@@ -24,7 +24,6 @@ from ..session import local_frame
 __all__ = [
     "stable_order",
     "host_quota_sample",
-    "stratified_fixed_n",
     "mixture_sample",
     "crawl_schedule",
     "quality_weighted_sample",
@@ -54,21 +53,6 @@ def host_quota_sample(
     return (
         df.withColumn("quota_rank", F.row_number().over(w))
         .filter(F.col("quota_rank") <= k)
-    )
-
-
-def stratified_fixed_n(
-    df: DataFrame,
-    stratum_col: str,
-    key_col: str,
-    n_per_stratum: int,
-    seed: int = 0,
-) -> DataFrame:
-    """Exactly-n-per-stratum sample (labeling budgets want counts, not
-    fractions — ``sampleBy`` gives binomial sizes).  Same deterministic
-    hash-order construction; strata smaller than n keep all rows."""
-    return host_quota_sample(
-        df, host_col=stratum_col, key_col=key_col, k=n_per_stratum, seed=seed
     )
 
 

@@ -34,7 +34,6 @@ __all__ = [
     "plane_signs",
     "lsh_topk",
     "lsh_near_pairs",
-    "ivf_topk",
     "ivf_train_fixedpoint",
     "ivf_topk_deterministic",
     "int8_quantize",
@@ -174,82 +173,6 @@ def _probe_flips(n_planes: int, probe_radius: int) -> list[int]:
     return flips
 
 
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k via IVF (inverted-file) coarse quantization.
-
-    A seeded k-means fits ``n_cells`` centroids (Spark ML, distributed);
-    every corpus vector lands in its nearest cell (the inverted list);
-    each query probes its ``n_probe`` nearest cells and re-ranks the
-    candidates exactly.  The scale path FAISS-style ANN takes: candidate
-    cost is ~``n_probe/n_cells`` of the corpus, and the centroid table
-    (n_cells × dim) broadcasts to every executor.
-
-    ``n_probe`` is the recall/cost knob (n_probe == n_cells ≡ brute force).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    c = emb.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_emb"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v"),
-    )
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_v", predictionCol="cell")
-    model = km.fit(c.select("_v"))
-    c = model.transform(c).select("c_id", "c_emb", "cell")
-    # centroid table: tiny (n_cells x dim) — crossJoin broadcasts it
-    cents = model.clusterCenters()
-    cent_df = F.broadcast(
-        local_frame(
-            emb.sparkSession,
-            [(i, [float(x) for x in v]) for i, v in enumerate(cents)],
-            "cell int, cent array<double>",
-        )
-    )
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb"))
-    # rank cells per query by centroid distance; probe the n_probe nearest
-    qc = q.crossJoin(cent_df).select(
-        "q_id",
-        "q_emb",
-        "cell",
-        F.aggregate(
-            F.zip_with(F.col("q_emb"), F.col("cent"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
-    )
-    wq = W.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = qc.withColumn("cell_rk", F.row_number().over(wq)).filter(
-        F.col("cell_rk") <= n_probe
-    )
-    pairs = (
-        probed.join(c, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            cosine("q_emb", "c_emb", dim).alias("cos_sim"),
-        )
-        .distinct()
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cos_sim", "rk")
-    )
-
-
 def _fp_expr(vec_col: str, dim: int, fp_scale: int) -> str:
     """SQL for the fixed-point (scaled BIGINT) image of a float vector.
     floor(double(x)·S) is exact and identical across engines."""
@@ -363,15 +286,18 @@ def ivf_topk_deterministic(
 ) -> DataFrame:
     """IVF ANN top-k with a DETERMINISTIC fixed-point coarse quantizer.
 
-    Same FAISS-style shape as ``ivf_topk`` (train → invert → probe →
-    exact re-rank) but the quantizer is ``ivf_train_fixedpoint``, so the
-    END-TO-END result is engine- and partitioning-exact: assignment and
-    probe order use integer distances with (d2, cell) tie-breaks, and the
-    re-rank uses the same float-multiply/double-accumulate cosine as the
-    brute-force baseline.  This is the variant under the SQL oracle gate
-    (Spark ML k-means in ``ivf_topk`` is seeded but not engine-portable);
-    determinism is also what production wants — a retried or resumed job
-    must not re-bucket the corpus differently.
+    The FAISS-style shape (train → invert → probe → exact re-rank): every
+    corpus vector lands in its nearest cell (the inverted list), each
+    query probes its ``n_probe`` nearest cells and re-ranks the candidates
+    exactly, so candidate cost is ~``n_probe/n_cells`` of the corpus
+    (``n_probe == n_cells`` ≡ brute force).  The quantizer is
+    ``ivf_train_fixedpoint``, so the END-TO-END result is engine- and
+    partitioning-exact: assignment and probe order use integer distances
+    with (d2, cell) tie-breaks, and the re-rank uses the same
+    float-multiply/double-accumulate cosine as the brute-force baseline.
+    That is what puts it under the SQL oracle gate, and what production
+    wants — a retried or resumed job must not re-bucket the corpus
+    differently.
     """
     cents = ivf_train_fixedpoint(
         emb, n_cells=n_cells, n_iter=n_iter, id_col=id_col,

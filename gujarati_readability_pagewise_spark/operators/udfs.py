@@ -34,9 +34,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.extract import extract_text
 from ..functions.features import N_FEATURES, compute_features
@@ -44,7 +42,6 @@ from ..functions.features import N_FEATURES, compute_features
 __all__ = [
     "EXTRACTED_SCHEMA",
     "SCORED_SCHEMA",
-    "extract_batch",
     "with_extraction",
     "with_extraction_and_score",
 ]
@@ -55,40 +52,6 @@ _SPANS_SCHEMA = ", spans array<string>"
 _TAIL_SCHEMA = ", extract_status string, n_bytes bigint, features array<double>"
 EXTRACTED_SCHEMA = _BASE_SCHEMA + _SPANS_SCHEMA + _TAIL_SCHEMA
 SCORED_SCHEMA = EXTRACTED_SCHEMA + ", pred_label int, p_nonreadable double"
-
-
-def extract_batch(pdf: pd.DataFrame, include_spans: bool = True) -> tuple[pd.DataFrame, np.ndarray]:
-    """Run golden extraction + feature kernel over one pandas batch.
-
-    Returns (result frame without features, feature matrix).  Kept in its
-    pandas form as the test surface (tests call it directly against the
-    pure-Python oracle); the Spark path below is the Arrow-native twin and
-    shares the same extract/feature kernels row for row.
-
-    ``include_spans=False`` drops the ordered-span column — spans duplicate
-    the full text, so skipping them halves the Arrow return traffic when a
-    downstream job only needs text/score (bench, aggregation-only runs).
-    """
-    htmls = pdf["html"]
-    results = [extract_text(h) for h in htmls]
-    texts = pd.Series([r.text for r in results], index=pdf.index, dtype="object")
-    cols = {
-        "url": pdf["url"],
-        "warc_ts": pdf["warc_ts"],
-        "lang": pdf["lang"],
-        "text": texts,
-    }
-    if include_spans:
-        cols["spans"] = pd.Series(
-            [r.spans for r in results], index=pdf.index, dtype="object"
-        )
-    cols["extract_status"] = pd.Series(
-        [r.status for r in results], index=pdf.index, dtype="object"
-    )
-    cols["n_bytes"] = htmls.map(lambda b: len(b) if b is not None else 0).astype("int64")
-    out = pd.DataFrame(cols)
-    feats = compute_features(texts)
-    return out, feats
 
 
 def _schema(include_spans: bool, scored: bool) -> str:
@@ -118,7 +81,7 @@ def _arrow_kernel(rb, include_spans: bool, rf):
     html = rb.column(idx("html"))
     results = [extract_text(h) for h in html.to_pylist()]
     texts = [r.text for r in results]
-    feats = compute_features(texts)  # list fast path: no Series round-trip
+    feats = compute_features(texts)
     arrays = [
         rb.column(idx("url")),
         rb.column(idx("warc_ts")),

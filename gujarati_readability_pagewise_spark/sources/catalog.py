@@ -11,20 +11,14 @@ out into R distinct urls (scale knob for the bench without new data).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["TABLES", "load_table", "pages_from_documents", "sf_dir_default"]
+__all__ = ["TABLES", "load_table", "pages_from_documents"]
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def sf_dir_default() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -7,12 +7,11 @@ from pyspark.sql import functions as F
 from gujarati_readability_pagewise_spark.operators.dedup import (
     char_shingles,
     exact_dedup,
-    jaccard_on_candidates,
+    jaccard_on_candidates_arrays,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     simhash,
-    simhash_candidates,
     simhash_near_pairs,
 )
 from gujarati_readability_pagewise_spark.operators.similarity import (
@@ -69,27 +68,34 @@ def test_simhash_identical_docs_same_fp(spark, docs):
     fp = simhash(docs, bits=16).toPandas().set_index("doc_id")["simhash"]
     assert fp[0] == fp[1]
     assert 0 <= fp[0] < 2**16
-    cands = {(r["a"], r["b"]) for r in simhash_candidates(simhash(docs, bits=16)).collect()}
-    assert (0, 1) in cands
+    pairs = {(r["a"], r["b"]) for r in simhash_near_pairs(simhash(docs, bits=16)).collect()}
+    assert (0, 1) in pairs
+
+
+def _verify_oracle(sh, cands):
+    """The exhaustive jaccard_pairs restricted to candidates, sorted."""
+    return (
+        jaccard_pairs(sh)
+        .join(cands, ["a", "b"], "left_semi")
+        .orderBy("a", "b")
+        .toPandas()
+    )
 
 
 def test_jaccard_on_candidates_matches_filtered_exact(spark, docs):
     """Pruned-plan verify ≡ exhaustive jaccard_pairs restricted to candidates."""
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    fast = jaccard_on_candidates(sh, cands).orderBy("a", "b").toPandas()
-    slow = (
-        jaccard_pairs(sh)
-        .join(cands, ["a", "b"], "left_semi")
-        .orderBy("a", "b")
-        .toPandas()
-    )
+    fast = jaccard_on_candidates_arrays(sh, cands).orderBy("a", "b").toPandas()
+    slow = _verify_oracle(sh, cands)
+    assert len(slow) > 0
     pd.testing.assert_frame_equal(fast, slow)
 
 
 def test_verified_pairs_semi_join_below_aggregation(spark, docs):
     """The LSH candidate restriction must sit BELOW the pair aggregation
-    (jaccard_on_candidates), not above it (the round-1 scale-killer)."""
+    (jaccard_on_candidates_arrays, with and without ``docs=``), not above
+    it (the round-1 scale-killer)."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -100,11 +106,12 @@ def test_verified_pairs_semi_join_below_aggregation(spark, docs):
 
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    good = jaccard_on_candidates(sh, cands)
     bad = jaccard_pairs(sh).join(cands, ["a", "b"], "left_semi")
-    good_plan = good._jdf.queryExecution().executedPlan().toString()
+    for verify_docs in (None, docs):
+        good = jaccard_on_candidates_arrays(sh, cands, docs=verify_docs)
+        good_plan = good._jdf.queryExecution().executedPlan().toString()
+        assert pa.semi_below_pair_agg(good_plan), verify_docs
     bad_plan = bad._jdf.queryExecution().executedPlan().toString()
-    assert pa.semi_below_pair_agg(good_plan)
     assert not pa.semi_below_pair_agg(bad_plan)
 
 
@@ -187,21 +194,6 @@ def test_brute_force_topk_is_exact_on_known_vectors(spark):
     assert list(out.c_id) == [1, 2, 3]
     assert out.cos_sim.iloc[0] > 0.99 and abs(out.cos_sim.iloc[1]) < 1e-9
     assert out.cos_sim.iloc[2] == -1.0
-
-
-def test_ivf_topk_recall_and_full_probe_exactness(spark):
-    """IVF coarse quantization: n_probe == n_cells probes every inverted
-    list ⇒ identical to brute force; fewer probes trade recall for cost."""
-    from gujarati_readability_pagewise_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact_set = {(r["q_id"], r["c_id"]) for r in brute_force_topk(emb, q, k=3).collect()}
-    full = ivf_topk(emb, q, k=3, n_cells=8, n_probe=8).collect()
-    assert {(r["q_id"], r["c_id"]) for r in full} == exact_set
-    part = ivf_topk(emb, q, k=3, n_cells=8, n_probe=2).collect()
-    recall = len(exact_set & {(r["q_id"], r["c_id"]) for r in part}) / len(exact_set)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
 def test_lsh_near_pairs_blocked_verify(spark):
@@ -340,7 +332,7 @@ def test_release_persisted_unpersists_intermediates(spark, docs):
     D.release_persisted()  # drain whatever earlier tests left
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    verified = jaccard_on_candidates(sh, cands, min_jaccard=0.5)
+    verified = jaccard_on_candidates_arrays(sh, cands, min_jaccard=0.5)
     verified.count()  # consuming action — caches are now populated
     assert len(D._PERSISTED) >= 3
     released = D.release_persisted()
@@ -433,19 +425,17 @@ def test_lsh_cross_candidates_incremental_shape(spark, docs):
 
 
 def test_jaccard_verify_forms_identical(spark, docs):
-    """The array-intersect verify (2.6x faster at sf0.1) must emit
-    EXACTLY the pair-driven form's rows — same pairs, same integer
-    n_common, same float jaccard."""
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        jaccard_on_candidates,
-        jaccard_on_candidates_arrays,
-    )
-
+    """The ``docs=`` verify (candidate shingles rebuilt from the semi-joined
+    docs, not semi-filtered from the shingle stream) must emit EXACTLY the
+    oracle's rows — same pairs, same integer n_common, same float jaccard."""
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    a = sorted(map(tuple, jaccard_on_candidates(sh, cands).collect()))
-    b = sorted(map(tuple, jaccard_on_candidates_arrays(sh, cands).collect()))
-    assert a == b and len(a) > 0
+    fast = (
+        jaccard_on_candidates_arrays(sh, cands, docs=docs).orderBy("a", "b").toPandas()
+    )
+    slow = _verify_oracle(sh, cands)
+    assert len(slow) > 0
+    pd.testing.assert_frame_equal(fast, slow)
 
 
 def test_duplicate_spans_finds_planted_copied_paragraph(spark):

@@ -166,3 +166,45 @@ def test_kelvin_sign_forces_ignorecase_path():
     assert "<" not in r.text  # the Kelvin-spelled tag did not leak through
     assert body in r.text and tail in r.text
     assert len(r.spans) == 2  # blockquote recognized as its own block
+
+
+def test_kept_spans_is_the_span_rule():
+    """``_kept_spans`` against a direct statement of the span rule: a block
+    is kept iff it passes the first pass (>= MIN_CONTENT_WORDS words, link
+    density <= MAX_LINK_DENSITY), or it clears the rescue floor (>=
+    MIN_RESCUE_WORDS words, same density cap) and a neighbour passes the
+    FIRST pass.  Word counts and densities straddle every threshold."""
+    import random
+
+    from gujarati_readability_pagewise_spark.functions import extract as E
+
+    def first_pass(b):
+        return b[1] >= E.MIN_CONTENT_WORDS and b[2] <= E.MAX_LINK_DENSITY
+
+    def rescuable(b):
+        return b[1] >= E.MIN_RESCUE_WORDS and b[2] <= E.MAX_LINK_DENSITY
+
+    def rule(blocks):
+        kept = []
+        for i, b in enumerate(blocks):
+            neighbours = blocks[max(i - 1, 0):i] + blocks[i + 1:i + 2]
+            if first_pass(b) or (rescuable(b) and any(map(first_pass, neighbours))):
+                kept.append(b[0])
+        return kept
+
+    assert (E.MIN_RESCUE_WORDS, E.MIN_CONTENT_WORDS) == (3, 8)
+    word_counts = (2, 3, 7, 8, 9)
+    densities = (0.0, 1.0 / 3.0, 0.34, 1.0)
+    rng = random.Random(11)
+    n_rescued = n_dropped = 0
+    for trial in range(4000):
+        blocks = [
+            (f"b{trial}.{i}", rng.choice(word_counts), rng.choice(densities))
+            for i in range(rng.randint(0, 12))
+        ]
+        want = rule(blocks)
+        assert E._kept_spans(blocks) == want, blocks
+        kept = set(want)
+        n_rescued += sum(b[0] in kept and not first_pass(b) for b in blocks)
+        n_dropped += sum(b[0] not in kept for b in blocks)
+    assert n_rescued > 1000 and n_dropped > 1000

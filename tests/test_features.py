@@ -3,26 +3,31 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gujarati_readability_pagewise_spark.functions.features import (
     FEATURE_NAMES,
     N_FEATURES,
     compute_features,
-    compute_features_one,
 )
 
 IDX = {n: i for i, n in enumerate(FEATURE_NAMES)}
 
 
+def one(text: str) -> np.ndarray:
+    """Feature vector of a single document: a batch of one."""
+    return compute_features([text])[0]
+
+
 def test_empty_text_zero_vector():
-    v = compute_features_one("")
+    v = one("")
     assert v.shape == (N_FEATURES,)
     assert np.all(v == 0.0)
 
 
 def test_simple_gujarati_counts():
     # "ગુજરાત મહાન છે." — words: 3, sentences: 1
-    v = compute_features_one("ગુજરાત મહાન છે.")
+    v = one("ગુજરાત મહાન છે.")
     assert v[IDX["n_chars"]] == 15.0
     assert v[IDX["n_words"]] == 3.0
     assert v[IDX["n_sentences"]] == 1.0
@@ -34,72 +39,79 @@ def test_simple_gujarati_counts():
 
 def test_akshara_conjuncts_count_as_one():
     # ક્ષ = ક + virama + ષ is ONE akshara; ત્ર = ત + virama + ર one
-    v = compute_features_one("ક્ષત્રિય")
+    v = one("ક્ષત્રિય")
     # ક્ષ, ત્રિ, ય → 3 orthographic syllables
     assert v[IDX["n_aksharas"]] == 3.0
 
 
 def test_danda_sentences():
-    v = compute_features_one("પહેલું વાક્ય। બીજું વાક્ય॥ ત્રીજું?")
+    v = one("પહેલું વાક્ય। બીજું વાક્ય॥ ત્રીજું?")
     assert v[IDX["n_sentences"]] == 3.0
 
 
 def test_mixed_script_purity():
-    v = compute_features_one("hello ગુજરાત")
+    v = one("hello ગુજરાત")
     # letters: 5 latin + 5 gujarati (ગ,જ,ર,ત + ા is a sign not a letter)
     assert 0.0 < v[IDX["script_purity"]] < 1.0
 
 
 def test_english_only_zero_purity():
-    v = compute_features_one("just english words here")
+    v = one("just english words here")
     assert v[IDX["script_purity"]] == 0.0
     assert v[IDX["n_aksharas"]] == 0.0
 
 
 def test_punct_and_digit_ratios():
-    v = compute_features_one("a1b2!?")
+    v = one("a1b2!?")
     assert v[IDX["punct_ratio"]] == 2.0 / 6.0
     assert v[IDX["digit_ratio"]] == 2.0 / 6.0
 
 
 def test_gujarati_digits_counted():
-    v = compute_features_one("૦૧૨")
+    v = one("૦૧૨")
     assert v[IDX["digit_ratio"]] == 1.0
 
 
 def test_type_token_ratio_repeats():
-    v = compute_features_one("શબ્દ શબ્દ શબ્દ નવું")
+    v = one("શબ્દ શબ્દ શબ્દ નવું")
     assert v[IDX["type_token_ratio"]] == 2.0 / 4.0
 
 
 def test_stopword_ratio():
-    v = compute_features_one("આ છે અને નવુંશબ્દ")
+    v = one("આ છે અને નવુંશબ્દ")
     assert v[IDX["stopword_ratio"]] == 3.0 / 4.0
 
 
 def test_batch_matches_scalar():
     texts = ["ગુજરાત મહાન છે.", "", "hello ગુજરાત", "a1b2!?"]
-    X = compute_features(pd.Series(texts))
+    X = compute_features(texts)
     for i, t in enumerate(texts):
-        np.testing.assert_array_equal(X[i], compute_features_one(t))
+        np.testing.assert_array_equal(X[i], one(t))
 
 
-def test_none_handled():
-    X = compute_features(pd.Series([None, "ઠીક છે."]))
-    assert np.all(X[0] == 0.0)
+def test_non_str_element_raises_naming_index():
+    with pytest.raises(TypeError, match=r"texts\[1\] is NoneType"):
+        compute_features(["ok", None])
+    with pytest.raises(TypeError, match=r"texts\[2\] is bytes"):
+        compute_features(["a", "b", b"c", None])
+
+
+def test_non_list_input_raises():
+    with pytest.raises(TypeError, match="list of str, not Series"):
+        compute_features(pd.Series(["ok"]))
+    with pytest.raises(TypeError, match="list of str, not tuple"):
+        compute_features(("ok",))
 
 
 def test_fused_numpy_passes_equal_scanning_regexes():
-    """The round-5 kernel fast-path replaces the _SENT / _AKSHARA findall
-    scans with single-pass table lookups over the shared codepoint array.
-    Equivalence must hold on adversarial inputs: orphan viramas, nukta
-    chains, consecutive modifiers, astral chars, doc boundaries where one
-    doc ends in a sentence run or attached virama and the next begins
-    mid-class."""
+    """The kernel counts sentences and aksharas with single-pass table
+    lookups over the shared codepoint array, and words with a whitespace
+    boundary scan.  Each must equal its scanning oracle (the _SENT /
+    _AKSHARA findall, ``str.split``) on adversarial inputs: orphan
+    viramas, nukta chains, consecutive modifiers, astral chars, doc
+    boundaries where one doc ends in a sentence run or attached virama and
+    the next begins mid-class — all in ONE batch."""
     import random
-
-    import numpy as np
-    import pandas as pd
 
     import gujarati_readability_pagewise_spark.functions.features as FT
 
@@ -118,13 +130,16 @@ def test_fused_numpy_passes_equal_scanning_regexes():
     ]
     docs += ["", "્ક", "ક્", "ક્ક્ક", "અ્ક", "ક઼્ક", "ક઼઼્ક", "કા્ક",
              "...!!।॥", ".a.b.", "ૐૐ", "😀્ક", "ક્।ક"]
-    t = pd.Series(docs)
-    v = FT._CpView(t)
+    X = compute_features(docs)
     np.testing.assert_array_equal(
-        FT._sentence_counts(v),
+        X[:, IDX["n_sentences"]],
         np.array([len(FT._SENT.findall(d)) for d in docs], dtype=float),
     )
     np.testing.assert_array_equal(
-        FT._akshara_counts(v),
+        X[:, IDX["n_aksharas"]],
         np.array([len(FT._AKSHARA.findall(d)) for d in docs], dtype=float),
+    )
+    np.testing.assert_array_equal(
+        X[:, IDX["n_words"]],
+        np.array([len(d.split()) for d in docs], dtype=float),
     )

@@ -44,7 +44,7 @@ def test_scoring_matches_pure_python_oracle(spark, pages_df, pages_pdf):
         .toPandas()
         .set_index("url")
     )
-    texts = pd.Series([extract_text(h).text for h in pages_pdf.html])
+    texts = [extract_text(h).text for h in pages_pdf.html]
     X = compute_features(texts)
     proba = model.predict_proba(X)
     for i, u in enumerate(pages_pdf.url):

@@ -9,7 +9,7 @@ from gujarati_readability_pagewise_spark.functions.extract import (
     extract_text,
 )
 from gujarati_readability_pagewise_spark.functions.features import (
-    compute_features_one,
+    compute_features,
 )
 
 import numpy as np
@@ -36,7 +36,7 @@ def test_extract_html_wrapped_text_total(body):
 @settings(max_examples=150, deadline=None)
 @given(st.text(max_size=1024))
 def test_features_finite_and_bounded(text):
-    v = compute_features_one(text)
+    v = compute_features([text])[0]
     assert np.all(np.isfinite(v))
     # ratio features live in [0, 1]
     for idx in (4, 5, 6, 7, 10, 11):
@@ -48,13 +48,9 @@ def test_features_finite_and_bounded(text):
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.text(max_size=200), min_size=0, max_size=20))
 def test_features_batch_equals_scalar(texts):
-    import pandas as pd
-
-    from gujarati_readability_pagewise_spark.functions.features import compute_features
-
-    X = compute_features(pd.Series(texts, dtype="object"))
+    X = compute_features(texts)
     for i, t in enumerate(texts):
-        np.testing.assert_array_equal(X[i], compute_features_one(t))
+        np.testing.assert_array_equal(X[i], compute_features([t])[0])
 
 
 @settings(max_examples=150, deadline=None)
