@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.skew import hot_key_join
+
 __all__ = [
     "sentences_exploded",
     "repetition_signals",
@@ -216,7 +218,8 @@ def bigram_fluency(
     10^12-doc gram stream through one reducer.  With ``head_k`` set (the
     default), the top-K corpus counts are broadcast and the hot grams
     resolve in the map-side broadcast hash join — the hot key never
-    crosses a shuffle; only the unskewed tail takes the shuffle join.
+    crosses a shuffle; only the unskewed tail takes the shuffle join
+    (``operators.skew.hot_key_join``).
     The split is EXACT: both branches read the same corpus counts, and
     sum/count over the union is order-insensitive integer arithmetic, so
     the result is value-identical to the plain join (``head_k=None``).
@@ -240,17 +243,9 @@ def bigram_fluency(
     # corpus counts: the groupBy itself is safe under skew (partial
     # aggregation combines the hot gram map-side before the shuffle)
     corpus = g.groupBy("gram").agg(F.count("*").alias("corpus_cnt"))
-    if head_k:
-        head = F.broadcast(
-            corpus.orderBy(F.desc("corpus_cnt"), "gram").limit(head_k)
-        )
-        hot = g.join(head, "gram")  # broadcast: hot grams never shuffle
-        tail = g.join(head.select("gram"), "gram", "left_anti").join(
-            corpus, "gram"
-        )  # anti is broadcast too; the remaining shuffle join is unskewed
-        scored = hot.unionByName(tail)
-    else:
-        scored = g.join(corpus, "gram")
+    scored = hot_key_join(
+        g, corpus, "gram", "corpus_cnt", ["gram", "corpus_cnt"], head_k
+    )
     return (
         scored.groupBy(key_col)
         .agg(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "lang_id_expr",
     "quality_score_expr",
+    "curation_keep_expr",
     "token_count_expr",
     "fingerprint_expr",
     "vocab_coverage",
@@ -61,6 +62,18 @@ def quality_score_expr(col: Column) -> Column:
     soup = _ratio(r"[0-9!-/:-@\[-`{-~]", col)
     raw = F.lit(0.4) * len_ok + F.lit(0.4) * letters - F.lit(0.2) * soup + F.lit(0.2)
     return F.least(F.greatest(raw, F.lit(0.0)), F.lit(1.0))
+
+
+def curation_keep_expr(
+    col: Column, langs: tuple[str, ...], min_quality: float, length_band: tuple[int, int]
+) -> Column:
+    """The curation rule: language in ``langs``, quality at least
+    ``min_quality``, and length within ``length_band`` (inclusive)."""
+    return (
+        lang_id_expr(col).isin(list(langs))
+        & (quality_score_expr(col) >= min_quality)
+        & F.length(col).between(*length_band)
+    )
 
 
 def token_count_expr(col: Column) -> Column:

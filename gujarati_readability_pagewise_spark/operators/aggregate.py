@@ -135,17 +135,6 @@ def distributed_rank(
     )
 
 
-def roc_auc(df: DataFrame, label_col: str, score_col: str, tiebreak: str) -> float:
-    """Exact rank-based (Mann-Whitney) ROC AUC, fully distributed."""
-    ranked = distributed_rank(df.select(label_col, score_col, tiebreak), score_col, tiebreak)
-    row = ranked.agg(
-        F.sum(F.when(F.col(label_col) == 1, F.col("rk")).otherwise(0)).alias("rs"),
-        F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("np"),
-        F.sum(F.when(F.col(label_col) == 1, 0).otherwise(1)).alias("nn"),
-    ).collect()[0]
-    return float((row["rs"] - row["np"] * (row["np"] + 1) / 2) / (row["np"] * row["nn"]))
-
-
 def verify_metrics(scored: DataFrame, reported: dict[str, float], tol: float = 1e-3) -> bool:
     """Port of scripts/verify_metrics.py: recompute and compare within tol."""
     fresh = binary_metrics(scored)

@@ -180,59 +180,13 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any MinHash band.
 
-    Bands the signature into `bands` equal slices, hashes each slice, and
-    self-joins on (band_idx, band_hash).  Returns distinct (a, b) with
-    a < b.
-
-    The band expressions are UNROLLED with Python-side indices instead of
-    `transform(sequence(...), slice(...))`: the higher-order-function form
-    falls out of codegen into the interpreted evaluator and measured ~6×
-    slower per evaluation (5.5 s vs 0.9 s warm over 5k docs at sf0.1) —
-    identical band-hash values either way.
+    Self-joins the ``lsh_banded`` table on (band, bh).  Returns distinct
+    (a, b) with a < b.
     """
-    if n_hashes % bands:
-        raise ValueError(f"n_hashes={n_hashes} not divisible by bands={bands}")
-    r = n_hashes // bands
-
-    def _band_hash(b: int):
-        h = F.md5(
-            F.concat_ws(
-                ",", *[F.col("sig")[b * r + i].cast("string") for i in range(r)]
-            )
-        )
-        if b != 0:
-            return h
-        # Runtime invariant (band 0 only, so it costs one branch per row and
-        # cannot be pruned — it is load-bearing in the output): the unrolled
-        # indices assume size(sig) == n_hashes.  A shorter signature would
-        # make every sig[i] past the end NULL and concat_ws silently drop it
-        # (all docs collide into identical band hashes → all-pairs
-        # explosion); a longer one would silently ignore hashes.  Fail loud
-        # on the first mismatched row instead.
-        return F.when(F.size("sig") == n_hashes, h).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"lsh_candidate_pairs: size(sig) != n_hashes={n_hashes}"
-                        " (signature/band arguments out of sync; got "
-                    ),
-                    F.size("sig").cast("string"),
-                    F.lit(")"),
-                )
-            )
-        )
-
-    structs = [
-        F.struct(F.lit(b).alias("band"), _band_hash(b).alias("bh"))
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        F.col(key_col).alias("k"), F.explode(F.array(*structs)).alias("bb")
-    ).select("k", "bb.band", "bb.bh")
     # The banded table is tiny (bands × rows, ~40 B/row) but its lineage is
     # the whole shingle+minhash pipeline; persist it so the self-join's two
     # sides don't each recompute 16 md5 min-aggregations over the corpus.
-    banded = _persist(banded)
+    banded = _persist(lsh_banded(sig, key_col, bands, n_hashes))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -248,10 +202,16 @@ def lsh_banded(
 ) -> DataFrame:
     """(key, band, bh) band table — the INDEX you persist between crawls.
 
-    Same banding expressions as ``lsh_candidate_pairs`` (including the
-    size(sig) runtime invariant); exposed separately so incremental dedup
-    can band only the NEW snapshot and join it against the stored bands of
-    the existing corpus.
+    Bands the signature into ``bands`` equal slices and hashes each slice.
+    ``lsh_candidate_pairs`` self-joins this table; incremental dedup bands
+    only the NEW snapshot and joins it against the stored bands of the
+    existing corpus (``lsh_cross_candidates``), so both forms band alike.
+
+    The band expressions are UNROLLED with Python-side indices instead of
+    `transform(sequence(...), slice(...))`: the higher-order-function form
+    falls out of codegen into the interpreted evaluator and measured ~6×
+    slower per evaluation (5.5 s vs 0.9 s warm over 5k docs at sf0.1) —
+    identical band-hash values either way.
     """
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} not divisible by bands={bands}")
@@ -265,6 +225,13 @@ def lsh_banded(
         )
         if b != 0:
             return h
+        # Runtime invariant (band 0 only, so it costs one branch per row and
+        # cannot be pruned — it is load-bearing in the output): the unrolled
+        # indices assume size(sig) == n_hashes.  A shorter signature would
+        # make every sig[i] past the end NULL and concat_ws silently drop it
+        # (all docs collide into identical band hashes → all-pairs
+        # explosion); a longer one would silently ignore hashes.  Fail loud
+        # on the first mismatched row instead.
         return F.when(F.size("sig") == n_hashes, h).otherwise(
             F.raise_error(
                 F.concat(
@@ -574,35 +541,70 @@ def skew_impossible(n_chars: int) -> bool:
     return n_chars <= HOT_FACTOR * HOT_MIN_ROWS
 
 
-def _split_hot_hash_join(
-    wins: DataFrame, matches: DataFrame, head_k: int | None
+def _window_hashes(
+    docs: DataFrame, text_col: str, key_col: str, window: int, n_partitions: int | None
 ) -> DataFrame:
-    """Join the raw window stream to per-hash match rows with the
-    broadcast-head skew split (the bigram_fluency cure, ported here).
-
-    ``matches`` must carry (h, first, cnt).  Window-hash frequency is
-    Zipf at web scale: one 40-char boilerplate string present in 10% of
-    a 10^12-doc corpus would funnel every occurrence through a single
-    partition of a plain shuffle join on ``h``.  With ``head_k`` set,
-    the top-K hottest hashes (by occurrence count — known exactly from
-    the firsts aggregation) are broadcast and resolve in a map-side
-    broadcast hash join; only the unskewed tail takes the shuffle join.
-    The split is EXACT (both branches read the same first-occurrence
-    rows; the union is the same row set as the plain join), proven
-    value-identical in tests with a planted hot boilerplate string.
-    The extra branch re-scans/re-explodes the text rather than caching
-    the window stream — at corpus scale recompute is the right trade
-    (the window stream is |corpus text| sized; a cache would spill it)."""
-    if not head_k:
-        return wins.join(matches.select("h", "first"), "h")
-    head = F.broadcast(
-        matches.orderBy(F.desc("cnt"), "h").limit(head_k).select("h", "first")
+    """(key, pos, h): the md5 of every ``window``-char substring of each
+    doc, ``pos`` its 1-based start.  ``n_partitions`` repartitions the docs
+    by key first so a single input file cannot serialize the fan-out."""
+    d = docs.select(key_col, text_col)
+    if n_partitions:
+        d = d.repartition(n_partitions, key_col)
+    seq = F.when(
+        F.length(text_col) >= window,
+        F.sequence(F.lit(1), F.length(text_col) - window + 1),
+    ).otherwise(F.array().cast("array<int>"))
+    return d.select(key_col, F.col(text_col), F.explode(seq).alias("pos")).select(
+        key_col,
+        "pos",
+        F.md5(F.col(text_col).substr(F.col("pos"), F.lit(window))).alias("h"),
     )
-    hot = wins.join(head, "h")  # broadcast: hot hashes never shuffle
-    tail = wins.join(head.select("h"), "h", "left_anti").join(
-        matches.select("h", "first"), "h"
-    )  # anti is broadcast too; the remaining shuffle join is unskewed
-    return hot.unionByName(tail)
+
+
+def _repeated_windows(
+    wins: DataFrame, key_col: str, head_k: int | None | str
+) -> DataFrame:
+    """(key, pos) of every window in ``wins`` whose hash also occurs at a
+    smaller (key, pos): per hash the first occurrence survives, every
+    other one is a duplicate.  ``head_k`` as in ``duplicate_spans``."""
+    # skew imports stable_hash64 from this module
+    from .skew import hot_key_join
+
+    firsts = wins.groupBy("h").agg(
+        F.min(F.struct(key_col, "pos")).alias("first"),
+        F.count("*").alias("cnt"),
+    )
+    matches = firsts.filter(F.col("cnt") >= 2)
+    if head_k == "auto":
+        matches = _persist(matches)
+        head_k = _auto_head_k(wins.sparkSession, matches)
+    is_first = (F.col(key_col) == F.col(f"first.{key_col}")) & (
+        F.col("pos") == F.col("first.pos")
+    )
+    joined = hot_key_join(wins, matches, "h", "cnt", ["h", "first"], head_k)
+    return joined.filter(~is_first).select(key_col, "pos")
+
+
+def _merge_spans(dups: DataFrame, key_col: str, window: int) -> DataFrame:
+    """Per doc, merge duplicate windows whose starts are at most
+    ``window`` chars apart into maximal spans (lag/cumsum islands):
+    (key, span_start, span_end, n_windows), 1-based inclusive."""
+    byd = W.partitionBy(key_col).orderBy("pos")
+    grp = (
+        dups.withColumn(
+            "brk",
+            F.when(F.col("pos") - F.lag("pos").over(byd) > window, 1).otherwise(0),
+        )
+        .withColumn(
+            "g",
+            F.sum("brk").over(byd.rowsBetween(W.unboundedPreceding, W.currentRow)),
+        )
+    )
+    return grp.groupBy(key_col, "g").agg(
+        F.min("pos").alias("span_start"),
+        (F.max("pos") + window - 1).alias("span_end"),
+        F.count("*").alias("n_windows"),
+    ).drop("g")
 
 
 def duplicate_spans(
@@ -646,9 +648,10 @@ def duplicate_spans(
     collapses map-side to one row per hash), and the subsequent join of
     the raw window stream back to the duplicated-hash rows — the one
     place a Zipf-hot hash COULD funnel a partition — takes the
-    broadcast-head split (``head_k``, see :func:`_split_hot_hash_join`):
+    broadcast-head split (``head_k``, see ``operators.skew.hot_key_join``):
     the hottest hashes resolve map-side, value-identical to the plain
-    join (``head_k=None``).
+    join (``head_k=None``).  The split re-explodes the text rather than
+    cache the |corpus text|-sized window stream, which would spill.
 
     ``head_k="auto"`` (the default) makes the split SKEW-ADAPTIVE: the
     dup-hash table is persisted (it is the join's build input either
@@ -658,56 +661,8 @@ def duplicate_spans(
     plan and never pays the split's second window-stream explode; a
     Zipf-hot corpus engages the broadcast head exactly as before.
     """
-    d = docs.select(key_col, text_col)
-    if n_partitions:
-        d = d.repartition(n_partitions, key_col)
-    seq = F.when(
-        F.length(text_col) >= window,
-        F.sequence(F.lit(1), F.length(text_col) - window + 1),
-    ).otherwise(F.array().cast("array<int>"))
-    wins = d.select(
-        key_col, F.col(text_col), F.explode(seq).alias("pos")
-    ).select(
-        key_col,
-        "pos",
-        F.md5(F.col(text_col).substr(F.col("pos"), F.lit(window))).alias("h"),
-    )
-    firsts = wins.groupBy("h").agg(
-        F.min(F.struct(key_col, "pos")).alias("first"),
-        F.count("*").alias("cnt"),
-    )
-    matches = firsts.filter(F.col("cnt") >= 2)
-    if head_k == "auto":
-        matches = _persist(matches)
-        head_k = _auto_head_k(docs.sparkSession, matches)
-    dups = (
-        _split_hot_hash_join(wins, matches, head_k)
-        .filter(
-            ~(
-                (F.col(key_col) == F.col(f"first.{key_col}"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-        .select(key_col, "pos")
-    )
-    byd = W.partitionBy(key_col).orderBy("pos")
-    grp = (
-        dups.withColumn(
-            "brk",
-            F.when(
-                F.col("pos") - F.lag("pos").over(byd) > window, 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "g",
-            F.sum("brk").over(byd.rowsBetween(W.unboundedPreceding, W.currentRow)),
-        )
-    )
-    return grp.groupBy(key_col, "g").agg(
-        F.min("pos").alias("span_start"),
-        (F.max("pos") + window - 1).alias("span_end"),
-        F.count("*").alias("n_windows"),
-    ).drop("g")
+    wins = _window_hashes(docs, text_col, key_col, window, n_partitions)
+    return _merge_spans(_repeated_windows(wins, key_col, head_k), key_col, window)
 
 
 def window_hash_index(
@@ -722,20 +677,7 @@ def window_hash_index(
     ``(h, first_key, first_pos)``.  Persist this bucketed by ``h``
     (operators/colocate) so the daily incremental join reads only the
     matching buckets and shuffles nothing but the new snapshot."""
-    d = docs.select(key_col, text_col)
-    if n_partitions:
-        d = d.repartition(n_partitions, key_col)
-    seq = F.when(
-        F.length(text_col) >= window,
-        F.sequence(F.lit(1), F.length(text_col) - window + 1),
-    ).otherwise(F.array().cast("array<int>"))
-    wins = d.select(
-        key_col, F.col(text_col), F.explode(seq).alias("pos")
-    ).select(
-        key_col,
-        "pos",
-        F.md5(F.col(text_col).substr(F.col("pos"), F.lit(window))).alias("h"),
-    )
+    wins = _window_hashes(docs, text_col, key_col, window, n_partitions)
     return wins.groupBy("h").agg(
         F.min(F.struct(F.col(key_col).alias("k"), F.col("pos").alias("p"))).alias("f")
     ).select("h", F.col("f.k").alias("first_key"), F.col("f.p").alias("first_pos"))
@@ -763,61 +705,18 @@ def duplicate_spans_incremental(
     the incremental form just never touches corpus text again.  Same
     span-merge and output contract as ``duplicate_spans``.
     """
-    d = new_docs.select(key_col, text_col)
-    if n_partitions:
-        d = d.repartition(n_partitions, key_col)
-    seq = F.when(
-        F.length(text_col) >= window,
-        F.sequence(F.lit(1), F.length(text_col) - window + 1),
-    ).otherwise(F.array().cast("array<int>"))
-    wins = _persist(
-        d.select(key_col, F.col(text_col), F.explode(seq).alias("pos")).select(
-            key_col,
-            "pos",
-            F.md5(F.col(text_col).substr(F.col("pos"), F.lit(window))).alias("h"),
-        )
-    )  # the per-character window explode feeds BOTH the semi (dup-vs-
-    # corpus) and anti (fresh) branches — cache it, not a branch output
+    # the per-character window explode feeds BOTH the semi (dup-vs-corpus)
+    # and anti (fresh) branches — cache it, not a branch output; the
+    # head_k="auto" probe then re-aggregates cached rows
+    wins = _persist(_window_hashes(new_docs, text_col, key_col, window, n_partitions))
     j = wins.join(index.select("h"), "h", "left_semi")
     fresh = wins.join(index.select("h"), "h", "left_anti")
-    firsts = fresh.groupBy("h").agg(
-        F.min(F.struct(key_col, "pos")).alias("first"),
-        F.count("*").alias("cnt"),
+    dups = (
+        j.select(key_col, "pos")
+        .unionByName(_repeated_windows(fresh, key_col, head_k))
+        .distinct()
     )
-    matches = firsts.filter(F.col("cnt") >= 2)
-    if head_k == "auto":
-        # same skew-adaptive decision as duplicate_spans; cheap here —
-        # `wins` is already persisted, so the stats pass re-aggregates
-        # cached rows rather than re-exploding the snapshot
-        matches = _persist(matches)
-        head_k = _auto_head_k(new_docs.sparkSession, matches)
-    dups_new = (
-        _split_hot_hash_join(fresh, matches, head_k)
-        .filter(
-            ~(
-                (F.col(key_col) == F.col(f"first.{key_col}"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-        .select(key_col, "pos")
-    )
-    dups = j.select(key_col, "pos").unionByName(dups_new).distinct()
-    byd = W.partitionBy(key_col).orderBy("pos")
-    grp = (
-        dups.withColumn(
-            "brk",
-            F.when(F.col("pos") - F.lag("pos").over(byd) > window, 1).otherwise(0),
-        )
-        .withColumn(
-            "g",
-            F.sum("brk").over(byd.rowsBetween(W.unboundedPreceding, W.currentRow)),
-        )
-    )
-    return grp.groupBy(key_col, "g").agg(
-        F.min("pos").alias("span_start"),
-        (F.max("pos") + window - 1).alias("span_end"),
-        F.count("*").alias("n_windows"),
-    ).drop("g")
+    return _merge_spans(dups, key_col, window)
 
 
 def cut_spans(

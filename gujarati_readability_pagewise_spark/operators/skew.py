@@ -1,13 +1,20 @@
-"""Skewed-key handling: heavy-hitter detection + salted two-stage aggregation.
+"""Skewed-key handling: heavy-hitter detection, salted two-stage aggregation
+and the broadcast-head join split.
 
 north_rule requires explicit skew machinery: one crawl host can hold 30 %+
-of all pages (the synthetic generator plants exactly that).  AQE's skew-join
-splitting handles *joins*; for wide **aggregations** over the hot key the
-cure is salting — pre-aggregate on (key, salt) so the hot key's rows spread
-over S reducers, then merge the S partials.
+of all pages (the synthetic generator plants exactly that).  For wide
+**aggregations** over the hot key the cure is salting — pre-aggregate on
+(key, salt) so the hot key's rows spread over S reducers, then merge the S
+partials.
 
 Only algebraic aggregates can split this way; this module implements the
 count/sum/min/max/avg family (avg = sum+count merged at stage 2).
+
+AQE's skew-join splitting misses a join fed by an aggregate on its key:
+that side has no exchange of its own for ``OptimizeSkewedJoin`` to split
+(on ``local[4]`` with a 1 KB skew threshold, a planted hot key left the
+plain joins of ``duplicate_spans`` and ``bigram_fluency`` unsplit).
+``hot_key_join`` broadcasts the hottest keys instead.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ __all__ = [
     "heavy_hitters_hash_sampled",
     "salted_summary",
     "salted_join",
+    "hot_key_join",
 ]
 
 
@@ -146,3 +154,27 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("_salt", F.col("_salt").cast(l.schema["_salt"].dataType))
     return l.join(r, [key, "_salt"], how).drop("_salt")
+
+
+def hot_key_join(
+    stream: DataFrame, counts: DataFrame, key: str, count_col: str,
+    cols: list[str], head_k: int | None,
+) -> DataFrame:
+    """``stream.join(counts.select(*cols), key)``, where ``counts`` holds
+    each key's occurrence count in ``count_col``, with the broadcast-head
+    skew split: with ``head_k`` set, the top-``head_k`` keys by count (ties
+    by key) are broadcast, so a Zipf-hot key never funnels through one
+    partition of the shuffle join that only the tail takes.  Both branches
+    read the same ``counts`` rows, so the union is the plain join's row
+    set.  The split reads ``stream`` twice."""
+    right = counts.select(*cols)
+    if not head_k:
+        return stream.join(right, key)
+    head = F.broadcast(
+        counts.orderBy(F.desc(count_col), key).limit(head_k).select(*cols)
+    )
+    hot = stream.join(head, key)  # broadcast: hot keys never shuffle
+    tail = stream.join(head.select(key), key, "left_anti").join(
+        right, key
+    )  # anti is broadcast too; the remaining shuffle join is unskewed
+    return hot.unionByName(tail)

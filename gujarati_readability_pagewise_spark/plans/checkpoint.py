@@ -99,7 +99,6 @@ def run_checkpointed(
     ``fail_after`` (tests only) aborts after N groups to simulate a crash.
     """
     spark = pages.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # one collect serves both the config guard and the resume set; a fresh
     # root has nothing to read, so it launches no job at all
     recorded = (
@@ -129,8 +128,11 @@ def run_checkpointed(
         result = transform(part)
         if "bucket" not in result.columns:
             result = result.withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
-        # idempotent: overwrite exactly the bucket partitions in `group`
-        result.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+        # idempotent: overwrite exactly the bucket partitions in `group`;
+        # a per-write option, so the session's overwrite mode is untouched
+        result.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(out_dir)
         wall = time.time() - t0
         # Manifest stats come from reading the JUST-WRITTEN bucket
         # partitions back (partition-pruned, 3 columns) — never from

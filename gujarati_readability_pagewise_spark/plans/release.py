@@ -32,17 +32,18 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.repetition import repetition_signals
 from ..functions.scrub import scrub_pii
-from ..functions.textstats import lang_id_expr, quality_score_expr
+from ..functions.textstats import curation_keep_expr
 from ..operators.components import cluster_representatives, connected_components
 from ..operators.dedup import (
     char_shingles,
     cut_spans,
     duplicate_spans,
+    exact_dedup,
     jaccard_on_candidates_arrays,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -92,22 +93,14 @@ def run_release(
         n_partitions=spark.sparkContext.defaultParallelism,
     ).select(key_col, F.col("keep").alias("_rep_keep"))
     cur = (
-        docs.withColumn("_lang", lang_id_expr(F.col(text_col)))
-        .withColumn("_q", quality_score_expr(F.col(text_col)))
-        .filter(F.col("_lang").isin(list(langs)))
-        .filter(F.col("_q") >= min_quality)
-        .filter(F.length(text_col).between(*length_band))
+        docs.filter(
+            curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
+        )
         .join(rep, key_col, "left")
         .filter(F.coalesce("_rep_keep", F.lit(False)))
-        .drop("_lang", "_q", "_rep_keep")
+        .drop("_rep_keep")
     )
-    w = W.partitionBy(F.md5(F.col(text_col))).orderBy(key_col)
-    cur = (
-        cur.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
+    cur = exact_dedup(cur, text_col, key_col).persist()
     funnel["n_curated"] = float(cur.count())
     _stage("curation")
 

@@ -63,40 +63,6 @@ def windowed_host_counts(
     )
 
 
-def running_host_totals(pages: DataFrame) -> DataFrame:
-    """Custom stateful operator: cumulative per-host page/byte totals.
-
-    ``applyInPandasWithState`` keeps one tiny state row per host across
-    micro-batches — the engine's example of a custom stateful streaming
-    operator (state bounded by #hosts, emitted every batch the host
-    appears in)."""
-    import pandas as pd
-
-    host = F.parse_url(F.col("url"), F.lit("HOST")).alias("host")
-
-    def update(key, pdfs, state):
-        n, b = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            b += int(pdf["html"].map(lambda x: len(x) if x is not None else 0).sum())
-        state.update((n, b))
-        yield pd.DataFrame(
-            {"host": [key[0]], "total_pages": [n], "total_bytes": [b]}
-        )
-
-    return (
-        pages.select(host, "url", "html")
-        .groupBy("host")
-        .applyInPandasWithState(
-            update,
-            outputStructType="host string, total_pages bigint, total_bytes bigint",
-            stateStructType="n bigint, b bigint",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
-
-
 def stream_extract(
     pages: DataFrame,
     model,
@@ -244,7 +210,7 @@ def curate_merge_batch(
 ) -> None:
     """One merge step of ``curate_stream_merge`` (module-level so tests
     and backfills drive it directly)."""
-    from ..functions.textstats import lang_id_expr, quality_score_expr
+    from ..functions.textstats import curation_keep_expr
 
     log_dir = f"{state_dir}/log"
     kept_dir = f"{state_dir}/kept"
@@ -266,12 +232,8 @@ def curate_merge_batch(
         # feed should run through the SCD2 merge first)
         .dropDuplicates([key_col, text_col])
     )
-    kept = (
-        log.withColumn("_lang", lang_id_expr(F.col(text_col)))
-        .withColumn("_q", quality_score_expr(F.col(text_col)))
-        .filter(F.col("_lang").isin(list(langs)))
-        .filter(F.col("_q") >= min_quality)
-        .filter(F.length(text_col).between(*length_band))
+    kept = log.filter(
+        curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
     )
     first = kept.groupBy(F.md5(F.col(text_col)).alias("_digest")).agg(
         F.min(key_col).alias(key_col)
@@ -283,7 +245,7 @@ def curate_merge_batch(
     out = (
         kept.withColumn("_digest", F.md5(F.col(text_col)))
         .join(first, [key_col, "_digest"], "left_semi")
-        .drop("_lang", "_q", "_digest")
+        .drop("_digest")
     )
     out.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"

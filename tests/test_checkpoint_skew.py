@@ -70,6 +70,21 @@ def test_rerun_of_completed_job_is_noop(spark, pages_df, dirs):
     assert run_checkpointed(pages_df, _transform, out, man, n_buckets=4, job_id="t3b") == 0
 
 
+def test_run_checkpointed_leaves_session_overwrite_mode(spark, pages_df, dirs):
+    """Bucket writes overwrite dynamically per write; the session's
+    partitionOverwriteMode stays as the caller set it, so a later static
+    ``overwrite().partitionBy(...)`` in the session still drops stale
+    partitions."""
+    out, man = dirs
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        run_checkpointed(pages_df, _transform, out, man, n_buckets=4, job_id="t6")
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_resume_with_changed_transform_id_fails_fast(spark, pages_df, dirs):
     """A partially-complete run resumed with a DIFFERENT transform config
     (e.g. the scrub flag flipped) must refuse to continue — silently
@@ -243,7 +258,6 @@ def test_distributed_rank_matches_global_window(spark):
     from pyspark.sql import Window as W2
     from gujarati_readability_pagewise_spark.operators.aggregate import (
         distributed_rank,
-        roc_auc,
     )
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -259,8 +273,6 @@ def test_distributed_rank_matches_global_window(spark):
     ).select("event_id", "rk_g")
     diff = got.join(want, "event_id").filter(F.col("rk") != F.col("rk_g")).count()
     assert diff == 0
-    auc = roc_auc(d.withColumnRenamed("pos", "label"), "label", "score", "event_id")
-    assert 0.4 < auc < 0.6  # random labels vs score
 
 
 def test_salting_actually_spreads_the_hot_key(spark, pages_df):

@@ -10,6 +10,7 @@ from gujarati_readability_pagewise_spark.operators.dedup import (
     jaccard_on_candidates_arrays,
     jaccard_pairs,
     lsh_candidate_pairs,
+    lsh_cross_candidates,
     minhash_signatures,
     simhash,
     simhash_near_pairs,
@@ -314,14 +315,19 @@ def test_word_ngrams_short_docs_yield_zero_grams(spark):
     assert sorted(r.doc_id for r in clean.collect()) == [1, 2, 3]
 
 
-def test_lsh_candidate_pairs_rejects_mismatched_signature_length(spark):
+@pytest.mark.parametrize(
+    "candidates",
+    [lsh_candidate_pairs, lambda sig, **kw: lsh_cross_candidates(sig, sig, **kw)],
+    ids=["lsh_candidate_pairs", "lsh_cross_candidates"],
+)
+def test_lsh_candidate_pairs_rejects_mismatched_signature_length(spark, candidates):
     """size(sig) != n_hashes must fail loud, not silently band on NULLs
     (shorter sigs collide everything; longer sigs ignore hashes)."""
     bad = spark.createDataFrame(
         [(1, [1, 2]), (2, [3, 4])], "doc_id int, sig array<int>"
     )
     with pytest.raises(Exception, match="size\\(sig\\) != n_hashes"):
-        lsh_candidate_pairs(bad, bands=2, n_hashes=4).collect()
+        candidates(bad, bands=2, n_hashes=4).collect()
 
 
 def test_release_persisted_unpersists_intermediates(spark, docs):
@@ -400,10 +406,6 @@ def test_lsh_cross_candidates_incremental_shape(spark, docs):
     """Incremental dedup: only (new, old) pairs come back — never new x new
     or old x old — and a planted verbatim duplicate of an old doc is always
     found (identical docs share every band)."""
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        lsh_cross_candidates,
-    )
-
     old = docs  # doc_ids 0..5
     new = docs.filter(F.col("doc_id") == 0).select(
         (F.col("doc_id") + 100).alias("doc_id"), "text"
@@ -422,6 +424,26 @@ def test_lsh_cross_candidates_incremental_shape(spark, docs):
     ).collect()
     assert all(r["new_id"] >= 100 and r["old_id"] < 100 for r in cands)
     assert (100, 0) in {(r["new_id"], r["old_id"]) for r in cands}  # planted dup
+
+
+def test_lsh_cross_candidates_agree_with_batch_pairs(spark, docs):
+    """Incremental and batch LSH band alike: the pairs of
+    ``lsh_cross_candidates(sig, sig)`` with new_id != old_id, folded to
+    (min, max), are exactly ``lsh_candidate_pairs(sig)``."""
+    corpus = docs.union(
+        docs.filter(F.col("doc_id") == 3).select(
+            (F.col("doc_id") + 100).alias("doc_id"), "text"
+        )
+    )  # planted verbatim copy of doc 3
+    sig = minhash_signatures(char_shingles(corpus, k=5), n_hashes=16)
+    cross = {
+        (min(r["new_id"], r["old_id"]), max(r["new_id"], r["old_id"]))
+        for r in lsh_cross_candidates(sig, sig, bands=4).collect()
+        if r["new_id"] != r["old_id"]
+    }
+    batch = {(r["a"], r["b"]) for r in lsh_candidate_pairs(sig, bands=4).collect()}
+    assert (3, 103) in batch
+    assert cross == batch
 
 
 def test_jaccard_verify_forms_identical(spark, docs):

@@ -137,32 +137,6 @@ def test_fake_features_pure_function():
     assert np.all(a[1] == 0) and np.all(a[2] == 0)
 
 
-def test_stateful_running_host_totals(spark, stream_src):
-    from gujarati_readability_pagewise_spark.streaming.ingest import (
-        running_host_totals,
-    )
-
-    d, n_unique, n_total = stream_src
-    q = (
-        running_host_totals(stream_pages(spark, d))
-        .writeStream.format("memory")
-        .queryName("state_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # last update per host carries the cumulative total → sum == all rows
-        final = spark.sql(
-            """SELECT host, max(total_pages) AS n FROM state_out GROUP BY host"""
-        )
-        assert final.agg({"n": "sum"}).collect()[0][0] == n_total
-        big = final.filter("host = 'big.example.gu'").collect()[0]["n"]
-        assert big > 0.25 * n_total  # skewed host state accumulated correctly
-    finally:
-        q.stop()
-
-
 def test_scd2_stream_merge_order_free_and_replay_idempotent(spark, tmp_path):
     """The incremental SCD2 merge must (a) converge to the batch history
     regardless of micro-batch arrival order and (b) be idempotent under
