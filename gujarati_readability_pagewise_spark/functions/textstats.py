@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.dedup import stable_hash64
+
 __all__ = [
     "lang_id_expr",
     "quality_score_expr",
@@ -92,7 +94,7 @@ def fingerprint_expr(col: Column) -> Column:
 
     Exact-dup detection key; cross-engine (DuckDB:
     ``('0x'||substr(md5(x),1,15))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+    return stable_hash64(col)
 
 
 def vocab_coverage(

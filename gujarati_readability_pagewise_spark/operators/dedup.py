@@ -105,7 +105,7 @@ def release_persisted() -> int:
     return n
 
 
-def stable_hash64(col: Column, seed: int | None = None) -> Column:
+def stable_hash64(col: Column, seed: int | str | None = None) -> Column:
     """Deterministic 60-bit int hash, identical in Spark and DuckDB."""
     x = F.concat(col, F.lit(f"#{seed}")) if seed is not None else col
     return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")

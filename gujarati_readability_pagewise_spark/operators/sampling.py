@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from .dedup import stable_hash64
 
 __all__ = [
     "stable_order",
@@ -33,8 +34,7 @@ __all__ = [
 def stable_order(col: Column, seed: int = 0) -> Column:
     """Deterministic pseudo-random sort key: 60-bit md5-derived int,
     identical in Spark and DuckDB (see dedup.stable_hash64)."""
-    x = F.concat(col.cast("string"), F.lit(f"#q{seed}"))
-    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+    return stable_hash64(col.cast("string"), f"q{seed}")
 
 
 def host_quota_sample(
@@ -209,19 +209,9 @@ def training_order(
         )
     spark = docs.sparkSession
     epochs = spark.range(n_epochs).select(F.col("id").cast("int").alias("epoch"))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(key_col).cast("string"),
-                    F.lit("#ep"),
-                    F.col("epoch").cast("string"),
-                )
-            ),
-            1, 15,
-        ),
-        16, 10,
-    ).cast("long")
+    h = stable_hash64(
+        F.concat(F.col(key_col).cast("string"), F.lit("#ep"), F.col("epoch").cast("string"))
+    )
     t = (
         docs.select(key_col)
         .crossJoin(F.broadcast(epochs))

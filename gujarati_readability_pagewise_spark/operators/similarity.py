@@ -1,16 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same contract (query set → top-k cosine neighbours):
+Families, all ranking with one per-query top-k rule (``_topk``):
 
-* ``brute_force_topk`` — exact: cross join + expression-level dot product
-  (``zip_with``/``aggregate``, JVM-side) + per-query window top-k.  O(Q·N);
-  the baseline and the verifier.
-* ``lsh_topk`` — scale path: random-hyperplane LSH.  Each vector gets a
-  ``n_planes``-bit signature (sign of dot with deterministic ±1
-  hyperplanes); candidates share a signature block; exact ranking runs on
-  candidates only.  The hyperplanes derive from a seeded hash of
-  (plane, dim) — no RNG state, so task retries are deterministic, and the
-  signature is a pure expression (no UDF).
+* brute force (``brute_force_topk``): exact cross join + cosine — the
+  oracle of LSH precision/recall and of IVF full-probe.
+* hyperplane LSH (``lsh_topk`` multi-probe, ``lsh_near_pairs`` banded):
+  bit-packed sign-of-dot signatures over deterministic ±1 hyperplanes
+  (md5 of (plane, dim): no RNG state, so retries are deterministic, and
+  no UDF); candidates share a signature block and are re-ranked exactly.
+* fixed-point IVF (``ivf_train_fixedpoint``, ``ivf_topk_deterministic``),
+  int8 (``int8_quantize``, ``quantized_topk``), SemDeDup
+  (``semantic_dedup``), ``decontaminate_semantic``, ``pool_embeddings``.
+
+The cosine's ``aggregate(zip_with)`` fold is the oracle of its unrolled
+(``dim``) form, and the signature's is its rule written in Python (both
+tested); DuckDB re-derives every contract query of these families.
 
 At 10^12 rows the LSH signature is one narrow map; the candidate join
 shuffles (signature, id) pairs, not vectors; only candidate pairs touch the
@@ -20,10 +24,9 @@ full embedding via the re-rank join.
 from __future__ import annotations
 
 import hashlib
-import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -45,32 +48,25 @@ __all__ = [
 def cosine(a, b, dim: int | None = None):
     """Cosine similarity between two array columns.
 
-    With ``dim`` the dot/norm sums are UNROLLED into plain expression
-    chains — the ``aggregate(zip_with(...))`` higher-order form falls out
-    of whole-stage codegen into the interpreted evaluator and measures
-    ~5-10× slower per row.  Both forms are bit-identical: the unrolled
-    left-associated adds reproduce the fold's accumulation order, and each
-    float product is cast to double exactly as the fold's ``acc + v``
-    promotion does.
+    Without ``dim`` it is the ``aggregate(zip_with(...))`` fold over
+    Columns or names.  With ``dim`` (column NAMES only) the dot/norm sums
+    are UNROLLED into one SQL expression chain — the higher-order fold
+    falls out of whole-stage codegen into the interpreted evaluator and
+    measures ~5-10× slower per row, and one SQL string is one py4j
+    round-trip instead of ~3·dim Column-operator calls.  Both forms are
+    bit-identical: the unrolled left-associated adds reproduce the fold's
+    accumulation order, and each float product is cast to double exactly
+    as the fold's ``acc + v`` promotion does.
     """
-    if dim is not None and isinstance(a, str) and isinstance(b, str):
-        # column NAMES: build the whole chain as one SQL string — a single
-        # py4j round-trip instead of ~3·dim Column-operator calls (driver-
-        # side expression construction was the dominant cost per query)
+    if dim is not None:
+        if not (isinstance(a, str) and isinstance(b, str)):
+            raise TypeError("cosine(..., dim=) takes column names, not Columns")
         dot_sql = lambda x, y: " + ".join(
             f"CAST({x}[{i}] * {y}[{i}] AS DOUBLE)" for i in range(dim)
         )
         return F.expr(
             f"({dot_sql(a, b)}) / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
         )
-    if dim is not None:
-        dot = reduce(
-            operator.add, [(a[i] * b[i]).cast("double") for i in range(dim)]
-        )
-        norm = lambda c: F.sqrt(
-            reduce(operator.add, [(c[i] * c[i]).cast("double") for i in range(dim)])
-        )
-        return dot / (norm(a) * norm(b))
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
@@ -80,6 +76,25 @@ def cosine(a, b, dim: int | None = None):
         F.aggregate(c, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
     )
     return dot / (norm(a) * norm(b))
+
+
+def _topk(pairs: DataFrame, score: str, k: int) -> DataFrame:
+    """Per-query top-``k`` of (q_id, c_id, ``score``) rows: highest score
+    first, ties broken by the lower candidate id; adds the 1-based ``rk``."""
+    w = W.partitionBy("q_id").orderBy(F.desc(score), F.asc("c_id"))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "c_id", score, "rk")
+    )
+
+
+def _infer_dim(emb: DataFrame, vec_col: str) -> int:
+    """Length of the first vector: one driver-side probe when no ``dim``."""
+    row = emb.select(vec_col).first()
+    if row is None or row[0] is None:
+        raise ValueError("cannot infer embedding dim from an empty corpus; pass dim=")
+    return len(row[0])
 
 
 def brute_force_topk(
@@ -103,12 +118,7 @@ def brute_force_topk(
             cosine("q_emb", "c_emb", dim).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cos_sim", "rk")
-    )
+    return _topk(pairs, "cos_sim", k)
 
 
 def plane_signs(n_planes: int, dim: int) -> list[list[float]]:
@@ -123,42 +133,28 @@ def plane_signs(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _signature(vec_col, planes: list[list[float]]):
+def _signature(vec_col: str, planes: list[list[float]]):
     """Bit-packed hyperplane signature as a small int expression.
 
-    The per-plane dot is UNROLLED: weights are ±1, so it is a plain chain
-    of ``± vec[d]`` double adds — whole-stage-codegen-able, vs the
-    interpreted ``aggregate(zip_with(...))`` fold (~6× slower per row).
-    Bit-identical to the fold: left-associated adds in the same element
-    order, each ±float term cast to double exactly like the fold's
-    promotion; sign decisions at ±0.0 agree (both compare > 0).
+    Bit ``b`` is set iff the left-to-right double sum of the ±float
+    components ``planes[b][d] · vec[d]`` is > 0 (so ±0.0 sums clear it);
+    tests check this SQL form against that rule written in Python.  The
+    per-plane dot is UNROLLED: weights are ±1, so it is a plain chain of
+    ``± vec[d]`` double adds — whole-stage-codegen-able, vs the
+    interpreted ``aggregate(zip_with(...))`` fold (~6× slower per row) —
+    built as one SQL string (one py4j round-trip vs thousands of Column
+    ops).
     """
-    if isinstance(vec_col, str):
-        # one SQL string = one py4j round-trip (vs thousands of Column ops)
-        terms = []
-        for b, row in enumerate(planes):
-            dot = " + ".join(
-                f"CAST({vec_col}[{d}] AS DOUBLE)"
-                if w > 0
-                else f"CAST((- {vec_col}[{d}]) AS DOUBLE)"
-                for d, w in enumerate(row)
-            )
-            terms.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << b} ELSE 0 END)")
-        return F.expr(f"CAST({' + '.join(terms)} AS INT)")
-    sig = None
+    terms = []
     for b, row in enumerate(planes):
-        dot = reduce(
-            operator.add,
-            [
-                vec_col[d].cast("double")
-                if w > 0
-                else (-vec_col[d]).cast("double")
-                for d, w in enumerate(row)
-            ],
+        dot = " + ".join(
+            f"CAST({vec_col}[{d}] AS DOUBLE)"
+            if w > 0
+            else f"CAST((- {vec_col}[{d}]) AS DOUBLE)"
+            for d, w in enumerate(row)
         )
-        term = F.when(dot > 0, F.lit(2**b)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return sig.cast("int")
+        terms.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << b} ELSE 0 END)")
+    return F.expr(f"CAST({' + '.join(terms)} AS INT)")
 
 
 def _probe_flips(n_planes: int, probe_radius: int) -> list[int]:
@@ -173,17 +169,14 @@ def _probe_flips(n_planes: int, probe_radius: int) -> list[int]:
     return flips
 
 
-def _fp_expr(vec_col: str, dim: int, fp_scale: int) -> str:
-    """SQL for the fixed-point (scaled BIGINT) image of a float vector.
+def _fp_expr(vec_col: str, dim: int, fp_scale: int):
+    """``efp``: the fixed-point (scaled BIGINT) image of a float vector.
     floor(double(x)·S) is exact and identical across engines."""
-    return (
-        "array("
-        + ", ".join(
-            f"CAST(floor(CAST({vec_col}[{d}] AS DOUBLE) * {fp_scale}) AS BIGINT)"
-            for d in range(dim)
-        )
-        + ")"
+    terms = ", ".join(
+        f"CAST(floor(CAST({vec_col}[{d}] AS DOUBLE) * {fp_scale}) AS BIGINT)"
+        for d in range(dim)
     )
+    return F.expr(f"array({terms})").alias("efp")
 
 
 def _d2_fp(efp, cent):
@@ -193,6 +186,25 @@ def _d2_fp(efp, cent):
         F.zip_with(efp, cent, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
+    )
+
+
+def _centroids(spark: SparkSession, cents: dict[int, list[int]]) -> DataFrame:
+    """The (cell, cent) table, broadcast: n_cells tiny rows."""
+    return F.broadcast(
+        local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
+    )
+
+
+def _nearest_cell(rows: DataFrame, key: str, cents: DataFrame, *carry: str) -> DataFrame:
+    """(key, cell, *carry): each ``rows`` id (with its ``efp``) in the cell
+    of least integer distance, ties to the lower cell."""
+    return (
+        rows.crossJoin(cents)
+        .select(key, *carry, "cell", _d2_fp(F.col("efp"), F.col("cent")).alias("d2"))
+        .groupBy(key)
+        .agg(F.min(F.struct("d2", "cell", *carry)).alias("m"))
+        .select(key, F.col("m.cell").alias("cell"), *[F.col(f"m.{c}").alias(c) for c in carry])
     )
 
 
@@ -231,9 +243,7 @@ def ivf_train_fixedpoint(
     is scanned, never shuffled by vector.
     """
     spark = emb.sparkSession
-    e = emb.select(
-        F.col(id_col).alias("_id"), F.expr(_fp_expr(vec_col, dim, fp_scale)).alias("efp")
-    ).persist()
+    e = emb.select(F.col(id_col).alias("_id"), _fp_expr(vec_col, dim, fp_scale)).persist()
     try:
         cents: dict[int, list[int]] = {
             int(r["_id"]): [int(v) for v in r["efp"]]
@@ -244,16 +254,7 @@ def ivf_train_fixedpoint(
                 f"need ids 0..{n_cells - 1} present to seed {n_cells} cells"
             )
         for _ in range(n_iter):
-            cdf = F.broadcast(
-                local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
-            )
-            assign = (
-                e.crossJoin(cdf)
-                .select("_id", "efp", "cell", _d2_fp(F.col("efp"), F.col("cent")).alias("d2"))
-                .groupBy("_id")
-                .agg(F.min(F.struct("d2", "cell")).alias("m"))
-                .select("_id", F.col("m.cell").alias("cell"))
-            )
+            assign = _nearest_cell(e, "_id", _centroids(spark, cents))
             sums = (
                 assign.join(e, "_id")
                 .groupBy("cell")
@@ -270,6 +271,19 @@ def ivf_train_fixedpoint(
     finally:
         e.unpersist()
     return cents
+
+
+def _train_and_assign(emb, key, vec, n_cells, n_iter, id_col, vec_col, dim, fp_scale):
+    """Train the fixed-point quantizer on ``emb`` and put every vector in
+    its nearest cell: (centroid table, (key, cell, vec) rows)."""
+    cents = _centroids(
+        emb.sparkSession,
+        ivf_train_fixedpoint(emb, n_cells, n_iter, id_col, vec_col, dim, fp_scale),
+    )
+    rows = emb.select(
+        F.col(id_col).alias(key), F.col(vec_col).alias(vec), _fp_expr(vec_col, dim, fp_scale)
+    )
+    return cents, _nearest_cell(rows, key, cents, vec)
 
 
 def ivf_topk_deterministic(
@@ -299,27 +313,12 @@ def ivf_topk_deterministic(
     wants — a retried or resumed job must not re-bucket the corpus
     differently.
     """
-    cents = ivf_train_fixedpoint(
-        emb, n_cells=n_cells, n_iter=n_iter, id_col=id_col,
-        vec_col=vec_col, dim=dim, fp_scale=fp_scale,
-    )
-    spark = emb.sparkSession
-    cdf = F.broadcast(
-        local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
-    )
-    fp = F.expr(_fp_expr(vec_col, dim, fp_scale))
-    c = emb.select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"), fp.alias("efp")
-    )
-    c_assign = (
-        c.crossJoin(cdf)
-        .select("c_id", "c_emb", "cell", _d2_fp(F.col("efp"), F.col("cent")).alias("d2"))
-        .groupBy("c_id")
-        .agg(F.min(F.struct("d2", "cell", "c_emb")).alias("m"))
-        .select("c_id", F.col("m.cell").alias("cell"), F.col("m.c_emb").alias("c_emb"))
+    cdf, c_assign = _train_and_assign(
+        emb, "c_id", "c_emb", n_cells, n_iter, id_col, vec_col, dim, fp_scale
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb"), fp.alias("efp")
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb"),
+        _fp_expr(vec_col, dim, fp_scale),
     )
     wq = W.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cell"))
     probed = (
@@ -334,12 +333,7 @@ def ivf_topk_deterministic(
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", cosine("q_emb", "c_emb", dim).alias("cos_sim"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cos_sim", "rk")
-    )
+    return _topk(pairs, "cos_sim", k)
 
 
 def int8_quantize(
@@ -411,12 +405,7 @@ def quantized_topk(
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", F.expr(f"({dot})").alias("dot_q"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("dot_q"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "dot_q", "rk")
-    )
+    return _topk(pairs, "dot_q", k)
 
 
 def lsh_near_pairs(
@@ -442,19 +431,13 @@ def lsh_near_pairs(
     Returns (a, b, cos) with a < b and cos > threshold.
     """
     if dim is None:
-        row = emb.select(vec_col).first()
-        if row is None or row[0] is None:
-            raise ValueError("cannot infer dim from an empty corpus; pass dim=")
-        dim = len(row[0])
+        dim = _infer_dim(emb, vec_col)
     if n_planes % bands:
         raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
     if n_partitions:  # spread the signature map over cores (single-file input)
         emb = emb.repartition(n_partitions, id_col)
     planes = plane_signs(n_planes, dim)
     r = n_planes // bands
-    band_sigs = [
-        _signature(vec_col, planes[b * r : (b + 1) * r]) for b in range(bands)
-    ]
     # one select per band, unioned: packing every band's unrolled signature
     # into a single explode projection exceeds the 64KB codegen method limit
     # (ERROR + interpreted fallback); per-band projections stay compiled
@@ -464,7 +447,7 @@ def lsh_near_pairs(
             emb.select(
                 F.col(id_col).alias("k"),
                 F.lit(b).alias("band"),
-                band_sigs[b].alias("bsig"),
+                _signature(vec_col, planes[b * r : (b + 1) * r]).alias("bsig"),
             )
             for b in range(bands)
         ],
@@ -515,12 +498,7 @@ def lsh_topk(
     C(n,2) two-bit flips (recall → ~1 for near-duplicate workloads).
     """
     if dim is None:
-        row = emb.select(vec_col).first()
-        if row is None or row[0] is None:
-            raise ValueError(
-                "cannot infer embedding dim from an empty corpus; pass dim="
-            )
-        dim = len(row[0])
+        dim = _infer_dim(emb, vec_col)
     planes = plane_signs(n_planes, dim)
     c = emb.select(
         F.col(id_col).alias("c_id"),
@@ -552,12 +530,7 @@ def lsh_topk(
         )
         .distinct()
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cos_sim", "rk")
-    )
+    return _topk(pairs, "cos_sim", k)
 
 
 def semantic_dedup(
@@ -589,21 +562,8 @@ def semantic_dedup(
     from .components import connected_components
     from .dedup import _persist
 
-    spark = emb.sparkSession
-    cents = ivf_train_fixedpoint(
-        emb, n_cells, n_iter, id_col, vec_col, dim, fp_scale
-    )
-    cdf = F.broadcast(
-        local_frame(spark, sorted(cents.items()), "cell int, cent array<bigint>")
-    )
-    fp = F.expr(_fp_expr(vec_col, dim, fp_scale))
-    assign = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_emb"), fp.alias("efp"))
-        .crossJoin(cdf)
-        .select("_id", "_emb", "cell", _d2_fp(F.col("efp"), F.col("cent")).alias("d2"))
-        .groupBy("_id")
-        .agg(F.min(F.struct("d2", "cell", "_emb")).alias("m"))
-        .select("_id", F.col("m.cell").alias("cell"), F.col("m._emb").alias("_emb"))
+    _, assign = _train_and_assign(
+        emb, "_id", "_emb", n_cells, n_iter, id_col, vec_col, dim, fp_scale
     )
     # registered persist (dedup._PERSISTED): the returned plan references
     # the assignment on three paths (both pair sides + the audit join), so
@@ -620,7 +580,7 @@ def semantic_dedup(
     edges = (
         a.join(b, "cell")
         .filter(F.col("a") < F.col("b"))
-        .filter(cosine(F.col("ea"), F.col("eb"), dim) > threshold)
+        .filter(cosine("ea", "eb", dim) > threshold)
         .select("a", "b")
     )
     clusters = connected_components(edges)

@@ -28,7 +28,6 @@ __all__ = [
     "heavy_hitters",
     "heavy_hitters_hash_sampled",
     "salted_summary",
-    "salted_join",
     "hot_key_join",
 ]
 
@@ -123,37 +122,6 @@ def salted_summary(
             F.max("_max").alias("max_value"),
         )
     )
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the (large, skewed) LEFT side, replicate
-    the (smaller) RIGHT side once per salt — the manual form of AQE's
-    skew-join split, for the places AQE can't reach (a skewed key the
-    runtime stats miss, stream-static joins where AQE is disabled, or a
-    deliberately pinned physical plan).
-
-    The left salt is a deterministic row hash (never ``rand()`` — retries
-    must reproduce the same partition assignment); the right side gains
-    an exploded ``_salt`` column so each (key, salt) shard joins its own
-    replica.  Row-for-row identical to ``left.join(right, key, how)`` for
-    ``inner``/``left`` joins (asserted in tests).  Cost: the right side is
-    shipped ``n_salts`` times — use it when right is dimension-sized but
-    too big (or too mid-plan) to broadcast.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports how='inner'|'left' only")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
-    l = left.withColumn("_salt", salt)
-    r = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast(l.schema["_salt"].dataType))
-    return l.join(r, [key, "_salt"], how).drop("_salt")
 
 
 def hot_key_join(

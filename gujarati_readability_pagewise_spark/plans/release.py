@@ -40,6 +40,7 @@ from ..functions.scrub import scrub_pii
 from ..functions.textstats import curation_keep_expr
 from ..operators.components import cluster_representatives, connected_components
 from ..operators.dedup import (
+    _persist,
     char_shingles,
     cut_spans,
     duplicate_spans,
@@ -87,110 +88,105 @@ def run_release(
     funnel["n_input"] = float(docs.count())
     _stage("input_count")
 
-    # 1. curation chain (same rules as the curation_funnel gate query)
-    rep = repetition_signals(
-        docs, text_col=text_col, key_col=key_col,
-        n_partitions=spark.sparkContext.defaultParallelism,
-    ).select(key_col, F.col("keep").alias("_rep_keep"))
-    cur = (
-        docs.filter(
-            curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
-        )
-        .join(rep, key_col, "left")
-        .filter(F.coalesce("_rep_keep", F.lit(False)))
-        .drop("_rep_keep")
-    )
-    cur = exact_dedup(cur, text_col, key_col).persist()
-    funnel["n_curated"] = float(cur.count())
-    _stage("curation")
-
-    # 2. verified near-dup survivors
-    sh = char_shingles(
-        cur, text_col, key_col, k=5,
-        n_partitions=spark.sparkContext.defaultParallelism,
-    )
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh, key_col, n_hashes=16), key_col, bands=4
-    )
-    verified = jaccard_on_candidates_arrays(
-        sh, cands, key_col, docs=cur.select(key_col, text_col), text_col=text_col
-    )
-    edges = verified.filter(F.col("jaccard") >= jaccard_threshold).select("a", "b")
-    # connected_components emits its node column as 'doc_id' regardless of
-    # the corpus key; realign for string-keyed (url) corpora
-    clusters = connected_components(edges).withColumnRenamed("doc_id", key_col)
-    audit = cluster_representatives(
-        clusters,
-        cur.select(key_col, F.length(text_col).alias("n_chars")),
-        key_col=key_col,
-    )
-    survivors = cur.join(
-        audit.filter(F.col("is_survivor") == 1).select(key_col), key_col, "left_semi"
-    ).persist()  # consumed by count + optional cutting + scrub/write/packing
-    surv_cached = survivors  # the persisted frame (survivors is rebound below)
-    surv_row = survivors.agg(
-        F.count("*").alias("n"), F.sum(F.length(text_col)).alias("chars")
-    ).first()
-    funnel["n_survivors"] = float(surv_row["n"])
-    _stage("near_dup_survivors")
-
-    # 3. optional ExactSubstr cutting inside the surviving docs
-    if cut_spans_window:
-        # the survivors' size can already rule out the skewed split that
-        # head_k="auto" would probe for; the probe only runs when it can't
-        spans = duplicate_spans(
-            survivors, text_col, key_col, window=cut_spans_window,
+    # every persist below is registered with the dedup registry, so the
+    # finally frees them (and the dedup operators' own) on failure too
+    try:
+        # 1. curation chain (same rules as the curation_funnel gate query)
+        rep = repetition_signals(
+            docs, text_col=text_col, key_col=key_col,
             n_partitions=spark.sparkContext.defaultParallelism,
-            head_k=None if skew_impossible(surv_row["chars"] or 0) else "auto",
+        ).select(key_col, F.col("keep").alias("_rep_keep"))
+        cur = (
+            docs.filter(
+                curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
+            )
+            .join(rep, key_col, "left")
+            .filter(F.coalesce("_rep_keep", F.lit(False)))
+            .drop("_rep_keep")
         )
-        # persist the CUT result before the funnel count: the scrub/pack
-        # stage's first action would otherwise re-execute the whole span
-        # pipeline (explode + first-occurrence agg + island merge) a
-        # second time — the funnel agg and the persist share one
-        # materialization instead
-        survivors = cut_spans(survivors, spans, text_col, key_col).persist()
-        funnel["n_span_cut_chars"] = float(
-            survivors.agg(F.sum("n_cut_chars")).first()[0] or 0
+        cur = _persist(exact_dedup(cur, text_col, key_col))
+        funnel["n_curated"] = float(cur.count())
+        _stage("curation")
+
+        # 2. verified near-dup survivors
+        sh = char_shingles(
+            cur, text_col, key_col, k=5,
+            n_partitions=spark.sparkContext.defaultParallelism,
         )
-        cut_cached = survivors
-        survivors = survivors.drop("n_cut_chars")
-        _stage("span_cutting")
-    else:
-        cut_cached = None
+        cands = lsh_candidate_pairs(
+            minhash_signatures(sh, key_col, n_hashes=16), key_col, bands=4
+        )
+        verified = jaccard_on_candidates_arrays(
+            sh, cands, key_col, docs=cur.select(key_col, text_col), text_col=text_col
+        )
+        edges = verified.filter(F.col("jaccard") >= jaccard_threshold).select("a", "b")
+        # connected_components emits its node column as 'doc_id' regardless of
+        # the corpus key; realign for string-keyed (url) corpora
+        clusters = connected_components(edges).withColumnRenamed("doc_id", key_col)
+        audit = cluster_representatives(
+            clusters,
+            cur.select(key_col, F.length(text_col).alias("n_chars")),
+            key_col=key_col,
+        )
+        survivors = _persist(cur.join(
+            audit.filter(F.col("is_survivor") == 1).select(key_col), key_col, "left_semi"
+        ))  # consumed by count + optional cutting + scrub/write/packing
+        surv_row = survivors.agg(
+            F.count("*").alias("n"), F.sum(F.length(text_col)).alias("chars")
+        ).first()
+        funnel["n_survivors"] = float(surv_row["n"])
+        _stage("near_dup_survivors")
 
-    # 4. PII scrub at the fixpoint, IPv6 included; persisted because the
-    # packing prefix-sum takes two driver actions (approxQuantile + bucket
-    # sums) and the released write is a third — without the persist the
-    # whole curation+dedup chain re-executes per action
-    scrubbed = survivors.withColumn(
-        text_col, scrub_pii(F.col(text_col), fixpoint=True, ipv6=True)
-    ).persist()
+        # 3. optional ExactSubstr cutting inside the surviving docs
+        if cut_spans_window:
+            # the survivors' size can already rule out the skewed split that
+            # head_k="auto" would probe for; the probe only runs when it can't
+            spans = duplicate_spans(
+                survivors, text_col, key_col, window=cut_spans_window,
+                n_partitions=spark.sparkContext.defaultParallelism,
+                head_k=None if skew_impossible(surv_row["chars"] or 0) else "auto",
+            )
+            # persist the CUT result before the funnel count: the scrub/pack
+            # stage's first action would otherwise re-execute the whole span
+            # pipeline (explode + first-occurrence agg + island merge) a
+            # second time — the funnel agg and the persist share one
+            # materialization instead
+            survivors = _persist(cut_spans(survivors, spans, text_col, key_col))
+            funnel["n_span_cut_chars"] = float(
+                survivors.agg(F.sum("n_cut_chars")).first()[0] or 0
+            )
+            survivors = survivors.drop("n_cut_chars")
+            _stage("span_cutting")
 
-    # 5. packing coordinates over the released corpus
-    packed = pack_sequences(scrubbed, text_col, key_col, seq_len=seq_len)
-    released = scrubbed.join(packed.drop("n_tokens"), key_col)
-    released.write.mode("overwrite").parquet(f"{out_root}/released")
-    # one scan of the WRITTEN parquet yields both funnel rows — the old
-    # form re-ran the packing window for max(end_chunk) (released
-    # already carries the column); the schema is the one just written, so
-    # no footer-inference job runs
-    rel_row = spark.read.schema(released.schema).parquet(f"{out_root}/released").agg(
-        F.count("*").alias("n"),
-        (F.max(F.col("end_chunk")) + 1).cast("double").alias("s"),
-    ).first()
-    funnel["n_released"] = float(rel_row["n"])
-    _stage("scrub_pack_write")
-    funnel["n_sequences"] = float(rel_row["s"] or 0.0)
+        # 4. PII scrub at the fixpoint, IPv6 included; persisted because the
+        # packing prefix-sum takes two driver actions (approxQuantile + bucket
+        # sums) and the released write is a third — without the persist the
+        # whole curation+dedup chain re-executes per action
+        scrubbed = _persist(survivors.withColumn(
+            text_col, scrub_pii(F.col(text_col), fixpoint=True, ipv6=True)
+        ))
 
-    local_frame(
-        spark, [(k, v) for k, v in sorted(funnel.items())], "stage string, n double"
-    ).write.mode("overwrite").parquet(f"{out_root}/funnel")
-    funnel["wall_sec"] = time.time() - t0
-    write_metrics(spark, funnel, job_id, f"{out_root}/metrics")
-    cur.unpersist()
-    surv_cached.unpersist()
-    if cut_cached is not None:
-        cut_cached.unpersist()
-    scrubbed.unpersist()
-    release_persisted()
-    return {"job_id": job_id, **funnel}
+        # 5. packing coordinates over the released corpus
+        packed = pack_sequences(scrubbed, text_col, key_col, seq_len=seq_len)
+        released = scrubbed.join(packed.drop("n_tokens"), key_col)
+        released.write.mode("overwrite").parquet(f"{out_root}/released")
+        # one scan of the WRITTEN parquet yields both funnel rows — the old
+        # form re-ran the packing window for max(end_chunk) (released
+        # already carries the column); the schema is the one just written, so
+        # no footer-inference job runs
+        rel_row = spark.read.schema(released.schema).parquet(f"{out_root}/released").agg(
+            F.count("*").alias("n"),
+            (F.max(F.col("end_chunk")) + 1).cast("double").alias("s"),
+        ).first()
+        funnel["n_released"] = float(rel_row["n"])
+        _stage("scrub_pack_write")
+        funnel["n_sequences"] = float(rel_row["s"] or 0.0)
+
+        local_frame(
+            spark, [(k, v) for k, v in sorted(funnel.items())], "stage string, n double"
+        ).write.mode("overwrite").parquet(f"{out_root}/funnel")
+        funnel["wall_sec"] = time.time() - t0
+        write_metrics(spark, funnel, job_id, f"{out_root}/metrics")
+        return {"job_id": job_id, **funnel}
+    finally:
+        release_persisted()

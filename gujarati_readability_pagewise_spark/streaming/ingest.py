@@ -10,7 +10,10 @@ Spark mapping for a crawl feed:
   state is bounded by the watermark horizon,
 * windowed per-host arrival counts (the monitoring aggregate),
 * the same Arrow extraction kernel applied per micro-batch via
-  ``foreachBatch`` (exactly-once with an idempotent bucket sink).
+  ``foreachBatch`` (exactly-once with an idempotent bucket sink),
+* incremental merges (SCD2 history, curation, anomalies, crawl schedule)
+  that each run one ``_merge_touched`` step per micro-batch: append to a
+  log, recompute only the partitions the batch touched.
 
 Tests drive these with the memory sink + ``processAllAvailable()``.
 """
@@ -19,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.pages import PAGES_SCHEMA_DDL
@@ -82,6 +85,60 @@ def stream_extract(
     return pages.writeStream.foreachBatch(run)
 
 
+def _merge_touched(
+    spark: SparkSession,
+    batch: DataFrame,
+    state_dir: str,
+    out_name: str,
+    part: str,
+    part_expr: Column,
+    replay_key: list[str],
+    recompute: Callable[[DataFrame], DataFrame],
+) -> None:
+    """One idempotent merge step — the warehouse MERGE on plain parquet
+    (Iceberg MERGE INTO with jars; the contract is identical), written
+    once for every ``*_stream_merge``.
+
+    ``batch`` is APPENDED to ``state_dir/log`` (append-only, replay-safe);
+    the partitions it touches (``part_expr`` values, a bounded set) are
+    read back from the accumulated log, replayed appends collapse on
+    ``replay_key``, and ``recompute`` — the batch operator — derives their
+    rows, which replace exactly those partitions of ``state_dir/out_name``
+    (dynamic overwrite on ``part``).  Recompute cost is ∝ the touched
+    partitions' retained log, never the whole corpus.
+
+    Each touched partition is a pure function of ALL log rows that fall in
+    it, so the final table is independent of micro-batch arrival ORDER
+    (late or out-of-order rows land where a batch derivation puts them)
+    and convergent under at-least-once foreachBatch replay (a retry appends
+    duplicates that ``replay_key`` collapses, then rewrites the same
+    bytes).  Stateful streaming operators (dropDuplicates winners, lag/
+    lead, incremental z-scores, arrival-ordered row_number) pin results to
+    arrival order, which a retry can change.  This is the partition-wise
+    incremental recompute of differential data-quality verification
+    (ICDE 2019).  Reads of the output see complete partitions.
+    """
+    log_dir = f"{state_dir}/log"
+    batch.write.mode("append").parquet(log_dir)
+    touched = [
+        r[part] for r in batch.select(part_expr.alias(part)).distinct().collect()
+    ]  # bounded: one row per touched partition
+    if not touched:
+        return
+    log = (
+        spark.read.parquet(log_dir)
+        .withColumn(part, part_expr)
+        .filter(F.col(part).isin(touched))
+        .dropDuplicates(replay_key)
+    )
+    # per-write option, NOT session conf: mutating the session-wide
+    # overwrite mode inside a micro-batch would silently change the
+    # semantics of unrelated partitioned overwrites later in the session
+    recompute(log).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(part).parquet(f"{state_dir}/{out_name}")
+
+
 def scd2_stream_merge(
     spark: SparkSession,
     fetches: DataFrame,
@@ -93,24 +150,9 @@ def scd2_stream_merge(
 ):
     """Incrementally maintain an SCD2 url-version table from a fetch stream.
 
-    The warehouse merge pattern on plain parquet (Iceberg MERGE INTO with
-    jars; the contract is identical):
-
-    * every micro-batch APPENDS its raw fetch rows to ``state_dir/log``
-      (append-only, replay-safe);
-    * the history for the KEYS TOUCHED in this batch is recomputed from
-      the accumulated log (filtered to the affected key-hash buckets —
-      cost ∝ touched buckets, never the whole corpus) with the batch
-      ``scd2_history`` operator, and written back with dynamic partition
-      overwrite on the bucket column — idempotent, so an at-least-once
-      foreachBatch retry rewrites the same bytes;
-    * reads of ``state_dir/history`` see complete per-bucket histories.
-
-    Because each merge recomputes from the full log slice, the final table
-    is independent of micro-batch arrival ORDER — late or out-of-order
-    fetches land in the right validity period, which watermark-free
-    lag/lead streaming could not guarantee.  Duplicate (key, ts) rows from
-    replays collapse via dropDuplicates before the window.
+    Each micro-batch is one ``_merge_touched`` step on ``state_dir``:
+    the batch ``scd2_history`` recomputes the touched key-hash buckets of
+    ``history/``, so late fetches land in the right validity period.
 
     Returns the DataStreamWriter (caller starts/stops it).
     """
@@ -136,29 +178,12 @@ def scd2_merge_batch(
     recompute history for the touched buckets, dynamic-overwrite them."""
     from ..plans.snapshots import scd2_history
 
-    log_dir = f"{state_dir}/log"
-    hist_dir = f"{state_dir}/history"
     bkt = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    b = batch_df.select(key_col, ts_col, fp_col)
-    b.write.mode("append").parquet(log_dir)
-    touched = [
-        r["b"] for r in b.select(bkt.alias("b")).distinct().collect()
-    ]  # bounded: ≤ n_buckets
-    if not touched:
-        return
-    log = (
-        spark.read.parquet(log_dir)
-        .withColumn("_bkt", bkt)
-        .filter(F.col("_bkt").isin(touched))
-        .dropDuplicates([key_col, ts_col])
+    _merge_touched(
+        spark, batch_df.select(key_col, ts_col, fp_col), state_dir, "history",
+        "_bkt", bkt, [key_col, ts_col],
+        lambda log: scd2_history(log, key_col, ts_col, fp_col).withColumn("_bkt", bkt),
     )
-    hist = scd2_history(log, key_col, ts_col, fp_col).withColumn("_bkt", bkt)
-    # per-write option, NOT session conf: mutating the session-wide
-    # partitionOverwriteMode inside a micro-batch would silently change the
-    # semantics of unrelated partitioned overwrites later in the session
-    hist.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_bkt").parquet(hist_dir)
 
 
 def curate_stream_merge(
@@ -175,16 +200,9 @@ def curate_stream_merge(
     """Incrementally maintain a CURATED, exactly-deduped corpus from a
     document stream — the streaming face of the corpus_curation chain.
 
-    Same idempotent merge pattern as :func:`scd2_stream_merge` (the
-    warehouse MERGE on plain parquet): every micro-batch APPENDS its raw
-    docs to ``state_dir/log``; the kept set for the TOUCHED digest-hash
-    buckets is recomputed from the accumulated log (curation rules +
-    first-global-occurrence per content digest, min key wins) and written
-    back with dynamic partition overwrite.  Recomputing from the log
-    slice makes the final table independent of micro-batch arrival ORDER
-    and convergent under at-least-once replays — a dropDuplicates-style
-    stateful dedup would pin the winner to arrival order, which a retry
-    can change.  Reads of ``state_dir/kept`` see complete buckets.
+    Each micro-batch is one ``_merge_touched`` step on ``state_dir``: the
+    curation rules plus first-global-occurrence per content digest (min
+    key wins) recompute the touched digest-hash buckets of ``kept/``.
 
     Returns the DataStreamWriter (caller starts/stops it).
     """
@@ -212,44 +230,33 @@ def curate_merge_batch(
     and backfills drive it directly)."""
     from ..functions.textstats import curation_keep_expr
 
-    log_dir = f"{state_dir}/log"
-    kept_dir = f"{state_dir}/kept"
-    bkt = F.pmod(F.xxhash64(F.md5(F.col(text_col))), F.lit(n_buckets))
-    batch_df.write.mode("append").parquet(log_dir)
-    touched = [
-        r["b"] for r in batch_df.select(bkt.alias("b")).distinct().collect()
-    ]  # bounded: ≤ n_buckets
-    if not touched:
-        return
-    log = (
-        spark.read.parquet(log_dir)
-        .withColumn("_bkt", bkt)
-        .filter(F.col("_bkt").isin(touched))
-        # collapse replayed appends on (key, text): identical re-deliveries
-        # dedup deterministically, while a re-crawled key with NEW text is
-        # a distinct content version that flows on to the digest dedup
-        # (docs are expected content-addressed / append-only; a mutable-id
-        # feed should run through the SCD2 merge first)
-        .dropDuplicates([key_col, text_col])
+    def recompute(log: DataFrame) -> DataFrame:
+        kept = log.filter(
+            curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
+        )
+        first = kept.groupBy(F.md5(F.col(text_col)).alias("_digest")).agg(
+            F.min(key_col).alias(key_col)
+        )
+        # semi-join on (key, digest) PAIRS, not key alone: if a key re-arrives
+        # with new text, each content version survives only where it actually
+        # won its own digest group — a key-only semi would retain every
+        # version of any key that won for ANY digest (duplicate content).
+        return (
+            kept.withColumn("_digest", F.md5(F.col(text_col)))
+            .join(first, [key_col, "_digest"], "left_semi")
+            .drop("_digest")
+        )
+
+    # replayed appends collapse on (key, text): identical re-deliveries
+    # dedup deterministically, while a re-crawled key with NEW text is
+    # a distinct content version that flows on to the digest dedup
+    # (docs are expected content-addressed / append-only; a mutable-id
+    # feed should run through the SCD2 merge first)
+    _merge_touched(
+        spark, batch_df, state_dir, "kept", "_bkt",
+        F.pmod(F.xxhash64(F.md5(F.col(text_col))), F.lit(n_buckets)),
+        [key_col, text_col], recompute,
     )
-    kept = log.filter(
-        curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
-    )
-    first = kept.groupBy(F.md5(F.col(text_col)).alias("_digest")).agg(
-        F.min(key_col).alias(key_col)
-    )
-    # semi-join on (key, digest) PAIRS, not key alone: if a key re-arrives
-    # with new text, each content version survives only where it actually
-    # won its own digest group — a key-only semi would retain every
-    # version of any key that won for ANY digest (duplicate content).
-    out = (
-        kept.withColumn("_digest", F.md5(F.col(text_col)))
-        .join(first, [key_col, "_digest"], "left_semi")
-        .drop("_digest")
-    )
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_bkt").parquet(kept_dir)
 
 
 def monitor_stream_merge(
@@ -267,42 +274,23 @@ def monitor_stream_merge(
     """Incrementally maintain the crawl-volume anomaly table from an
     event stream — the streaming face of operators/monitor.
 
-    Same idempotent merge pattern as the SCD2/curation merges: every
-    micro-batch APPENDS raw events to ``state_dir/log``; the anomaly
-    rows for the KEYS touched in this batch are recomputed from the
-    accumulated log with the batch ``volume_anomalies`` operator and
-    written back with dynamic partition overwrite on the key.  A late or
-    replayed bucket therefore lands in the right trailing window and
-    flips flags exactly as a batch recomputation would — stateful
-    incremental z-scores could not repair history after late data.
-    Recompute cost is bounded by the touched keys' retained log, which a
-    production deployment trims to the monitoring horizon.
+    Each micro-batch is one ``_merge_touched`` step on ``state_dir``: the
+    batch ``volume_anomalies`` recomputes the touched keys of
+    ``anomalies/``, so a late bucket repairs its trailing windows; a
+    production deployment trims the log to the monitoring horizon.
 
     Returns the DataStreamWriter (caller starts/stops it).
     """
     from ..operators.monitor import volume_anomalies
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        log_dir = f"{state_dir}/log"
-        out_dir = f"{state_dir}/anomalies"
-        b = batch_df.select(id_col, ts_col, key_col)
-        b.write.mode("append").parquet(log_dir)
-        touched = [
-            r["k"] for r in b.select(F.col(key_col).alias("k")).distinct().collect()
-        ]  # bounded: one row per event key
-        if not touched:
-            return
-        log = (
-            spark.read.parquet(log_dir)
-            .filter(F.col(key_col).isin(touched))
-            .dropDuplicates([id_col])  # replayed appends collapse
+        _merge_touched(
+            spark, batch_df.select(id_col, ts_col, key_col), state_dir,
+            "anomalies", "_k", F.col(key_col), [id_col],
+            lambda log: volume_anomalies(
+                log, ts_col, key_col, bucket_seconds, trailing, k, min_trailing
+            ).withColumn("_k", F.col("key")),
         )
-        out = volume_anomalies(
-            log, ts_col, key_col, bucket_seconds, trailing, k, min_trailing
-        ).withColumn("_k", F.col("key"))
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_k").parquet(out_dir)
 
     return events.writeStream.foreachBatch(merge)
 
@@ -320,49 +308,24 @@ def schedule_stream_merge(
     stream of fetch candidates — the streaming face of
     operators/sampling.crawl_schedule (the crawl-frontier rate limiter).
 
-    Same idempotent merge pattern as the SCD2/curation/monitor merges:
-    every micro-batch APPENDS its (host, key) candidates to
-    ``state_dir/log``; the schedule for the TOUCHED host-hash buckets is
-    recomputed from the accumulated log with the batch ``crawl_schedule``
-    operator and written back with dynamic partition overwrite.  Because
-    the within-host order is the STABLE HASH of the key (not arrival
-    order), a fetch candidate that arrives late or is redelivered lands
-    in exactly the slot the batch derivation gives it — the final
-    schedule is independent of micro-batch boundaries and convergent
-    under at-least-once replay, which an arrival-ordered stateful
-    row_number could never be (a retry would renumber the host's whole
-    frontier).  Hosts are grouped into ``n_buckets`` hash buckets so the
-    partition layout is bounded and a batch's recompute cost is
-    proportional to the touched buckets' retained frontier, not the
-    whole log.
+    Each micro-batch is one ``_merge_touched`` step on ``state_dir``: the
+    batch ``crawl_schedule`` recomputes the touched host-hash buckets of
+    ``schedule/``; its within-host order is the stable hash of the key,
+    so a late or redelivered candidate gets the slot a batch run gives it.
 
     Returns the DataStreamWriter (caller starts/stops it).
     """
     from ..operators.sampling import crawl_schedule
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        log_dir = f"{state_dir}/log"
-        out_dir = f"{state_dir}/schedule"
-        bkt = F.pmod(F.xxhash64(F.col(host_col)), F.lit(n_buckets))
-        b = batch_df.select(host_col, key_col)
-        b.write.mode("append").parquet(log_dir)
-        touched = [
-            r["b"] for r in b.select(bkt.alias("b")).distinct().collect()
-        ]  # bounded: <= n_buckets
-        if not touched:
-            return
-        log = (
-            spark.read.parquet(log_dir)
-            .withColumn("_bkt", bkt)
-            .filter(F.col("_bkt").isin(touched))
-            .dropDuplicates([host_col, key_col])  # replayed appends collapse
+        _merge_touched(
+            spark, batch_df.select(host_col, key_col), state_dir, "schedule",
+            "_bkt", F.pmod(F.xxhash64(F.col(host_col)), F.lit(n_buckets)),
+            [host_col, key_col],
+            lambda log: crawl_schedule(
+                log, host_col=host_col, key_col=key_col,
+                min_interval_s=min_interval_s,
+            ),
         )
-        sched = crawl_schedule(
-            log, host_col=host_col, key_col=key_col,
-            min_interval_s=min_interval_s,
-        )
-        sched.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_bkt").parquet(out_dir)
 
     return fetches.writeStream.foreachBatch(merge)

@@ -602,48 +602,6 @@ def test_volume_anomalies_flags_planted_burst(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_salted_join_equals_plain_join(spark):
-    """The manual skew-join split must be row-for-row identical to the
-    plain equi-join for inner and left joins, including unmatched and
-    null-key left rows, with a planted 90%-hot key."""
-    import pandas as pd
-
-    left = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": [0] * 900 + list(range(1, 101)) + [None],
-                "v": list(range(1001)),
-            }
-        ),
-        "k int, v long",
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame({"k": list(range(0, 90)), "d": [f"d{i}" for i in range(90)]}),
-        "k int, d string",
-    )
-    from gujarati_readability_pagewise_spark.operators.skew import salted_join
-
-    for how in ("inner", "left"):
-        plain = sorted(
-            map(tuple, left.join(right, "k", how).select("k", "v", "d").collect()),
-            key=str,
-        )
-        salted = sorted(
-            map(
-                tuple,
-                salted_join(left, right, "k", n_salts=8, how=how)
-                .select("k", "v", "d")
-                .collect(),
-            ),
-            key=str,
-        )
-        assert salted == plain, how
-    import pytest
-
-    with pytest.raises(ValueError):
-        salted_join(left, right, "k", how="full")
-
-
 def test_volume_anomalies_densifies_sparse_keys(spark):
     """The trailing baseline must run over TIME buckets, not present
     rows: a key that goes silent for days and then bursts is judged

@@ -115,3 +115,39 @@ def test_corrupt_rows_never_fail(spark):
     assert set(out.extract_status) <= {"empty", "error"}
     for f in out.features:
         assert len(f) > 0 and all(np.isfinite(v) for v in f)
+
+
+def test_kernel_invariant_to_arrow_batch_size_and_partitioning(spark):
+    """Per-url text, spans, status, features and scores do not depend on
+    how the rows are cut into Arrow batches or partitions, with corrupt
+    payloads in the input."""
+    import hashlib
+
+    from gujarati_readability_pagewise_spark.sources.pages import (
+        PAGES_SCHEMA_DDL,
+        gen_pages_pdf,
+    )
+
+    pdf = gen_pages_pdf(400, seed=3)
+    pages = spark.createDataFrame(
+        pdf[["url", "warc_ts", "html", "text", "lang"]], schema=PAGES_SCHEMA_DDL
+    )
+    model = default_model()
+    cols = ["url", "text", "spans", "extract_status", "features", "pred_label",
+            "p_nonreadable"]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    digests, statuses = {}, set()
+    try:
+        for batch in (1, 7, 2048):
+            spark.conf.set(conf, batch)
+            for parts, df in ((1, pages.coalesce(1)), (8, pages.repartition(8, "url"))):
+                rows = with_extraction_and_score(df, model).select(*cols).collect()
+                statuses |= {r["extract_status"] for r in rows}
+                # repr, not ==: NaN features compare by their text
+                text = "\n".join(sorted(map(repr, rows)))
+                digests[(batch, parts)] = hashlib.sha256(text.encode()).hexdigest()
+    finally:
+        spark.conf.set(conf, saved)
+    assert statuses - {"ok"}, statuses  # the corrupt payloads took the error path
+    assert len(set(digests.values())) == 1, digests

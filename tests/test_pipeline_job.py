@@ -181,6 +181,26 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def test_failed_release_leaves_nothing_persisted(spark, tmp_path):
+    """A release whose output write fails raises, and still frees every
+    cache it made: its own persists and the dedup operators'."""
+    import pytest
+
+    from gujarati_readability_pagewise_spark.plans.release import run_release
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .filter(F.col("doc_id") < 60)
+        .select("doc_id", "text")
+    )
+    not_a_dir = tmp_path / "file"
+    not_a_dir.write_text("")
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(Exception, match="(?i)not a directory|ParentNotDirectory"):
+        run_release(spark, docs, str(not_a_dir / "rel"), job_id="rel-fail")
+    assert _persistent_rdd_ids(spark) <= before
+
+
 def test_corpus_release_skips_head_k_probe_below_floor(spark, tmp_path, spark_jobs, monkeypatch):
     """A survivor corpus too small for any window hash to reach the skew
     threshold runs no head_k probe job, yet releases exactly what the

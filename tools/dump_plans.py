@@ -1,10 +1,28 @@
-"""Dump .explain('formatted') for bench-suite queries to plans/r06/<name>_<tag>.txt.
+"""Dump query plans.
 
-Usage: python tools/dump_plans.py <tag> [query ...]
-With no query names, dumps the full bench-suite list.
+Usage:
+  python tools/dump_plans.py <tag> [query ...]
+      .explain('formatted') of bench-suite queries to plans/r06/<name>_<tag>.txt;
+      with no query names, the full bench-suite list.
+  python tools/dump_plans.py --normalized OUT.json [name ...]
+      per name (a contract query or one of FRAMES below; default: all
+      FRAMES plus NORMALIZED_QUERIES) the optimized and physical plan
+      strings with expression ids normalized, plus the sha256 of the
+      sorted collected rows.  Streaming frames drive each merge step on
+      fixed batches and also record the plans of every parquet write.
+
+Plan identity of a change: run --normalized on the change and on a checkout
+of the parent commit (``git archive`` or ``git worktree``, with this tool
+copied in) over the same data, then ``cmp`` the two files.  Data comes from
+``SPARK_GRAFT_SF_DIR`` (default sf0.1 for dumps, sf0.01 for --normalized).
 """
+import hashlib
+import json
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -16,8 +34,217 @@ BENCH_QUERIES = [
     "histogram_quantiles", "dedup_exact_substr", "sequence_packing",
 ]
 
+NORMALIZED_QUERIES = [
+    "training_order", "host_quota_sample", "mixture_sample",
+    "quality_weighted_sample", "crawl_schedule", "text_fingerprint",
+]
+
+
+def _emb(spark, sf):
+    """(corpus, queries): the sf embeddings and their first 5 vectors."""
+    from pyspark.sql import functions as F
+
+    from gujarati_readability_pagewise_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf, "embeddings")
+    return emb, emb.filter(F.col("vec_id") < 5)
+
+
+def _similarity_frames():
+    from pyspark.sql import functions as F
+
+    from gujarati_readability_pagewise_spark.operators import similarity as S
+
+    def topk(fn, **kw):
+        return lambda spark, sf, tmp: fn(*_emb(spark, sf), k=3, **kw)
+
+    def near_pairs(spark, sf, tmp):
+        return S.lsh_near_pairs(_emb(spark, sf)[0], threshold=0.38, n_planes=8, bands=2)
+
+    def semdedup(spark, sf, tmp):
+        return S.semantic_dedup(_emb(spark, sf)[0], threshold=0.38, n_cells=8, n_iter=3)
+
+    def decontam(spark, sf, tmp):
+        emb = _emb(spark, sf)[0]
+        return S.decontaminate_semantic(
+            emb.filter(F.col("vec_id") >= 20), emb.filter(F.col("vec_id") < 20),
+            threshold=0.95,
+        )
+
+    def centroids(spark, sf, tmp):
+        return sorted(S.ivf_train_fixedpoint(_emb(spark, sf)[0], n_cells=8, n_iter=3).items())
+
+    return {
+        "brute_force_topk_dim64": topk(S.brute_force_topk, dim=64),
+        "brute_force_topk_fold": topk(S.brute_force_topk),
+        "ivf_topk_deterministic": topk(
+            S.ivf_topk_deterministic, n_cells=8, n_probe=2, n_iter=3, dim=64
+        ),
+        "ivf_train_fixedpoint": centroids,
+        "quantized_topk": topk(S.quantized_topk, dim=64),
+        "lsh_near_pairs": near_pairs,
+        "lsh_topk": topk(S.lsh_topk, n_planes=4),
+        "lsh_topk_dim64_r2": topk(S.lsh_topk, n_planes=4, dim=64, probe_radius=2),
+        "semantic_dedup": semdedup,
+        "decontaminate_semantic": decontam,
+    }
+
+
+def _merge_step(start):
+    """The foreachBatch function a ``*_stream_merge`` registers, captured
+    without starting the stream."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    orig, got = DataStreamWriter.foreachBatch, []
+    DataStreamWriter.foreachBatch = lambda self, f: got.append(f) or self
+    try:
+        start()
+    finally:
+        DataStreamWriter.foreachBatch = orig
+    return got[0]
+
+
+def _streaming_frames():
+    from pyspark.sql import functions as F
+
+    from gujarati_readability_pagewise_spark.sources.catalog import load_table
+    from gujarati_readability_pagewise_spark.streaming import ingest as I
+
+    def run(spark, tmp, src, ddl, start, batches, out):
+        """Each batch in order, then the first again (a replay)."""
+        os.makedirs(f"{tmp}/src")
+        stream = spark.readStream.schema(ddl).parquet(f"{tmp}/src")
+        step = _merge_step(lambda: start(stream, f"{tmp}/state"))
+        for epoch, cond in enumerate(batches + batches[:1]):
+            step(src.filter(cond), epoch)
+        return spark.read.parquet(f"{tmp}/state/{out}")
+
+    def scd2(spark, sf, tmp):
+        docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 300)
+        fetches = docs.withColumn("fetch", F.explode(F.array(*map(F.lit, range(3)))))
+        changed = (F.col("fetch") >= 1) & (F.col("doc_id") % 3 == 0)
+        log = fetches.select(
+            "doc_id",
+            F.timestamp_seconds(
+                F.lit(1704067200) + F.col("doc_id") * 100 + F.col("fetch")
+            ).alias("fetch_ts"),
+            F.md5(F.concat("text", F.when(changed, F.col("fetch").cast("string"))
+                           .otherwise(F.lit("")))).alias("fp"),
+            "fetch",
+        )
+        return run(
+            spark, tmp, log, "doc_id bigint, fetch_ts timestamp, fp string",
+            lambda s, d: I.scd2_stream_merge(spark, s, d, key_col="doc_id"),
+            [F.col("fetch") == 2, F.col("fetch") < 2], "history",
+        )
+
+    def curate(spark, sf, tmp):
+        docs = load_table(spark, sf, "documents").select("doc_id", "text", "source")
+        return run(
+            spark, tmp, docs, "doc_id bigint, text string, source string",
+            lambda s, d: I.curate_stream_merge(spark, s, d),
+            [F.col("doc_id") % 2 == 1, F.col("doc_id") % 2 == 0], "kept",
+        )
+
+    def monitor(spark, sf, tmp):
+        ev = load_table(spark, sf, "events").select("event_id", "ts", "event_type")
+        return run(
+            spark, tmp, ev, "event_id bigint, ts timestamp, event_type string",
+            lambda s, d: I.monitor_stream_merge(
+                spark, s, d, bucket_seconds=21600, trailing=20, k=3, min_trailing=8
+            ),
+            [F.col("event_id") % 2 == 1, F.col("event_id") % 2 == 0], "anomalies",
+        )
+
+    def schedule(spark, sf, tmp):
+        docs = load_table(spark, sf, "documents").select(
+            "doc_id", F.concat(F.lit("h"), (F.col("doc_id") % 7).cast("string")).alias("host")
+        )
+        return run(
+            spark, tmp, docs, "doc_id bigint, host string",
+            lambda s, d: I.schedule_stream_merge(spark, s, d, key_col="doc_id"),
+            [F.col("doc_id") % 2 == 1, F.col("doc_id") % 2 == 0], "schedule",
+        )
+
+    return {
+        "scd2_stream_merge": scd2,
+        "curate_stream_merge": curate,
+        "monitor_stream_merge": monitor,
+        "schedule_stream_merge": schedule,
+    }
+
+
+def _normalize(s: str, tmp: str) -> str:
+    s = s.replace(tmp, "<tmp>").replace(f"_scratch_{os.getpid()}", "_scratch_<pid>")
+    s = re.sub(r"#\d+", "#n", s)
+    return re.sub(r"\b(plan_id|id)=\d+", r"\1=n", s)
+
+
+def _plans(df, tmp: str) -> dict:
+    qe = df._jdf.queryExecution()
+    return {
+        "optimized": _normalize(qe.optimizedPlan().toString(), tmp),
+        "physical": _normalize(qe.sparkPlan().toString(), tmp),
+    }
+
+
+def _sha(lines) -> str:
+    return hashlib.sha256("\n".join(sorted(lines)).encode()).hexdigest()
+
+
+def normalized(out_path: str, names: list[str]) -> None:
+    import __spark_entry__ as entrymod
+    from pyspark.sql import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from gujarati_readability_pagewise_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    frames = {**_similarity_frames(), **_streaming_frames()}
+    names = names or [*frames, *NORMALIZED_QUERIES]
+    spark = get_spark(app_name="plans-normalized")
+    # untruncated scan metadata: a cut at a fixed length lands at a
+    # different place when the raw expression ids have more digits
+    spark.conf.set("spark.sql.maxMetadataStringLength", 1 << 20)
+    qs = entrymod.queries()
+    writes: list[dict] = []
+    orig_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *a, **kw):
+        writes.append(_plans(self._df, tmp))
+        return orig_parquet(self, path, *a, **kw)
+
+    DataFrameWriter.parquet = recording_parquet
+    out = {}
+    try:
+        for name in names:
+            tmp = tempfile.mkdtemp(prefix="dump_plans_")
+            writes.clear()
+            got = frames[name](spark, sf_dir, tmp) if name in frames else qs[name](spark, sf_dir)
+            if isinstance(got, DataFrame):
+                rec = _plans(got, tmp)
+                rows = [repr(tuple(r)) for r in got.collect()]
+                rec.update(rows=len(rows), rows_sha256=_sha(rows))
+            else:
+                rec = {"value_sha256": _sha([repr(got)])}
+            if writes:
+                rec["writes"] = list(writes)
+            out[name] = rec
+            print(name, rec.get("rows_sha256", rec.get("value_sha256")))
+            spark.catalog.clearCache()
+            shutil.rmtree(tmp, ignore_errors=True)
+    finally:
+        DataFrameWriter.parquet = orig_parquet
+        spark.stop()
+    with open(out_path, "w") as f:
+        json.dump(out, f, indent=1, sort_keys=True)
+        f.write("\n")
+
 
 def main() -> None:
+    if sys.argv[1:2] == ["--normalized"]:
+        normalized(sys.argv[2], sys.argv[3:])
+        return
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or BENCH_QUERIES
     import __spark_entry__ as entrymod
