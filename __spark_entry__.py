@@ -44,7 +44,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     pages = pages_from_documents(spark, SF_SMOKE)
     scored = with_extraction_and_score(pages, default_model())
-    return host_summary(scored, label_col=None).orderBy("host")
+    return host_summary(scored).orderBy("host")
 
 
 # --------------------------------------------------------------------------

@@ -7,8 +7,8 @@ mean-probability>0.5 decision (``:391-392``), the confusion matrix + scalar metr
 self-consistency recompute (``scripts/verify_metrics.py:30-51``).
 
 All are single hash-aggregations (map-side partial + final) — at 100 TB the
-only wide edge, keyed by host; skewed hosts go through the salted two-stage
-variant in ``operators/skew.py``.
+only wide edge, keyed by host.  The partial aggregation already bounds a
+hot host: its reducer receives one row per map task.
 """
 
 from __future__ import annotations
@@ -27,10 +27,9 @@ __all__ = [
 ]
 
 
-def host_summary(scored: DataFrame, label_col: str | None = "label") -> DataFrame:
+def host_summary(scored: DataFrame) -> DataFrame:
     """A2+A3: per-host rollup of the scored pages (Summary sheet)."""
-    df = scored.withColumn("host", host_of(F.col("url")))
-    aggs = [
+    return scored.withColumn("host", host_of(F.col("url"))).groupBy("host").agg(
         F.count("*").alias("total_pages"),
         F.avg("p_nonreadable").alias("avg_p"),
         F.stddev_samp("p_nonreadable").alias("std_p"),
@@ -40,19 +39,7 @@ def host_summary(scored: DataFrame, label_col: str | None = "label") -> DataFram
         F.when(F.avg("p_nonreadable") > 0.5, F.lit(0)).otherwise(F.lit(1)).alias(
             "host_prediction"
         ),
-    ]
-    if label_col is not None and label_col in scored.columns:
-        aggs += [
-            F.count(label_col).alias("labeled_pages"),
-            F.sum(
-                F.when(F.col("pred_label") == F.col(label_col), 1).otherwise(0)
-            ).alias("n_correct"),
-            (
-                F.sum(F.when(F.col("pred_label") == F.col(label_col), 1).otherwise(0))
-                / F.nullif(F.count(label_col), F.lit(0))
-            ).alias("accuracy"),
-        ]
-    return df.groupBy("host").agg(*aggs)
+    )
 
 
 def confusion_matrix(scored: DataFrame, label_col: str = "label") -> DataFrame:

@@ -1,14 +1,17 @@
-"""Skewed-key handling: heavy-hitter detection, salted two-stage aggregation
-and the broadcast-head join split.
+"""Skewed-key handling: sampled heavy-hitter detection, salted two-stage
+aggregation and the broadcast-head join split.
 
 north_rule requires explicit skew machinery: one crawl host can hold 30 %+
-of all pages (the synthetic generator plants exactly that).  For wide
-**aggregations** over the hot key the cure is salting — pre-aggregate on
-(key, salt) so the hot key's rows spread over S reducers, then merge the S
-partials.
+of all pages (the synthetic generator plants exactly that).
 
-Only algebraic aggregates can split this way; this module implements the
-count/sum/min/max/avg family (avg = sum+count merged at stage 2).
+Salting — pre-aggregate on (key, salt) so the hot key's rows spread over S
+reducers, then merge the S partials — pays only for aggregates that Spark
+cannot partially aggregate: a percentile, ``collect_list``, a distinct
+count.  For count/sum/avg/min/max/stddev, Spark's own map-side partial
+aggregation already hands a hot key's reducer one row per map task, so a
+plain ``groupBy`` is the cheaper plan (``host_summary`` is one).
+``salted_summary`` (count/sum/avg/min/max) is kept as the gated operator
+behind the ``salted_summary`` contract query.
 
 AQE's skew-join splitting misses a join fed by an aggregate on its key:
 that side has no exchange of its own for ``OptimizeSkewedJoin`` to split
@@ -25,22 +28,10 @@ from pyspark.sql import functions as F
 from .dedup import stable_hash64
 
 __all__ = [
-    "heavy_hitters",
     "heavy_hitters_hash_sampled",
     "salted_summary",
     "hot_key_join",
 ]
-
-
-def heavy_hitters(df: DataFrame, key: str, min_share: float = 0.1) -> DataFrame:
-    """Keys holding more than ``min_share`` of all rows (exact, two aggs)."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > min_share * total)
-        .withColumn("share", F.col("n") / F.lit(float(total)))
-    )
 
 
 def heavy_hitters_hash_sampled(
@@ -53,7 +44,7 @@ def heavy_hitters_hash_sampled(
     safety: float = 0.5,
 ) -> DataFrame:
     """THE sampled heavy-hitter pre-pass — the detection you can afford at
-    10^12 rows (``heavy_hitters`` is exact but scans the table twice).
+    10^12 rows (an exact count scans the table twice).
 
     One partial scan, shuffle only the sampled keys; the 1/``mod`` sample
     is selected by ``stable_hash64(sample_on, seed) % mod == 0``, NOT by

@@ -35,7 +35,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..session import local_frame
 
-__all__ = ["bucket_expr", "completed_buckets", "run_checkpointed", "read_manifest"]
+__all__ = ["bucket_expr", "run_checkpointed", "read_manifest"]
 
 MANIFEST_SCHEMA = (
     "bucket int, n_rows bigint, n_text_bytes bigint, n_input_bytes bigint, "
@@ -64,12 +64,6 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
         return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
-def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
-    return {
-        r["bucket"] for r in read_manifest(spark, manifest_dir).select("bucket").collect()
-    }
-
-
 def run_checkpointed(
     pages: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
@@ -78,7 +72,6 @@ def run_checkpointed(
     n_buckets: int = 16,
     buckets_per_job: int = 4,
     job_id: str = "job",
-    fail_after: int | None = None,
     transform_id: str = "",
 ) -> int:
     """Run ``transform`` over pages in bucket groups, checkpointing each.
@@ -95,8 +88,6 @@ def run_checkpointed(
     (NULL) and callers passing the default ``""`` — are treated as
     unverifiable-but-compatible: a legacy half-finished run stays resumable
     (the guard cannot prove a mismatch that was never recorded).
-
-    ``fail_after`` (tests only) aborts after N groups to simulate a crash.
     """
     spark = pages.sparkSession
     # one collect serves both the config guard and the resume set; a fresh
@@ -169,6 +160,4 @@ def run_checkpointed(
             .parquet(manifest_dir)
         )
         processed += len(group)
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"simulated crash after {processed} buckets")
     return processed

@@ -1,16 +1,14 @@
 """The production job: end-to-end crawl extraction.
 
-Run via ``python -m gujarati_readability_pagewise_spark.plans.pipeline
-<pages_dir> <out_root>`` or, on a cluster, through the absolute-import
-launcher ``jobs/extract_pipeline.py`` with ``spark-submit --py-files
-dist/engine.zip`` (an application file cannot use relative imports).
+Launch it with ``jobs/extract_pipeline.py`` (``spark-submit --py-files
+dist/engine.zip``; an application file cannot use relative imports).
 One invocation:
 
 1. reads the pages table (input_hint schema),
 2. runs the checkpointed, bucketed extract+features+score stage
    (resume-safe: rerunning after a crash completes only missing buckets),
-3. writes the host summary — through the SALTED two-stage aggregate when a
-   heavy-hitter host is detected, directly otherwise,
+3. writes the host summary (one hash aggregate: its map-side partial
+   aggregation hands a hot host's reducer one row per map task),
 4. appends eval metrics (if a labels table is given) and job metrics to
    the metrics table,
 5. commits the extracted output as a new snapshot version.
@@ -20,7 +18,6 @@ This is SURVEY.md §7's target architecture as one runnable artifact.
 
 from __future__ import annotations
 
-import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..ml.train import default_model
 from ..operators.aggregate import binary_metrics, host_summary
-from ..operators.skew import salted_summary
 from ..operators.udfs import with_extraction_and_score
 from .checkpoint import run_checkpointed
 from .reports import write_metrics
@@ -76,27 +72,17 @@ def run_pipeline(
     )
     scored = spark.read.parquet(f"{out_root}/extracted")
 
-    hosts = scored.withColumn("host", F.parse_url("url", F.lit("HOST")))
-    # one aggregate gives the row count and the top host's rows: a host
-    # above 20 % of the rows is exactly a non-empty heavy_hitters(0.2)
-    sizes = hosts.groupBy("host").count().agg(
-        F.sum("count").alias("rows"), F.max("count").alias("top")
-    ).first()
-    rows_out = sizes["rows"] or 0
-    if (sizes["top"] or 0) > 0.2 * rows_out:
-        # hot host present → salted two-stage for the probability stats
-        summary = salted_summary(hosts, "host", "p_nonreadable", n_salts=16)
-        salted = True
-    else:
-        summary = host_summary(scored, label_col=None)
-        salted = False
+    summary = host_summary(scored)
     summary.write.mode("overwrite").parquet(f"{out_root}/host_summary")
+    # rows_out from the summary just written (its schema, so no footer read)
+    rows_out = spark.read.schema(summary.schema).parquet(
+        f"{out_root}/host_summary"
+    ).agg(F.sum("total_pages")).first()[0] or 0
 
     metrics: dict[str, float] = {
         "buckets_processed": float(n_done),
         "rows_out": float(rows_out),
         "wall_sec": time.time() - t0,
-        "salted_aggregation": float(salted),
     }
     if labels is not None:
         labeled = scored.join(labels.select("url", "label"), "url", "left")
@@ -105,18 +91,3 @@ def run_pipeline(
     snap = write_snapshot(scored, f"{out_root}/extracted_snapshots")
     return {"job_id": job_id, "snapshot": snap, **metrics}
 
-
-def main(argv: list[str]) -> int:
-    from ..session import get_spark
-
-    pages_dir, out_root = argv[1], argv[2]
-    spark = get_spark(app_name="pagewise-extraction-pipeline")
-    pages = spark.read.parquet(pages_dir)
-    result = run_pipeline(spark, pages, out_root)
-    print({k: (round(v, 3) if isinstance(v, float) else v) for k, v in result.items()})
-    spark.stop()
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main(sys.argv))

@@ -1,12 +1,13 @@
 from __future__ import annotations
 
 import contextlib
+import os
 import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")

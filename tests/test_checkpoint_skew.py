@@ -8,13 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from gujarati_readability_pagewise_spark.operators.skew import (
-    heavy_hitters,
     heavy_hitters_hash_sampled,
     salted_summary,
 )
 from gujarati_readability_pagewise_spark.operators.udfs import with_extraction
 from gujarati_readability_pagewise_spark.plans.checkpoint import (
-    completed_buckets,
     read_manifest,
     run_checkpointed,
 )
@@ -30,6 +28,21 @@ def dirs(tmp_path):
 
 def _transform(df):
     return with_extraction(df, include_spans=False)
+
+
+def _crashing_after(groups):
+    """``_transform`` that raises when asked for group ``groups + 1``, so
+    exactly the first ``groups`` bucket groups commit: a crashed run."""
+    calls = 0
+
+    def transform(df):
+        nonlocal calls
+        calls += 1
+        if calls > groups:
+            raise RuntimeError(f"simulated crash after {groups} groups")
+        return _transform(df)
+
+    return transform
 
 
 def test_checkpointed_run_completes_and_logs_metrics(spark, pages_df, dirs):
@@ -50,10 +63,10 @@ def test_resume_after_crash_no_dupes_no_missing(spark, pages_df, dirs):
     out, man = dirs
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_checkpointed(
-            pages_df, _transform, out, man,
-            n_buckets=8, buckets_per_job=2, job_id="t2a", fail_after=4,
+            pages_df, _crashing_after(2), out, man,
+            n_buckets=8, buckets_per_job=2, job_id="t2a",
         )
-    assert len(completed_buckets(spark, man)) == 4
+    assert read_manifest(spark, man).select("bucket").distinct().count() == 4
     # resume: must process exactly the remaining 4 buckets
     n2 = run_checkpointed(
         pages_df, _transform, out, man, n_buckets=8, buckets_per_job=2, job_id="t2b"
@@ -92,8 +105,8 @@ def test_resume_with_changed_transform_id_fails_fast(spark, pages_df, dirs):
     out, man = dirs
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_checkpointed(
-            pages_df, _transform, out, man,
-            n_buckets=8, buckets_per_job=2, job_id="t4a", fail_after=4,
+            pages_df, _crashing_after(2), out, man,
+            n_buckets=8, buckets_per_job=2, job_id="t4a",
             transform_id="scrub=False",
         )
     with pytest.raises(ValueError, match="transform_id"):
@@ -118,8 +131,8 @@ def test_resume_of_legacy_unrecorded_manifest_is_allowed(spark, pages_df, dirs):
     out, man = dirs
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_checkpointed(
-            pages_df, _transform, out, man,
-            n_buckets=8, buckets_per_job=2, job_id="t5a", fail_after=4,
+            pages_df, _crashing_after(2), out, man,
+            n_buckets=8, buckets_per_job=2, job_id="t5a",
         )  # default transform_id="" -> unrecorded
     n2 = run_checkpointed(
         pages_df, _transform, out, man,
@@ -207,14 +220,6 @@ def test_manifest_rows_equal_direct_aggregate_one_file_per_append(spark, pages_d
     assert (m.wall_sec > 0).all() and m.finished_at.notna().all()
     files = [f for f in os.listdir(man) if f.endswith(".parquet")]
     assert len(files) == 2  # one per bucket-group append
-
-
-def test_heavy_hitter_detected(spark, pages_df):
-    hh = heavy_hitters(
-        pages_df.withColumn("host", F.parse_url("url", F.lit("HOST"))), "host", 0.1
-    ).toPandas()
-    assert "big.example.gu" in set(hh.host)  # the planted 32% host
-    assert (hh.share > 0.25).any()
 
 
 def test_heavy_hitter_hash_sampled_finds_planted_host(spark, pages_df):

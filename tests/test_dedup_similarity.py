@@ -97,13 +97,7 @@ def test_verified_pairs_semi_join_below_aggregation(spark, docs):
     """The LSH candidate restriction must sit BELOW the pair aggregation
     (jaccard_on_candidates_arrays, with and without ``docs=``), not above
     it (the round-1 scale-killer)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit", "/root/repo/tools/plan_audit.py"
-    )
-    pa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pa)
+    import tools.plan_audit as pa
 
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)

@@ -109,9 +109,7 @@ def test_verify_contract_compare_catches_mismatches():
     row-count, and column mismatches (a gate that cannot fail proves
     nothing)."""
     import pandas as pd
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.verify_contract import compare
 
     a = pd.DataFrame({"k": [1, 2], "v": [1.0, 2.0]})

@@ -77,7 +77,7 @@ def test_split_pure_function_of_key(spark, pages_df):
 def test_host_summary_decision_rule(spark, pages_df, pages_pdf):
     model = default_model()
     scored = with_extraction_and_score(pages_df, model)
-    hs = host_summary(scored, label_col=None).toPandas()
+    hs = host_summary(scored).toPandas()
     assert (hs.total_pages.sum()) == len(pages_pdf)
     # decision rule: avg_p > 0.5 → host_prediction 0
     for _, row in hs.iterrows():
@@ -119,7 +119,8 @@ def test_corrupt_rows_never_fail(spark):
 
 def test_kernel_invariant_to_arrow_batch_size_and_partitioning(spark):
     """Per-url text, spans, status, features and scores do not depend on
-    how the rows are cut into Arrow batches or partitions, with corrupt
+    how the rows are cut into Arrow batches or partitions, nor on their
+    order (a shuffled copy puts other rows into each batch), with corrupt
     payloads in the input."""
     import hashlib
 
@@ -128,9 +129,10 @@ def test_kernel_invariant_to_arrow_batch_size_and_partitioning(spark):
         gen_pages_pdf,
     )
 
-    pdf = gen_pages_pdf(400, seed=3)
-    pages = spark.createDataFrame(
-        pdf[["url", "warc_ts", "html", "text", "lang"]], schema=PAGES_SCHEMA_DDL
+    pdf = gen_pages_pdf(400, seed=3)[["url", "warc_ts", "html", "text", "lang"]]
+    pages = spark.createDataFrame(pdf, schema=PAGES_SCHEMA_DDL)
+    shuffled = spark.createDataFrame(
+        pdf.sample(frac=1, random_state=11), schema=PAGES_SCHEMA_DDL
     )
     model = default_model()
     cols = ["url", "text", "spans", "extract_status", "features", "pred_label",
@@ -141,7 +143,12 @@ def test_kernel_invariant_to_arrow_batch_size_and_partitioning(spark):
     try:
         for batch in (1, 7, 2048):
             spark.conf.set(conf, batch)
-            for parts, df in ((1, pages.coalesce(1)), (8, pages.repartition(8, "url"))):
+            frames = {
+                "1": pages.coalesce(1),
+                "8": pages.repartition(8, "url"),
+                "1-shuffled": shuffled.coalesce(1),
+            }
+            for parts, df in frames.items():
                 rows = with_extraction_and_score(df, model).select(*cols).collect()
                 statuses |= {r["extract_status"] for r in rows}
                 # repr, not ==: NaN features compare by their text

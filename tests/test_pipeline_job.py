@@ -1,8 +1,9 @@
-"""End-to-end production pipeline: extract -> salted summary -> metrics -> snapshot."""
+"""End-to-end production pipeline: extract -> host summary -> metrics -> snapshot."""
 
 import random
 import re
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from gujarati_readability_pagewise_spark.plans.pipeline import run_pipeline
@@ -17,7 +18,6 @@ def test_run_pipeline_end_to_end(spark, pages_df, pages_pdf, tmp_path):
     res = run_pipeline(spark, pages_df, out, labels=labels, n_buckets=8, job_id="jt")
     assert res["rows_out"] == len(pages_pdf)
     assert res["buckets_processed"] == 8
-    assert res["salted_aggregation"] == 1.0  # the 32% host triggers salting
     assert res["accuracy"] > 0.8
     # artifacts on disk
     summary = spark.read.parquet(out + "/host_summary")
@@ -27,6 +27,31 @@ def test_run_pipeline_end_to_end(spark, pages_df, pages_pdf, tmp_path):
     snap = read_latest(spark, out + "/extracted_snapshots")
     assert snap.count() == len(pages_pdf)
     assert res["snapshot"] == 1
+
+
+def test_host_summary_schema_does_not_depend_on_skew(spark, pages_df, tmp_path):
+    """The skewed crawl (``big.example.gu`` holds 32 % of the pages) and the
+    same pages without that host write the same ``host_summary/`` table:
+    ``host_summary``'s columns, book decision included, equal to
+    ``host_summary`` of the extracted output, with ``rows_out`` its rows."""
+    from gujarati_readability_pagewise_spark.operators.aggregate import host_summary
+    from gujarati_readability_pagewise_spark.operators.split import host_of
+
+    big = host_of(F.col("url")) == "big.example.gu"
+    assert pages_df.filter(big).count() > 0.3 * pages_df.count()
+    for name, pages in (("skewed", pages_df), ("flat", pages_df.filter(~big))):
+        out = str(tmp_path / name)
+        res = run_pipeline(spark, pages, out, n_buckets=4, job_id=name)
+        got = spark.read.parquet(out + "/host_summary")
+        want = host_summary(spark.read.parquet(out + "/extracted"))
+        assert got.dtypes == want.dtypes and "host_prediction" in got.columns
+        # float sums may add in another order: equal to rounding, NaN == NaN
+        pd.testing.assert_frame_equal(
+            got.toPandas().sort_values("host", ignore_index=True),
+            want.toPandas().sort_values("host", ignore_index=True),
+            check_exact=False, rtol=1e-12,
+        )
+        assert res["rows_out"] == pages.count() == got.agg(F.sum("total_pages")).first()[0]
 
 
 def test_run_pipeline_scrub_flag(spark, tmp_path):

@@ -33,7 +33,7 @@ def test_book_report_two_sheets(spark, pages_df, tmp_path):
     scored = with_extraction_and_score(pages_df, default_model(), include_spans=False)
     one_host = scored.filter(F.col("url").contains("big.example.gu"))
     res = write_book_report(
-        one_host, host_summary(one_host, label_col=None), str(tmp_path / "rep")
+        one_host, host_summary(one_host), str(tmp_path / "rep")
     )
     assert res["format"] == "csv"  # openpyxl absent in this container
     with open(res["page_predictions"]) as f:

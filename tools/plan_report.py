@@ -13,10 +13,12 @@ changes::
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 FLAGSHIPS = [
     "pipeline_extract",
@@ -123,7 +125,7 @@ def main() -> int:
             lines.append(f"- read schema: `struct<{rs}…`")
         lines.append("")
         spark.catalog.clearCache()
-    open("/root/repo/PLANS.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(ROOT, "PLANS.md"), "w").write("\n".join(lines) + "\n")
     print(f"PLANS.md written ({len(FLAGSHIPS)} flagships)")
     spark.stop()
     return 0
