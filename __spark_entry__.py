@@ -1786,7 +1786,7 @@ def q_pipeline_score_summary(spark, sf):
     ``p0 += tree`` loop; verified on the full training matrix).  The
     per-host rollup uses fixed-point integers (p_fp = floor(p·10⁶)) so
     sums/avgs are order-insensitive exact arithmetic — the float avg/std
-    form of host_summary stays in plans/reports for the report surface.
+    form of host_summary stays in operators/aggregate for the report surface.
     host_prediction is the book-decision rule (mean non-readable > 0.5 →
     flagged 0) as an integer cross-multiplication."""
     from gujarati_readability_pagewise_spark.ml.train import default_model

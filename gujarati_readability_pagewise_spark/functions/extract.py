@@ -78,15 +78,8 @@ _BLOCK_ALT = (
     r"|f(?:orm|ooter|i(?:gure|gcaption|eldset))|h(?:[1-6r]|tml|eader)"
     r"|li|main|nav|ol|p(?:re)?|section|t(?:able|[rdh]|itle)|ul)"
 )
-# flat reference form, kept for the equivalence test
-_BLOCK_TAGS = (
-    "p|div|h1|h2|h3|h4|h5|h6|li|ul|ol|table|tr|td|th|br|hr|section|article|"
-    "aside|nav|footer|header|main|blockquote|pre|figure|figcaption|form|"
-    "fieldset|dl|dt|dd|title|body|html"
-)
 _RE_BLOCK_SPLIT = re.compile(r"</?%s\b[^>]*+>" % _BLOCK_ALT, re.IGNORECASE)
 _RE_BLOCK_SPLIT_CS = re.compile(_RE_BLOCK_SPLIT.pattern)
-_RE_BLOCK_SPLIT_FLAT = re.compile(r"</?(?:%s)\b[^>]*>" % _BLOCK_TAGS, re.IGNORECASE)
 
 # Anchor spans (to measure link density) — non-greedy, no nesting support
 # needed: nested <a> is invalid HTML and the crawl templates never emit it.

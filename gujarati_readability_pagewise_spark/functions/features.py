@@ -56,7 +56,6 @@ _AKSHARA = re.compile(
     f"|(?:{_INDEP_V}{_MOD})"
 )
 
-_SENT = re.compile(r"[.!?…।॥]+")
 _PUNCT = re.compile(r"[!-/:-@\[-`{-~।॥…“”‘’]")
 _DIGIT = re.compile(r"[0-9૦-૯]")
 _GUJ = re.compile(r"[઀-૿]")

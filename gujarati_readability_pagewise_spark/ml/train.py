@@ -37,16 +37,8 @@ def train_model(
     n_estimators: int = 30,
     max_depth: int = 8,
     seed: int = 42,
-    resample_strategy: str | None = None,
-    resample_kind: str = "over",
 ) -> RandomForest:
-    """pages ⋈ labels, train split only → RF fitted at the driver.
-
-    ``resample_strategy`` applies one of the reference's imbalanced-learn
-    strategies (ml/resample.py) to the TRAIN matrix only — evaluation must
-    run on the original unresampled split, exactly like the reference
-    (train_pagewise_xgboost_oversampled.py:277-344 evaluates on the raw
-    test set)."""
+    """pages ⋈ labels, train split only → RF fitted at the driver."""
     extracted = with_extraction(pages)
     labeled = (
         extracted.join(F.broadcast(labels.filter(F.col("label").isNotNull())), "url")
@@ -54,10 +46,6 @@ def train_model(
         .filter(F.col("split") == "train")
     )
     X, y = features_matrix(labeled)
-    if resample_strategy is not None:
-        from .resample import resample
-
-        X, y = resample(X, y, strategy=resample_strategy, kind=resample_kind, seed=seed)
     return RandomForest(
         n_estimators=n_estimators, max_depth=max_depth, class_weight="balanced", seed=seed
     ).fit(X, y)

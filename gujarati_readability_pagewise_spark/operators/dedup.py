@@ -674,9 +674,9 @@ def window_hash_index(
 ) -> DataFrame:
     """The stored corpus-side index for incremental ExactSubstr dedup:
     one row per distinct window hash with its global first occurrence —
-    ``(h, first_key, first_pos)``.  Persist this bucketed by ``h``
-    (operators/colocate) so the daily incremental join reads only the
-    matching buckets and shuffles nothing but the new snapshot."""
+    ``(h, first_key, first_pos)``.  Write this bucketed by ``h``
+    (``DataFrameWriter.bucketBy``) so the daily incremental join reads only
+    the matching buckets and shuffles nothing but the new snapshot."""
     wins = _window_hashes(docs, text_col, key_col, window, n_partitions)
     return wins.groupBy("h").agg(
         F.min(F.struct(F.col(key_col).alias("k"), F.col("pos").alias("p"))).alias("f")

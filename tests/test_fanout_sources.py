@@ -1,60 +1,6 @@
-"""E6 async fan-out machinery, S7 binaryFile source, K6 nested-JSON sink."""
+"""S7 binaryFile source, K6 nested-JSON sink."""
 
-import json
-
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-from gujarati_readability_pagewise_spark.operators.fanout import async_fanout
-
-
-@pytest.fixture()
-def small_df(spark):
-    return spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(range(20)), "text": [f"doc {i}" for i in range(20)]})
-    ).repartition(2)
-
-
-def test_async_fanout_applies_judge(spark, small_df):
-    async def judge(row):
-        return f"judged:{row['doc_id']}"
-
-    out = async_fanout(
-        small_df, judge, "doc_id long, text string, result string, attempts int"
-    ).toPandas().sort_values("doc_id")
-    assert list(out.result) == [f"judged:{i}" for i in range(20)]
-    assert (out.attempts == 1).all()
-
-
-def test_async_fanout_retries_then_succeeds(spark, small_df):
-    async def flaky(row):
-        # fails deterministically on first two attempts for even ids
-        flaky.calls[row["doc_id"]] = flaky.calls.get(row["doc_id"], 0) + 1
-        if row["doc_id"] % 2 == 0 and flaky.calls[row["doc_id"]] <= 2:
-            raise RuntimeError("transient")
-        return "ok"
-
-    flaky.calls = {}
-    out = async_fanout(
-        small_df, flaky, "doc_id long, text string, result string, attempts int",
-        max_retries=3, base_delay=0.001,
-    ).toPandas()
-    assert (out.result == "ok").all()
-    assert set(out[out.doc_id % 2 == 0].attempts) == {3}
-    assert set(out[out.doc_id % 2 == 1].attempts) == {1}
-
-
-def test_async_fanout_exhausted_retries_yield_null(spark, small_df):
-    async def dead(row):
-        raise RuntimeError("permanent")
-
-    out = async_fanout(
-        small_df, dead, "doc_id long, text string, result string, attempts int",
-        max_retries=1, base_delay=0.001,
-    ).toPandas()
-    assert out.result.isna().all()
-    assert (out.attempts == 2).all()
 
 
 def test_binaryfile_source_with_glob(spark, tmp_path):

@@ -1,6 +1,8 @@
 """Feature-kernel fixtures: hand-computed vectors for canonical pages
 (FIXTURES.md §5 — pure-Gujarati, empty, mixed-script, punctuation-heavy)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,6 +14,8 @@ from gujarati_readability_pagewise_spark.functions.features import (
 )
 
 IDX = {n: i for i, n in enumerate(FEATURE_NAMES)}
+# scanning oracle of the kernel's single-pass sentence-run count
+_SENT = re.compile(r"[.!?…।॥]+")
 
 
 def one(text: str) -> np.ndarray:
@@ -133,7 +137,7 @@ def test_fused_numpy_passes_equal_scanning_regexes():
     X = compute_features(docs)
     np.testing.assert_array_equal(
         X[:, IDX["n_sentences"]],
-        np.array([len(FT._SENT.findall(d)) for d in docs], dtype=float),
+        np.array([len(_SENT.findall(d)) for d in docs], dtype=float),
     )
     np.testing.assert_array_equal(
         X[:, IDX["n_aksharas"]],

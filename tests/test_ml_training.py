@@ -115,30 +115,3 @@ def test_default_model_stable_fingerprint():
     proba = m.predict_proba(np.zeros((1, 12)))
     assert len(m.trees) == 30
     assert proba.shape == (1, 2) and abs(proba.sum() - 1.0) < 1e-12
-
-
-def test_all_three_classifier_families(spark, tmp_path):
-    """The reference's RF / SVM(+scaler) / XGBoost menu on Spark ML:
-    each family trains, beats chance on its training slice, and
-    round-trips through Spark ML persistence."""
-    pytest.importorskip("pyspark.ml")
-    from gujarati_readability_pagewise_spark.ml.alt_models import (
-        FAMILIES,
-        evaluate_accuracy,
-        train_classifier,
-    )
-
-    # LinearSVC/GBT are binary: binarize the 10-class label (low vs high)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        F.col("embedding").alias("features"),
-        (F.col("label") >= 5).cast("int").alias("label"),
-    )
-    for family in FAMILIES:
-        model = train_classifier(emb, family=family)
-        acc = evaluate_accuracy(model, emb)
-        assert acc > 0.55, f"{family}: train accuracy {acc}"
-        path = str(tmp_path / f"model_{family}")
-        model.write().overwrite().save(path)
-        cls = type(model)
-        reloaded = cls.load(path)
-        assert evaluate_accuracy(reloaded, emb) == acc

@@ -158,3 +158,45 @@ def test_kernel_invariant_to_arrow_batch_size_and_partitioning(spark):
         spark.conf.set(conf, saved)
     assert statuses - {"ok"}, statuses  # the corrupt payloads took the error path
     assert len(set(digests.values())) == 1, digests
+
+
+_KERNEL_DIGEST = """
+import hashlib
+
+import pyarrow as pa
+
+from gujarati_readability_pagewise_spark.ml.train import default_model
+from gujarati_readability_pagewise_spark.operators.udfs import _arrow_kernel
+from gujarati_readability_pagewise_spark.sources.pages import gen_pages_pdf
+
+pdf = gen_pages_pdf(300, seed=5)[["url", "warc_ts", "html", "lang"]]
+rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+out = _arrow_kernel(rb, include_spans=True, rf=default_model())
+sink = pa.BufferOutputStream()
+with pa.ipc.new_stream(sink, out.schema) as writer:
+    writer.write_batch(out)
+print(out.num_rows, hashlib.sha256(sink.getvalue().to_pybytes()).hexdigest())
+"""
+
+
+def test_kernel_output_identical_across_interpreters():
+    """Two fresh interpreters with different string-hash salts train the
+    default model and run the Arrow kernel on one seeded batch: their
+    output batches are byte-identical (no Spark, no shared process state)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    outs = []
+    for salt in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=salt)
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, env.get("PYTHONPATH")]))
+        done = subprocess.run(
+            [sys.executable, "-c", _KERNEL_DIGEST], env=env, cwd=root,
+            capture_output=True, text=True, timeout=300, check=True,
+        )
+        outs.append(done.stdout.split())
+    assert outs[0][0] == "300", outs
+    assert outs[0] == outs[1], outs
