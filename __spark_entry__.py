@@ -18,6 +18,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from gujarati_readability_pagewise_spark.operators.dedup import (
+    N_BANDS,
+    N_HASHES,
+    SHINGLE_K,
+)
 from gujarati_readability_pagewise_spark.sources.catalog import (
     load_table,
     pages_from_documents,
@@ -934,18 +939,12 @@ def q_e3_standardize(spark, sf):
 def q_dedup_minhash_lsh(spark, sf):
     """MinHash(16)+LSH(4 bands) candidate pairs over char-5-shingles."""
     from gujarati_readability_pagewise_spark.operators.dedup import (
-        char_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
+        near_dup_candidates,
     )
 
-    docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    sh = char_shingles(docs, "text", "doc_id", k=5, n_partitions=par)
-    sig = minhash_signatures(sh, "doc_id", n_hashes=16)
     # no global orderBy: driver compare is order-insensitive; a range sort
     # re-executes the expensive child for bound sampling
-    return lsh_candidate_pairs(sig, "doc_id", bands=4)
+    return near_dup_candidates(load_table(spark, sf, "documents"))
 
 
 def q_recrawl_diff(spark, sf):
@@ -1009,19 +1008,12 @@ def q_dedup_components(spark, sf):
         connected_components,
     )
     from gujarati_readability_pagewise_spark.operators.dedup import (
-        char_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
+        near_dup_candidates,
     )
 
-    docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    sh = char_shingles(docs, "text", "doc_id", k=5, n_partitions=par)
-    sig = minhash_signatures(sh, "doc_id", n_hashes=16)
-    pairs = lsh_candidate_pairs(sig, "doc_id", bands=4)
     # no global orderBy: driver compare is order-insensitive; a range sort
     # re-executes the expensive child for bound sampling
-    return connected_components(pairs)
+    return connected_components(near_dup_candidates(load_table(spark, sf, "documents")))
 
 
 def q_dedup_ngram_jaccard(spark, sf):
@@ -1073,31 +1065,18 @@ def q_dedup_verified_pairs(spark, sf):
     """Full near-dup pipeline: MinHash-LSH candidates → exact-Jaccard verify.
 
     The LSH stage prunes the quadratic pair space BELOW the pair
-    aggregation: `jaccard_on_candidates_arrays` semi-joins the shingle
-    stream to the candidate doc-id set before any groupBy, builds one
-    shingle set per candidate doc, and intersects sets per candidate pair,
+    aggregation: `jaccard_on_candidates_arrays` semi-joins the docs to the
+    candidate doc-id set before re-exploding them, builds one shingle set
+    per candidate doc, and intersects sets per candidate pair,
     so only candidates pay the exact shingle-set comparison — the shape
     that stays near-linear at 10^12 docs."""
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        char_shingles,
-        jaccard_on_candidates_arrays,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from gujarati_readability_pagewise_spark.operators.dedup import near_dup_pairs
 
-    docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    sh = char_shingles(docs, "text", "doc_id", k=5, n_partitions=par)
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh, "doc_id", n_hashes=16), "doc_id", bands=4
-    )
-    verified = jaccard_on_candidates_arrays(sh, cands, "doc_id", docs=docs)
+    verified = near_dup_pairs(load_table(spark, sf, "documents"), min_jaccard=0.5)
     # no global orderBy: the driver's compare is order-insensitive and a
     # range sort re-executes the whole verify pipeline for bound sampling
     # (measured 5x the query cost) while adding nothing semantically
-    return verified.filter(F.col("jaccard") >= 0.5).select(
-        "a", "b", "n_common", _r(F.col("jaccard")).alias("jaccard")
-    )
+    return verified.select("a", "b", "n_common", _r(F.col("jaccard")).alias("jaccard"))
 
 
 def q_dedup_verified_components(spark, sf):
@@ -1117,22 +1096,10 @@ def q_dedup_verified_components(spark, sf):
     from gujarati_readability_pagewise_spark.operators.components import (
         connected_components,
     )
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        char_shingles,
-        jaccard_on_candidates_arrays,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from gujarati_readability_pagewise_spark.operators.dedup import near_dup_pairs
 
     docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    sh = char_shingles(docs, "text", "doc_id", k=5, n_partitions=par)
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh, "doc_id", n_hashes=16), "doc_id", bands=4
-    )
-    verified = jaccard_on_candidates_arrays(sh, cands, "doc_id", docs=docs)
-    edges = verified.filter(F.col("jaccard") >= 0.5).select("a", "b")
-    return connected_components(edges)
+    return connected_components(near_dup_pairs(docs, min_jaccard=0.5).select("a", "b"))
 
 
 def q_dedup_embedding(spark, sf):
@@ -2053,18 +2020,7 @@ def _semantic_dedup_oracle(
         f" JOIN embeddings b ON b.vec_id = y.vec_id"
         f" WHERE {_cos_sql()} > {threshold!r}::DOUBLE)"
     )
-    ctes.append(
-        "edges AS (SELECT pa AS src, pb AS dst FROM pairs"
-        " UNION SELECT pb, pa FROM pairs)"
-    )
-    ctes.append("nodes AS (SELECT DISTINCT src AS n FROM edges)")
-    ctes.append(
-        "reach(n, m) AS (SELECT n, n FROM nodes"
-        " UNION SELECT r.n, e.dst FROM reach r JOIN edges e ON r.m = e.src)"
-    )
-    ctes.append(
-        "comp AS (SELECT n AS vec_id, min(m) AS component FROM reach GROUP BY n)"
-    )
+    ctes.append(_components_sql("pairs", "vec_id", "pa", "pb"))
     return (
         "WITH RECURSIVE " + ",\n ".join(ctes)
         + """
@@ -2614,15 +2570,16 @@ def q_dedup_incremental(spark, sf):
     par = spark.sparkContext.defaultParallelism
     old = docs.filter(F.col("doc_id") < 400)
     new = docs.filter(F.col("doc_id") >= 400)
-    sh_old = char_shingles(old, "text", "doc_id", k=5, n_partitions=par)
-    sh_new = char_shingles(new, "text", "doc_id", k=5, n_partitions=par)
+    sh_old = char_shingles(old, "text", "doc_id", k=SHINGLE_K, n_partitions=par)
+    sh_new = char_shingles(new, "text", "doc_id", k=SHINGLE_K, n_partitions=par)
     cands = lsh_cross_candidates(
-        minhash_signatures(sh_new, "doc_id", n_hashes=16),
-        minhash_signatures(sh_old, "doc_id", n_hashes=16),
+        minhash_signatures(sh_new, "doc_id", n_hashes=N_HASHES),
+        minhash_signatures(sh_old, "doc_id", n_hashes=N_HASHES),
         "doc_id",
-        bands=4,
+        bands=N_BANDS,
+        n_hashes=N_HASHES,
     ).select(F.col("new_id").alias("a"), F.col("old_id").alias("b"))
-    verified = jaccard_on_candidates_arrays(sh_new.union(sh_old), cands, "doc_id")
+    verified = jaccard_on_candidates_arrays(cands, docs, "doc_id", k=SHINGLE_K)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", "n_common", _r(F.col("jaccard")).alias("jaccard")
     )
@@ -3886,75 +3843,121 @@ def q_dedup_survivors(spark, sf):
         cluster_representatives,
         connected_components,
     )
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        char_shingles,
-        jaccard_on_candidates_arrays,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from gujarati_readability_pagewise_spark.operators.dedup import near_dup_pairs
 
     docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    sh = char_shingles(docs, "text", "doc_id", k=5, n_partitions=par)
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh, "doc_id", n_hashes=16), "doc_id", bands=4
-    )
-    verified = jaccard_on_candidates_arrays(sh, cands, "doc_id", docs=docs)
-    edges = verified.filter(F.col("jaccard") >= 0.5).select("a", "b")
-    clusters = connected_components(edges)
-    return cluster_representatives(clusters, docs)
+    edges = near_dup_pairs(docs, min_jaccard=0.5).select("a", "b")
+    return cluster_representatives(connected_components(edges), docs)
 
 
-def _dedup_survivors_oracle() -> str:
-    """DuckDB oracle for dedup_survivors: LSH candidates + exact-Jaccard
-    (≥0.5) verify, then the recursive-CTE clustering (same construction as
-    the dedup_components oracle) extended with the representative rule
-    (n_chars DESC, doc_id ASC per component; docs in no verified pair are
-    their own component)."""
-    sig_mins = ",\n                      ".join(
-        f"min(('0x' || substr(md5(shingle || '#{i}'), 1, 15))::BIGINT)"
-        for i in range(16)
-    )
-    return f"""
-        WITH RECURSIVE shingles AS (
-          SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-          FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-          WHERE length(substr(text, i, 5)) = 5),
-             sig AS (
-          SELECT doc_id, [{sig_mins}] AS sig
-          FROM shingles GROUP BY doc_id),
-             banded AS (
-          SELECT doc_id AS k, b.band,
-                 md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-          FROM sig, unnest([0, 1, 2, 3]) AS b(band)),
-             cands AS (
-          SELECT DISTINCT a.k AS a, b.k AS b
-          FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
-          WHERE a.k < b.k),
-             sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
+def _shingles_sql(where: str = "") -> str:
+    """DuckDB CTE ``shingles(doc_id, shingle)``: the distinct
+    ``SHINGLE_K``-char shingles of the ``documents`` rows that pass
+    ``where`` (``operators.dedup.char_shingles``)."""
+    k = SHINGLE_K
+    return f"""shingles AS (
+          SELECT DISTINCT doc_id, substr(text, i, {k}) AS shingle
+          FROM documents, unnest(range(1, greatest(length(text) - {k - 1}, 1) + 1)) AS t(i)
+          WHERE {where}length(substr(text, i, {k})) = {k})"""
+
+
+def _jaccard_sql(pair: str = "{a} < {b}") -> str:
+    """CTEs ``sizes(doc_id, sz)`` and ``inter(a, b, n_common)`` over
+    ``shingles``: the exact intersection of every co-shingled doc pair
+    (a, b) that satisfies ``pair``, a condition on the placeholders
+    ``{a}`` and ``{b}``."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
              inter AS (
           SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS n_common
           FROM shingles s1 JOIN shingles s2 USING (shingle)
-          WHERE s1.doc_id < s2.doc_id GROUP BY 1, 2),
-             pairs AS (
-          -- exact-Jaccard verify on the candidate set: integer counts, so
-          -- the >= 0.5 comparison is engine-exact
-          SELECT c.a, c.b
-          FROM cands c
-          JOIN inter i ON i.a = c.a AND i.b = c.b
-          JOIN sizes za ON za.doc_id = c.a
-          JOIN sizes zb ON zb.doc_id = c.b
-          WHERE i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) >= 0.5),
-             edges AS (
-          SELECT a AS src, b AS dst FROM pairs
-          UNION SELECT b, a FROM pairs),
+          WHERE {pair.format(a="s1.doc_id", b="s2.doc_id")} GROUP BY 1, 2)"""
+
+
+def _components_sql(pairs: str, key: str = "doc_id", a: str = "a", b: str = "b") -> str:
+    """CTEs ``edges``, ``nodes``, the recursive closure ``reach(n, m)`` of
+    the undirected pairs (``a``, ``b``) of CTE ``pairs``, and
+    ``comp(key, component)`` with component = min reachable node — the
+    ``operators.components.connected_components`` contract."""
+    return f"""edges AS (SELECT {a} AS src, {b} AS dst FROM {pairs}
+                       UNION SELECT {b}, {a} FROM {pairs}),
              nodes AS (SELECT DISTINCT src AS n FROM edges),
              reach(n, m) AS (
           SELECT n, n FROM nodes
           UNION
           SELECT r.n, e.dst FROM reach r JOIN edges e ON r.m = e.src),
-             comp AS (
-          SELECT n AS doc_id, min(m) AS component FROM reach GROUP BY n),
+             comp AS (SELECT n AS {key}, min(m) AS component FROM reach GROUP BY n)"""
+
+
+def _near_dup_sql(pair: str = "{a} < {b}") -> str:
+    """``WITH RECURSIVE`` and the near-dup policy's CTEs over ``documents``
+    (``operators.dedup.near_dup_pairs``): ``shingles``, the MinHash
+    signature ``sig``, its LSH band table ``banded``, the candidate pairs
+    ``cands(a, b)`` that satisfy ``pair`` (as in ``_jaccard_sql``), and
+    the verified candidates ``vp(a, b, n_common, jaccard)`` with jaccard
+    >= 0.5 (integer counts, so the comparison is engine-exact).
+    Callers append CTEs with a leading comma, or the final SELECT."""
+    r = N_HASHES // N_BANDS
+    sig_mins = ",\n                 ".join(
+        f"min(('0x' || substr(md5(shingle || '#{i}'), 1, 15))::BIGINT)"
+        for i in range(N_HASHES)
+    )
+    return f"""
+        WITH RECURSIVE {_shingles_sql()},
+             sig AS (
+          SELECT doc_id, [{sig_mins}] AS sig
+          FROM shingles GROUP BY doc_id),
+             banded AS (
+          SELECT doc_id AS k, b.band,
+                 md5(array_to_string(sig[b.band*{r} + 1 : b.band*{r} + {r}], ',')) AS bh
+          FROM sig, unnest({list(range(N_BANDS))}) AS b(band)),
+             cands AS (
+          SELECT DISTINCT a.k AS a, b.k AS b
+          FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
+          WHERE {pair.format(a="a.k", b="b.k")}),
+             {_jaccard_sql(pair)},
+             vp AS (
+          SELECT i.a, i.b, i.n_common,
+                 i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) AS jaccard
+          FROM inter i
+          JOIN sizes za ON za.doc_id = i.a
+          JOIN sizes zb ON zb.doc_id = i.b
+          WHERE EXISTS (SELECT 1 FROM cands c WHERE c.a = i.a AND c.b = i.b)
+            AND i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) >= 0.5)"""
+
+
+def _share_sql(char_class: str) -> str:
+    """DuckDB share of ``text``'s characters in ``char_class``
+    (``functions.textstats._ratio``)."""
+    return (
+        f"(length(text) - length(regexp_replace(text, '{char_class}', '', 'g')))::DOUBLE"
+        " / greatest(length(text), 1)"
+    )
+
+
+# DuckDB twins of textstats.lang_id_expr and quality_score_expr over `text`;
+# the digit/punctuation class is a name because Python 3.11 allows no
+# backslash inside an f-string expression
+_SOUP_CLASS = r"[0-9!-/:-@\[-`{-~]"
+_LANG_ID_SQL = f"""CASE
+                       WHEN {_share_sql('[઀-૿]')} > 0.3 THEN 'gu'
+                       WHEN {_share_sql('[ऀ-ॿ]')} > 0.3 THEN 'hi'
+                       WHEN {_share_sql('[A-Za-z]')} > 0.4 THEN 'en'
+                       ELSE 'und' END"""
+_QUALITY_SQL = f"""least(greatest(
+                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
+                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
+                       + 0.4 * ({_share_sql('[A-Za-z઀-૿ऀ-ॿ]')})
+                       - 0.2 * ({_share_sql(_SOUP_CLASS)})
+                       + 0.2, 0.0), 1.0)"""
+
+
+def _dedup_survivors_oracle() -> str:
+    """DuckDB oracle for dedup_survivors: the verified near-dup pairs, their
+    recursive-CTE clustering (as in the dedup_components oracle), and the
+    representative rule (n_chars DESC, doc_id ASC per component; docs in
+    no verified pair are their own component)."""
+    return _near_dup_sql() + f""",
+             {_components_sql("vp")},
              labeled AS (
           SELECT d.doc_id, d.n_chars,
                  COALESCE(c.component, d.doc_id) AS component
@@ -4320,7 +4323,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
+    oracles = {
         "similarity_ivf_topk": _ivf_oracle(),
         "pipeline_score_summary": _score_summary_oracle(),
         "gopher_repetition": r"""
@@ -4467,81 +4470,10 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS is_current
             FROM vers
         """,
-        "streaming_scd2": """
-            WITH log AS (
-              SELECT doc_id,
-                     epoch_ms((1704067200 + doc_id * 100 + fetch_i) * 1000)
-                       AS fetch_ts,
-                     md5(CASE WHEN fetch_i >= 1 AND doc_id % 3 = 0
-                              THEN CASE WHEN fetch_i = 2 AND doc_id % 5 = 0
-                                        THEN text || ' [u2]'
-                                        ELSE text || ' [u1]' END
-                              ELSE text END) AS fp
-              FROM documents, unnest([0, 1, 2]) t(fetch_i)
-              WHERE doc_id < 300),
-                 ch AS (
-              SELECT doc_id, fetch_ts, fp,
-                     lag(fp) OVER (PARTITION BY doc_id ORDER BY fetch_ts)
-                       AS prev
-              FROM log),
-                 vers AS (
-              SELECT doc_id, fetch_ts, fp,
-                     CAST(row_number() OVER (PARTITION BY doc_id
-                                             ORDER BY fetch_ts) AS INT)
-                       AS version,
-                     lead(fetch_ts) OVER (PARTITION BY doc_id
-                                          ORDER BY fetch_ts) AS valid_to
-              FROM ch WHERE prev IS NULL OR fp <> prev)
-            SELECT doc_id, version, fetch_ts AS valid_from, valid_to, fp,
-                   CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS is_current
-            FROM vers
-        """,
         "similarity_quantized_topk": _quantized_oracle(),
-        "dedup_incremental": """
-            WITH shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE length(substr(text, i, 5)) = 5),
-                 sig AS (
-              SELECT doc_id,
-                     [min(('0x' || substr(md5(shingle || '#0'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#1'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#2'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#3'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#4'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#5'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#6'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#7'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#8'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#9'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#10'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#11'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#12'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#13'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#14'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#15'), 1, 15))::BIGINT)] AS sig
-              FROM shingles GROUP BY doc_id),
-                 banded AS (
-              SELECT doc_id AS k, b.band,
-                     md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-              FROM sig, unnest([0, 1, 2, 3]) AS b(band)),
-                 cands AS (
-              SELECT DISTINCT n.k AS a, o.k AS b
-              FROM banded n JOIN banded o ON n.band = o.band AND n.bh = o.bh
-              WHERE n.k >= 400 AND o.k < 400),
-                 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-                 inter AS (
-              SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS n_common
-              FROM shingles s1 JOIN shingles s2 USING (shingle)
-              WHERE s1.doc_id >= 400 AND s2.doc_id < 400 GROUP BY 1, 2)
-            SELECT i.a, i.b, i.n_common,
-                   round(i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common), 4) AS jaccard
-            FROM inter i
-            JOIN sizes za ON za.doc_id = i.a
-            JOIN sizes zb ON zb.doc_id = i.b
-            WHERE EXISTS (SELECT 1 FROM cands c WHERE c.a = i.a AND c.b = i.b)
-              AND i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) >= 0.5
-            ORDER BY i.a, i.b
+        "dedup_incremental": _near_dup_sql("{a} >= 400 AND {b} < 400") + """
+        SELECT a, b, n_common, round(jaccard, 4) AS jaccard
+        FROM vp ORDER BY a, b
         """,
         "tpch_q15": """
             WITH rev AS (
@@ -4736,49 +4668,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN 1 ELSE 0 END AS is_anomaly
             FROM win
         """,
-        "streaming_anomalies": """
-            WITH planted AS (
-              SELECT ts, event_type FROM events
-              UNION ALL
-              SELECT TIMESTAMP '2024-01-20 03:00:07' AS ts,
-                     'click' AS event_type
-              FROM events WHERE event_id % 7 = 0),
-                 counts AS (
-              SELECT event_type AS key,
-                     CAST(floor(epoch(ts) / 21600) AS BIGINT) * 21600
-                       AS bucket_start,
-                     CAST(count(*) AS BIGINT) AS n
-              FROM planted GROUP BY 1, 2),
-                 span AS (
-              SELECT key, min(bucket_start) AS lo, max(bucket_start) AS hi
-              FROM counts GROUP BY key),
-                 grid AS (
-              SELECT key, unnest(generate_series(lo, hi, 21600))
-                       AS bucket_start
-              FROM span),
-                 dense AS (
-              SELECT g.key, g.bucket_start,
-                     CAST(coalesce(c.n, 0) AS BIGINT) AS n
-              FROM grid g LEFT JOIN counts c
-                ON g.key = c.key AND g.bucket_start = c.bucket_start),
-                 win AS (
-              SELECT key, bucket_start, n,
-                     CAST(count(n) OVER w AS BIGINT) AS w_cnt,
-                     CAST(coalesce(sum(n) OVER w, 0) AS BIGINT) AS sum_prior,
-                     CAST(coalesce(sum(n * n) OVER w, 0) AS BIGINT)
-                       AS sumsq_prior
-              FROM dense
-              WINDOW w AS (PARTITION BY key ORDER BY bucket_start
-                           ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-            SELECT key, bucket_start, n, w_cnt, sum_prior, sumsq_prior,
-                   CASE WHEN w_cnt >= 8
-                         AND w_cnt * n > sum_prior
-                         AND (w_cnt * n - sum_prior) * (w_cnt * n - sum_prior)
-                             > 9 * (w_cnt * sumsq_prior
-                                    - sum_prior * sum_prior)
-                        THEN 1 ELSE 0 END AS is_anomaly
-            FROM win
-        """,
         "dsir_select": """
             WITH tk AS (
               SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk
@@ -4845,20 +4734,6 @@ def oracle_sql() -> dict[str, str]:
             FROM counts
             ORDER BY n_occurrences DESC, pair
             LIMIT 50
-        """,
-        "streaming_schedule": """
-            WITH pages AS (
-              SELECT doc_id, 'h' || CAST(doc_id % 7 AS VARCHAR) AS host
-              FROM documents)
-            SELECT doc_id, host,
-                   CAST(row_number() OVER (PARTITION BY host
-                     ORDER BY ('0x' || substr(md5(doc_id::VARCHAR || '#q0'),
-                               1, 15))::BIGINT, doc_id) AS INT) AS slot,
-                   CAST((row_number() OVER (PARTITION BY host
-                     ORDER BY ('0x' || substr(md5(doc_id::VARCHAR || '#q0'),
-                               1, 15))::BIGINT, doc_id) - 1) * 10 AS BIGINT)
-                     AS sched_offset_s
-            FROM pages
         """,
         "host_blocklist": """
             WITH pages AS (
@@ -4947,21 +4822,14 @@ def oracle_sql() -> dict[str, str]:
             WHERE g.doc_id >= 400
             GROUP BY g.doc_id
         """,
-        "corpus_datasheet": """
+        "corpus_datasheet": f"""
             WITH base AS (
               SELECT source, doc_id,
                      CASE WHEN trim(text) = '' THEN 0
                           ELSE CAST(len(regexp_split_to_array(trim(text),
                                     '\\s+')) AS BIGINT) END AS tok,
                      CAST(length(text) AS BIGINT) AS chars,
-                     CASE
-                       WHEN (length(text) - length(regexp_replace(text, '[઀-૿]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'gu'
-                       WHEN (length(text) - length(regexp_replace(text, '[ऀ-ॿ]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'hi'
-                       WHEN (length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.4 THEN 'en'
-                       ELSE 'und' END AS lang_pred,
+                     {_LANG_ID_SQL} AS lang_pred,
                      md5(text) AS digest
               FROM documents)
             SELECT source,
@@ -5063,18 +4931,11 @@ def oracle_sql() -> dict[str, str]:
                      AS pooled_val
             FROM s
         """,
-        "quality_drift": """
+        "quality_drift": f"""
             WITH scored AS (
               SELECT 'corpus' AS grp,
                      1704067200 + (doc_id % 48) * 3600 AS tsec,
-                     CAST(floor(least(greatest(
-                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                       + 0.4 * ((length(text) - length(regexp_replace(text,
-                              '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       - 0.2 * ((length(text) - length(regexp_replace(text,
-                              '[0-9!-/:-@\\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       + 0.2, 0.0), 1.0) * 10000) AS BIGINT)
+                     CAST(floor({_QUALITY_SQL} * 10000) AS BIGINT)
                      - (CASE WHEN doc_id % 48 = 40 THEN 2000 ELSE 0 END)
                        AS score
               FROM documents),
@@ -5838,37 +5699,8 @@ def oracle_sql() -> dict[str, str]:
                    round((c_acctbal - mu) / sd, 4) + 0.0 AS acctbal_std
             FROM customer CROSS JOIN stats ORDER BY c_custkey
         """,
-        "dedup_minhash_lsh": """
-            WITH shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE length(substr(text, i, 5)) = 5),
-                 sig AS (
-              SELECT doc_id,
-                     [min(('0x' || substr(md5(shingle || '#0'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#1'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#2'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#3'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#4'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#5'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#6'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#7'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#8'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#9'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#10'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#11'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#12'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#13'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#14'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#15'), 1, 15))::BIGINT)] AS sig
-              FROM shingles GROUP BY doc_id),
-                 banded AS (
-              SELECT doc_id AS k, b.band,
-                     md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-              FROM sig, unnest([0, 1, 2, 3]) AS b(band))
-            SELECT DISTINCT a.k AS a, b.k AS b
-            FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
-            WHERE a.k < b.k ORDER BY a, b
+        "dedup_minhash_lsh": _near_dup_sql() + """
+        SELECT a, b FROM cands ORDER BY a, b
         """,
         "recrawl_diff": """
             WITH fetches AS (
@@ -5913,102 +5745,13 @@ def oracle_sql() -> dict[str, str]:
               FROM noisy)
             ORDER BY doc_id
         """,
-        "dedup_verified_components": """
-            WITH RECURSIVE shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE length(substr(text, i, 5)) = 5),
-                 sig AS (
-              SELECT doc_id,
-                     [min(('0x' || substr(md5(shingle || '#0'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#1'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#2'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#3'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#4'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#5'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#6'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#7'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#8'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#9'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#10'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#11'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#12'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#13'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#14'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#15'), 1, 15))::BIGINT)] AS sig
-              FROM shingles GROUP BY doc_id),
-                 banded AS (
-              SELECT doc_id AS k, b.band,
-                     md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-              FROM sig, unnest([0, 1, 2, 3]) AS b(band)),
-                 cands AS (
-              SELECT DISTINCT a.k AS a, b.k AS b
-              FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
-              WHERE a.k < b.k),
-                 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-                 inter AS (
-              SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS n_common
-              FROM shingles s1 JOIN shingles s2 USING (shingle)
-              WHERE s1.doc_id < s2.doc_id GROUP BY 1, 2),
-                 vp AS (
-              SELECT i.a, i.b
-              FROM inter i
-              JOIN sizes za ON za.doc_id = i.a
-              JOIN sizes zb ON zb.doc_id = i.b
-              WHERE EXISTS (SELECT 1 FROM cands c WHERE c.a = i.a AND c.b = i.b)
-                AND i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) >= 0.5),
-                 edges AS (SELECT a AS src, b AS dst FROM vp
-                           UNION SELECT b, a FROM vp),
-                 nodes AS (SELECT DISTINCT src AS n FROM edges),
-                 reach(n, m) AS (
-              SELECT n, n FROM nodes
-              UNION
-              SELECT r.n, e.dst FROM reach r JOIN edges e ON r.m = e.src)
-            SELECT n AS doc_id, min(m) AS component
-            FROM reach GROUP BY n ORDER BY doc_id
+        "dedup_verified_components": _near_dup_sql() + f""",
+             {_components_sql("vp")}
+        SELECT * FROM comp ORDER BY doc_id
         """,
-        "dedup_components": """
-            WITH RECURSIVE shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE length(substr(text, i, 5)) = 5),
-                 sig AS (
-              SELECT doc_id,
-                     [min(('0x' || substr(md5(shingle || '#0'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#1'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#2'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#3'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#4'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#5'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#6'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#7'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#8'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#9'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#10'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#11'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#12'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#13'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#14'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#15'), 1, 15))::BIGINT)] AS sig
-              FROM shingles GROUP BY doc_id),
-                 banded AS (
-              SELECT doc_id AS k, b.band,
-                     md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-              FROM sig, unnest([0, 1, 2, 3]) AS b(band)),
-                 pairs AS (
-              SELECT DISTINCT a.k AS a, b.k AS b
-              FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
-              WHERE a.k < b.k),
-                 edges AS (
-              SELECT a AS src, b AS dst FROM pairs
-              UNION SELECT b, a FROM pairs),
-                 nodes AS (SELECT DISTINCT src AS n FROM edges),
-                 reach(n, m) AS (
-              SELECT n, n FROM nodes
-              UNION
-              SELECT r.n, e.dst FROM reach r JOIN edges e ON r.m = e.src)
-            SELECT n AS doc_id, min(m) AS component
-            FROM reach GROUP BY n ORDER BY doc_id
+        "dedup_components": _near_dup_sql() + f""",
+             {_components_sql("cands")}
+        SELECT * FROM comp ORDER BY doc_id
         """,
         "f1_slug_cascade": r"""
             WITH raw AS (
@@ -6047,51 +5790,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(1 - pos) AS BIGINT) AS n_neg
             FROM ranked
         """,
-        "dedup_verified_pairs": """
-            WITH shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE length(substr(text, i, 5)) = 5),
-                 sig AS (
-              SELECT doc_id,
-                     [min(('0x' || substr(md5(shingle || '#0'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#1'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#2'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#3'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#4'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#5'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#6'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#7'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#8'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#9'),  1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#10'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#11'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#12'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#13'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#14'), 1, 15))::BIGINT),
-                      min(('0x' || substr(md5(shingle || '#15'), 1, 15))::BIGINT)] AS sig
-              FROM shingles GROUP BY doc_id),
-                 banded AS (
-              SELECT doc_id AS k, b.band,
-                     md5(array_to_string(sig[b.band*4 + 1 : b.band*4 + 4], ',')) AS bh
-              FROM sig, unnest([0, 1, 2, 3]) AS b(band)),
-                 cands AS (
-              SELECT DISTINCT a.k AS a, b.k AS b
-              FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
-              WHERE a.k < b.k),
-                 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-                 inter AS (
-              SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS n_common
-              FROM shingles s1 JOIN shingles s2 USING (shingle)
-              WHERE s1.doc_id < s2.doc_id GROUP BY 1, 2)
-            SELECT i.a, i.b, i.n_common,
-                   round(i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common), 4) AS jaccard
-            FROM inter i
-            JOIN sizes za ON za.doc_id = i.a
-            JOIN sizes zb ON zb.doc_id = i.b
-            WHERE EXISTS (SELECT 1 FROM cands c WHERE c.a = i.a AND c.b = i.b)
-              AND i.n_common::DOUBLE / (za.sz + zb.sz - i.n_common) >= 0.5
-            ORDER BY i.a, i.b
+        "dedup_verified_pairs": _near_dup_sql() + """
+        SELECT a, b, n_common, round(jaccard, 4) AS jaccard
+        FROM vp ORDER BY a, b
         """,
         "dedup_embedding": f"""
             WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300)
@@ -6101,16 +5802,9 @@ def oracle_sql() -> dict[str, str]:
             WHERE {_cos_sql()} > 0.38
             ORDER BY a, b
         """,
-        "dedup_ngram_jaccard": """
-            WITH shingles AS (
-              SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle
-              FROM documents, unnest(range(1, greatest(length(text) - 4, 1) + 1)) AS t(i)
-              WHERE doc_id < 100 AND length(substr(text, i, 5)) = 5),
-                 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-                 inter AS (
-              SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS n_common
-              FROM shingles s1 JOIN shingles s2 USING (shingle)
-              WHERE s1.doc_id < s2.doc_id GROUP BY 1, 2)
+        "dedup_ngram_jaccard": f"""
+            WITH {_shingles_sql("doc_id < 100 AND ")},
+                 {_jaccard_sql()}
             SELECT a, b, n_common,
                    round(n_common::DOUBLE / (za.sz + zb.sz - n_common), 4) AS jaccard
             FROM inter
@@ -6183,25 +5877,11 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE quota_rank <= 15
             ORDER BY source, quota_rank
         """,
-        "curation_funnel": r"""
+        "curation_funnel": rf"""
             WITH scored AS (
               SELECT doc_id, source, text,
-                     CASE
-                       WHEN (length(text) - length(regexp_replace(text, '[઀-૿]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'gu'
-                       WHEN (length(text) - length(regexp_replace(text, '[ऀ-ॿ]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'hi'
-                       WHEN (length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.4 THEN 'en'
-                       ELSE 'und' END AS lang_pred,
-                     least(greatest(
-                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                       + 0.4 * ((length(text) - length(regexp_replace(text,
-                              '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       - 0.2 * ((length(text) - length(regexp_replace(text,
-                              '[0-9!-/:-@\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       + 0.2, 0.0), 1.0) AS q,
+                     {_LANG_ID_SQL} AS lang_pred,
+                     {_QUALITY_SQL} AS q,
                      length(text) AS n_chars
               FROM documents),
                  sents AS (
@@ -6278,17 +5958,10 @@ def oracle_sql() -> dict[str, str]:
             JOIN events e ON e.ts >= i.start_ts AND e.ts <= i.end_ts
             GROUP BY i.win_user ORDER BY i.win_user
         """,
-        "quality_weighted_sample": """
+        "quality_weighted_sample": f"""
             WITH scored AS (
               SELECT doc_id, source,
-                     least(greatest(
-                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                       + 0.4 * ((length(text) - length(regexp_replace(text,
-                              '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       - 0.2 * ((length(text) - length(regexp_replace(text,
-                              '[0-9!-/:-@\\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       + 0.2, 0.0), 1.0) AS q
+                     {_QUALITY_SQL} AS q
               FROM documents)
             SELECT doc_id, source,
                    CAST(floor(q * 1000000) AS BIGINT) AS q_fp
@@ -6351,25 +6024,11 @@ def oracle_sql() -> dict[str, str]:
                      AND c.ps_cost_fp = mins.m
             ORDER BY c.s_acctbal DESC, c.n_name, c.s_name, c.p_partkey
         """,
-        "streaming_curation": """
+        "streaming_curation": f"""
             WITH scored AS (
               SELECT doc_id, source, text,
-                     CASE
-                       WHEN (length(text) - length(regexp_replace(text, '[઀-૿]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'gu'
-                       WHEN (length(text) - length(regexp_replace(text, '[ऀ-ॿ]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'hi'
-                       WHEN (length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.4 THEN 'en'
-                       ELSE 'und' END AS lang_pred,
-                     least(greatest(
-                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                       + 0.4 * ((length(text) - length(regexp_replace(text,
-                              '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       - 0.2 * ((length(text) - length(regexp_replace(text,
-                              '[0-9!-/:-@\\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       + 0.2, 0.0), 1.0) AS q,
+                     {_LANG_ID_SQL} AS lang_pred,
+                     {_QUALITY_SQL} AS q,
                      length(text) AS n_chars
               FROM documents),
                  kept AS (
@@ -6387,25 +6046,11 @@ def oracle_sql() -> dict[str, str]:
             FROM kept k JOIN first ON first.doc_id = k.doc_id
                                   AND first.digest = md5(k.text)
         """,
-        "corpus_curation": """
+        "corpus_curation": f"""
             WITH scored AS (
               SELECT doc_id, source, text,
-                     CASE
-                       WHEN (length(text) - length(regexp_replace(text, '[઀-૿]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'gu'
-                       WHEN (length(text) - length(regexp_replace(text, '[ऀ-ॿ]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.3 THEN 'hi'
-                       WHEN (length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))::DOUBLE
-                            / greatest(length(text), 1) > 0.4 THEN 'en'
-                       ELSE 'und' END AS lang_pred,
-                     least(greatest(
-                       0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                   WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                       + 0.4 * ((length(text) - length(regexp_replace(text,
-                              '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       - 0.2 * ((length(text) - length(regexp_replace(text,
-                              '[0-9!-/:-@\\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                       + 0.2, 0.0), 1.0) AS q,
+                     {_LANG_ID_SQL} AS lang_pred,
+                     {_QUALITY_SQL} AS q,
                      length(text) AS n_chars
               FROM documents),
                  kept AS (
@@ -6649,29 +6294,12 @@ def oracle_sql() -> dict[str, str]:
             + " + ".join(f"((xor(fp_a, fp_b) >> {b}) & 1)" for b in range(16))
             + ")",
         ),
-        "text_lang_id": """
-            WITH scored AS (
-              SELECT CASE
-                WHEN (length(text) - length(regexp_replace(text, '[઀-૿]', '', 'g')))::DOUBLE
-                     / greatest(length(text), 1) > 0.3 THEN 'gu'
-                WHEN (length(text) - length(regexp_replace(text, '[ऀ-ॿ]', '', 'g')))::DOUBLE
-                     / greatest(length(text), 1) > 0.3 THEN 'hi'
-                WHEN (length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))::DOUBLE
-                     / greatest(length(text), 1) > 0.4 THEN 'en'
-                ELSE 'und' END AS lang_pred
-              FROM documents)
+        "text_lang_id": f"""
+            WITH scored AS (SELECT {_LANG_ID_SQL} AS lang_pred FROM documents)
             SELECT lang_pred, count(*) AS n FROM scored GROUP BY lang_pred ORDER BY lang_pred
         """,
-        "text_quality_score": """
-            SELECT doc_id,
-                   round(least(greatest(
-                     0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0
-                                 WHEN length(text) >= 20 THEN 0.5 ELSE 0.0 END)
-                     + 0.4 * ((length(text) - length(regexp_replace(text,
-                            '[A-Za-z઀-૿ऀ-ॿ]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                     - 0.2 * ((length(text) - length(regexp_replace(text,
-                            '[0-9!-/:-@\\[-`{-~]', '', 'g')))::DOUBLE / greatest(length(text), 1))
-                     + 0.2, 0.0), 1.0), 4) AS qscore
+        "text_quality_score": f"""
+            SELECT doc_id, round({_QUALITY_SQL}, 4) AS qscore
             FROM documents ORDER BY doc_id
         """,
         "text_fingerprint": """
@@ -6729,3 +6357,11 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rk <= 3 ORDER BY q_id, rk
         """,
     }
+    # a stream merge must return exactly its batch query's rows
+    for stream, batch in (
+        ("streaming_anomalies", "volume_anomalies"),
+        ("streaming_scd2", "scd2_url_history"),
+        ("streaming_schedule", "crawl_schedule"),
+    ):
+        oracles[stream] = oracles[batch]
+    return oracles

@@ -111,9 +111,9 @@ def repetition_signals(
         .groupBy(key_col, "n_chars", "gram")
         .agg(F.count("*").alias("cnt"))
     )
-    # top-1 per doc as a hash aggregation (min over (−cnt, gram) structs ≡
-    # ORDER BY cnt DESC, gram ASC) — partial-aggregable map-side, no
-    # per-doc window sort over the full (doc, gram) pair stream
+    # top-1 per doc as one min over (−cnt, gram) structs (≡ ORDER BY cnt
+    # DESC, gram ASC): a struct buffer plans as a partial and a final
+    # SortAggregate — map-side partial, no per-doc window over the pair stream
     top = (
         g.groupBy(key_col, "n_chars")
         .agg(

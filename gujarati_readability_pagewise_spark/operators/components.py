@@ -102,8 +102,8 @@ def cluster_representatives(
     (near-dup clusters only — singletons are absent); every doc maps to a
     component (its own key when unclustered), and each component keeps
     exactly one representative: highest ``quality_col``, ties to the
-    lowest key — the ``min(struct(-quality, key))`` hash aggregation, so
-    selection is one partial-aggregable pass, no per-cluster window sort.
+    lowest key — ``min(struct(-quality, key))``, planned as a partial and a
+    final SortAggregate: one partial-aggregable pass, no per-cluster window sort.
 
     Output: (key, component, is_survivor ∈ {0,1}) for EVERY input doc —
     filter ``is_survivor = 1`` for the cleaned corpus, or keep the full

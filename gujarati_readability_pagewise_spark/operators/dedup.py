@@ -37,6 +37,8 @@ __all__ = [
     "lsh_cross_candidates",
     "jaccard_pairs",
     "jaccard_on_candidates_arrays",
+    "near_dup_candidates",
+    "near_dup_pairs",
     "simhash",
     "simhash_bands",
     "simhash_near_pairs",
@@ -313,22 +315,22 @@ def jaccard_pairs(
 
 
 def jaccard_on_candidates_arrays(
-    shingles: DataFrame,
     cands: DataFrame,
+    docs: DataFrame,
     key_col: str = "doc_id",
     min_jaccard: float = 0.0,
-    docs: DataFrame | None = None,
     text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Exact Jaccard restricted to LSH candidate pairs, via per-doc
-    shingle ARRAYS.  Output: ``jaccard_pairs`` semi-joined to ``cands``,
-    (a, b, n_common, jaccard).
+    shingle ARRAYS.  Output: ``jaccard_pairs`` of ``docs``' shingles
+    semi-joined to ``cands``, (a, b, n_common, jaccard).
 
     ``jaccard_pairs`` alone materializes every co-shingled pair before any
     candidate filter can apply (Catalyst cannot push a semi-join on (a, b)
     below the pair aggregation).  Here the candidate pairs DRIVE the work:
-    the shingle stream is restricted to candidate docs first, one
+    only candidate docs are re-exploded into shingles (restrict before the
+    expansion: a join cannot be pushed below an explode), one
     ``collect_set(shingle)`` per candidate doc builds its set, and each
     pair's intersection is a single JVM ``array_intersect`` — so no
     non-candidate pair is ever enumerated.  Measured 2.6× faster at sf0.1
@@ -338,16 +340,6 @@ def jaccard_on_candidates_arrays(
     Trade-off at the tail: each pair row carries both docs' arrays, which
     are bounded by shingles/doc (≈ doc length) — fine for crawl pages, but
     peak row memory grows with the longest candidate document.
-
-    ``docs`` (optional): the doc table ``shingles`` was built from.  When
-    given, the candidate shingle stream is REBUILT from the semi-joined
-    docs instead of semi-filtering the full shingle stream: Spark cannot
-    push a join below the explode, so the plain form re-explodes the
-    whole corpus and discards non-candidates after the fan-out, while
-    this form explodes only candidate docs — at 10^12 docs the explode
-    shrinks to the candidate fraction (guide §2.3: restrict before the
-    expansion, not after).  Output identical by construction
-    (``char_shingles`` of a row subset == subset of the shingle stream).
     """
     pair_keys = _persist(cands.select("a", "b"))
     cand_keys = (
@@ -355,20 +347,17 @@ def jaccard_on_candidates_arrays(
         .union(pair_keys.select(F.col("b").alias(key_col)))
         .distinct()
     )
-    if docs is not None:
-        # n_partitions is load-bearing: the semi join's output keeps the
-        # doc scan's partitioning (often ONE file split locally), and the
-        # 300x shingle fan-out must happen after a key exchange, not
-        # inside a single scan task (char_shingles docstring hazard)
-        sh_cand = char_shingles(
-            docs.join(cand_keys, key_col, "left_semi"),
-            text_col,
-            key_col,
-            k=k,
-            n_partitions=docs.sparkSession.sparkContext.defaultParallelism,
-        )
-    else:
-        sh_cand = shingles.join(cand_keys, key_col, "left_semi")
+    # n_partitions is load-bearing: the semi join's output keeps the doc
+    # scan's partitioning (often ONE file split locally), and the 300x
+    # shingle fan-out must happen after a key exchange, not inside a
+    # single scan task (char_shingles docstring hazard)
+    sh_cand = char_shingles(
+        docs.join(cand_keys, key_col, "left_semi"),
+        text_col,
+        key_col,
+        k=k,
+        n_partitions=docs.sparkSession.sparkContext.defaultParallelism,
+    )
     # collect the RAW shingles, not md5(shingle): the exact-intersection
     # count is identical (sets either way) minus the md5 collision risk,
     # the per-element compare in array_intersect runs on ~5-char strings
@@ -401,6 +390,34 @@ def jaccard_on_candidates_arrays(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("a", "b", "n_common", "jaccard")
     )
+
+
+# The near-dup policy, run only through the two functions below; the
+# DuckDB oracles build their SQL from these constants.
+SHINGLE_K, N_HASHES, N_BANDS = 5, 16, 4
+
+
+def near_dup_candidates(
+    docs: DataFrame, key_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """The policy's LSH candidate pairs (a, b), a < b: char shingles →
+    MinHash signatures → docs sharing any band."""
+    sh = char_shingles(
+        docs, text_col, key_col, k=SHINGLE_K,
+        n_partitions=docs.sparkSession.sparkContext.defaultParallelism,
+    )
+    sig = minhash_signatures(sh, key_col, n_hashes=N_HASHES)
+    return lsh_candidate_pairs(sig, key_col, bands=N_BANDS, n_hashes=N_HASHES)
+
+
+def near_dup_pairs(
+    docs: DataFrame, key_col: str = "doc_id", text_col: str = "text", min_jaccard: float = 0.0
+) -> DataFrame:
+    """``near_dup_candidates`` verified by exact shingle-set Jaccard:
+    (a, b, n_common, jaccard) with jaccard >= ``min_jaccard``."""
+    cands = near_dup_candidates(docs, key_col, text_col)
+    verified = jaccard_on_candidates_arrays(cands, docs, key_col, text_col=text_col, k=SHINGLE_K)
+    return verified.filter(F.col("jaccard") >= min_jaccard)
 
 
 def simhash(

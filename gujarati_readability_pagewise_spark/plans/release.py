@@ -41,13 +41,10 @@ from ..functions.textstats import curation_keep_expr
 from ..operators.components import cluster_representatives, connected_components
 from ..operators.dedup import (
     _persist,
-    char_shingles,
     cut_spans,
     duplicate_spans,
     exact_dedup,
-    jaccard_on_candidates_arrays,
-    lsh_candidate_pairs,
-    minhash_signatures,
+    near_dup_pairs,
     release_persisted,
     skew_impossible,
 )
@@ -109,17 +106,9 @@ def run_release(
         _stage("curation")
 
         # 2. verified near-dup survivors
-        sh = char_shingles(
-            cur, text_col, key_col, k=5,
-            n_partitions=spark.sparkContext.defaultParallelism,
-        )
-        cands = lsh_candidate_pairs(
-            minhash_signatures(sh, key_col, n_hashes=16), key_col, bands=4
-        )
-        verified = jaccard_on_candidates_arrays(
-            sh, cands, key_col, docs=cur.select(key_col, text_col), text_col=text_col
-        )
-        edges = verified.filter(F.col("jaccard") >= jaccard_threshold).select("a", "b")
+        edges = near_dup_pairs(
+            cur.select(key_col, text_col), key_col, text_col, jaccard_threshold
+        ).select("a", "b")
         # connected_components emits its node column as 'doc_id' regardless of
         # the corpus key; realign for string-keyed (url) corpora
         clusters = connected_components(edges).withColumnRenamed("doc_id", key_col)

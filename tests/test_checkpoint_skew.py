@@ -77,6 +77,97 @@ def test_resume_after_crash_no_dupes_no_missing(spark, pages_df, dirs):
     assert result.select("url").distinct().count() == pages_df.count()  # no dupes
 
 
+_RETRY_RUN = r"""
+import hashlib, json, sys, tempfile
+from pyspark import TaskContext
+from gujarati_readability_pagewise_spark.ml.train import default_model
+from gujarati_readability_pagewise_spark.operators.udfs import with_extraction_and_score
+from gujarati_readability_pagewise_spark.plans.checkpoint import read_manifest, run_checkpointed
+from gujarati_readability_pagewise_spark.session import get_spark
+from gujarati_readability_pagewise_spark.sources.pages import PAGES_SCHEMA_DDL, gen_pages_pdf
+
+spark = get_spark(app_name="retry", master="local[2,2]", shuffle_partitions=2)
+sc = spark.sparkContext
+pdf = gen_pages_pdf(200, seed=7)[["url", "warc_ts", "html", "text", "lang"]]
+pages = spark.createDataFrame(pdf, schema=PAGES_SCHEMA_DDL)
+model = default_model()
+
+
+def score(df):
+    return with_extraction_and_score(df, model, include_spans=False)
+
+
+def fail_first_attempt(batches):
+    if TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("injected failure of a first task attempt")
+    yield from batches
+
+
+def score_retried(df):
+    out = score(df)
+    return out.mapInArrow(fail_first_attempt, out.schema)
+
+
+def failed_tasks():
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags the jobs
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup() for s in st.getJobInfo(j).stageIds]
+    return sum(s.numFailedTasks for s in stages if s is not None)
+
+
+def sha(rows):
+    return hashlib.sha256("\n".join(sorted(map(repr, rows))).encode()).hexdigest()
+
+
+res = {}
+for name, transform in (("clean", score), ("retried", score_retried)):
+    root = tempfile.mkdtemp(dir=sys.argv[1])
+    before = failed_tasks()
+    run_checkpointed(pages, transform, f"{root}/extracted", f"{root}/manifest",
+                     job_id=name, transform_id="score")
+    out = spark.read.parquet(f"{root}/extracted")
+    man = read_manifest(spark, f"{root}/manifest").select(
+        "bucket", "n_rows", "n_text_bytes", "n_input_bytes", "transform_id")
+    scored = out.select("url", "text", "features", "pred_label", "p_nonreadable")
+    res[name] = {
+        "failed_tasks": failed_tasks() - before,
+        "rows": sha(map(tuple, out.collect())),
+        "manifest": sorted(map(list, man.collect())),
+        "scored": sha(map(tuple, scored.collect())),
+    }
+print(json.dumps(res))
+spark.stop()
+"""
+
+
+def test_forced_task_retry_output_equals_clean_run(tmp_path):
+    """Under ``local[2,2]`` every task of the retried run fails its first
+    attempt in a pass-through after the scoring kernel, so the kernel and
+    the bucket writes re-run: the written rows, the manifest and the
+    scored digest must equal those of a clean run."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, env.get("PYTHONPATH")]))
+    done = subprocess.run(
+        [sys.executable, "-c", _RETRY_RUN, str(tmp_path)], env=env, cwd=root,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    res = json.loads(done.stdout.strip().splitlines()[-1])
+    clean, retried = res["clean"], res["retried"]
+    assert clean["failed_tasks"] == 0
+    assert retried["failed_tasks"] > 0
+    assert len(clean["manifest"]) == 16
+    assert sum(m[1] for m in clean["manifest"]) == 200
+    for key in ("rows", "manifest", "scored"):
+        assert retried[key] == clean[key], key
+
+
 def test_rerun_of_completed_job_is_noop(spark, pages_df, dirs):
     out, man = dirs
     run_checkpointed(pages_df, _transform, out, man, n_buckets=4, job_id="t3")

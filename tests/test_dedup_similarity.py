@@ -12,6 +12,8 @@ from gujarati_readability_pagewise_spark.operators.dedup import (
     lsh_candidate_pairs,
     lsh_cross_candidates,
     minhash_signatures,
+    near_dup_candidates,
+    near_dup_pairs,
     simhash,
     simhash_near_pairs,
 )
@@ -87,7 +89,7 @@ def test_jaccard_on_candidates_matches_filtered_exact(spark, docs):
     """Pruned-plan verify ≡ exhaustive jaccard_pairs restricted to candidates."""
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    fast = jaccard_on_candidates_arrays(sh, cands).orderBy("a", "b").toPandas()
+    fast = jaccard_on_candidates_arrays(cands, docs).orderBy("a", "b").toPandas()
     slow = _verify_oracle(sh, cands)
     assert len(slow) > 0
     pd.testing.assert_frame_equal(fast, slow)
@@ -95,17 +97,15 @@ def test_jaccard_on_candidates_matches_filtered_exact(spark, docs):
 
 def test_verified_pairs_semi_join_below_aggregation(spark, docs):
     """The LSH candidate restriction must sit BELOW the pair aggregation
-    (jaccard_on_candidates_arrays, with and without ``docs=``), not above
-    it (the round-1 scale-killer)."""
+    (jaccard_on_candidates_arrays), not above it (the round-1
+    scale-killer)."""
     import tools.plan_audit as pa
 
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
     bad = jaccard_pairs(sh).join(cands, ["a", "b"], "left_semi")
-    for verify_docs in (None, docs):
-        good = jaccard_on_candidates_arrays(sh, cands, docs=verify_docs)
-        good_plan = good._jdf.queryExecution().executedPlan().toString()
-        assert pa.semi_below_pair_agg(good_plan), verify_docs
+    good = jaccard_on_candidates_arrays(cands, docs)
+    assert pa.semi_below_pair_agg(good._jdf.queryExecution().executedPlan().toString())
     bad_plan = bad._jdf.queryExecution().executedPlan().toString()
     assert not pa.semi_below_pair_agg(bad_plan)
 
@@ -341,9 +341,7 @@ def test_release_persisted_unpersists_intermediates(spark, docs):
     from gujarati_readability_pagewise_spark.operators import dedup as D
 
     D.release_persisted()  # drain whatever earlier tests left
-    sh = char_shingles(docs, k=5)
-    cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    verified = jaccard_on_candidates_arrays(sh, cands, min_jaccard=0.5)
+    verified = near_dup_pairs(docs, min_jaccard=0.5)
     verified.count()  # consuming action — caches are now populated
     assert len(D._PERSISTED) >= 3
     released = D.release_persisted()
@@ -452,16 +450,19 @@ def test_lsh_cross_candidates_agree_with_batch_pairs(spark, docs):
 
 
 def test_jaccard_verify_forms_identical(spark, docs):
-    """The ``docs=`` verify (candidate shingles rebuilt from the semi-joined
-    docs, not semi-filtered from the shingle stream) must emit EXACTLY the
-    oracle's rows — same pairs, same integer n_common, same float jaccard."""
+    """The near-dup composition is the hand-written policy: its candidates
+    are char-5 shingles → 16 MinHash hashes → 4 LSH bands, and its pairs
+    are EXACTLY the exhaustive oracle's rows on those candidates at the
+    threshold — same pairs, same integer n_common, same float jaccard."""
     sh = char_shingles(docs, k=5)
     cands = lsh_candidate_pairs(minhash_signatures(sh, n_hashes=16), bands=4)
-    fast = (
-        jaccard_on_candidates_arrays(sh, cands, docs=docs).orderBy("a", "b").toPandas()
+    assert sorted(map(tuple, near_dup_candidates(docs).collect())) == sorted(
+        map(tuple, cands.collect())
     )
-    slow = _verify_oracle(sh, cands)
-    assert len(slow) > 0
+    fast = near_dup_pairs(docs, min_jaccard=0.9).orderBy("a", "b").toPandas()
+    every = _verify_oracle(sh, cands)
+    slow = every[every.jaccard >= 0.9].reset_index(drop=True)
+    assert 0 < len(slow) < len(every)
     pd.testing.assert_frame_equal(fast, slow)
 
 

@@ -110,8 +110,18 @@ def test_train_model_end_to_end(spark, pages_df, pages_pdf):
 def test_default_model_stable_fingerprint():
     """The pinned seed-42 model must be identical across processes/sessions:
     fingerprint its structure (FIXTURES.md §5 'pinned seed-42 model')."""
+    import hashlib
+
     m = default_model()
     fp = sum(len(t.feature) for t in m.trees)
+    h = hashlib.sha256()
+    for t in m.trees:
+        for arr in (t.feature, t.threshold, t.left, t.right, t.proba0):
+            h.update(arr.tobytes())
     proba = m.predict_proba(np.zeros((1, 12)))
     assert len(m.trees) == 30
+    assert fp == 144
+    assert h.hexdigest() == (
+        "789c95e437d29ca6fa25e7c7704c34756a1d06e22d7fc78ad3385b39b23f0550"
+    )
     assert proba.shape == (1, 2) and abs(proba.sum() - 1.0) < 1e-12

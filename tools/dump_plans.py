@@ -9,7 +9,10 @@ Usage:
       FRAMES plus NORMALIZED_QUERIES) the optimized and physical plan
       strings with expression ids normalized, plus the sha256 of the
       sorted collected rows.  Streaming frames drive each merge step on
-      fixed batches and also record the plans of every parquet write.
+      fixed batches.  Every name also records the plans of each parquet
+      write and of each ``localCheckpoint`` it runs (the near-dup edges
+      behind connected components show only there).  The ``release``
+      frame runs ``run_release`` with span cutting on the documents.
 
 Plan identity of a change: run --normalized on the change and on a checkout
 of the parent commit (``git archive`` or ``git worktree``, with this tool
@@ -174,10 +177,42 @@ def _streaming_frames():
     }
 
 
+def _release(spark, sf, tmp):
+    from gujarati_readability_pagewise_spark.plans.release import run_release
+    from gujarati_readability_pagewise_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf, "documents").select("doc_id", "text")
+    run_release(spark, docs, tmp, cut_spans_window=40, job_id="dump")
+    return spark.read.parquet(f"{tmp}/released")
+
+
+def _initial_plans_only(s: str) -> str:
+    """Drop the ``== Final Plan ==`` (or ``== Current Plan ==``) section of
+    each adaptive plan a cached relation prints: AQE re-plans it from the
+    runtime sizes and the order its stages finish in, so it can differ
+    between two runs of one plan.  The ``== Initial Plan ==`` that closes
+    the section stays.  Sections nest (a cached relation inside a final
+    plan prints its own) and their header columns do not follow the tree's
+    indentation, so the headers are matched like brackets."""
+    out, depth = [], 0
+    for line in s.splitlines():
+        if "== Final Plan ==" in line or "== Current Plan ==" in line:
+            depth += 1
+            continue
+        if depth and "== Initial Plan ==" in line:
+            depth -= 1
+        if depth:
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
 def _normalize(s: str, tmp: str) -> str:
     s = s.replace(tmp, "<tmp>").replace(f"_scratch_{os.getpid()}", "_scratch_<pid>")
     s = re.sub(r"#\d+", "#n", s)
-    return re.sub(r"\b(plan_id|id)=\d+", r"\1=n", s)
+    # higher-order-function variables are numbered per process
+    s = re.sub(r"\blambda (\w+?)_\d+", r"lambda \1_n", s)
+    return _initial_plans_only(re.sub(r"\b(plan_id|id)=\d+", r"\1=n", s))
 
 
 def _plans(df, tmp: str) -> dict:
@@ -200,7 +235,7 @@ def normalized(out_path: str, names: list[str]) -> None:
     from gujarati_readability_pagewise_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    frames = {**_similarity_frames(), **_streaming_frames()}
+    frames = {**_similarity_frames(), **_streaming_frames(), "release": _release}
     names = names or [*frames, *NORMALIZED_QUERIES]
     spark = get_spark(app_name="plans-normalized")
     # untruncated scan metadata: a cut at a fixed length lands at a
@@ -208,18 +243,27 @@ def normalized(out_path: str, names: list[str]) -> None:
     spark.conf.set("spark.sql.maxMetadataStringLength", 1 << 20)
     qs = entrymod.queries()
     writes: list[dict] = []
+    checkpoints: list[dict] = []
     orig_parquet = DataFrameWriter.parquet
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    orig_checkpoint = frame_cls.localCheckpoint
 
     def recording_parquet(self, path, *a, **kw):
         writes.append(_plans(self._df, tmp))
         return orig_parquet(self, path, *a, **kw)
 
+    def recording_checkpoint(self, *a, **kw):
+        checkpoints.append(_plans(self, tmp))
+        return orig_checkpoint(self, *a, **kw)
+
     DataFrameWriter.parquet = recording_parquet
+    frame_cls.localCheckpoint = recording_checkpoint
     out = {}
     try:
         for name in names:
             tmp = tempfile.mkdtemp(prefix="dump_plans_")
             writes.clear()
+            checkpoints.clear()
             got = frames[name](spark, sf_dir, tmp) if name in frames else qs[name](spark, sf_dir)
             if isinstance(got, DataFrame):
                 rec = _plans(got, tmp)
@@ -229,12 +273,15 @@ def normalized(out_path: str, names: list[str]) -> None:
                 rec = {"value_sha256": _sha([repr(got)])}
             if writes:
                 rec["writes"] = list(writes)
+            if checkpoints:
+                rec["checkpoints"] = list(checkpoints)
             out[name] = rec
             print(name, rec.get("rows_sha256", rec.get("value_sha256")))
             spark.catalog.clearCache()
             shutil.rmtree(tmp, ignore_errors=True)
     finally:
         DataFrameWriter.parquet = orig_parquet
+        frame_cls.localCheckpoint = orig_checkpoint
         spark.stop()
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)

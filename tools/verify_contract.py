@@ -9,17 +9,20 @@ Usage: python tools/verify_contract.py [sf_dir] [query ...]
        python tools/verify_contract.py --scope-out SCOPE.json [sf_dir] [query ...]
 
 ``--scope-out`` writes a machine-readable result artifact: pass/fail
-lists, the skipped-oracle map with reasons, and counts.  At an sf0.1
-directory, queries named in ``SF01_ORACLE_EXCLUDED`` are skipped (the
-exclusion is ORACLE cost — DuckDB-side recursive CTEs that spill tens of
-GB — never engine cost: their Spark plans run at sf0.1 in bench.py, and
-their oracles are verified green at sf0.01).
+lists, the skipped-oracle map with reasons, counts, and per query the
+sha256 of its oracle's result after the compare's own normalization
+(``oracle_sha256``), so the scope files of two checkouts can be diffed
+query by query to show that an oracle rewrite returns the same rows.
+At an sf0.1 directory, queries named in ``SF01_ORACLE_EXCLUDED`` are
+skipped (the exclusion is ORACLE cost — DuckDB-side recursive CTEs that
+spill tens of GB — never engine cost: their Spark plans run at sf0.1 in
+bench.py, and their oracles are verified green at sf0.01).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
-import math
 import os
 import sys
 import time
@@ -62,6 +65,11 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
         else:
             df[c] = df[c].astype(str)
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def oracle_sha256(duck_pdf: pd.DataFrame) -> str:
+    """sha256 of a result as ``compare`` sees it (``_norm``-ed, as CSV)."""
+    return hashlib.sha256(_norm(duck_pdf).to_csv(index=False).encode()).hexdigest()
 
 
 def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
@@ -117,6 +125,7 @@ def main() -> int:
     n_pass = n_fail = n_rows_only = 0
     passed: list[str] = []
     failed: list[str] = []
+    shas: dict[str, str] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -148,6 +157,7 @@ def main() -> int:
             n_fail += 1
             failed.append(name)
             continue
+        shas[name] = oracle_sha256(duck_pdf)
         problems = compare(spark_pdf, duck_pdf)
         if problems:
             print(f"FAIL {name} ({dt:.1f}s):")
@@ -177,6 +187,7 @@ def main() -> int:
                     "pass": passed,
                     "fail": failed,
                     "excluded": excluded,
+                    "oracle_sha256": shas,
                 },
                 f,
                 indent=1,
