@@ -13,11 +13,22 @@ run the Python extraction kernel are rows-only (no SQL equivalent).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from gujarati_readability_pagewise_spark.functions.extract import (
+    MIN_CONTENT_WORDS,
+    MIN_RESCUE_WORDS,
+)
+from gujarati_readability_pagewise_spark.functions.repetition import (
+    MAX_DUP_SENT_FRACTION,
+    MAX_TOP_2GRAM_CHAR_FRACTION,
+)
 from gujarati_readability_pagewise_spark.operators.dedup import (
     N_BANDS,
     N_HASHES,
@@ -29,10 +40,31 @@ from gujarati_readability_pagewise_spark.sources.catalog import (
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
+# window (chars) of the ExactSubstr queries and their oracles
+_SUBSTR_WINDOW = 40
 
 
 def _r(c, n=4):
     return F.round(c, n)
+
+
+def _stream_scratch(spark: SparkSession, query_name: str) -> tuple[str, str]:
+    """(src, state) dirs under the per-process scratch root of the
+    streaming query ``query_name``, ``src`` made empty.  Any still-active
+    prior run of the query is stopped BEFORE the root it may be reading is
+    wiped.  Re-invocations reuse the root instead of leaking a fresh
+    mkdtemp per run, and concurrent processes (bench + a gate run) cannot
+    clobber each other's live state.  A returned DataFrame reads lazily
+    from the root, so its cleanup happens at the next call in this
+    process, after the driver has collected it."""
+    root = os.path.join(tempfile.gettempdir(), f"{query_name}_{os.getpid()}")
+    for q in spark.streams.active:
+        if q.name == query_name:
+            q.stop()
+    shutil.rmtree(root, ignore_errors=True)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    return src, os.path.join(root, "state")
 
 
 # --------------------------------------------------------------------------
@@ -714,33 +746,13 @@ def q_lang_distribution(spark, sf):
 def q_similarity_topk(spark, sf):
     """Brute-force cosine top-3 neighbours for the first 5 vectors (ANN
     baseline; LSH-bucketed variant is the scale path in operators/similarity)."""
+    from gujarati_readability_pagewise_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
     emb = load_table(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    dot = F.aggregate(
-        F.zip_with("q_emb", "c_emb", lambda a, b: a * b),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(
-        F.aggregate(col, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
-    )
-    pairs = (
-        q.crossJoin(c)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (dot / (norm(F.col("q_emb")) * norm(F.col("c_emb")))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "c_id", _r(F.col("cos")).alias("cos_sim"), "rk")
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=3).select(
+        "q_id", "c_id", _r(F.col("cos_sim")).alias("cos_sim"), "rk"
     )  # (no trailing sort — order-insensitive compare; see tpch_q1 note)
 
 
@@ -1330,25 +1342,12 @@ def q_streaming_windowed_counts(spark, sf):
     warc_ts, payload bytes re-derived from the page template), so the
     incremental micro-batch execution must converge to exactly the batch
     answer."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         stream_pages,
         windowed_host_counts,
     )
 
-    # per-pid fixed scratch root, cleaned up front: re-invocations reuse
-    # one directory instead of leaking a fresh mkdtemp per run
-    src = os.path.join(tempfile.gettempdir(), f"graft_stream_src_{os.getpid()}")
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_win":
-            q.stop()
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
+    src, _ = _stream_scratch(spark, "graft_stream_win")
     pages_from_documents(spark, sf).write.mode("overwrite").parquet(src)
     counts = windowed_host_counts(stream_pages(spark, src), window="30 minutes")
     sq = (
@@ -1645,26 +1644,12 @@ def q_streaming_dedup_urls(spark, sf):
     directly from documents.  The horizon is set far beyond the feed's
     time span so state is never evicted mid-run (a re-crawl pair split
     across micro-batches must still dedup deterministically)."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         dedup_recrawls,
         stream_pages,
     )
 
-    # per-pid fixed scratch root, cleaned up front (no mkdtemp leak)
-    src = os.path.join(
-        tempfile.gettempdir(), f"graft_stream_dedup_{os.getpid()}"
-    )
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_dedup":
-            q.stop()
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
+    src, _ = _stream_scratch(spark, "graft_stream_dedup")
     docs = load_table(spark, sf, "documents")
     pages = docs.withColumn(
         "fetch", F.explode(F.array(F.lit(0), F.lit(1)))
@@ -1883,6 +1868,87 @@ def _cos_sql(a: str = "a.embedding", b: str = "b.embedding") -> str:
     )
 
 
+# DuckDB relation (q_id, c_id, cos): each of the first 5 vectors paired
+# with every other vector by exact cosine (brute_force_topk's cross join)
+_BRUTE_PAIRS_SQL = (
+    f"(SELECT a.vec_id AS q_id, b.vec_id AS c_id, {_cos_sql()} AS cos"
+    " FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id"
+    " WHERE a.vec_id < 5)"
+)
+# DuckDB CTE scored(q_id, c_id, cos): the exact cosine of each pair of the
+# candidate CTE cands(q_id, c_id)
+_SCORED_CANDS_SQL = (
+    f"scored AS (SELECT cd.q_id, cd.c_id, {_cos_sql()} AS cos"
+    " FROM cands cd"
+    " JOIN embeddings a ON a.vec_id = cd.q_id"
+    " JOIN embeddings b ON b.vec_id = cd.c_id)"
+)
+
+
+def _topk_sql(scored: str, k: int = 3, score: str = "cos") -> str:
+    """DuckDB SELECT of each query's top ``k`` rows (q_id, c_id, ``score``,
+    rk) of relation ``scored``: highest ``score`` first, ties to the lower
+    c_id (``operators.similarity._topk``)."""
+    return (
+        f"SELECT * FROM (SELECT q_id, c_id, {score}, row_number() OVER"
+        f" (PARTITION BY q_id ORDER BY {score} DESC, c_id ASC) AS rk"
+        f" FROM {scored}) WHERE rk <= {k}"
+    )
+
+
+def _cos_topk_sql(scored: str, k: int = 3) -> str:
+    """The top-``k`` rows of ``scored(q_id, c_id, cos)`` as the similarity
+    queries' (q_id, c_id, cos_sim, rk)."""
+    return (
+        "SELECT q_id, c_id, round(cos, 4) AS cos_sim, CAST(rk AS INT) AS rk"
+        f" FROM ({_topk_sql(scored, k)}) ORDER BY q_id, rk"
+    )
+
+
+def _nearest_cells_sql(cells: str, rank: str = "rn = 1", on: str = "TRUE") -> str:
+    """DuckDB SELECT (vec_id, cell): for each fixed-point vector of CTE
+    ``e`` joined ``on``, the centroids of CTE ``cells`` ranked by integer
+    squared distance, ties to the lower cell, whose rank passes ``rank``."""
+    d2 = (
+        "list_sum(list_transform(list_zip(e.efp, c.cent),"
+        " p -> (p[1]-p[2])*(p[1]-p[2])))"
+    )
+    return (
+        "SELECT vec_id, cell FROM ("
+        " SELECT e.vec_id, c.cell,"
+        f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
+        f" FROM e JOIN {cells} c ON {on}) WHERE {rank}"
+    )
+
+
+def _ivf_train_sql(n_cells: int, n_iter: int, dim: int, fp_scale: int) -> list[str]:
+    """DuckDB CTEs of the fixed-point Lloyd training
+    (``operators.similarity.ivf_train_fixedpoint``) unrolled: ``e(vec_id,
+    efp)``, centroids ``c0`` .. ``c{n_iter}(cell, cent)`` (integer-mean
+    update with truncating division; an empty cell keeps its centroid)
+    and ``af(vec_id, cell)``, every vector's cell under the final ones."""
+    efp = (
+        f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {fp_scale})"
+        " AS BIGINT))"
+    )
+    mean_arr = "[" + ", ".join(
+        f"CAST(sum(e.efp[{d + 1}]) // count(*) AS BIGINT)" for d in range(dim)
+    ) + "]"
+    ctes = [
+        f"e AS (SELECT vec_id, {efp} AS efp FROM embeddings)",
+        f"c0 AS (SELECT vec_id AS cell, efp AS cent FROM e WHERE vec_id < {n_cells})",
+    ]
+    for t in range(n_iter):
+        ctes += [
+            f"a{t} AS ({_nearest_cells_sql(f'c{t}')})",
+            f"m{t} AS (SELECT a.cell, {mean_arr} AS cent"
+            f" FROM a{t} a JOIN e ON e.vec_id = a.vec_id GROUP BY a.cell)",
+            f"c{t + 1} AS (SELECT p.cell, COALESCE(m.cent, p.cent) AS cent"
+            f" FROM c{t} p LEFT JOIN m{t} m ON m.cell = p.cell)",
+        ]
+    return ctes + [f"af AS ({_nearest_cells_sql(f'c{n_iter}')})"]
+
+
 def _ivf_oracle(
     n_cells: int = 8,
     n_iter: int = 3,
@@ -1893,77 +1959,22 @@ def _ivf_oracle(
     n_queries: int = 5,
 ) -> str:
     """DuckDB oracle for similarity_ivf_topk: re-derives the WHOLE
-    deterministic IVF path — fixed-point integer Lloyd training unrolled
-    as chained CTEs (assignment by integer d2 with (d2, cell) tie-break,
-    integer-mean centroid update with truncating division, empty cells
-    keep their previous centroid), final corpus assignment, the n_probe
+    deterministic IVF path — the fixed-point Lloyd training
+    (``_ivf_train_sql``), final corpus assignment, the n_probe
     nearest-cell probe per query, and the exact cosine re-rank with
     Spark-precision floats (see _cos_sql).  Mirrors operators/similarity.
     ivf_train_fixedpoint / ivf_topk_deterministic parameter-for-parameter.
     """
-    efp = (
-        f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {fp_scale})"
-        " AS BIGINT))"
+    probe = _nearest_cells_sql(
+        f"c{n_iter}", f"rn <= {n_probe}", f"e.vec_id < {n_queries}"
     )
-    d2 = (
-        "list_sum(list_transform(list_zip(e.efp, c.cent),"
-        " p -> (p[1]-p[2])*(p[1]-p[2])))"
-    )
-    mean_arr = "[" + ", ".join(
-        f"CAST(sum(e.efp[{d + 1}]) // count(*) AS BIGINT)" for d in range(dim)
-    ) + "]"
-    ctes = [
-        f"e AS (SELECT vec_id, {efp} AS efp FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cell, efp AS cent FROM e WHERE vec_id < {n_cells})",
-    ]
-    for t in range(n_iter):
-        ctes.append(
-            f"a{t} AS (SELECT vec_id, cell FROM ("
-            f" SELECT e.vec_id, c.cell,"
-            f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
-            f" FROM e JOIN c{t} c ON TRUE) WHERE rn = 1)"
-        )
-        ctes.append(
-            f"m{t} AS (SELECT a.cell, {mean_arr} AS cent"
-            f" FROM a{t} a JOIN e ON e.vec_id = a.vec_id GROUP BY a.cell)"
-        )
-        ctes.append(
-            f"c{t + 1} AS (SELECT p.cell, COALESCE(m.cent, p.cent) AS cent"
-            f" FROM c{t} p LEFT JOIN m{t} m ON m.cell = p.cell)"
-        )
-    ctes.append(
-        f"af AS (SELECT vec_id, cell FROM ("
-        f" SELECT e.vec_id, c.cell,"
-        f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
-        f" FROM e JOIN c{n_iter} c ON TRUE) WHERE rn = 1)"
-    )
-    ctes.append(
-        f"qp AS (SELECT q_id, cell FROM ("
-        f" SELECT e.vec_id AS q_id, c.cell,"
-        f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
-        f" FROM e JOIN c{n_iter} c ON TRUE WHERE e.vec_id < {n_queries})"
-        f" WHERE rn <= {n_probe})"
-    )
-    ctes.append(
+    ctes = _ivf_train_sql(n_cells, n_iter, dim, fp_scale) + [
+        f"qp AS (SELECT vec_id AS q_id, cell FROM ({probe}))",
         "cands AS (SELECT qp.q_id, af.vec_id AS c_id"
-        " FROM qp JOIN af ON af.cell = qp.cell WHERE af.vec_id <> qp.q_id)"
-    )
-    ctes.append(
-        f"scored AS (SELECT cd.q_id, cd.c_id, {_cos_sql()} AS cos"
-        " FROM cands cd"
-        " JOIN embeddings a ON a.vec_id = cd.q_id"
-        " JOIN embeddings b ON b.vec_id = cd.c_id)"
-    )
-    ctes.append(
-        "ranked AS (SELECT q_id, c_id, cos,"
-        " row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rk"
-        " FROM scored)"
-    )
-    return (
-        "WITH " + ",\n ".join(ctes)
-        + f" SELECT q_id, c_id, round(cos, 4) AS cos_sim, CAST(rk AS INT) AS rk"
-        f" FROM ranked WHERE rk <= {k} ORDER BY q_id, rk"
-    )
+        " FROM qp JOIN af ON af.cell = qp.cell WHERE af.vec_id <> qp.q_id)",
+        _SCORED_CANDS_SQL,
+    ]
+    return "WITH " + ",\n ".join(ctes) + " " + _cos_topk_sql("scored", k)
 
 
 def _semantic_dedup_oracle(
@@ -1973,54 +1984,18 @@ def _semantic_dedup_oracle(
     dim: int = 64,
     fp_scale: int = 1 << 20,
 ) -> str:
-    """DuckDB oracle for semantic_dedup (SemDeDup): the same fixed-point
-    Lloyd training + final-assignment CTEs as ``_ivf_oracle``, then the
+    """DuckDB oracle for semantic_dedup (SemDeDup): the fixed-point Lloyd
+    training and final assignment (``_ivf_train_sql``), then the
     within-cell pair join with the Spark-precision cosine threshold, the
     recursive-CTE connected components, and the min-id survivor rule."""
-    efp = (
-        f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {fp_scale})"
-        " AS BIGINT))"
-    )
-    d2 = (
-        "list_sum(list_transform(list_zip(e.efp, c.cent),"
-        " p -> (p[1]-p[2])*(p[1]-p[2])))"
-    )
-    mean_arr = "[" + ", ".join(
-        f"CAST(sum(e.efp[{d + 1}]) // count(*) AS BIGINT)" for d in range(dim)
-    ) + "]"
-    ctes = [
-        f"e AS (SELECT vec_id, {efp} AS efp FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cell, efp AS cent FROM e WHERE vec_id < {n_cells})",
-    ]
-    for t in range(n_iter):
-        ctes.append(
-            f"a{t} AS (SELECT vec_id, cell FROM ("
-            f" SELECT e.vec_id, c.cell,"
-            f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
-            f" FROM e JOIN c{t} c ON TRUE) WHERE rn = 1)"
-        )
-        ctes.append(
-            f"m{t} AS (SELECT a.cell, {mean_arr} AS cent"
-            f" FROM a{t} a JOIN e ON e.vec_id = a.vec_id GROUP BY a.cell)"
-        )
-        ctes.append(
-            f"c{t + 1} AS (SELECT p.cell, COALESCE(m.cent, p.cent) AS cent"
-            f" FROM c{t} p LEFT JOIN m{t} m ON m.cell = p.cell)"
-        )
-    ctes.append(
-        f"af AS (SELECT vec_id, cell FROM ("
-        f" SELECT e.vec_id, c.cell,"
-        f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cell) AS rn"
-        f" FROM e JOIN c{n_iter} c ON TRUE) WHERE rn = 1)"
-    )
-    ctes.append(
+    ctes = _ivf_train_sql(n_cells, n_iter, dim, fp_scale) + [
         f"pairs AS (SELECT x.vec_id AS pa, y.vec_id AS pb"
         f" FROM af x JOIN af y ON x.cell = y.cell AND x.vec_id < y.vec_id"
         f" JOIN embeddings a ON a.vec_id = x.vec_id"
         f" JOIN embeddings b ON b.vec_id = y.vec_id"
-        f" WHERE {_cos_sql()} > {threshold!r}::DOUBLE)"
-    )
-    ctes.append(_components_sql("pairs", "vec_id", "pa", "pb"))
+        f" WHERE {_cos_sql()} > {threshold!r}::DOUBLE)",
+        _components_sql("pairs", "vec_id", "pa", "pb"),
+    ]
     return (
         "WITH RECURSIVE " + ",\n ".join(ctes)
         + """
@@ -2069,8 +2044,8 @@ def _score_summary_oracle() -> str:
 
 def _pipeline_features_oracle(order_by: bool = True) -> str:
     """DuckDB oracle for pipeline_features: re-derive the extracted text
-    (same CTEs as the pipeline_extract oracle), then every feature as an
-    integer-count ratio.  The akshara grammar and stopword list are taken
+    (``_spans_sql``, as the pipeline_extract oracle does), then every
+    feature as an integer-count ratio.  The akshara grammar and stopword list are taken
     verbatim from functions/features so the two implementations cannot
     drift silently."""
     from gujarati_readability_pagewise_spark.functions.features import (
@@ -2081,30 +2056,10 @@ def _pipeline_features_oracle(order_by: bool = True) -> str:
     stop_sql = ", ".join("'" + w + "'" for w in sorted(_STOPWORDS))
     akshara = _AKSHARA.pattern
     return rf"""
-        WITH d AS (
-          SELECT doc_id, source, regexp_split_to_array(text, '\. ') AS arr
-          FROM documents),
-             parts AS (
-          SELECT doc_id, i,
-                 CASE WHEN i < len(arr) THEN arr[i] || '.' ELSE arr[i] END AS para
-          FROM d, unnest(range(1, len(arr) + 1)) t(i)),
-             scored AS (
-          SELECT doc_id, i, para,
-                 len(regexp_split_to_array(trim(para), '\s+')) AS n_words
-          FROM parts WHERE trim(para) != ''),
-             labeled AS (
-          SELECT doc_id, i, para,
-                 (n_words >= 8) OR (n_words >= 3 AND (
-                    coalesce(lag(n_words >= 8) OVER w, false) OR
-                    coalesce(lead(n_words >= 8) OVER w, false))) AS kept
-          FROM scored WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
-             agg AS (
-          SELECT doc_id,
-                 string_agg(para, chr(10) || chr(10) ORDER BY i) AS text_out
-          FROM labeled WHERE kept GROUP BY doc_id),
+        WITH {_spans_sql()},
              ext AS (
           SELECT d.doc_id, d.source, coalesce(a.text_out, '') AS text
-          FROM d LEFT JOIN agg a USING (doc_id)),
+          FROM documents d LEFT JOIN agg a USING (doc_id)),
              f AS (
           SELECT doc_id, source,
             length(text) AS n_chars,
@@ -2125,8 +2080,7 @@ def _pipeline_features_oracle(order_by: bool = True) -> str:
                  ELSE len(list_filter(regexp_split_to_array(trim(text), '\s+'),
                           x -> list_contains([{stop_sql}], lower(x)))) END AS n_stop
           FROM ext)
-        SELECT 'https://' || source || '.example.com/doc/' || doc_id
-                 || '-r0.html' AS url,
+        SELECT {_PAGE_URL_SQL} AS url,
           n_chars::DOUBLE AS n_chars,
           n_words::DOUBLE AS n_words,
           n_sent::DOUBLE AS n_sentences,
@@ -2228,53 +2182,40 @@ def _streaming_oracle() -> str:
     """
 
 
-def _lsh_recall_oracle() -> str:
-    """DuckDB oracle for similarity_lsh_recall: re-derives the hyperplane
-    signatures (planes inlined as literals — they are md5-parity constants
-    of the algorithm, operators/similarity.plane_signs), the radius-2 probe
-    Hamming ball, the exact cosine re-rank, the brute-force top-3, and the
-    per-query recall."""
+def _lsh_probe_sql(radius: int) -> str:
+    """DuckDB CTEs ``sig``, ``probes``, ``cands`` and ``scored(q_id, c_id,
+    cos)``: the 4-plane hyperplane signatures (planes inlined as literals —
+    md5-parity constants of the algorithm, operators/similarity.
+    plane_signs), each of the first 5 vectors' candidates within Hamming
+    distance ``radius`` of its signature, and their exact cosine."""
     from itertools import combinations
 
     from gujarati_readability_pagewise_spark.operators.similarity import plane_signs
 
-    planes = plane_signs(4, 64)
-    sig_expr = _sig_sql(planes)
-    masks = [0] + [
-        sum(1 << i for i in bits)
-        for r in (1, 2)
-        for bits in combinations(range(4), r)
-    ]
-    cos = _cos_sql()
-    return f"""
-        WITH sig AS (
-          SELECT vec_id, CAST({sig_expr} AS INT) AS sig FROM embeddings),
+    masks = [sum(1 << b for b in bits) for r in range(radius + 1)
+             for bits in combinations(range(4), r)]
+    return f"""sig AS (
+          SELECT vec_id, CAST({_sig_sql(plane_signs(4, 64))} AS INT) AS sig
+          FROM embeddings),
              probes AS (
           SELECT s.vec_id AS q_id, xor(s.sig, f.flip) AS psig
-          FROM sig s, unnest([{", ".join(map(str, masks))}]) f(flip)
+          FROM sig s, unnest({masks}) f(flip)
           WHERE s.vec_id < 5),
              cands AS (
           SELECT DISTINCT p.q_id, c.vec_id AS c_id
           FROM probes p JOIN sig c ON c.sig = p.psig
           WHERE c.vec_id != p.q_id),
-             scored AS (
-          SELECT cd.q_id, cd.c_id, {cos} AS cos
-          FROM cands cd
-          JOIN embeddings a ON a.vec_id = cd.q_id
-          JOIN embeddings b ON b.vec_id = cd.c_id),
-             lsh3 AS (
-          SELECT q_id, c_id FROM (
-            SELECT q_id, c_id,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY cos DESC, c_id ASC) AS rk
-            FROM scored) WHERE rk <= 3),
-             bf AS (
-          SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                                    ORDER BY {cos} DESC, b.vec_id ASC) AS rk
-          FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
-          WHERE a.vec_id < 5),
-             bf3 AS (SELECT q_id, c_id FROM bf WHERE rk <= 3),
+             {_SCORED_CANDS_SQL}"""
+
+
+def _lsh_recall_oracle() -> str:
+    """DuckDB oracle for similarity_lsh_recall: the radius-2 probe
+    candidates and their exact cosine re-rank (``_lsh_probe_sql``), the
+    brute-force top-3, and the per-query recall."""
+    return f"""
+        WITH {_lsh_probe_sql(2)},
+             lsh3 AS ({_topk_sql("scored")}),
+             bf3 AS ({_topk_sql(_BRUTE_PAIRS_SQL)}),
              hits AS (
           SELECT l.q_id, count(*) AS n_hit
           FROM lsh3 l JOIN bf3 USING (q_id, c_id) GROUP BY l.q_id)
@@ -2288,36 +2229,8 @@ def _lsh_recall_oracle() -> str:
 
 def _lsh_topk_oracle() -> str:
     """DuckDB oracle for similarity_lsh_topk (4 planes, probe radius 1,
-    k=3): re-derives signatures, the radius-1 probe ball, and the exact
-    cosine re-rank."""
-    from gujarati_readability_pagewise_spark.operators.similarity import plane_signs
-
-    sig_expr = _sig_sql(plane_signs(4, 64))
-    cos = _cos_sql()
-    return f"""
-        WITH sig AS (
-          SELECT vec_id, CAST({sig_expr} AS INT) AS sig FROM embeddings),
-             probes AS (
-          SELECT s.vec_id AS q_id, xor(s.sig, f.flip) AS psig
-          FROM sig s, unnest([0, 1, 2, 4, 8]) f(flip)
-          WHERE s.vec_id < 5),
-             cands AS (
-          SELECT DISTINCT p.q_id, c.vec_id AS c_id
-          FROM probes p JOIN sig c ON c.sig = p.psig
-          WHERE c.vec_id != p.q_id),
-             scored AS (
-          SELECT cd.q_id, cd.c_id, {cos} AS cos
-          FROM cands cd
-          JOIN embeddings a ON a.vec_id = cd.q_id
-          JOIN embeddings b ON b.vec_id = cd.c_id)
-        SELECT q_id, c_id, round(cos, 4) AS cos_sim, CAST(rk AS INT) AS rk
-        FROM (
-          SELECT q_id, c_id, cos,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY cos DESC, c_id ASC) AS rk
-          FROM scored)
-        WHERE rk <= 3 ORDER BY q_id, rk
-    """
+    k=3): the radius-1 probe candidates re-ranked by exact cosine."""
+    return f"WITH {_lsh_probe_sql(1)} {_cos_topk_sql('scored')}"
 
 
 def _embedding_lsh_oracle() -> str:
@@ -2414,15 +2327,10 @@ def q_histogram_quantiles(spark, sf):
     return histogram_quantiles(li, "l_extendedprice", (500, 900, 990), 256)
 
 
-def q_scd2_url_history(spark, sf):
-    """SCD2 content-version history over a synthetic re-crawl log (3
-    deterministic fetches per url, planted drift): consecutive unchanged
-    fingerprints collapse into one validity period, valid_to = next
-    version's valid_from, NULL marks the current version — the warehouse
-    shape for 'what did this url say at time T' over an incremental
-    crawl."""
-    from gujarati_readability_pagewise_spark.plans.snapshots import scd2_history
-
+def _scd2_fetch_log(spark, sf) -> DataFrame:
+    """Synthetic re-crawl log (doc_id, fetch_ts, fp) of the first 300
+    docs: 3 fetches each, 100 s apart per doc; every 3rd doc changes at
+    fetch 1, and every 15th again at fetch 2."""
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 300)
     fetches = docs.withColumn(
         "fetch", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2)))
@@ -2434,13 +2342,25 @@ def q_scd2_url_history(spark, sf):
             F.concat(F.col("text"), F.lit(" [u2]")),
         ).otherwise(F.concat(F.col("text"), F.lit(" [u1]"))),
     ).otherwise(F.col("text"))
-    log = fetches.select(
+    return fetches.select(
         F.col("doc_id"),
         F.timestamp_seconds(
             F.lit(1704067200) + F.col("doc_id") * 100 + F.col("fetch")
         ).alias("fetch_ts"),
         F.md5(content).alias("fp"),
     )
+
+
+def q_scd2_url_history(spark, sf):
+    """SCD2 content-version history over a synthetic re-crawl log (3
+    deterministic fetches per url, planted drift): consecutive unchanged
+    fingerprints collapse into one validity period, valid_to = next
+    version's valid_from, NULL marks the current version — the warehouse
+    shape for 'what did this url say at time T' over an incremental
+    crawl."""
+    from gujarati_readability_pagewise_spark.plans.snapshots import scd2_history
+
+    log = _scd2_fetch_log(spark, sf)
     return scd2_history(log, key_col="doc_id", ts_col="fetch_ts", fp_col="fp")
 
 
@@ -2484,14 +2404,9 @@ def _quantized_oracle(dim: int = 64, k: int = 3, n_queries: int = 5) -> str:
              pairs AS (
           SELECT a.vec_id AS q_id, b.vec_id AS c_id, {dot} AS dot_q
           FROM q a JOIN q b ON b.vec_id <> a.vec_id
-          WHERE a.vec_id < {n_queries}),
-             r AS (
-          SELECT q_id, c_id, dot_q,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY dot_q DESC, c_id ASC) AS rk
-          FROM pairs)
+          WHERE a.vec_id < {n_queries})
         SELECT q_id, c_id, dot_q, CAST(rk AS INT) AS rk
-        FROM r WHERE rk <= {k}
+        FROM ({_topk_sql("pairs", k, "dot_q")})
     """
 
 
@@ -2729,10 +2644,6 @@ def q_streaming_anomalies(spark, sf):
     per-key idempotent recompute (foreachBatch), and the final table must
     equal the batch volume_anomalies derivation exactly — late buckets
     repair trailing windows the way only recompute-from-log can."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         monitor_stream_merge,
     )
@@ -2744,16 +2655,7 @@ def q_streaming_anomalies(spark, sf):
         F.lit("click").alias("event_type"),
     )
     planted = ev.select("event_id", "ts", "event_type").unionByName(burst)
-    root = os.path.join(tempfile.gettempdir(), f"graft_monitor_scratch_{os.getpid()}")
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_monitor":
-            q.stop()
-    shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    state = os.path.join(root, "state")
-    os.makedirs(src, exist_ok=True)
+    src, state = _stream_scratch(spark, "graft_stream_monitor")
     planted.repartition(12).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
@@ -3109,10 +3011,6 @@ def q_streaming_schedule(spark, sf):
     (foreachBatch), and the final table must equal the batch
     crawl_schedule derivation exactly — the stable-hash within-host order
     is what makes slots replay- and arrival-order-independent."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         schedule_stream_merge,
     )
@@ -3124,18 +3022,7 @@ def q_streaming_schedule(spark, sf):
             F.lit("h"), F.pmod(F.col("doc_id"), F.lit(7)).cast("string")
         ).alias("host"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"graft_schedule_scratch_{os.getpid()}"
-    )
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_schedule":
-            q.stop()
-    shutil.rmtree(root, ignore_errors=True)
-    src_dir = os.path.join(root, "src")
-    state = os.path.join(root, "state")
-    os.makedirs(src_dir, exist_ok=True)
+    src_dir, state = _stream_scratch(spark, "graft_stream_schedule")
     pages.repartition(12).write.mode("overwrite").parquet(src_dir)
     stream = (
         spark.readStream.schema("doc_id bigint, host string")
@@ -3158,23 +3045,9 @@ def q_streaming_schedule(spark, sf):
     )
 
 
-def q_dedup_exact_substr(spark, sf):
-    """ExactSubstr dedup (Lee et al. 2021) — exact duplicate SUBSTRING
-    spans across the corpus, the dedup tier the MinHash family cannot
-    express (it scores whole documents; this finds the copied paragraph
-    INSIDE otherwise-distinct documents).  operators/dedup.duplicate_spans
-    indexes every 40-char sliding window by hash, keeps the global first
-    occurrence per hash, and merges each doc's other occurrences into
-    maximal spans.  Emits the per-doc audit (n_spans, dup_chars,
-    n_dup_windows, 0 for clean docs); the oracle re-derives windows,
-    first-occurrence rule, and island merge in SQL."""
-    from gujarati_readability_pagewise_spark.operators.dedup import (
-        duplicate_spans,
-    )
-
-    docs = load_table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    spans = duplicate_spans(docs, window=40, n_partitions=par)
+def _span_audit(docs: DataFrame, spans: DataFrame) -> DataFrame:
+    """Per doc of ``docs``: (doc_id, n_spans, dup_chars, n_dup_windows) of
+    its ExactSubstr ``spans``, 0 for a doc with none."""
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("n_spans"),
         F.sum(F.col("span_end") - F.col("span_start") + 1).alias("dup_chars"),
@@ -3186,6 +3059,26 @@ def q_dedup_exact_substr(spark, sf):
         F.coalesce("dup_chars", F.lit(0)).alias("dup_chars"),
         F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
     )
+
+
+def q_dedup_exact_substr(spark, sf):
+    """ExactSubstr dedup (Lee et al. 2021) — exact duplicate SUBSTRING
+    spans across the corpus, the dedup tier the MinHash family cannot
+    express (it scores whole documents; this finds the copied paragraph
+    INSIDE otherwise-distinct documents).  operators/dedup.duplicate_spans
+    indexes every ``_SUBSTR_WINDOW``-char sliding window by hash, keeps
+    the global first occurrence per hash, and merges each doc's other
+    occurrences into maximal spans.  Emits the per-doc audit (n_spans,
+    dup_chars, n_dup_windows, 0 for clean docs); the oracle re-derives
+    windows, first-occurrence rule, and island merge in SQL."""
+    from gujarati_readability_pagewise_spark.operators.dedup import (
+        duplicate_spans,
+    )
+
+    docs = load_table(spark, sf, "documents")
+    par = spark.sparkContext.defaultParallelism
+    spans = duplicate_spans(docs, window=_SUBSTR_WINDOW, n_partitions=par)
+    return _span_audit(docs, spans)
 
 
 def q_interval_join(spark, sf):
@@ -3385,7 +3278,7 @@ def q_dedup_cut_text(spark, sf):
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     par = spark.sparkContext.defaultParallelism
-    spans = duplicate_spans(docs, window=40, n_partitions=par)
+    spans = duplicate_spans(docs, window=_SUBSTR_WINDOW, n_partitions=par)
     out = cut_spans(docs, spans)
     return out.select(
         "doc_id",
@@ -3413,19 +3306,11 @@ def q_dedup_incremental_substr(spark, sf):
     par = spark.sparkContext.defaultParallelism
     corpus = docs.filter(F.col("doc_id") < 350)
     snap = docs.filter(F.col("doc_id") >= 350)
-    idx = window_hash_index(corpus, window=40, n_partitions=par)
-    spans = duplicate_spans_incremental(snap, idx, window=40, n_partitions=par)
-    per_doc = spans.groupBy("doc_id").agg(
-        F.count("*").alias("n_spans"),
-        F.sum(F.col("span_end") - F.col("span_start") + 1).alias("dup_chars"),
-        F.sum("n_windows").alias("n_dup_windows"),
+    idx = window_hash_index(corpus, window=_SUBSTR_WINDOW, n_partitions=par)
+    spans = duplicate_spans_incremental(
+        snap, idx, window=_SUBSTR_WINDOW, n_partitions=par
     )
-    return snap.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-        F.coalesce("dup_chars", F.lit(0)).alias("dup_chars"),
-        F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
-    )
+    return _span_audit(snap, spans)
 
 
 def q_tpch_q8(spark, sf):
@@ -3684,49 +3569,12 @@ def q_streaming_scd2(spark, sf):
     the final table must equal the batch SCD2 derivation exactly — DuckDB
     re-derives it directly from the full log (same oracle SQL as the batch
     query)."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         scd2_stream_merge,
     )
 
-    docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 300)
-    fetches = docs.withColumn(
-        "fetch", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2)))
-    )
-    content = F.when(
-        (F.col("fetch") >= 1) & (F.col("doc_id") % 3 == 0),
-        F.when(
-            (F.col("fetch") == 2) & (F.col("doc_id") % 5 == 0),
-            F.concat(F.col("text"), F.lit(" [u2]")),
-        ).otherwise(F.concat(F.col("text"), F.lit(" [u1]"))),
-    ).otherwise(F.col("text"))
-    log = fetches.select(
-        F.col("doc_id"),
-        F.timestamp_seconds(
-            F.lit(1704067200) + F.col("doc_id") * 100 + F.col("fetch")
-        ).alias("fetch_ts"),
-        F.md5(content).alias("fp"),
-    )
-    # Fixed per-PROCESS scratch root (pid-suffixed), wiped on every
-    # invocation: repeated gate/bench runs reuse (not accumulate) temp
-    # disk and the log dir cannot grow across re-runs, while concurrent
-    # processes (bench + a gate run) cannot clobber each other's live
-    # streaming state the way one shared fixed root would.  The returned
-    # DataFrame lazily reads {state}/history, so cleanup happens at the
-    # NEXT call in this process, after the driver has collected this one.
-    root = os.path.join(tempfile.gettempdir(), f"graft_scd2_scratch_{os.getpid()}")
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_scd2":
-            q.stop()
-    shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    state = os.path.join(root, "state")
-    os.makedirs(src, exist_ok=True)
+    log = _scd2_fetch_log(spark, sf)
+    src, state = _stream_scratch(spark, "graft_stream_scd2")
     # 12 files -> several micro-batches at maxFilesPerTrigger=4, in
     # whatever order the file source lists them (the merge is order-free)
     log.repartition(12).write.mode("overwrite").parquet(src)
@@ -3755,25 +3603,12 @@ def q_streaming_curation(spark, sf):
     scd2 merge pattern) — the final kept table must equal the batch
     curation chain exactly, which DuckDB derives directly (corpus_curation
     rules + first-global-occurrence per content digest)."""
-    import os
-    import shutil
-    import tempfile
-
     from gujarati_readability_pagewise_spark.streaming.ingest import (
         curate_stream_merge,
     )
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text", "source")
-    root = os.path.join(tempfile.gettempdir(), f"graft_curate_scratch_{os.getpid()}")
-    # stop any still-active prior run of this query BEFORE touching
-    # the shared per-pid scratch root it may be reading
-    for q in spark.streams.active:
-        if q.name == "graft_stream_curate":
-            q.stop()
-    shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    state = os.path.join(root, "state")
-    os.makedirs(src, exist_ok=True)
+    src, state = _stream_scratch(spark, "graft_stream_curate")
     docs.repartition(12).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema("doc_id bigint, text string, source string")
@@ -3949,6 +3784,237 @@ _QUALITY_SQL = f"""least(greatest(
                        + 0.4 * ({_share_sql('[A-Za-z઀-૿ऀ-ॿ]')})
                        - 0.2 * ({_share_sql(_SOUP_CLASS)})
                        + 0.2, 0.0), 1.0)"""
+
+
+# DuckDB twin of textstats.curation_keep_expr at the curation defaults of
+# plans/release and streaming/ingest: one condition per funnel stage over
+# the columns of _curated_sql's `scored`
+_CURATION_STAGES = (
+    "lang_pred IN ('gu', 'hi', 'en')", "q >= 0.55", "n_chars BETWEEN 80 AND 20000"
+)
+_CURATION_KEEP_SQL = " AND ".join(_CURATION_STAGES)
+
+
+def _curated_sql() -> str:
+    """DuckDB CTEs ``scored(doc_id, source, text, lang_pred, q, n_chars)``
+    over ``documents`` and ``kept``, its rows that pass the curation rule."""
+    return f"""scored AS (
+          SELECT doc_id, source, text,
+                 {_LANG_ID_SQL} AS lang_pred,
+                 {_QUALITY_SQL} AS q,
+                 length(text) AS n_chars
+          FROM documents),
+             kept AS (SELECT * FROM scored WHERE {_CURATION_KEEP_SQL})"""
+
+
+def _sentences_sql(where: str = "length(arr[i]) > 0") -> str:
+    """DuckDB CTE ``s(doc_id, idx, last, sent)``: each ``documents`` text
+    split at '. ' (``functions.repetition``'s sentences; on the page
+    template, the golden extractor's blocks), one row per piece that
+    passes ``where``, ``last`` true for a text's final piece."""
+    return rf"""s AS (
+          SELECT doc_id, i AS idx, i = len(arr) AS last, arr[i] AS sent
+          FROM (SELECT doc_id, regexp_split_to_array(text, '\. ') AS arr
+                FROM documents),
+               unnest(range(1, len(arr) + 1)) t(i)
+          WHERE {where})"""
+
+
+def _bigrams_sql(**carry: str) -> str:
+    """DuckDB CTE ``gr(doc_id, *carry, gram)``: every adjacent pair of
+    whitespace tokens of each ``documents`` text, 'a b' (the bigrams of
+    ``functions.repetition``); ``carry`` maps extra output columns to
+    their expressions over ``documents``."""
+    inner = "".join(f", {e} AS {c}" for c, e in carry.items())
+    outer = "".join(f", {c}" for c in carry)
+    return rf"""gr AS (
+          SELECT doc_id{outer}, tk[i] || ' ' || tk[i + 1] AS gram
+          FROM (SELECT doc_id{inner},
+                       regexp_split_to_array(trim(text), '\s+') AS tk
+                FROM documents),
+               unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
+          WHERE len(tk) >= 2)"""
+
+
+def _repetition_sql() -> str:
+    """DuckDB CTEs of the Gopher repetition signals
+    (``functions.repetition.repetition_signals``) over ``documents``,
+    ending in ``rep(doc_id, n_sents, n_d, dupc, totc, top_2gram, top_frac,
+    keep)``: sentence counts, duplicate-sentence chars, the most frequent
+    bigram's char fraction and the keep rule."""
+    return f"""{_sentences_sql()},
+             ps AS (SELECT doc_id, sent, count(*) AS cnt FROM s GROUP BY 1, 2),
+             sig AS (
+          SELECT doc_id,
+                 CAST(sum(cnt) AS BIGINT) AS n_sents,
+                 CAST(count(*) AS BIGINT) AS n_d,
+                 CAST(sum((cnt - 1) * length(sent)) AS BIGINT) AS dupc,
+                 CAST(sum(cnt * length(sent)) AS BIGINT) AS totc
+          FROM ps GROUP BY 1),
+             {_bigrams_sql(n_chars="length(text)")},
+             gc AS (
+          SELECT doc_id, n_chars, gram, count(*) AS cnt
+          FROM gr GROUP BY 1, 2, 3),
+             top AS (
+          SELECT doc_id, gram,
+                 cnt * length(gram) / n_chars::DOUBLE AS frac,
+                 row_number() OVER (PARTITION BY doc_id
+                                    ORDER BY cnt DESC, gram ASC) AS rn
+          FROM gc),
+             rep AS (
+          SELECT sig.*,
+                 COALESCE(top.gram, '') AS top_2gram,
+                 COALESCE(top.frac, 0.0) AS top_frac,
+                 CASE WHEN (sig.n_sents - sig.n_d) / sig.n_sents::DOUBLE
+                             <= {MAX_DUP_SENT_FRACTION}
+                           AND COALESCE(top.frac, 0.0) <= {MAX_TOP_2GRAM_CHAR_FRACTION}
+                      THEN 1 ELSE 0 END AS keep
+          FROM sig LEFT JOIN top ON top.doc_id = sig.doc_id AND top.rn = 1)"""
+
+
+def _fluency_sql() -> str:
+    """DuckDB CTEs ``gr``, the corpus bigram counts ``c`` and
+    ``flu(doc_id, n_bigrams, mean_bigram_count)``: each document's mean
+    corpus count over its bigrams (``functions.repetition.bigram_fluency``)."""
+    return f"""{_bigrams_sql()},
+             c AS (
+          SELECT gram, CAST(count(*) AS BIGINT) AS corpus_cnt
+          FROM gr GROUP BY gram),
+             flu AS (
+          SELECT gr.doc_id,
+                 CAST(count(*) AS BIGINT) AS n_bigrams,
+                 CAST(sum(c.corpus_cnt) AS BIGINT) / count(*)::DOUBLE
+                   AS mean_bigram_count
+          FROM gr JOIN c ON c.gram = gr.gram
+          GROUP BY gr.doc_id)"""
+
+
+def _dsir_grams_sql() -> str:
+    """DuckDB CTEs ``gr`` and ``grams(doc_id, lang, bucket)``: each
+    document's unigrams and bigrams hashed into 4096 buckets (DSIR's
+    hashed n-gram features)."""
+    return rf"""{_bigrams_sql(lang="lang")},
+             grams AS (
+          SELECT doc_id, lang,
+                 ('0x' || substr(md5(gram), 1, 15))::BIGINT % 4096 AS bucket
+          FROM (SELECT doc_id, lang, t.w AS gram
+                FROM documents,
+                     unnest(regexp_split_to_array(trim(text), '\s+')) t(w)
+                WHERE length(t.w) > 0
+                UNION ALL SELECT doc_id, lang, gram FROM gr))"""
+
+
+def _spans_sql() -> str:
+    """DuckDB CTEs ``s``, ``blocks(doc_id, i, para, n_words)``,
+    ``labeled(doc_id, i, para, kept)`` and ``agg(doc_id, text_out)``: the
+    golden extractor (``functions.extract``) on each document's page.  Its
+    blocks are the text's '. ' pieces with the '.' put back on all but the
+    last, blank ones dropped; a block is kept with at least
+    MIN_CONTENT_WORDS words, or with at least MIN_RESCUE_WORDS next to a
+    block of MIN_CONTENT_WORDS; ``agg`` joins a doc's kept blocks."""
+    hi, lo = MIN_CONTENT_WORDS, MIN_RESCUE_WORDS
+    return rf"""{_sentences_sql("TRUE")},
+             blocks AS (
+          SELECT doc_id, idx AS i, para,
+                 len(regexp_split_to_array(trim(para), '\s+')) AS n_words
+          FROM (SELECT doc_id, idx,
+                       CASE WHEN last THEN sent ELSE sent || '.' END AS para
+                FROM s)
+          WHERE trim(para) != ''),
+             labeled AS (
+          SELECT doc_id, i, para,
+                 (n_words >= {hi}) OR (n_words >= {lo} AND (
+                    coalesce(lag(n_words >= {hi}) OVER w, false) OR
+                    coalesce(lead(n_words >= {hi}) OVER w, false))) AS kept
+          FROM blocks WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
+             agg AS (
+          SELECT doc_id,
+                 string_agg(para, chr(10) || chr(10) ORDER BY i) AS text_out
+          FROM labeled WHERE kept GROUP BY doc_id)"""
+
+
+# url of a document's page (sources.catalog.pages_from_documents)
+_PAGE_URL_SQL = (
+    "'https://' || source || '.example.com/doc/' || doc_id || '-r0.html'"
+)
+
+
+def _dup_spans_sql(docs: str = "TRUE") -> str:
+    """DuckDB CTEs of ExactSubstr (``operators.dedup.duplicate_spans``)
+    over ``documents``: each ``_SUBSTR_WINDOW``-char window's hash
+    (``wins``), its global first occurrence at the lowest (doc_id, pos)
+    (``marked``), the other occurrences in docs that pass ``docs``
+    (``dups``), merged into islands ``spans(doc_id, g, span_start,
+    span_end, n_windows)``."""
+    w = _SUBSTR_WINDOW
+    return f"""wins AS (
+          SELECT doc_id, i AS pos, md5(substr(text, i, {w})) AS h
+          FROM documents,
+               unnest(range(1, greatest(length(text) - {w - 1}, 0) + 1)) t(i)),
+             marked AS (
+          SELECT doc_id, pos,
+                 row_number() OVER (PARTITION BY h
+                                    ORDER BY doc_id, pos) AS rn
+          FROM wins),
+             dups AS (SELECT doc_id, pos FROM marked WHERE rn > 1 AND {docs}),
+             brk AS (
+          SELECT doc_id, pos,
+                 CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
+                                                ORDER BY pos) > {w}
+                      THEN 1 ELSE 0 END AS b
+          FROM dups),
+             grp AS (
+          SELECT doc_id, pos,
+                 sum(b) OVER (PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
+          FROM brk),
+             spans AS (
+          SELECT doc_id, g, min(pos) AS span_start,
+                 max(pos) + {w - 1} AS span_end, count(*) AS n_windows
+          FROM grp GROUP BY doc_id, g)"""
+
+
+def _dup_span_audit_sql(docs: str = "TRUE") -> str:
+    """DuckDB twin of ``_span_audit``: per document that passes ``docs``,
+    (doc_id, n_spans, dup_chars, n_dup_windows) of its ExactSubstr spans."""
+    return f"""
+        WITH {_dup_spans_sql(docs)},
+             per_doc AS (
+          SELECT doc_id,
+                 CAST(count(*) AS BIGINT) AS n_spans,
+                 CAST(sum(span_end - span_start + 1) AS BIGINT) AS dup_chars,
+                 CAST(sum(n_windows) AS BIGINT) AS n_dup_windows
+          FROM spans GROUP BY doc_id)
+        SELECT d.doc_id,
+               coalesce(p.n_spans, 0) AS n_spans,
+               coalesce(p.dup_chars, 0) AS dup_chars,
+               coalesce(p.n_dup_windows, 0) AS n_dup_windows
+        FROM documents d LEFT JOIN per_doc p USING (doc_id)
+        WHERE {docs}
+    """
+
+
+def _simhash_sql() -> str:
+    """DuckDB CTEs ``toks``, ``sums`` and ``fp(doc_id, simhash)``: the
+    16-bit SimHash (``operators.dedup.simhash``) of documents 0-199."""
+    sums = ",\n                 ".join(
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
+        for b in range(16)
+    )
+    fp = " + ".join(
+        f"(CASE WHEN s{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(16)
+    )
+    return rf"""toks AS (
+          SELECT doc_id, t.tok,
+                 ('0x' || substr(md5(t.tok), 1, 15))::BIGINT AS h
+          FROM documents,
+               unnest(regexp_split_to_array(trim(text), '\s+')) AS t(tok)
+          WHERE doc_id < 200 AND length(t.tok) > 0),
+             sums AS (
+          SELECT doc_id,
+                 {sums}
+          FROM toks GROUP BY doc_id),
+             fp AS (SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM sums)"""
 
 
 def _dedup_survivors_oracle() -> str:
@@ -4326,56 +4392,16 @@ def oracle_sql() -> dict[str, str]:
     oracles = {
         "similarity_ivf_topk": _ivf_oracle(),
         "pipeline_score_summary": _score_summary_oracle(),
-        "gopher_repetition": r"""
-            WITH s AS (
-              SELECT doc_id, i AS idx, arr[i] AS sent
-              FROM (SELECT doc_id, regexp_split_to_array(text, '\. ') AS arr
-                    FROM documents),
-                   unnest(range(1, len(arr) + 1)) t(i)
-              WHERE length(arr[i]) > 0),
-                 ps AS (
-              SELECT doc_id, sent, count(*) AS cnt FROM s GROUP BY 1, 2),
-                 sig AS (
-              SELECT doc_id,
-                     CAST(sum(cnt) AS BIGINT) AS n_sents,
-                     CAST(count(*) AS BIGINT) AS n_d,
-                     CAST(sum((cnt - 1) * length(sent)) AS BIGINT) AS dupc,
-                     CAST(sum(cnt * length(sent)) AS BIGINT) AS totc
-              FROM ps GROUP BY 1),
-                 gr AS (
-              SELECT doc_id, n_chars, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM (SELECT doc_id, length(text) AS n_chars,
-                           regexp_split_to_array(trim(text), '\s+') AS tk
-                    FROM documents),
-                   unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 gc AS (
-              SELECT doc_id, n_chars, gram, count(*) AS cnt
-              FROM gr GROUP BY 1, 2, 3),
-                 top AS (
-              SELECT doc_id, gram,
-                     cnt * length(gram) / n_chars::DOUBLE AS frac,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY cnt DESC, gram ASC) AS rn
-              FROM gc)
-            SELECT sig.doc_id, sig.n_sents,
-                   (sig.n_sents - sig.n_d) / sig.n_sents::DOUBLE
-                     AS dup_sent_fraction,
-                   sig.dupc / sig.totc::DOUBLE AS dup_sent_char_fraction,
-                   COALESCE(top.gram, '') AS top_2gram,
-                   COALESCE(top.frac, 0.0) AS top_2gram_char_fraction,
-                   CASE WHEN (sig.n_sents - sig.n_d) / sig.n_sents::DOUBLE <= 0.30
-                             AND COALESCE(top.frac, 0.0) <= 0.20
-                        THEN 1 ELSE 0 END AS keep
-            FROM sig LEFT JOIN top ON top.doc_id = sig.doc_id AND top.rn = 1
+        "gopher_repetition": f"""
+            WITH {_repetition_sql()}
+            SELECT doc_id, n_sents,
+                   (n_sents - n_d) / n_sents::DOUBLE AS dup_sent_fraction,
+                   dupc / totc::DOUBLE AS dup_sent_char_fraction,
+                   top_2gram, top_frac AS top_2gram_char_fraction, keep
+            FROM rep
         """,
-        "dedup_sentences": r"""
-            WITH s AS (
-              SELECT doc_id, i AS idx, arr[i] AS sent
-              FROM (SELECT doc_id, regexp_split_to_array(text, '\. ') AS arr
-                    FROM documents),
-                   unnest(range(1, len(arr) + 1)) t(i)
-              WHERE length(arr[i]) > 0),
+        "dedup_sentences": f"""
+            WITH {_sentences_sql()},
                  k AS (
               SELECT doc_id, idx, sent,
                      row_number() OVER (PARTITION BY md5(sent)
@@ -4393,24 +4419,7 @@ def oracle_sql() -> dict[str, str]:
                    md5(COALESCE(r.new_text, '')) AS text_md5
             FROM tot t LEFT JOIN reb r ON r.doc_id = t.doc_id
         """,
-        "bigram_fluency": r"""
-            WITH gr AS (
-              SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM (SELECT doc_id,
-                           regexp_split_to_array(trim(text), '\s+') AS tk
-                    FROM documents),
-                   unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 c AS (
-              SELECT gram, CAST(count(*) AS BIGINT) AS corpus_cnt
-              FROM gr GROUP BY gram)
-            SELECT gr.doc_id,
-                   CAST(count(*) AS BIGINT) AS n_bigrams,
-                   CAST(sum(c.corpus_cnt) AS BIGINT) / count(*)::DOUBLE
-                     AS mean_bigram_count
-            FROM gr JOIN c ON c.gram = gr.gram
-            GROUP BY gr.doc_id
-        """,
+        "bigram_fluency": f"WITH {_fluency_sql()} SELECT * FROM flu",
         "histogram_quantiles": """
             WITH mm AS (
               SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi,
@@ -4502,24 +4511,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "pii_scrub_fixpoint": _pii_fixpoint_oracle(),
         "semantic_dedup": _semantic_dedup_oracle(),
-        "quality_buckets": r"""
-            WITH gr AS (
-              SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM (SELECT doc_id,
-                           regexp_split_to_array(trim(text), '\s+') AS tk
-                    FROM documents),
-                   unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 c AS (
-              SELECT gram, CAST(count(*) AS BIGINT) AS corpus_cnt
-              FROM gr GROUP BY gram),
-                 flu AS (
-              SELECT gr.doc_id,
-                     CAST(count(*) AS BIGINT) AS n_bigrams,
-                     CAST(sum(c.corpus_cnt) AS BIGINT) / count(*)::DOUBLE
-                       AS mean_bigram_count
-              FROM gr JOIN c ON c.gram = gr.gram
-              GROUP BY gr.doc_id),
+        "quality_buckets": f"""
+            WITH {_fluency_sql()},
                  labeled AS (
               SELECT f.doc_id, f.n_bigrams, f.mean_bigram_count, d.source,
                      ntile(3) OVER (PARTITION BY d.source
@@ -4531,32 +4524,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(n_bigrams) AS BIGINT) AS sum_bigrams
             FROM labeled GROUP BY 1, 2 ORDER BY source, ppl_bucket
         """,
-        "dedup_cut_text": """
-            WITH wins AS (
-              SELECT doc_id, i AS pos, md5(substr(text, i, 40)) AS h
-              FROM documents,
-                   unnest(range(1, greatest(length(text) - 39, 0) + 1)) t(i)),
-                 marked AS (
-              SELECT doc_id, pos,
-                     row_number() OVER (PARTITION BY h
-                                        ORDER BY doc_id, pos) AS rn
-              FROM wins),
-                 dups AS (SELECT doc_id, pos FROM marked WHERE rn > 1),
-                 brk AS (
-              SELECT doc_id, pos,
-                     CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                                                    ORDER BY pos) > 40
-                          THEN 1 ELSE 0 END AS b
-              FROM dups),
-                 grp AS (
-              SELECT doc_id, pos,
-                     sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-              FROM brk),
-                 spans AS (
-              SELECT doc_id, g, min(pos) AS span_start,
-                     max(pos) + 39 AS span_end
-              FROM grp GROUP BY doc_id, g),
+        "dedup_cut_text": f"""
+            WITH {_dup_spans_sql()},
                  segs AS (
               -- kept segment BEFORE each span, from the previous span's
               -- end (cursor rule identical to cut_spans' aggregate)
@@ -4584,47 +4553,7 @@ def oracle_sql() -> dict[str, str]:
                      AS n_cut_chars
             FROM documents d LEFT JOIN cut c USING (doc_id)
         """,
-        "dedup_incremental_substr": """
-            WITH wins AS (
-              SELECT doc_id, i AS pos, md5(substr(text, i, 40)) AS h
-              FROM documents,
-                   unnest(range(1, greatest(length(text) - 39, 0) + 1)) t(i)),
-                 marked AS (
-              SELECT doc_id, pos,
-                     row_number() OVER (PARTITION BY h
-                                        ORDER BY doc_id, pos) AS rn
-              FROM wins),
-                 dups AS (
-              SELECT doc_id, pos FROM marked WHERE rn > 1 AND doc_id >= 350),
-                 brk AS (
-              SELECT doc_id, pos,
-                     CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                                                    ORDER BY pos) > 40
-                          THEN 1 ELSE 0 END AS b
-              FROM dups),
-                 grp AS (
-              SELECT doc_id, pos,
-                     sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-              FROM brk),
-                 spans AS (
-              SELECT doc_id, g, min(pos) AS span_start,
-                     max(pos) + 39 AS span_end, count(*) AS n_windows
-              FROM grp GROUP BY doc_id, g),
-                 per_doc AS (
-              SELECT doc_id,
-                     CAST(count(*) AS BIGINT) AS n_spans,
-                     CAST(sum(span_end - span_start + 1) AS BIGINT)
-                       AS dup_chars,
-                     CAST(sum(n_windows) AS BIGINT) AS n_dup_windows
-              FROM spans GROUP BY doc_id)
-            SELECT d.doc_id,
-                   coalesce(p.n_spans, 0) AS n_spans,
-                   coalesce(p.dup_chars, 0) AS dup_chars,
-                   coalesce(p.n_dup_windows, 0) AS n_dup_windows
-            FROM documents d LEFT JOIN per_doc p USING (doc_id)
-            WHERE d.doc_id >= 350
-        """,
+        "dedup_incremental_substr": _dup_span_audit_sql("doc_id >= 350"),
         "volume_anomalies": """
             WITH planted AS (
               SELECT ts, event_type FROM events
@@ -4668,27 +4597,11 @@ def oracle_sql() -> dict[str, str]:
                         THEN 1 ELSE 0 END AS is_anomaly
             FROM win
         """,
-        "dsir_select": """
-            WITH tk AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk
-              FROM documents),
-                 unis AS (
-              SELECT doc_id, tk[i] AS gram
-              FROM tk, unnest(range(1, len(tk) + 1)) t(i)
-              WHERE length(tk[i]) > 0),
-                 bis AS (
-              SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 grams AS (
-              SELECT doc_id,
-                     ('0x' || substr(md5(gram), 1, 15))::BIGINT % 4096
-                       AS bucket
-              FROM (SELECT * FROM unis UNION ALL SELECT * FROM bis)),
+        "dsir_select": f"""
+            WITH {_dsir_grams_sql()},
                  tgt AS (
-              SELECT g.bucket, CAST(count(*) AS BIGINT) AS ct
-              FROM grams g JOIN documents d USING (doc_id)
-              WHERE d.lang = 'en' GROUP BY 1),
+              SELECT bucket, CAST(count(*) AS BIGINT) AS ct
+              FROM grams WHERE lang = 'en' GROUP BY 1),
                  raw AS (
               SELECT bucket, CAST(count(*) AS BIGINT) AS cr
               FROM grams GROUP BY 1),
@@ -4782,24 +4695,8 @@ def oracle_sql() -> dict[str, str]:
                      AS BIGINT) AS end_chunk
             FROM c
         """,
-        "dsir_incremental": """
-            WITH tk AS (
-              SELECT doc_id, lang,
-                     regexp_split_to_array(trim(text), '\\s+') AS tk
-              FROM documents),
-                 unis AS (
-              SELECT doc_id, lang, tk[i] AS gram
-              FROM tk, unnest(range(1, len(tk) + 1)) t(i)
-              WHERE length(tk[i]) > 0),
-                 bis AS (
-              SELECT doc_id, lang, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 grams AS (
-              SELECT doc_id, lang,
-                     ('0x' || substr(md5(gram), 1, 15))::BIGINT % 4096
-                       AS bucket
-              FROM (SELECT * FROM unis UNION ALL SELECT * FROM bis)),
+        "dsir_incremental": f"""
+            WITH {_dsir_grams_sql()},
                  idx AS (
               SELECT bucket,
                      CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT)
@@ -4864,19 +4761,13 @@ def oracle_sql() -> dict[str, str]:
                      AS BIGINT) AS position
             FROM t
         """,
-        "decontaminate_semantic": """
+        "decontaminate_semantic": f"""
             WITH e AS (SELECT vec_id AS eid, embedding AS evec
                        FROM embeddings WHERE vec_id < 20),
                  c AS (SELECT vec_id, embedding AS cvec
                        FROM embeddings WHERE vec_id >= 20),
                  pairs AS (
-              SELECT c.vec_id,
-                     list_sum(list_transform(list_zip(c.cvec, e.evec),
-                         p -> CAST(p[1] * p[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(list_zip(c.cvec, c.cvec),
-                            p -> CAST(p[1] * p[2] AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(list_zip(e.evec, e.evec),
-                            p -> CAST(p[1] * p[2] AS DOUBLE))))) AS cos
+              SELECT c.vec_id, {_cos_sql("c.cvec", "e.evec")} AS cos
               FROM c CROSS JOIN e),
                  agg AS (
               SELECT vec_id,
@@ -5033,45 +4924,7 @@ def oracle_sql() -> dict[str, str]:
                      AS sched_offset_s
             FROM pages
         """,
-        "dedup_exact_substr": """
-            WITH wins AS (
-              SELECT doc_id, i AS pos, md5(substr(text, i, 40)) AS h
-              FROM documents,
-                   unnest(range(1, greatest(length(text) - 39, 0) + 1)) t(i)),
-                 marked AS (
-              SELECT doc_id, pos,
-                     row_number() OVER (PARTITION BY h
-                                        ORDER BY doc_id, pos) AS rn
-              FROM wins),
-                 dups AS (SELECT doc_id, pos FROM marked WHERE rn > 1),
-                 brk AS (
-              SELECT doc_id, pos,
-                     CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                                                    ORDER BY pos) > 40
-                          THEN 1 ELSE 0 END AS b
-              FROM dups),
-                 grp AS (
-              SELECT doc_id, pos,
-                     sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-              FROM brk),
-                 spans AS (
-              SELECT doc_id, g, min(pos) AS span_start,
-                     max(pos) + 39 AS span_end, count(*) AS n_windows
-              FROM grp GROUP BY doc_id, g),
-                 per_doc AS (
-              SELECT doc_id,
-                     CAST(count(*) AS BIGINT) AS n_spans,
-                     CAST(sum(span_end - span_start + 1) AS BIGINT)
-                       AS dup_chars,
-                     CAST(sum(n_windows) AS BIGINT) AS n_dup_windows
-              FROM spans GROUP BY doc_id)
-            SELECT d.doc_id,
-                   coalesce(p.n_spans, 0) AS n_spans,
-                   coalesce(p.dup_chars, 0) AS dup_chars,
-                   coalesce(p.n_dup_windows, 0) AS n_dup_windows
-            FROM documents d LEFT JOIN per_doc p USING (doc_id)
-        """,
+        "dedup_exact_substr": _dup_span_audit_sql(),
         "tpch_q8": """
             WITH flows AS (
               SELECT EXTRACT(year FROM o.o_orderdate) AS o_year,
@@ -5812,28 +5665,10 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes zb ON zb.doc_id = b
             ORDER BY jaccard DESC, a ASC, b ASC LIMIT 10
         """,
-        "dedup_simhash": r"""
-            WITH toks AS (
-              SELECT doc_id, t.tok,
-                     ('0x' || substr(md5(t.tok), 1, 15))::BIGINT AS h
-              FROM documents,
-                   unnest(regexp_split_to_array(trim(text), '\s+')) AS t(tok)
-              WHERE doc_id < 200 AND length(t.tok) > 0),
-                 sums AS (
-              SELECT doc_id,
-                     {sum_cols}
-              FROM toks GROUP BY doc_id)
-            SELECT doc_id, CAST({fp} AS BIGINT) AS simhash
-            FROM sums ORDER BY doc_id
-        """.format(
-            sum_cols=",\n                     ".join(
-                f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-                for b in range(16)
-            ),
-            fp=" + ".join(
-                f"(CASE WHEN s{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(16)
-            ),
-        ),
+        "dedup_simhash": f"""
+            WITH {_simhash_sql()}
+            SELECT doc_id, simhash FROM fp ORDER BY doc_id
+        """,
         "pipeline_features": _pipeline_features_oracle(),
         "streaming_windowed_counts": _streaming_oracle(),
         "sequence_chunks": """
@@ -5877,56 +5712,16 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE quota_rank <= 15
             ORDER BY source, quota_rank
         """,
-        "curation_funnel": rf"""
-            WITH scored AS (
-              SELECT doc_id, source, text,
-                     {_LANG_ID_SQL} AS lang_pred,
-                     {_QUALITY_SQL} AS q,
-                     length(text) AS n_chars
-              FROM documents),
-                 sents AS (
-              SELECT doc_id, arr[i] AS sent
-              FROM (SELECT doc_id, regexp_split_to_array(text, '\. ') AS arr
-                    FROM documents),
-                   unnest(range(1, len(arr) + 1)) t(i)
-              WHERE length(arr[i]) > 0),
-                 ps AS (SELECT doc_id, sent, count(*) AS cnt FROM sents GROUP BY 1, 2),
-                 ssig AS (
-              SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_sents,
-                     CAST(count(*) AS BIGINT) AS n_d
-              FROM ps GROUP BY 1),
-                 gr AS (
-              SELECT doc_id, n_chars, tk[i] || ' ' || tk[i + 1] AS gram
-              FROM (SELECT doc_id, length(text) AS n_chars,
-                           regexp_split_to_array(trim(text), '\s+') AS tk
-                    FROM documents),
-                   unnest(range(1, greatest(len(tk) - 1, 0) + 1)) t(i)
-              WHERE len(tk) >= 2),
-                 gc AS (SELECT doc_id, n_chars, gram, count(*) AS cnt
-                        FROM gr GROUP BY 1, 2, 3),
-                 gtop AS (
-              SELECT doc_id, cnt * length(gram) / n_chars::DOUBLE AS frac,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY cnt DESC, gram ASC) AS rn
-              FROM gc),
-                 rep AS (
-              SELECT s.doc_id,
-                     CASE WHEN (s.n_sents - s.n_d) / s.n_sents::DOUBLE <= 0.30
-                               AND COALESCE(t.frac, 0.0) <= 0.20
-                          THEN 1 ELSE 0 END AS rep_keep
-              FROM ssig s LEFT JOIN gtop t ON t.doc_id = s.doc_id AND t.rn = 1),
+        "curation_funnel": f"""
+            WITH {_curated_sql()},
+                 {_repetition_sql()},
                  flags AS (
               SELECT sc.doc_id, sc.source, sc.text,
-                     CASE WHEN sc.lang_pred IN ('gu', 'hi', 'en') THEN 1 ELSE 0 END
-                       AS f_lang,
-                     CASE WHEN sc.lang_pred IN ('gu', 'hi', 'en') AND sc.q >= 0.55
+                     CASE WHEN {_CURATION_STAGES[0]} THEN 1 ELSE 0 END AS f_lang,
+                     CASE WHEN {_CURATION_STAGES[0]} AND {_CURATION_STAGES[1]}
                           THEN 1 ELSE 0 END AS f_q,
-                     CASE WHEN sc.lang_pred IN ('gu', 'hi', 'en') AND sc.q >= 0.55
-                               AND sc.n_chars BETWEEN 80 AND 20000
-                          THEN 1 ELSE 0 END AS f_len,
-                     CASE WHEN sc.lang_pred IN ('gu', 'hi', 'en') AND sc.q >= 0.55
-                               AND sc.n_chars BETWEEN 80 AND 20000
-                               AND COALESCE(r.rep_keep, 0) = 1
+                     CASE WHEN {_CURATION_KEEP_SQL} THEN 1 ELSE 0 END AS f_len,
+                     CASE WHEN {_CURATION_KEEP_SQL} AND COALESCE(r.keep, 0) = 1
                           THEN 1 ELSE 0 END AS f_rep
               FROM scored sc LEFT JOIN rep r ON r.doc_id = sc.doc_id),
                  final AS (
@@ -6025,16 +5820,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY c.s_acctbal DESC, c.n_name, c.s_name, c.p_partkey
         """,
         "streaming_curation": f"""
-            WITH scored AS (
-              SELECT doc_id, source, text,
-                     {_LANG_ID_SQL} AS lang_pred,
-                     {_QUALITY_SQL} AS q,
-                     length(text) AS n_chars
-              FROM documents),
-                 kept AS (
-              SELECT * FROM scored
-              WHERE lang_pred IN ('gu', 'hi', 'en') AND q >= 0.55
-                AND n_chars BETWEEN 80 AND 20000),
+            WITH {_curated_sql()},
                  first AS (
               SELECT doc_id, digest FROM (
                 SELECT doc_id, md5(text) AS digest,
@@ -6047,16 +5833,7 @@ def oracle_sql() -> dict[str, str]:
                                   AND first.digest = md5(k.text)
         """,
         "corpus_curation": f"""
-            WITH scored AS (
-              SELECT doc_id, source, text,
-                     {_LANG_ID_SQL} AS lang_pred,
-                     {_QUALITY_SQL} AS q,
-                     length(text) AS n_chars
-              FROM documents),
-                 kept AS (
-              SELECT * FROM scored
-              WHERE lang_pred IN ('gu', 'hi', 'en') AND q >= 0.55
-                AND n_chars BETWEEN 80 AND 20000),
+            WITH {_curated_sql()},
                  deduped AS (
               SELECT source, CAST(floor(q * 10000) AS BIGINT) AS q_fp
               FROM (SELECT source, q,
@@ -6125,68 +5902,30 @@ def oracle_sql() -> dict[str, str]:
                    CAST(1 AS BIGINT) AS n
             FROM documents ORDER BY url
         """,
-        "layout_spans": r"""
-            WITH d AS (
-              SELECT doc_id, source, regexp_split_to_array(text, '\. ') AS arr
-              FROM documents),
-                 parts AS (
-              SELECT doc_id, i,
-                     CASE WHEN i < len(arr) THEN arr[i] || '.' ELSE arr[i] END AS para
-              FROM d, unnest(range(1, len(arr) + 1)) t(i)),
-                 scored AS (
-              SELECT doc_id, i, para,
-                     len(regexp_split_to_array(trim(para), '\s+')) AS n_words
-              FROM parts WHERE trim(para) != ''),
-                 labeled AS (
-              SELECT doc_id, i,
-                     (n_words >= 8) OR (n_words >= 3 AND (
-                        coalesce(lag(n_words >= 8) OVER w, false) OR
-                        coalesce(lead(n_words >= 8) OVER w, false))) AS kept
-              FROM scored WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
+        "layout_spans": f"""
+            WITH {_spans_sql()},
                  html_spans AS (
               SELECT doc_id, count(*) AS n FROM labeled WHERE kept GROUP BY doc_id),
                  text_spans AS (
-              SELECT doc_id, count(*) AS n FROM scored GROUP BY doc_id)
-            SELECT 'https://' || d.source || '.example.com/doc/' || d.doc_id
-                     || '-r0.html' AS url,
-                   CASE WHEN d.doc_id % 3 = 0 THEN 'text' ELSE 'html' END AS kind,
-                   CAST(CASE WHEN d.doc_id % 3 = 0
+              SELECT doc_id, count(*) AS n FROM blocks GROUP BY doc_id)
+            SELECT {_PAGE_URL_SQL} AS url,
+                   CASE WHEN doc_id % 3 = 0 THEN 'text' ELSE 'html' END AS kind,
+                   CAST(CASE WHEN doc_id % 3 = 0
                              THEN coalesce(t.n, 0)
                              ELSE coalesce(h.n, 0) END AS INT) AS n_spans
-            FROM d
+            FROM documents d
             LEFT JOIN html_spans h USING (doc_id)
             LEFT JOIN text_spans t USING (doc_id)
             ORDER BY url
         """,
-        "pipeline_extract": r"""
-            WITH d AS (
-              SELECT doc_id, source, regexp_split_to_array(text, '\. ') AS arr
-              FROM documents),
-                 parts AS (
-              SELECT doc_id, i,
-                     CASE WHEN i < len(arr) THEN arr[i] || '.' ELSE arr[i] END AS para
-              FROM d, unnest(range(1, len(arr) + 1)) t(i)),
-                 scored AS (
-              SELECT doc_id, i, para,
-                     len(regexp_split_to_array(trim(para), '\s+')) AS n_words
-              FROM parts WHERE trim(para) != ''),
-                 labeled AS (
-              SELECT doc_id, i, para,
-                     (n_words >= 8) OR (n_words >= 3 AND (
-                        coalesce(lag(n_words >= 8) OVER w, false) OR
-                        coalesce(lead(n_words >= 8) OVER w, false))) AS kept
-              FROM scored WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
-                 agg AS (
-              SELECT doc_id,
-                     string_agg(para, chr(10) || chr(10) ORDER BY i) AS text_out
-              FROM labeled WHERE kept GROUP BY doc_id)
-            SELECT 'https://' || d.source || '.example.com/doc/' || d.doc_id
-                     || '-r0.html' AS url,
+        "pipeline_extract": f"""
+            WITH {_spans_sql()}
+            SELECT {_PAGE_URL_SQL} AS url,
                    CASE WHEN coalesce(a.text_out, '') != '' THEN 'ok'
                         ELSE 'empty' END AS extract_status,
                    CAST(length(coalesce(a.text_out, '')) AS INT) AS n_text_chars,
                    md5(coalesce(a.text_out, '')) AS text_md5
-            FROM d LEFT JOIN agg a USING (doc_id)
+            FROM documents d LEFT JOIN agg a USING (doc_id)
             ORDER BY url
         """,
         "tpch_q17": """
@@ -6256,19 +5995,8 @@ def oracle_sql() -> dict[str, str]:
             FROM b GROUP BY true_label, bin
             ORDER BY true_label, bin
         """,
-        "dedup_simhash_pairs": r"""
-            WITH toks AS (
-              SELECT doc_id, t.tok,
-                     ('0x' || substr(md5(t.tok), 1, 15))::BIGINT AS h
-              FROM documents,
-                   unnest(regexp_split_to_array(trim(text), '\s+')) AS t(tok)
-              WHERE doc_id < 200 AND length(t.tok) > 0),
-                 sums AS (
-              SELECT doc_id,
-                     {sum_cols}
-              FROM toks GROUP BY doc_id),
-                 fp AS (
-              SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM sums),
+        "dedup_simhash_pairs": """
+            WITH {simhash},
                  banded AS (
               SELECT doc_id, simhash, b.band,
                      (simhash >> (b.band * 4)) & 15 AS band_val
@@ -6283,13 +6011,7 @@ def oracle_sql() -> dict[str, str]:
             FROM cands WHERE {ham} <= 3
             ORDER BY a, b
         """.format(
-            sum_cols=",\n                     ".join(
-                f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-                for b in range(16)
-            ),
-            fp=" + ".join(
-                f"(CASE WHEN s{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(16)
-            ),
+            simhash=_simhash_sql(),
             ham="("
             + " + ".join(f"((xor(fp_a, fp_b) >> {b}) & 1)" for b in range(16))
             + ")",
@@ -6306,19 +6028,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, ('0x' || substr(md5(text), 1, 15))::BIGINT AS fp
             FROM documents ORDER BY doc_id
         """,
-        "text_top_bigrams": """
-            WITH toks AS (
-              SELECT regexp_split_to_array(trim(text), '\\s+') AS arr
-              FROM documents
-              WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2
-            ),
-            bigrams AS (
-              SELECT unnest(list_transform(range(1, len(arr)),
-                                           i -> arr[i] || ' ' || arr[i + 1])) AS bigram
-              FROM toks
-            )
-            SELECT bigram, count(*) AS n FROM bigrams
-            GROUP BY bigram ORDER BY n DESC, bigram ASC LIMIT 25
+        "text_top_bigrams": f"""
+            WITH {_bigrams_sql()}
+            SELECT gram AS bigram, count(*) AS n FROM gr
+            GROUP BY gram ORDER BY n DESC, bigram ASC LIMIT 25
         """,
         "asof_join": """
             WITH r AS (
@@ -6341,21 +6054,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(n_chars) AS BIGINT) AS total_chars
             FROM documents GROUP BY bucket ORDER BY bucket
         """,
-        "similarity_topk": f"""
-            WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                       FROM embeddings WHERE vec_id < 5),
-                 pairs AS (
-              SELECT q.q_id, c.vec_id AS c_id,
-                     {_cos_sql("q.q_emb", "c.embedding")} AS cos
-              FROM q CROSS JOIN embeddings c WHERE q.q_id <> c.vec_id),
-                 ranked AS (
-              SELECT q_id, c_id, cos,
-                     row_number() OVER (PARTITION BY q_id
-                                        ORDER BY cos DESC, c_id ASC) AS rk
-              FROM pairs)
-            SELECT q_id, c_id, round(cos, 4) AS cos_sim, CAST(rk AS INT) AS rk
-            FROM ranked WHERE rk <= 3 ORDER BY q_id, rk
-        """,
+        "similarity_topk": _cos_topk_sql(_BRUTE_PAIRS_SQL),
     }
     # a stream merge must return exactly its batch query's rows
     for stream, batch in (

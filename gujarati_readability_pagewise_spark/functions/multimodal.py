@@ -22,18 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "MEDIA_SCHEMA_DDL",
     "decode_image",
     "fake_image_features",
     "with_media_features",
     "media_from_documents",
 ]
-
-# (payload, metadata) column pair — the multimodal analogue of input_hint
-MEDIA_SCHEMA_DDL = (
-    "media_id bigint, payload binary, "
-    "meta struct<mime:string, width:int, height:int, n_bytes:bigint>"
-)
 
 FEATURE_DIM = 16
 

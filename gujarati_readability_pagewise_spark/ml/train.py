@@ -73,7 +73,8 @@ def _default_training_data() -> tuple[np.ndarray, np.ndarray]:
 
 @functools.lru_cache(maxsize=1)
 def default_model() -> RandomForest:
-    """The pinned seed-42 model used by fixtures, entry() and bench."""
+    """The pinned seed-42 model used by fixtures, entry() and bench.
+    Its training data stops every tree at depth 3, below ``max_depth``."""
     X, y = _default_training_data()
     return RandomForest(n_estimators=30, max_depth=8, class_weight="balanced", seed=42).fit(X, y)
 

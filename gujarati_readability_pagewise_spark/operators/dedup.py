@@ -318,7 +318,6 @@ def jaccard_on_candidates_arrays(
     cands: DataFrame,
     docs: DataFrame,
     key_col: str = "doc_id",
-    min_jaccard: float = 0.0,
     text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
@@ -387,7 +386,6 @@ def jaccard_on_candidates_arrays(
             F.col("n_common")
             / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
         .select("a", "b", "n_common", "jaccard")
     )
 

@@ -40,8 +40,6 @@ from ..functions.extract import extract_text
 from ..functions.features import N_FEATURES, compute_features
 
 __all__ = [
-    "EXTRACTED_SCHEMA",
-    "SCORED_SCHEMA",
     "with_extraction",
     "with_extraction_and_score",
 ]
@@ -50,8 +48,6 @@ __all__ = [
 _BASE_SCHEMA = "url string, warc_ts timestamp, lang string, text string"
 _SPANS_SCHEMA = ", spans array<string>"
 _TAIL_SCHEMA = ", extract_status string, n_bytes bigint, features array<double>"
-EXTRACTED_SCHEMA = _BASE_SCHEMA + _SPANS_SCHEMA + _TAIL_SCHEMA
-SCORED_SCHEMA = EXTRACTED_SCHEMA + ", pred_label int, p_nonreadable double"
 
 
 def _schema(include_spans: bool, scored: bool) -> str:

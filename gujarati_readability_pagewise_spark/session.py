@@ -23,6 +23,13 @@ __all__ = ["get_spark", "local_frame", "ARROW_BATCH_SIZE"]
 ARROW_BATCH_SIZE = 2048
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's physical memory (local mode runs every
+    executor inside the driver JVM, so this is the whole Spark heap)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 4 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "gujarati_readability_pagewise_spark",
     master: str | None = None,
@@ -58,7 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

@@ -1,11 +1,14 @@
 """Export integrity: every name a package module lists in ``__all__``
-exists, so ``from module import *`` cannot break on a stale entry, and
-every package module is reached from outside the tests."""
+exists, so ``from module import *`` cannot break on a stale entry, every
+package module is reached from outside the tests, and the contract module
+writes each policy once."""
 
 import ast
 import importlib
 import pkgutil
 from pathlib import Path
+
+import pytest
 
 import gujarati_readability_pagewise_spark as pkg
 
@@ -85,3 +88,37 @@ def test_every_module_reached_outside_tests():
     unreached = sorted(set(modules) - reached)
     assert len(modules) > 40, len(modules)
     assert not unreached, unreached
+
+
+# One signature fragment per policy that the contract module
+# (``__spark_entry__.py``) builds its queries and DuckDB oracles from.
+POLICY_FRAGMENTS = {
+    "near_dup_minhash": "md5(shingle || '#",
+    "extractor_span_rule": "coalesce(lag(n_words >= ",
+    "page_url": "'-r0.html'",
+    "exact_substr_windows": "md5(substr(text, i, ",
+    "exact_substr_audit_sql": "AS BIGINT) AS n_dup_windows",
+    "exact_substr_audit_spark": 'F.sum("n_windows").alias("n_dup_windows")',
+    "ivf_fixed_point_mean": "CAST(sum(e.efp[{d + 1}]) // count(*) AS BIGINT)",
+    "hyperplane_probe": "xor(s.sig, f.flip)",
+    "cosine": "p -> CAST(p[1] * p[2] AS DOUBLE)",
+    "topk_ranking": "PARTITION BY q_id",
+    "simhash": "THEN 1 ELSE -1 END) AS s{b}",
+    "curation_scored": "{_QUALITY_SQL} AS q,",
+    "curation_rule": "IN ('gu', 'hi', 'en')",
+    "repetition_keep": "(sig.n_sents - sig.n_d) / sig.n_sents::DOUBLE",
+    "sentence_explode": r"regexp_split_to_array(text, '\. ')",
+    "bigram_explode": "tk[i] || ' ' || tk[i + 1]",
+    "bigram_fluency": "CAST(sum(c.corpus_cnt) AS BIGINT)",
+    "dsir_buckets": "::BIGINT % 4096",
+    "stream_scratch": "for q in spark.streams.active:",
+    "scd2_fetch_log": 'F.lit(" [u2]")',
+}
+
+
+@pytest.mark.parametrize("fragment", POLICY_FRAGMENTS.values(), ids=POLICY_FRAGMENTS)
+def test_contract_policy_written_once(fragment):
+    """Each policy has one builder or helper in the contract module, so a
+    change to the policy is one edit, not one per query and oracle."""
+    root = Path(pkg.__file__).resolve().parents[1]
+    assert (root / "__spark_entry__.py").read_text().count(fragment) == 1

@@ -1,6 +1,8 @@
-"""session.local_frame: driver-built rows as an Arrow-backed LocalRelation."""
+"""session: driver-built rows as an Arrow-backed LocalRelation
+(``local_frame``), and the default driver heap."""
 
 import ast
+import os
 import pathlib
 
 import pytest
@@ -61,3 +63,16 @@ def test_package_creates_frames_only_through_local_frame():
             ):
                 offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
     assert not offenders, offenders
+
+
+@pytest.mark.skipif(
+    "SPARK_GRAFT_DRIVER_MEM" in os.environ, reason="the heap is set explicitly"
+)
+def test_default_driver_heap_at_most_quarter_of_memory(spark):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap, which holds every
+    local-mode executor, is at most a quarter of physical memory, so a test
+    run and a tool's session fit on one host side by side."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    assert utils.byteStringAsBytes(conf) <= phys // 4

@@ -113,3 +113,24 @@ def test_arena_descent_matches_per_tree_walk():
     assert (got[:, 1] == 1.0 - p0_ref).all()
     # empty batch keeps its shape
     assert m.predict_proba(np.zeros((0, 12))).shape == (0, 2)
+
+
+def _deepest(tree: DecisionTree, node: int = 0) -> int:
+    """Depth of ``tree``'s deepest node below ``node`` (the root is 0)."""
+    if tree.feature[node] == -1:  # a leaf
+        return 0
+    return 1 + max(_deepest(tree, tree.left[node]), _deepest(tree, tree.right[node]))
+
+
+def test_max_depth_bounds_tree_depth():
+    """Random labels keep every node impure, so unbounded trees grow well
+    past depth 3; with ``max_depth=d`` each tree's deepest node is at
+    exactly depth ``d``."""
+    rng = np.random.RandomState(4)
+    X = rng.randn(400, 5)
+    y = (rng.random_sample(400) < 0.5).astype(np.int32)
+    deep = RandomForest(n_estimators=5, max_depth=64, seed=3).fit(X, y)
+    assert min(_deepest(t) for t in deep.trees) > 3
+    for d in (1, 3):
+        m = RandomForest(n_estimators=5, max_depth=d, seed=3).fit(X, y)
+        assert [_deepest(t) for t in m.trees] == [d] * 5

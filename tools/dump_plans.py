@@ -208,7 +208,8 @@ def _initial_plans_only(s: str) -> str:
 
 
 def _normalize(s: str, tmp: str) -> str:
-    s = s.replace(tmp, "<tmp>").replace(f"_scratch_{os.getpid()}", "_scratch_<pid>")
+    # the contract's streaming queries keep their state under a per-pid root
+    s = s.replace(tmp, "<tmp>").replace(f"_{os.getpid()}", "_<pid>")
     s = re.sub(r"#\d+", "#n", s)
     # higher-order-function variables are numbered per process
     s = re.sub(r"\blambda (\w+?)_\d+", r"lambda \1_n", s)
