@@ -29,6 +29,13 @@ from gujarati_readability_pagewise_spark.functions.repetition import (
     MAX_DUP_SENT_FRACTION,
     MAX_TOP_2GRAM_CHAR_FRACTION,
 )
+from gujarati_readability_pagewise_spark.functions.textstats import (
+    CURATION_LANGS,
+    LENGTH_BAND,
+    MIN_QUALITY,
+    lang_id_expr,
+    quality_score_expr,
+)
 from gujarati_readability_pagewise_spark.operators.dedup import (
     N_BANDS,
     N_HASHES,
@@ -1136,8 +1143,6 @@ def q_dedup_embedding(spark, sf):
 
 
 def q_text_lang_id(spark, sf):
-    from gujarati_readability_pagewise_spark.functions.textstats import lang_id_expr
-
     docs = load_table(spark, sf, "documents")
     return (
         docs.select(lang_id_expr(F.col("text")).alias("lang_pred"))
@@ -1148,10 +1153,6 @@ def q_text_lang_id(spark, sf):
 
 
 def q_text_quality_score(spark, sf):
-    from gujarati_readability_pagewise_spark.functions.textstats import (
-        quality_score_expr,
-    )
-
     docs = load_table(spark, sf, "documents")
     return docs.select(
         "doc_id", _r(quality_score_expr(F.col("text"))).alias("qscore")
@@ -1450,10 +1451,6 @@ def q_corpus_curation(spark, sf):
     the aggregate uses the fixed-point (×10⁴) average so the float math is
     engine-exact (see memory rule: never round a raw float sum)."""
     docs = load_table(spark, sf, "documents")
-    from gujarati_readability_pagewise_spark.functions.textstats import (
-        lang_id_expr,
-        quality_score_expr,
-    )
 
     scored = docs.select(
         "doc_id",
@@ -1464,10 +1461,10 @@ def q_corpus_curation(spark, sf):
         F.length("text").alias("n_chars"),
     )
     kept = scored.filter(
-        F.col("lang_pred").isin("gu", "hi", "en")
-        & (F.col("q") >= 0.55)
-        & (F.col("n_chars") >= 80)
-        & (F.col("n_chars") <= 20000)
+        F.col("lang_pred").isin(*CURATION_LANGS)
+        & (F.col("q") >= MIN_QUALITY)
+        & (F.col("n_chars") >= LENGTH_BAND[0])
+        & (F.col("n_chars") <= LENGTH_BAND[1])
     )
     w = W.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     deduped = (
@@ -1509,10 +1506,6 @@ def q_curation_funnel(spark, sf):
     from gujarati_readability_pagewise_spark.functions.repetition import (
         repetition_signals,
     )
-    from gujarati_readability_pagewise_spark.functions.textstats import (
-        lang_id_expr,
-        quality_score_expr,
-    )
 
     docs = load_table(spark, sf, "documents")
     rep = repetition_signals(
@@ -1528,11 +1521,13 @@ def q_curation_funnel(spark, sf):
             F.length("text").alias("n_chars"),
         )
         .join(rep, "doc_id", "left")
-        .withColumn("f_lang", F.col("lang_pred").isin("gu", "hi", "en"))
-        .withColumn("f_q", F.col("f_lang") & (F.col("q") >= 0.55))
+        .withColumn("f_lang", F.col("lang_pred").isin(*CURATION_LANGS))
+        .withColumn("f_q", F.col("f_lang") & (F.col("q") >= MIN_QUALITY))
         .withColumn(
             "f_len",
-            F.col("f_q") & (F.col("n_chars") >= 80) & (F.col("n_chars") <= 20000),
+            F.col("f_q")
+            & (F.col("n_chars") >= LENGTH_BAND[0])
+            & (F.col("n_chars") <= LENGTH_BAND[1]),
         )
         .withColumn("f_rep", F.col("f_len") & F.coalesce("rep_keep", F.lit(False)))
     )
@@ -2917,9 +2912,6 @@ def q_quality_drift(spark, sf):
     flags.  A drift is planted (the corpus's bucket 40 loses 0.2 of
     quality) and must be flagged once trailing history exists; the
     oracle re-derives the score, the dense bucket grid, and the rule."""
-    from gujarati_readability_pagewise_spark.functions.textstats import (
-        quality_score_expr,
-    )
     from gujarati_readability_pagewise_spark.operators.monitor import (
         metric_drift,
     )
@@ -3122,9 +3114,6 @@ def q_quality_weighted_sample(spark, sf):
     score, decided by an exact integer comparison of a stable key hash
     against floor(q·10⁶) — deterministic under retries/partitioning and
     bit-identically re-derivable in SQL, unlike a rand() Bernoulli."""
-    from gujarati_readability_pagewise_spark.functions.textstats import (
-        quality_score_expr,
-    )
     from gujarati_readability_pagewise_spark.operators.sampling import (
         quality_weighted_sample,
     )
@@ -3786,11 +3775,12 @@ _QUALITY_SQL = f"""least(greatest(
                        + 0.2, 0.0), 1.0)"""
 
 
-# DuckDB twin of textstats.curation_keep_expr at the curation defaults of
-# plans/release and streaming/ingest: one condition per funnel stage over
-# the columns of _curated_sql's `scored`
+# DuckDB twin of textstats.curation_keep_expr: one condition per funnel
+# stage over the columns of _curated_sql's `scored`
 _CURATION_STAGES = (
-    "lang_pred IN ('gu', 'hi', 'en')", "q >= 0.55", "n_chars BETWEEN 80 AND 20000"
+    f"lang_pred IN ({', '.join(map(repr, CURATION_LANGS))})",
+    f"q >= {MIN_QUALITY}",
+    f"n_chars BETWEEN {LENGTH_BAND[0]} AND {LENGTH_BAND[1]}",
 )
 _CURATION_KEEP_SQL = " AND ".join(_CURATION_STAGES)
 

@@ -34,7 +34,6 @@ from typing import NamedTuple
 __all__ = [
     "ExtractResult",
     "extract_text",
-    "extract_spans",
     "STATUS_OK",
     "STATUS_EMPTY",
     "STATUS_ERROR",
@@ -277,9 +276,3 @@ def extract_text(html: bytes | None) -> ExtractResult:
     if not spans:
         return ExtractResult("", [], STATUS_EMPTY if status == STATUS_OK else status)
     return ExtractResult("\n\n".join(spans), spans, status)
-
-
-def extract_spans(html: bytes | None) -> list[tuple[int, str]]:
-    """Ordered (order, text) span parse — the PDF/layout-page analogue."""
-    res = extract_text(html)
-    return list(enumerate(res.spans))

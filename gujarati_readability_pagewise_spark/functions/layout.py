@@ -7,16 +7,16 @@ is the pluggable backbone dispatch on page payloads
 featurizer per backbone; ``:49-69`` decodes the payload with a corrupt
 fallback).  Here the dispatch key is the payload's magic bytes:
 
-* ``%PDF-``   → PDF parse.  No PDF library ships in this container, so the
-  real parse is a clearly-marked stub (:func:`_parse_pdf_real` raises
-  ``NotImplementedError``) and a **deterministic fake** stands in for it:
-  printable-ASCII runs of the raw bytes become spans, one page per
+* ``%PDF-``   → PDF parse.  No PDF library is a dependency, so a
+  **deterministic fake** (:func:`_parse_pdf_fake`) stands in for the real
+  parse: printable-ASCII runs of the raw bytes become spans, one page per
   ``/Page`` occurrence.  The Spark-side plumbing — schema, batching,
-  ordering contract — is real and tested; swapping the fake for pypdf /
-  pdfminer on a cluster touches one function.
+  ordering contract — is real and tested; on a cluster, pypdf (pure-python,
+  zipimport-safe for ``--py-files``) with page-wise ``extract_text()``
+  preserving (page, order) replaces that one function.
 * ``<`` (after optional whitespace/BOM) → HTML: delegates to the golden
-  extractor's ordered spans (:func:`..functions.extract.extract_spans`),
-  so layout output for HTML is byte-consistent with the main pipeline.
+  extractor's ordered spans (``extract_text(...).spans``), so layout
+  output for HTML is byte-consistent with the main pipeline.
 * anything else → plain text: paragraphs split on blank lines (or the
   whole text as one span).
 
@@ -68,16 +68,6 @@ def detect_payload_kind(payload: bytes | None) -> str:
     return "text"
 
 
-def _parse_pdf_real(payload: bytes) -> list[Span]:
-    """Real PDF text extraction.  STUB: no PDF library in this container.
-
-    On a cluster, install pypdf (pure-python, zipimport-safe for
-    ``--py-files``) and replace the body with page-wise ``extract_text()``
-    preserving (page, order).  The fake below keeps the contract testable.
-    """
-    raise NotImplementedError("PDF text extraction requires a PDF library")
-
-
 _PRINTABLE_RUN = re.compile(rb"[\x20-\x7e]{8,}")
 
 
@@ -105,10 +95,7 @@ def parse_layout_spans(payload: bytes | None) -> tuple[str, list[Span]]:
     if kind == "empty":
         return kind, []
     if kind == "pdf":
-        try:
-            return kind, _parse_pdf_real(payload)
-        except NotImplementedError:
-            return kind, _parse_pdf_fake(payload)
+        return kind, _parse_pdf_fake(payload)
     if kind == "html":
         res = extract_text(payload)
         return kind, [Span(0, i, s) for i, s in enumerate(res.spans)]

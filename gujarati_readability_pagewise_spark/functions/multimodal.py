@@ -2,10 +2,10 @@
 
 A 100 TB training-data pipeline carries image/audio/video next to text as
 ``binary`` columns with a typed metadata struct.  The image/audio decode
-libraries are NOT in this container, so the decode step is STUBBED —
-clearly marked — behind ``decode_image``; everything Spark-side (schema,
-Arrow batch shape, partition behavior, deterministic fake features) is real
-and tested.
+libraries (PIL/OpenCV) are not dependencies, so a deterministic fake
+featurizer (``fake_image_features``) stands in where a real decoder to
+HxWxC uint8 and a CNN/ViT would go; everything Spark-side (schema, Arrow
+batch shape, partition behavior) is real and tested.
 
 Batch contract mirrors the engine's text kernel (one Arrow-batched stage,
 here ``mapInPandas``; whole batch in/out, no per-row Python at the Spark level).
@@ -22,26 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "decode_image",
     "fake_image_features",
     "with_media_features",
     "media_from_documents",
 ]
 
 FEATURE_DIM = 16
-
-
-def decode_image(payload: bytes):
-    """STUB — image decoding needs PIL/cv2, which this container lacks.
-
-    The real implementation decodes to HxWxC uint8; the pipeline around it
-    (batching, schema, fallback) is live and tested with
-    :func:`fake_image_features`.
-    """
-    raise NotImplementedError(
-        "image decode requires PIL/opencv (not in this container); "
-        "use fake_image_features for the deterministic test path"
-    )
 
 
 def fake_image_features(payloads: pd.Series) -> np.ndarray:

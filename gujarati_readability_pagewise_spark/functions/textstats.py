@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from ..operators.dedup import stable_hash64
 
 __all__ = [
+    "CURATION_LANGS",
+    "MIN_QUALITY",
+    "LENGTH_BAND",
     "lang_id_expr",
     "quality_score_expr",
     "curation_keep_expr",
@@ -23,6 +26,12 @@ __all__ = [
     "fingerprint_expr",
     "vocab_coverage",
 ]
+
+# The curation rule's policy: the release, the streaming curation and the
+# contract's curation queries and oracles all read these.
+CURATION_LANGS = ("gu", "hi", "en")
+MIN_QUALITY = 0.55
+LENGTH_BAND = (80, 20000)  # characters, inclusive
 
 
 def _ratio(pattern: str, col: Column) -> Column:
@@ -66,15 +75,13 @@ def quality_score_expr(col: Column) -> Column:
     return F.least(F.greatest(raw, F.lit(0.0)), F.lit(1.0))
 
 
-def curation_keep_expr(
-    col: Column, langs: tuple[str, ...], min_quality: float, length_band: tuple[int, int]
-) -> Column:
-    """The curation rule: language in ``langs``, quality at least
-    ``min_quality``, and length within ``length_band`` (inclusive)."""
+def curation_keep_expr(col: Column) -> Column:
+    """The curation rule: language in ``CURATION_LANGS``, quality at least
+    ``MIN_QUALITY``, and length within ``LENGTH_BAND`` (inclusive)."""
     return (
-        lang_id_expr(col).isin(list(langs))
-        & (quality_score_expr(col) >= min_quality)
-        & F.length(col).between(*length_band)
+        lang_id_expr(col).isin(list(CURATION_LANGS))
+        & (quality_score_expr(col) >= MIN_QUALITY)
+        & F.length(col).between(*LENGTH_BAND)
     )
 
 

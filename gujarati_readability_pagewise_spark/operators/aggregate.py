@@ -2,9 +2,11 @@
 
 Ports of SURVEY.md §2.4 — the per-book Summary sheet
 (``/root/reference/scripts/predict_single_book.py:377-413``), the book-level
-mean-probability>0.5 decision (``:391-392``), the confusion matrix + scalar metrics with pos_label=0
-(``train_pagewise_xgboost.py:245-266``), and the verify_metrics
-self-consistency recompute (``scripts/verify_metrics.py:30-51``).
+mean-probability>0.5 decision (``:391-392``) and the scalar metrics with
+pos_label=0 (``train_pagewise_xgboost.py:245-266``).  The confusion matrix
+is the contract query ``a4_confusion_matrix``; the verify_metrics
+self-consistency recompute (``scripts/verify_metrics.py:30-51``) is the
+test oracle of ``binary_metrics``.
 
 All are single hash-aggregations (map-side partial + final) — at 100 TB the
 only wide edge, keyed by host.  The partial aggregation already bounds a
@@ -21,7 +23,6 @@ from .split import host_of
 
 __all__ = [
     "host_summary",
-    "confusion_matrix",
     "binary_metrics",
     "histogram_quantiles",
 ]
@@ -39,16 +40,6 @@ def host_summary(scored: DataFrame) -> DataFrame:
         F.when(F.avg("p_nonreadable") > 0.5, F.lit(0)).otherwise(F.lit(1)).alias(
             "host_prediction"
         ),
-    )
-
-
-def confusion_matrix(scored: DataFrame, label_col: str = "label") -> DataFrame:
-    """A4: groupBy(true,pred).count() — the 2×2 pivot happens at the driver."""
-    return (
-        scored.filter(F.col(label_col).isNotNull())
-        .groupBy(F.col(label_col).alias("true_label"), F.col("pred_label"))
-        .count()
-        .orderBy("true_label", "pred_label")
     )
 
 
@@ -119,14 +110,6 @@ def distributed_rank(
         bucketed.join(F.broadcast(off_df), "_bkt")
         .withColumn("rk", (F.row_number().over(w) + F.col("_off")).cast("long"))
         .drop("_bkt", "_off")
-    )
-
-
-def verify_metrics(scored: DataFrame, reported: dict[str, float], tol: float = 1e-3) -> bool:
-    """Port of scripts/verify_metrics.py: recompute and compare within tol."""
-    fresh = binary_metrics(scored)
-    return all(
-        abs(fresh[k] - reported[k]) <= tol for k in reported if k in fresh
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["word_ngrams", "contaminated_pairs", "decontaminate", "ngram_novelty"]
+__all__ = ["word_ngrams", "contaminated_pairs", "ngram_novelty"]
 
 
 def word_ngrams(
@@ -65,25 +65,6 @@ def contaminated_pairs(
         .agg(F.count("*").alias("n_common"))
         .filter(F.col("n_common") >= min_common)
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 8,
-    min_common: int = 1,
-) -> DataFrame:
-    """Corpus minus contaminated docs (anti-join on the flagged set)."""
-    pairs = contaminated_pairs(
-        word_ngrams(corpus, text_col, key_col, n),
-        word_ngrams(eval_set, text_col, key_col, n),
-        min_common=min_common,
-        key_col=key_col,
-    )
-    flagged = pairs.select(F.col("corpus_id").alias(key_col)).distinct()
-    return corpus.join(flagged, key_col, "left_anti")
 
 
 def ngram_novelty(

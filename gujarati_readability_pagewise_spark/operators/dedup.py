@@ -283,9 +283,7 @@ def lsh_cross_candidates(
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame, key_col: str = "doc_id", min_jaccard: float = 0.0
-) -> DataFrame:
+def jaccard_pairs(shingles: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """Exact shingle-set Jaccard for every co-shingled pair (a < b).
 
     |A∩B| from the shingle self-join; |A|,|B| from per-doc counts;
@@ -309,7 +307,6 @@ def jaccard_pairs(
             F.col("n_common")
             / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
         .select("a", "b", "n_common", "jaccard")
     )
 
@@ -484,19 +481,16 @@ def simhash_near_pairs(
     key_col: str = "doc_id",
     bits: int = 16,
     bands: int = 4,
-    max_hamming: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded SimHash blocking + exact Hamming verify.
 
     Pigeonhole guarantee: any pair within Hamming distance < ``bands``
     shares at least one identical band, so candidate generation is an
     equi-join on (band, band_val) — never an all-pairs scan — with perfect
-    recall up to ``bands - 1`` differing bits (the default ``max_hamming``).
+    recall up to ``bands - 1`` differing bits, the largest distance it keeps.
     The verify step is one ``bit_count(xor)`` expression on candidates.
     Returns (a, b, hamming) with a < b.
     """
-    if max_hamming is None:
-        max_hamming = bands - 1
     banded = simhash_bands(fp, key_col, bits, bands)
     a = banded.select(
         F.col(key_col).alias("a"), F.col("simhash").alias("fp_a"), "band", "band_val"
@@ -513,7 +507,7 @@ def simhash_near_pairs(
     ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
     return (
         cands.select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= bands - 1)
     )
 
 

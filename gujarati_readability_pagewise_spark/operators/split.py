@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["host_of", "split_expr", "with_split", "split_table"]
+__all__ = ["host_of", "split_expr", "with_split"]
 
 SPLIT_SEED = 42
 TEST_BUCKETS = 1   # of 5 → 20 % of hosts
@@ -36,7 +36,3 @@ def split_expr(url: Column) -> Column:
 def with_split(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("split", split_expr(F.col(url_col)))
 
-
-def split_table(pages: DataFrame) -> DataFrame:
-    """Materialized (url, split) table — the reference's splits/*.json."""
-    return pages.select("url", split_expr(F.col("url")).alias("split"))

@@ -61,9 +61,6 @@ def run_release(
     out_root: str,
     key_col: str = "doc_id",
     text_col: str = "text",
-    langs: tuple[str, ...] = ("gu", "hi", "en"),
-    min_quality: float = 0.55,
-    length_band: tuple[int, int] = (80, 20000),
     jaccard_threshold: float = 0.5,
     cut_spans_window: int | None = None,
     seq_len: int = 512,
@@ -94,9 +91,7 @@ def run_release(
             n_partitions=spark.sparkContext.defaultParallelism,
         ).select(key_col, F.col("keep").alias("_rep_keep"))
         cur = (
-            docs.filter(
-                curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
-            )
+            docs.filter(curation_keep_expr(F.col(text_col)))
             .join(rep, key_col, "left")
             .filter(F.coalesce("_rep_keep", F.lit(False)))
             .drop("_rep_keep")

@@ -7,18 +7,13 @@ graft's distributed analogue:
 
 * ``write_metrics`` — a metrics **table** (parquet, appendable): one row
   per (job, metric), the queryable form of results.json (north_rule's
-  metrics table);
-* ``write_book_report`` — the two-sheet report: per-page predictions +
-  per-host summary.  Excel if openpyxl is importable (it is not in this
-  container), CSV otherwise — the layout is identical.
+  metrics table).
 
 Driver-side by design: reports are small aggregates; only the aggregation
 runs distributed.
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -28,12 +23,8 @@ from ..session import local_frame
 __all__ = [
     "write_metrics",
     "read_metrics",
-    "write_book_report",
     "roc_points",
     "prediction_histogram",
-    "prediction_scatter",
-    "cv_results_table",
-    "feature_importance_table",
 ]
 
 METRICS_SCHEMA = "job_id string, metric string, value double, created_at timestamp"
@@ -59,40 +50,6 @@ def write_metrics(
 
 def read_metrics(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(METRICS_SCHEMA).parquet(path)
-
-
-def write_book_report(scored: DataFrame, summary: DataFrame, out_dir: str) -> dict[str, str]:
-    """Two-sheet report: Page_Predictions + Summary (Excel or CSV fallback).
-
-    `scored` should be pre-filtered to the report's host(s) — collecting an
-    unfiltered crawl to the driver is the anti-pattern this module refuses
-    to hide: it limits to 100k rows defensively.
-    """
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    pages_pdf = (
-        scored.select(
-            "url", "extract_status", "pred_label", "p_nonreadable", "warc_ts"
-        )
-        .limit(100_000)
-        .toPandas()
-    )
-    summary_pdf = summary.toPandas()
-    try:  # openpyxl is not in this container; CSV is the live path
-        import openpyxl  # noqa: F401
-
-        xlsx = out / "report.xlsx"
-        import pandas as pd
-
-        with pd.ExcelWriter(xlsx, engine="openpyxl") as w:
-            pages_pdf.to_excel(w, sheet_name="Page_Predictions", index=False)
-            summary_pdf.to_excel(w, sheet_name="Summary", index=False)
-        return {"format": "xlsx", "path": str(xlsx)}
-    except ImportError:
-        p1, p2 = out / "page_predictions.csv", out / "summary.csv"
-        pages_pdf.to_csv(p1, index=False)
-        summary_pdf.to_csv(p2, index=False)
-        return {"format": "csv", "page_predictions": str(p1), "summary": str(p2)}
 
 
 # -- plot-data sinks (K5 data half) ------------------------------------------
@@ -210,54 +167,3 @@ def prediction_histogram(
         )
         .orderBy("true_label", "bin")
     )
-
-
-def prediction_scatter(
-    scored: DataFrame,
-    label_col: str = "label",
-    proba_col: str = "p_nonreadable",
-    seed: int = 42,
-) -> DataFrame:
-    """F6: the jittered scatter points behind the predictions-vs-labels
-    plot (plot_prediction_distribution_general.py:125-126): x = label +
-    N(0, 0.05), y = proba + N(0, 0.02).  Seeded ``randn`` — deterministic
-    per partition layout, pure expression."""
-    return scored.select(
-        F.col(label_col).alias("true_label"),
-        (F.col(label_col) + F.randn(seed) * 0.05).alias("x_jitter"),
-        (F.col(proba_col) + F.randn(seed + 1) * 0.02).alias("y_jitter"),
-    )
-
-
-def cv_results_table(spark: SparkSession, results: list[dict]) -> DataFrame:
-    """Grid-search CV results as a tidy table — the data behind
-    hyperparameter_search.png (train_pagewise_xgboost.py:407-456): one row
-    per parameter combination with its mean CV score.  Driver-side by
-    design (the grid is tiny); only the folds' training was distributed."""
-    score_keys = [k for k in results[0] if k.startswith("mean_")]
-    score_key = score_keys[0]
-    rows = [
-        (
-            i,
-            "; ".join(f"{k}={r[k]}" for k in sorted(r) if not k.startswith("mean_")),
-            float(r[score_key]),
-        )
-        for i, r in enumerate(results)
-    ]
-    return local_frame(spark, rows, "combo_idx int, params string, mean_score double")
-
-
-def feature_importance_table(spark: SparkSession, model) -> DataFrame:
-    """Feature importances as a tidy table — the data behind
-    feature_importance.png (train_pagewise_xgboost.py:363-370).  ``model``
-    is the numpy RandomForest (A8 split-count importances)."""
-    from ..functions.features import FEATURE_NAMES
-
-    imps = model.feature_importances_()
-    rows = [
-        (i, FEATURE_NAMES[i] if i < len(FEATURE_NAMES) else f"f{i}", float(v))
-        for i, v in enumerate(imps)
-    ]
-    return local_frame(
-        spark, rows, "feature_idx int, feature string, importance double"
-    ).orderBy(F.desc("importance"), F.asc("feature_idx"))

@@ -29,11 +29,8 @@ __all__ = [
     "write_snapshot",
     "read_latest",
     "read_snapshot",
-    "list_versions",
     "latest_version",
     "scd2_history",
-    "expire_snapshots",
-    "compact_snapshot",
 ]
 
 
@@ -46,15 +43,6 @@ def latest_version(table_dir: str) -> int | None:
     if not p.exists():
         return None
     return int(json.loads(p.read_text())["version"])
-
-
-def list_versions(table_dir: str) -> list[int]:
-    d = Path(table_dir)
-    if not d.exists():
-        return []
-    return sorted(
-        int(c.name.split("=", 1)[1]) for c in d.iterdir() if c.name.startswith("v=")
-    )
 
 
 def write_snapshot(df: DataFrame, table_dir: str) -> int:
@@ -128,46 +116,3 @@ def scd2_history(
             F.col("valid_to").isNull().cast("int").alias("is_current"),
         )
     )
-
-
-def expire_snapshots(table_dir: str, keep_n: int = 3) -> list[int]:
-    """Retention GC: delete all but the newest ``keep_n`` snapshot
-    versions (the Iceberg ``expire_snapshots`` analogue for the
-    versioned-directory layout).  The CURRENT pointer's version is always
-    kept regardless of age — expiring the committed version would break
-    readers mid-flight.  Returns the versions removed.
-
-    At 100 TB this is the job that keeps a daily-snapshot table from
-    growing without bound; it only ever touches directories BEHIND the
-    pointer, so it is safe to run concurrently with readers of the
-    current version.
-    """
-    import shutil
-
-    cur = latest_version(table_dir)
-    versions = sorted(list_versions(table_dir))
-    keep = set(versions[-keep_n:]) if keep_n > 0 else set()
-    if cur is not None:
-        keep.add(cur)
-    removed = []
-    for v in versions:
-        if v not in keep:
-            shutil.rmtree(Path(table_dir) / f"v={v}", ignore_errors=True)
-            removed.append(v)
-    return removed
-
-
-def compact_snapshot(
-    spark: SparkSession, table_dir: str, target_files: int = 4
-) -> int:
-    """Small-file compaction: rewrite the CURRENT snapshot's data into
-    ``target_files`` files as a NEW committed version (the Iceberg
-    ``rewrite_data_files`` analogue).  Readers never see a half-compacted
-    table — the pointer flips atomically to the rewritten version, and
-    the old fragmented version remains until ``expire_snapshots`` removes
-    it.  A streaming sink that commits per micro-batch fragments its
-    table within hours at crawl scale; periodic compaction is what keeps
-    scan task counts sane.
-    """
-    df = read_latest(spark, table_dir).coalesce(target_files)
-    return write_snapshot(df, table_dir)

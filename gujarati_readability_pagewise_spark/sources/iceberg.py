@@ -1,20 +1,19 @@
-"""Iceberg table IO with a transparent snapshot-layout fallback.
+"""Iceberg table appends with a transparent snapshot-layout fallback.
 
 The north rule runs the pipeline "over Iceberg tables of Common-Crawl-style
-web pages".  This sandbox has no Iceberg runtime jars on the classpath, so
-every call site goes through this adapter instead of hard-coding a format:
+web pages".  Without Iceberg runtime jars on the classpath, the metrics
+append goes through this adapter instead of hard-coding a format:
 
 * **Real Iceberg** (cluster with ``--packages org.apache.iceberg:
   iceberg-spark-runtime-<spark>_<scala>`` and a catalog configured, see
   :func:`iceberg_spark_confs`): table refs look like ``cat.db.pages`` and
-  map to ``spark.read.table`` / ``df.writeTo(...).append()`` — snapshot
-  isolation, time travel (``VERSION AS OF``), hidden-partition pruning and
-  ``overwritePartitions`` come from Iceberg itself.
-* **Fallback** (this sandbox, plain filesystems): table refs are paths and
-  map to :mod:`..plans.snapshots` — versioned immutable directories with an
+  map to ``df.writeTo(...).append()`` — snapshot isolation and
+  hidden-partition pruning come from Iceberg itself.
+* **Fallback** (plain filesystems): table refs are paths and map to
+  :mod:`..plans.snapshots` — versioned immutable directories with an
   atomically-flipped pointer, which preserves the *contract* the engine
-  relies on (readers never see a half-written table; time travel by
-  version) minus Iceberg's file-level pruning.
+  relies on (readers never see a half-written table) minus Iceberg's
+  file-level pruning.
 
 Keeping the contract identical in both modes means the 100 TB deployment
 flips a config, not code.
@@ -30,10 +29,7 @@ __all__ = [
     "iceberg_spark_confs",
     "is_table_ref",
     "iceberg_enabled",
-    "read_table",
-    "read_version",
     "append_table",
-    "overwrite_table",
 ]
 
 
@@ -69,20 +65,6 @@ def iceberg_enabled(spark: SparkSession, ref: str) -> bool:
     return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
 
 
-def read_table(spark: SparkSession, ref: str) -> DataFrame:
-    """Latest committed snapshot of `ref` (catalog table or snapshot dir)."""
-    if iceberg_enabled(spark, ref):
-        return spark.read.table(ref)
-    return snapshots.read_latest(spark, ref)
-
-
-def read_version(spark: SparkSession, ref: str, version: int) -> DataFrame:
-    """Time travel: Iceberg ``VERSION AS OF`` / snapshot-dir version read."""
-    if iceberg_enabled(spark, ref):
-        return spark.read.option("versionAsOf", version).table(ref)
-    return snapshots.read_snapshot(spark, ref, version)
-
-
 def append_table(df: DataFrame, ref: str) -> None:
     """Append rows (metrics/manifest tables).  Fallback appends a snapshot
     holding old ∪ new so readers still flip atomically between versions."""
@@ -92,11 +74,4 @@ def append_table(df: DataFrame, ref: str) -> None:
     spark = df.sparkSession
     if snapshots.latest_version(ref) is not None:
         df = snapshots.read_latest(spark, ref).unionByName(df)
-    snapshots.write_snapshot(df, ref)
-
-
-def overwrite_table(df: DataFrame, ref: str) -> None:
-    if iceberg_enabled(df.sparkSession, ref):
-        df.writeTo(ref).createOrReplace()
-        return
     snapshots.write_snapshot(df, ref)

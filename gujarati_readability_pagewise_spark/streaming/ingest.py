@@ -9,8 +9,6 @@ Spark mapping for a crawl feed:
 * recrawl dedup: ``withWatermark(warc_ts) + dropDuplicates([url])`` —
   state is bounded by the watermark horizon,
 * windowed per-host arrival counts (the monitoring aggregate),
-* the same Arrow extraction kernel applied per micro-batch via
-  ``foreachBatch`` (exactly-once with an idempotent bucket sink),
 * incremental merges (SCD2 history, curation, anomalies, crawl schedule)
   that each run one ``_merge_touched`` step per micro-batch: append to a
   log, recompute only the partitions the batch touched.
@@ -31,7 +29,6 @@ __all__ = [
     "stream_pages",
     "dedup_recrawls",
     "windowed_host_counts",
-    "stream_extract",
     "scd2_stream_merge",
     "scd2_merge_batch",
     "curate_stream_merge",
@@ -64,25 +61,6 @@ def windowed_host_counts(
         .groupBy(w.alias("win"), host)
         .agg(F.count("*").alias("n_pages"), F.sum(F.length("html")).alias("n_bytes"))
     )
-
-
-def stream_extract(
-    pages: DataFrame,
-    model,
-    sink: Callable[[DataFrame, int], None],
-):
-    """Micro-batch extraction: the batch kernel inside foreachBatch.
-
-    ``sink(batch_df, epoch_id)`` receives the scored frame; pair with the
-    checkpointed bucket writer for exactly-once output.
-    """
-    from ..operators.udfs import with_extraction_and_score
-
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        scored = with_extraction_and_score(batch_df, model, include_spans=False)
-        sink(scored, epoch_id)
-
-    return pages.writeStream.foreachBatch(run)
 
 
 def _merge_touched(
@@ -120,9 +98,12 @@ def _merge_touched(
     """
     log_dir = f"{state_dir}/log"
     batch.write.mode("append").parquet(log_dir)
-    touched = [
-        r[part] for r in batch.select(part_expr.alias(part)).distinct().collect()
-    ]  # bounded: one row per touched partition
+    # bounded: one row per touched partition.  Sorted, so the IN list of
+    # the plan is the same on every run; a null never matches IN.
+    touched = sorted(
+        v for (v,) in batch.select(part_expr.alias(part)).distinct().collect()
+        if v is not None
+    )
     if not touched:
         return
     log = (
@@ -192,9 +173,6 @@ def curate_stream_merge(
     state_dir: str,
     key_col: str = "doc_id",
     text_col: str = "text",
-    langs: tuple[str, ...] = ("gu", "hi", "en"),
-    min_quality: float = 0.55,
-    length_band: tuple[int, int] = (80, 20000),
     n_buckets: int = 8,
 ):
     """Incrementally maintain a CURATED, exactly-deduped corpus from a
@@ -207,10 +185,7 @@ def curate_stream_merge(
     Returns the DataStreamWriter (caller starts/stops it).
     """
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        curate_merge_batch(
-            spark, batch_df, state_dir, key_col, text_col,
-            langs, min_quality, length_band, n_buckets,
-        )
+        curate_merge_batch(spark, batch_df, state_dir, key_col, text_col, n_buckets)
 
     return docs.writeStream.foreachBatch(merge)
 
@@ -221,9 +196,6 @@ def curate_merge_batch(
     state_dir: str,
     key_col: str = "doc_id",
     text_col: str = "text",
-    langs: tuple[str, ...] = ("gu", "hi", "en"),
-    min_quality: float = 0.55,
-    length_band: tuple[int, int] = (80, 20000),
     n_buckets: int = 8,
 ) -> None:
     """One merge step of ``curate_stream_merge`` (module-level so tests
@@ -231,9 +203,7 @@ def curate_merge_batch(
     from ..functions.textstats import curation_keep_expr
 
     def recompute(log: DataFrame) -> DataFrame:
-        kept = log.filter(
-            curation_keep_expr(F.col(text_col), langs, min_quality, length_band)
-        )
+        kept = log.filter(curation_keep_expr(F.col(text_col)))
         first = kept.groupBy(F.md5(F.col(text_col)).alias("_digest")).agg(
             F.min(key_col).alias(key_col)
         )

@@ -8,8 +8,9 @@ Usage::
 
 With ``--iceberg`` the session is configured for an Iceberg hadoop catalog
 (add ``--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<v>``
-to the spark-submit line); table refs like ``graft.db.metrics`` then hit
-real Iceberg via sources/iceberg.py.
+to the spark-submit line).  The flag configures the session only: the
+pipeline writes every output, the metrics table included, under
+``<out_root>`` as parquet paths, so no write reaches the catalog.
 
 The application file must use absolute imports (spark-submit runs it as a
 top-level script); the engine itself ships in the zip.

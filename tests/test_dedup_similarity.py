@@ -112,7 +112,7 @@ def test_verified_pairs_semi_join_below_aggregation(spark, docs):
 
 def test_simhash_near_pairs_hamming_ball(spark):
     """Banded blocking finds every pair within Hamming distance bands-1 and
-    verifies out candidates beyond max_hamming."""
+    verifies out candidates beyond it."""
     fp = spark.createDataFrame(
         pd.DataFrame(
             {"doc_id": [0, 1, 2, 3], "simhash": [0, 0b111, 0x1111, 0b1111]}
@@ -273,36 +273,13 @@ def test_unrolled_signature_and_cosine_bit_identical_to_fold(spark):
     assert (cc.c_unrolled == cc.c_fold).all()  # bitwise, not approx
 
 
-def test_decontaminate_removes_planted_leaks(spark, docs):
-    """A verbatim eval leak must be flagged and removed; clean docs
-    survive; the survivor set is the corpus anti-joined on flags."""
-    from gujarati_readability_pagewise_spark.operators.decontaminate import (
-        contaminated_pairs,
-        decontaminate,
-        word_ngrams,
-    )
-
-    eval_set = docs.filter(F.col("doc_id") == 0)  # doc 0 is the benchmark
-    pairs = contaminated_pairs(
-        word_ngrams(docs, n=5), word_ngrams(eval_set, n=5), min_common=3
-    ).toPandas()
-    flagged = set(pairs.corpus_id)
-    assert 0 in flagged and 1 in flagged  # doc 1 is a verbatim copy of 0
-    assert 2 in flagged  # near-dup shares plenty of 5-grams
-    assert 3 not in flagged and 4 not in flagged  # unrelated docs
-    clean = decontaminate(docs, eval_set, n=5, min_common=3)
-    survivors = {r["doc_id"] for r in clean.select("doc_id").collect()}
-    assert survivors == {3, 4} | ({5} - flagged)
-    assert flagged.isdisjoint(survivors)
-
-
 def test_word_ngrams_short_docs_yield_zero_grams(spark):
     """Docs with fewer than n whitespace tokens (routine in crawl corpora)
     must contribute zero n-grams, not crash: the unguarded form built
     sequence(1, 0) == [1, 0] and slice(toks, 0, n) throws
     INVALID_PARAMETER_VALUE.START on Spark 4.x."""
     from gujarati_readability_pagewise_spark.operators.decontaminate import (
-        decontaminate,
+        contaminated_pairs,
         word_ngrams,
     )
 
@@ -316,8 +293,8 @@ def test_word_ngrams_short_docs_yield_zero_grams(spark):
     ev = spark.createDataFrame(
         [(100, "two three four five six seven eight nine")], "doc_id int, text string"
     )
-    clean = decontaminate(docs, ev, n=8, min_common=1)
-    assert sorted(r.doc_id for r in clean.collect()) == [1, 2, 3]
+    pairs = contaminated_pairs(word_ngrams(docs, n=8), word_ngrams(ev, n=8))
+    assert [tuple(r) for r in pairs.collect()] == [(4, 100, 1)]
 
 
 @pytest.mark.parametrize(

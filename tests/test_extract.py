@@ -10,7 +10,6 @@ from gujarati_readability_pagewise_spark.functions.extract import (
     STATUS_EMPTY,
     STATUS_ERROR,
     STATUS_OK,
-    extract_spans,
     extract_text,
 )
 
@@ -112,7 +111,7 @@ def test_multi_block_order_and_spans():
     p2 = "બીજો ફકરો પણ ઘણા શબ્દો સાથે લાંબો બનાવેલો છે મિત્રો કાલે."
     r = extract_text(page(f"<p>{p1}</p><div>{p2}</div>"))
     assert r.text == p1 + "\n\n" + p2
-    assert extract_spans(page(f"<p>{p1}</p><div>{p2}</div>")) == [(0, p1), (1, p2)]
+    assert r.spans == [p1, p2]
 
 
 def test_deterministic_bytes():

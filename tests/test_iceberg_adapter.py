@@ -9,6 +9,7 @@ so a cluster flips config, not code).
 import pandas as pd
 import pytest
 
+from gujarati_readability_pagewise_spark.plans import snapshots
 from gujarati_readability_pagewise_spark.sources import iceberg as ice
 
 
@@ -31,17 +32,17 @@ def test_iceberg_confs_shape():
 def test_fallback_snapshot_roundtrip_and_time_travel(spark, tmp_path):
     ref = str(tmp_path / "metrics_table")
     df1 = spark.createDataFrame(pd.DataFrame({"k": [1, 2], "v": ["a", "b"]}))
-    ice.overwrite_table(df1, ref)
-    assert ice.read_table(spark, ref).count() == 2
+    ice.append_table(df1, ref)  # no committed version yet: creates v1
+    assert snapshots.read_latest(spark, ref).count() == 2
     df2 = spark.createDataFrame(pd.DataFrame({"k": [3], "v": ["c"]}))
     ice.append_table(df2, ref)
-    latest = ice.read_table(spark, ref).toPandas().sort_values("k")
+    latest = snapshots.read_latest(spark, ref).toPandas().sort_values("k")
     assert list(latest.k) == [1, 2, 3]
     # versions are immutable: v1 still readable after the append
-    v1 = ice.read_version(spark, ref, 1).toPandas().sort_values("k")
+    v1 = snapshots.read_snapshot(spark, ref, 1).toPandas().sort_values("k")
     assert list(v1.k) == [1, 2]
 
 
 def test_read_missing_table_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        ice.read_table(spark, str(tmp_path / "nope"))
+        snapshots.read_latest(spark, str(tmp_path / "nope"))

@@ -1,12 +1,11 @@
 """Payload-kind dispatch + ordered-span layout parse (north_star PDF clause).
 
-The PDF decode itself is stubbed (no PDF lib in this container — the fake is
-deterministic and clearly marked); the Spark plumbing, dispatch, ordering and
-byte-consistency with the golden HTML extractor are real and tested here.
+The PDF decode is a deterministic, clearly marked fake (no PDF library is a
+dependency); the Spark plumbing, dispatch, ordering and byte-consistency
+with the golden HTML extractor are real and tested here.
 """
 
 import pandas as pd
-import pytest
 
 from gujarati_readability_pagewise_spark.functions.extract import extract_text
 from gujarati_readability_pagewise_spark.functions.layout import (
@@ -33,13 +32,6 @@ def test_detect_kind_magic_bytes():
     assert detect_payload_kind(None) == "empty"
     assert detect_payload_kind(b"  \n <div>x</div>") == "html"
     assert detect_payload_kind(b"\xef\xbb\xbf<p>bom</p>") == "html"
-
-
-def test_pdf_real_parse_is_stubbed():
-    from gujarati_readability_pagewise_spark.functions.layout import _parse_pdf_real
-
-    with pytest.raises(NotImplementedError):
-        _parse_pdf_real(PDF)
 
 
 def test_html_spans_byte_consistent_with_golden_extractor():

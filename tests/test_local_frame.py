@@ -12,8 +12,9 @@ from gujarati_readability_pagewise_spark.session import local_frame
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "gujarati_readability_pagewise_spark"
 
-# every DDL the package passes to local_frame, with rows shaped like the
-# caller's (NULLs included where the type allows them)
+# every DDL the package passes to local_frame, plus two more int/string/
+# double tables, with rows shaped like the caller's (NULLs included where
+# the type allows them)
 CASES = [
     (MANIFEST_SCHEMA, []),
     ("stage string, n double", [("n_input", 500.0), ("t_curation", 1.25)]),

@@ -10,11 +10,9 @@ from gujarati_readability_pagewise_spark.functions.features import compute_featu
 from gujarati_readability_pagewise_spark.ml.train import default_model
 from gujarati_readability_pagewise_spark.operators.aggregate import (
     binary_metrics,
-    confusion_matrix,
     host_summary,
-    verify_metrics,
 )
-from gujarati_readability_pagewise_spark.operators.split import split_table, with_split
+from gujarati_readability_pagewise_spark.operators.split import with_split
 from gujarati_readability_pagewise_spark.operators.udfs import (
     with_extraction,
     with_extraction_and_score,
@@ -69,8 +67,14 @@ def test_split_is_leakage_free(spark, pages_df):
 
 
 def test_split_pure_function_of_key(spark, pages_df):
-    a = split_table(pages_df).toPandas().sort_values("url").reset_index(drop=True)
-    b = split_table(pages_df).toPandas().sort_values("url").reset_index(drop=True)
+    def split_of(df):
+        return (
+            with_split(df).select("url", "split").toPandas()
+            .sort_values("url").reset_index(drop=True)
+        )
+
+    a = split_of(pages_df)
+    b = split_of(pages_df.repartition(3))
     pd.testing.assert_frame_equal(a, b)
 
 
@@ -84,6 +88,12 @@ def test_host_summary_decision_rule(spark, pages_df, pages_pdf):
         assert row.host_prediction == (0 if row.avg_p > 0.5 else 1)
 
 
+def verify_metrics(scored, reported, tol=1e-3):
+    """Port of scripts/verify_metrics.py: recompute and compare within tol."""
+    fresh = binary_metrics(scored)
+    return all(abs(fresh[k] - reported[k]) <= tol for k in reported if k in fresh)
+
+
 def test_metrics_self_consistency(spark, pages_df, pages_pdf):
     """Port of the reference's verify_metrics.py check (SURVEY.md §5.1)."""
     model = default_model()
@@ -93,8 +103,7 @@ def test_metrics_self_consistency(spark, pages_df, pages_pdf):
     m = binary_metrics(scored)
     assert 0.8 <= m["accuracy"] <= 1.0  # model must actually work
     assert verify_metrics(scored, m, tol=1e-9)
-    cm = confusion_matrix(scored).toPandas()
-    assert cm["count"].sum() == m["n"]
+    assert scored.filter(F.col("label").isNotNull()).count() == m["n"]
 
 
 def test_corrupt_rows_never_fail(spark):

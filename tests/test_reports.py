@@ -1,18 +1,9 @@
-"""Report/metrics sinks: metrics table roundtrip, two-sheet report files."""
-
-import csv
-from pathlib import Path
+"""Report/metrics sinks: metrics table roundtrip and plot-data tables."""
 
 from pyspark.sql import functions as F
 
-from gujarati_readability_pagewise_spark.ml.train import default_model
-from gujarati_readability_pagewise_spark.operators.aggregate import host_summary
-from gujarati_readability_pagewise_spark.operators.udfs import (
-    with_extraction_and_score,
-)
 from gujarati_readability_pagewise_spark.plans.reports import (
     read_metrics,
-    write_book_report,
     write_metrics,
 )
 
@@ -27,22 +18,6 @@ def test_metrics_table_roundtrip(spark, tmp_path):
         (F.col("job_id") == "job1") & (F.col("metric") == "accuracy")
     ).collect()[0]["value"] == 0.9
     assert m.filter(F.col("created_at").isNotNull()).count() == 3
-
-
-def test_book_report_two_sheets(spark, pages_df, tmp_path):
-    scored = with_extraction_and_score(pages_df, default_model(), include_spans=False)
-    one_host = scored.filter(F.col("url").contains("big.example.gu"))
-    res = write_book_report(
-        one_host, host_summary(one_host), str(tmp_path / "rep")
-    )
-    assert res["format"] == "csv"  # openpyxl absent in this container
-    with open(res["page_predictions"]) as f:
-        rows = list(csv.DictReader(f))
-    assert len(rows) > 50
-    assert {"url", "pred_label", "p_nonreadable"} <= set(rows[0])
-    with open(res["summary"]) as f:
-        srows = list(csv.DictReader(f))
-    assert len(srows) == 1 and srows[0]["host"] == "big.example.gu"
 
 
 def test_roc_points_matches_numpy_reference(spark):
@@ -96,48 +71,3 @@ def test_prediction_histogram_partitions_all_rows(spark):
     assert h.bin.between(0, 19).all()
     assert (h.bin_hi - h.bin_lo - 0.05).abs().max() < 1e-12
 
-
-def test_prediction_scatter_jitter_bounded_and_seeded(spark):
-    import pandas as pd
-
-    from gujarati_readability_pagewise_spark.plans.reports import (
-        prediction_scatter,
-    )
-
-    pdf = pd.DataFrame({"label": [0, 1] * 100, "p_nonreadable": [0.3, 0.7] * 100})
-    df = spark.createDataFrame(pdf).repartition(2)
-    a = prediction_scatter(df, seed=42).toPandas()
-    b = prediction_scatter(df, seed=42).toPandas()
-    pd.testing.assert_frame_equal(
-        a.sort_values(["x_jitter", "y_jitter"]).reset_index(drop=True),
-        b.sort_values(["x_jitter", "y_jitter"]).reset_index(drop=True),
-    )  # seeded randn: deterministic
-    # jitter stays near its anchor (5-sigma bounds)
-    assert ((a.x_jitter - a.true_label).abs() < 0.25).all()
-    assert a.y_jitter.between(-0.1, 1.1).all()
-
-
-def test_cv_results_and_feature_importance_tables(spark):
-    import numpy as np
-
-    from gujarati_readability_pagewise_spark.ml.train import (
-        _default_training_data,
-        grid_search,
-    )
-    from gujarati_readability_pagewise_spark.plans.reports import (
-        cv_results_table,
-        feature_importance_table,
-    )
-
-    X, y = _default_training_data()
-    groups = np.array([f"g{i % 5}" for i in range(len(y))])
-    best, results = grid_search(X, y, groups, n_folds=3)
-    cv = cv_results_table(spark, results).toPandas()
-    assert len(cv) == len(results)
-    assert {"combo_idx", "params", "mean_score"} == set(cv.columns)
-    assert cv.mean_score.max() == best["mean_f1_pos0"]
-
-    fi = feature_importance_table(spark, default_model()).toPandas()
-    assert abs(fi.importance.sum() - 1.0) < 1e-9  # normalized
-    assert fi.iloc[0].importance == fi.importance.max()
-    assert fi.feature.notna().all()
