@@ -165,12 +165,10 @@ class RandomForest:
         self.class_weight = class_weight
         self.seed = seed
         self.trees: list[DecisionTree] = []
-        self.n_features_: int | None = None
 
     def fit(self, X: np.ndarray, y: np.ndarray) -> "RandomForest":
         X = np.asarray(X, dtype=np.float64)
         y = np.asarray(y, dtype=np.int32)
-        self.n_features_ = X.shape[1]
         n = len(X)
         if self.class_weight == "balanced":
             # sklearn convention: n / (n_classes * bincount)
@@ -249,16 +247,6 @@ class RandomForest:
         # class 1 (readable) wins ties, matching argmax over [p0, p1]
         proba = self.predict_proba(X)
         return (proba[:, 1] >= proba[:, 0]).astype(np.int32)
-
-    def feature_importances_(self) -> np.ndarray:
-        """Split-count importance (normalized) — A8 analogue."""
-        imp = np.zeros(self.n_features_ or 0, dtype=np.float64)
-        for tree in self.trees:
-            for f in tree.feature:
-                if f != _LEAF:
-                    imp[f] += 1.0
-        s = imp.sum()
-        return imp / s if s > 0 else imp
 
 
 def tree_to_sql(tree: DecisionTree, cols: list[str]) -> str:

@@ -10,14 +10,18 @@ One invocation:
 3. writes the host summary (one hash aggregate: its map-side partial
    aggregation hands a hot host's reducer one row per map task),
 4. appends eval metrics (if a labels table is given) and job metrics to
-   the metrics table,
-5. commits the extracted output as a new snapshot version.
+   the metrics table.
+
+The manifest (one row per completed bucket, with its job and transform
+ids) is the job's commit record: ``rows_out`` is its ``sum(n_rows)``, and
+a rerun over a complete manifest writes nothing but its metrics rows.
 
 This is SURVEY.md §7's target architecture as one runnable artifact.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,9 +30,8 @@ from pyspark.sql import functions as F
 from ..ml.train import default_model
 from ..operators.aggregate import binary_metrics, host_summary
 from ..operators.udfs import with_extraction_and_score
-from .checkpoint import run_checkpointed
+from .checkpoint import read_manifest, run_checkpointed
 from .reports import write_metrics
-from .snapshots import write_snapshot
 
 __all__ = ["run_pipeline"]
 
@@ -72,12 +75,15 @@ def run_pipeline(
     )
     scored = spark.read.parquet(f"{out_root}/extracted")
 
-    summary = host_summary(scored)
-    summary.write.mode("overwrite").parquet(f"{out_root}/host_summary")
-    # rows_out from the summary just written (its schema, so no footer read)
-    rows_out = spark.read.schema(summary.schema).parquet(
-        f"{out_root}/host_summary"
-    ).agg(F.sum("total_pages")).first()[0] or 0
+    summary_dir = f"{out_root}/host_summary"
+    # no bucket changed: the committed summary stands.  It is rewritten when
+    # no _SUCCESS marker shows it committed (a fresh root, a crash before it
+    # landed, or a remote path that os.path cannot see).
+    if n_done or not os.path.exists(f"{summary_dir}/_SUCCESS"):
+        host_summary(scored).write.mode("overwrite").parquet(summary_dir)
+    rows_out = read_manifest(spark, f"{out_root}/manifest").agg(
+        F.sum("n_rows")
+    ).first()[0] or 0
 
     metrics: dict[str, float] = {
         "buckets_processed": float(n_done),
@@ -88,6 +94,5 @@ def run_pipeline(
         labeled = scored.join(labels.select("url", "label"), "url", "left")
         metrics.update(binary_metrics(labeled))
     write_metrics(spark, metrics, job_id, f"{out_root}/metrics")
-    snap = write_snapshot(scored, f"{out_root}/extracted_snapshots")
-    return {"job_id": job_id, "snapshot": snap, **metrics}
+    return {"job_id": job_id, **metrics}
 

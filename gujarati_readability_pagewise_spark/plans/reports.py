@@ -33,19 +33,11 @@ METRICS_SCHEMA = "job_id string, metric string, value double, created_at timesta
 def write_metrics(
     spark: SparkSession, metrics: dict[str, float], job_id: str, path: str
 ) -> None:
-    """Append one row per (job, metric).  ``path`` may be an Iceberg catalog
-    ref (``cat.db.metrics`` — real transactional appends on a cluster, see
-    sources/iceberg.py) or a filesystem dir (parquet append)."""
-    from ..sources import iceberg as ice
-
+    """Append one row per (job, metric) to the parquet table at ``path``."""
     rows = [(job_id, k, float(v)) for k, v in metrics.items()]
-    df = local_frame(
+    local_frame(
         spark, rows, "job_id string, metric string, value double"
-    ).withColumn("created_at", F.current_timestamp())
-    if ice.is_table_ref(path):
-        ice.append_table(df, path)
-    else:
-        df.write.mode("append").parquet(path)
+    ).withColumn("created_at", F.current_timestamp()).write.mode("append").parquet(path)
 
 
 def read_metrics(spark: SparkSession, path: str) -> DataFrame:

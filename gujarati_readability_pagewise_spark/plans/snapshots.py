@@ -1,73 +1,18 @@
-"""Versioned-snapshot tables: race-free "read the newest" (SURVEY.md §2.1 S6).
+"""Content-version history of a re-crawled table (slowly changing
+dimension, type 2).
 
-The reference discovers its newest artifacts by glob + max(mtime)
-(``/root/reference/scripts/train_pagewise_xgboost.py:88-92``,
-``predict_single_book.py:316-323``) — racy under concurrent writers and
-clock skew.  The graft's replacement is a poor-man's Iceberg:
-
-* each write lands in ``table_dir/v=<N>/`` (immutable once the pointer
-  flips);
-* ``_latest.json`` names the current version and is replaced via
-  write-temp + ``os.replace`` (atomic on POSIX) — readers see either the
-  old or the new snapshot, never a half-written one;
-* time travel = ``read_snapshot(version=k)``.
-
-(With real Iceberg jars on the classpath this module is replaced by
-``spark.read.option('snapshot-id', ...)``; the contract is identical.)
+``scd2_history`` turns a fetch log (one row per url and fetch, with a
+content fingerprint) into one row per content version with its validity
+period.  The ``scd2_url_history`` and ``streaming_scd2`` contract queries
+run it, the latter through ``streaming/ingest.scd2_stream_merge``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-from pathlib import Path
+from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame, SparkSession
-
-__all__ = [
-    "write_snapshot",
-    "read_latest",
-    "read_snapshot",
-    "latest_version",
-    "scd2_history",
-]
-
-
-def _pointer(table_dir: str) -> Path:
-    return Path(table_dir) / "_latest.json"
-
-
-def latest_version(table_dir: str) -> int | None:
-    p = _pointer(table_dir)
-    if not p.exists():
-        return None
-    return int(json.loads(p.read_text())["version"])
-
-
-def write_snapshot(df: DataFrame, table_dir: str) -> int:
-    """Write df as the next version and atomically flip the pointer."""
-    cur = latest_version(table_dir)
-    nxt = (cur or 0) + 1
-    target = Path(table_dir) / f"v={nxt}"
-    df.write.mode("overwrite").parquet(str(target))
-    tmp = _pointer(table_dir).with_suffix(".json.tmp")
-    tmp.write_text(
-        json.dumps({"version": nxt, "path": str(target), "committed_at": time.time()})
-    )
-    os.replace(tmp, _pointer(table_dir))  # atomic flip
-    return nxt
-
-
-def read_snapshot(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
-    return spark.read.parquet(str(Path(table_dir) / f"v={version}"))
-
-
-def read_latest(spark: SparkSession, table_dir: str) -> DataFrame:
-    v = latest_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    return read_snapshot(spark, table_dir, v)
+__all__ = ["scd2_history"]
 
 
 def scd2_history(
@@ -93,9 +38,6 @@ def scd2_history(
     lead for the validity horizon after the collapse filter) — so the cost
     is one shuffle of (key, ts, fp), never the payloads.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
     w = W.partitionBy(key_col).orderBy(ts_col)
     changed = (
         fetches.select(key_col, ts_col, fp_col)

@@ -1,36 +1,15 @@
-"""Iceberg table appends with a transparent snapshot-layout fallback.
+"""Session confs for an Iceberg hadoop catalog.
 
 The north rule runs the pipeline "over Iceberg tables of Common-Crawl-style
-web pages".  Without Iceberg runtime jars on the classpath, the metrics
-append goes through this adapter instead of hard-coding a format:
-
-* **Real Iceberg** (cluster with ``--packages org.apache.iceberg:
-  iceberg-spark-runtime-<spark>_<scala>`` and a catalog configured, see
-  :func:`iceberg_spark_confs`): table refs look like ``cat.db.pages`` and
-  map to ``df.writeTo(...).append()`` — snapshot isolation and
-  hidden-partition pruning come from Iceberg itself.
-* **Fallback** (plain filesystems): table refs are paths and map to
-  :mod:`..plans.snapshots` — versioned immutable directories with an
-  atomically-flipped pointer, which preserves the *contract* the engine
-  relies on (readers never see a half-written table) minus Iceberg's
-  file-level pruning.
-
-Keeping the contract identical in both modes means the 100 TB deployment
-flips a config, not code.
+web pages".  ``jobs/extract_pipeline.py --iceberg <warehouse>`` splices
+these confs into its session; the Iceberg runtime jars come from the
+spark-submit line.  Every pipeline output is still a parquet path under
+``out_root``, so no write goes through the catalog yet.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..plans import snapshots
-
-__all__ = [
-    "iceberg_spark_confs",
-    "is_table_ref",
-    "iceberg_enabled",
-    "append_table",
-]
+__all__ = ["iceberg_spark_confs"]
 
 
 def iceberg_spark_confs(catalog: str = "graft", warehouse: str = "/tmp/graft_wh") -> dict:
@@ -50,28 +29,3 @@ def iceberg_spark_confs(catalog: str = "graft", warehouse: str = "/tmp/graft_wh"
         f"spark.sql.catalog.{catalog}.type": "hadoop",
         f"spark.sql.catalog.{catalog}.warehouse": warehouse,
     }
-
-
-def is_table_ref(ref: str) -> bool:
-    """Catalog table refs are dotted names; everything else is a path."""
-    return "/" not in ref and "." in ref
-
-
-def iceberg_enabled(spark: SparkSession, ref: str) -> bool:
-    """True when `ref` is a catalog table AND its catalog is configured."""
-    if not is_table_ref(ref):
-        return False
-    catalog = ref.split(".", 1)[0]
-    return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
-
-
-def append_table(df: DataFrame, ref: str) -> None:
-    """Append rows (metrics/manifest tables).  Fallback appends a snapshot
-    holding old ∪ new so readers still flip atomically between versions."""
-    if iceberg_enabled(df.sparkSession, ref):
-        df.writeTo(ref).append()
-        return
-    spark = df.sparkSession
-    if snapshots.latest_version(ref) is not None:
-        df = snapshots.read_latest(spark, ref).unionByName(df)
-    snapshots.write_snapshot(df, ref)

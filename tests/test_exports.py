@@ -104,6 +104,8 @@ REACHED_BY_DESIGN = {
     "load_model",
     # the typed reader of the metrics table that both plans write
     "read_metrics",
+    # the per-tree oracle of predict_proba's arena walk; tree_to_sql mirrors it
+    "DecisionTree.predict_p0",
 }
 
 
@@ -126,6 +128,16 @@ def _loads(node, pkg_aliases):
     return out
 
 
+def _attrs(node):
+    """Attribute names that code under ``node`` loads, ``x.name`` for any
+    ``x``: each counts as a call of every method with that name."""
+    return {
+        n.attr
+        for n in ast.walk(node)
+        if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)
+    }
+
+
 def _pkg_aliases(tree):
     """Names an import from this package binds in ``tree``; one may be a
     module, so its attributes are loads of that module's names."""
@@ -145,15 +157,18 @@ def _pkg_aliases(tree):
 
 
 def test_every_public_name_reached_outside_tests():
-    """Every ``__all__`` name and public top-level function or class of a
-    package module is loaded, transitively, from the roots of the module
-    test, so no function survives that only tests call.  Names are matched
-    without their module, which can only over-count."""
+    """Every ``__all__`` name, public top-level function or class and
+    public method of a package module is loaded, transitively, from the
+    roots of the module test, so no function survives that only tests
+    call.  Names are matched without their module, and a method by any
+    attribute load of its name, which can only over-count."""
     root = Path(pkg.__file__).resolve().parents[1]
     reached = set(REACHED_BY_DESIGN)
+    attrs = set()
     for path in _roots(root):
         tree = ast.parse(path.read_text(), filename=str(path))
         reached |= _loads(tree, _pkg_aliases(tree))
+        attrs |= _attrs(tree)
     bodies = {}
     public = []
     for path in (root / pkg.__name__).rglob("*.py"):
@@ -162,21 +177,36 @@ def test_every_public_name_reached_outside_tests():
         module = ".".join(path.relative_to(root / pkg.__name__).with_suffix("").parts)
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-                bodies.setdefault(node.name, set()).update(_loads(node, aliases))
+                loads, body_attrs = bodies.setdefault(node.name, (set(), set()))
+                loads.update(_loads(node, aliases))
+                body_attrs.update(_attrs(node))
                 if not node.name.startswith("_"):
                     public.append((module, node.name))
+                if isinstance(node, ast.ClassDef):
+                    public += [
+                        (module, f"{node.name}.{f.name}")
+                        for f in node.body
+                        if isinstance(f, ast.FunctionDef) and not f.name.startswith("_")
+                    ]
             elif any(getattr(t, "id", None) == "__all__" for t in getattr(node, "targets", ())):
                 public += [(module, n) for n in ast.literal_eval(node.value)]
             else:
                 # module-level code runs on import, and every module is imported
                 reached |= _loads(node, aliases)
+                attrs |= _attrs(node)
     todo = list(reached)
     while todo:
-        for name in bodies.get(todo.pop(), ()):
+        loads, body_attrs = bodies.get(todo.pop(), ((), ()))
+        attrs.update(body_attrs)
+        for name in loads:
             if name not in reached:
                 reached.add(name)
                 todo.append(name)
-    unreached = sorted({f"{m}.{n}" for m, n in public if n not in reached})
+    unreached = sorted({
+        f"{m}.{n}" for m, n in public
+        # a method ``Class.name`` is also reached by any load of ``x.name``
+        if n not in reached and n.partition(".")[2] not in attrs
+    })
     assert len(public) > 200, len(public)
     assert not unreached, "\n".join(unreached)
 

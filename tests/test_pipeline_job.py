@@ -1,15 +1,25 @@
-"""End-to-end production pipeline: extract -> host summary -> metrics -> snapshot."""
+"""End-to-end production pipeline: extract -> host summary -> metrics,
+committed by the manifest; and the release job run on its output."""
 
+import ast
+import hashlib
+import os
 import random
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from gujarati_readability_pagewise_spark.plans.pipeline import run_pipeline
-from gujarati_readability_pagewise_spark.plans.snapshots import read_latest
 from gujarati_readability_pagewise_spark.plans.reports import read_metrics
-from gujarati_readability_pagewise_spark.sources.pages import gen_labels_pdf
+from gujarati_readability_pagewise_spark.sources.pages import (
+    PAGES_SCHEMA_DDL,
+    gen_labels_pdf,
+    gen_pages_pdf,
+)
 
 
 def test_run_pipeline_end_to_end(spark, pages_df, pages_pdf, tmp_path):
@@ -24,9 +34,80 @@ def test_run_pipeline_end_to_end(spark, pages_df, pages_pdf, tmp_path):
     assert summary.filter(F.col("host") == "big.example.gu").count() == 1
     m = read_metrics(spark, out + "/metrics")
     assert m.filter(F.col("job_id") == "jt").count() >= 8
-    snap = read_latest(spark, out + "/extracted_snapshots")
-    assert snap.count() == len(pages_pdf)
-    assert res["snapshot"] == 1
+    assert spark.read.parquet(out + "/extracted").count() == len(pages_pdf)
+
+
+def _files(root):
+    """Every file under ``root`` by relative path: its bytes' sha256 and mtime."""
+    return {
+        str(p.relative_to(root)): (hashlib.sha256(p.read_bytes()).hexdigest(), p.stat().st_mtime_ns)
+        for p in Path(root).rglob("*")
+        if p.is_file()
+    }
+
+
+def test_rerun_commits_nothing_new(spark, pages_df, tmp_path):
+    """A rerun over a complete manifest processes no bucket, reports the
+    same ``rows_out``, and adds or changes no file except new ``metrics/``
+    rows: the manifest is the commit, and nothing is copied again."""
+    out = str(tmp_path / "job")
+    first = run_pipeline(spark, pages_df, out, n_buckets=4, job_id="r1")
+    before = _files(out)
+    again = run_pipeline(spark, pages_df, out, n_buckets=4, job_id="r2")
+    after = _files(out)
+    assert again["buckets_processed"] == 0
+    assert again["rows_out"] == first["rows_out"] == pages_df.count()
+    assert set(before) <= set(after)
+    added = sorted(set(after) - set(before))
+    assert added and all(p.startswith("metrics/") for p in added), added
+    # the metrics append also rewrites that table's _SUCCESS marker
+    changed = sorted(p for p in before if before[p] != after[p])
+    assert set(changed) <= {"metrics/_SUCCESS", "metrics/._SUCCESS.crc"}, changed
+    # a summary that never committed (a crash after the last bucket) is
+    # rewritten by the rerun that finds every bucket done
+    want = spark.read.parquet(f"{out}/host_summary").toPandas()
+    (Path(out) / "host_summary" / "_SUCCESS").unlink()
+    assert run_pipeline(spark, pages_df, out, n_buckets=4, job_id="r3")["buckets_processed"] == 0
+    assert (Path(out) / "host_summary" / "_SUCCESS").exists()
+    got = spark.read.parquet(f"{out}/host_summary").toPandas()
+    # float sums may add in another order: equal to rounding, NaN == NaN
+    pd.testing.assert_frame_equal(
+        got.sort_values("host", ignore_index=True), want.sort_values("host", ignore_index=True),
+        check_exact=False, rtol=1e-12,
+    )
+
+
+def _run_job(script, *args):
+    """Run a job script in a fresh, small Python process; return its
+    ``<NAME>_RESULT:`` dict."""
+    root = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, env.get("PYTHONPATH")]))
+    done = subprocess.run(
+        [sys.executable, f"jobs/{script}", *args], env=env, cwd=root,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    line = next(ln for ln in done.stdout.splitlines() if "_RESULT: " in ln)
+    return ast.literal_eval(line.split("_RESULT: ", 1)[1])
+
+
+def test_release_job_runs_on_pipeline_output(spark, tmp_path):
+    """The two jobs compose: ``release_job.py`` keys the pipeline's
+    url-keyed ``extracted/`` by ``url``, releases from every extracted row,
+    and releases only extracted urls."""
+    pdf = gen_pages_pdf(200, seed=11)[["url", "warc_ts", "html", "text", "lang"]]
+    spark.createDataFrame(pdf, schema=PAGES_SCHEMA_DDL).write.parquet(str(tmp_path / "pages"))
+    pipe = _run_job("extract_pipeline.py", str(tmp_path / "pages"), str(tmp_path / "pipe"))
+    rel = _run_job("release_job.py", str(tmp_path / "pipe" / "extracted"), str(tmp_path / "rel"))
+    assert pipe["rows_out"] == 200
+    assert rel["n_input"] == pipe["rows_out"]
+    assert rel["n_released"] > 0
+
+    def urls(table):
+        return {r["url"] for r in spark.read.parquet(str(tmp_path / table)).select("url").collect()}
+
+    assert urls("rel/released") <= urls("pipe/extracted")
 
 
 def test_host_summary_schema_does_not_depend_on_skew(spark, pages_df, tmp_path):

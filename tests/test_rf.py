@@ -57,14 +57,6 @@ def test_predict_matches_proba_argmax():
     np.testing.assert_array_equal(m.predict(X), (p[:, 1] >= p[:, 0]).astype(np.int32))
 
 
-def test_feature_importances_normalized():
-    X, y = _toy()
-    m = RandomForest(n_estimators=8, seed=5).fit(X, y)
-    imp = m.feature_importances_()
-    assert abs(imp.sum() - 1.0) < 1e-9
-    assert imp[0] == imp.max()  # X0 is the dominant signal
-
-
 def test_forest_to_sql_bit_identical_to_numpy():
     """The decision-path SQL export (the pipeline_score_summary oracle's
     core) must reproduce predict_proba/predict BIT-FOR-BIT on the full

@@ -1,35 +1,4 @@
-"""Snapshot tables: versioning, atomic pointer, time travel."""
-
-from pathlib import Path
-
-import pytest
-from pyspark.sql import functions as F
-
-from gujarati_readability_pagewise_spark.plans.snapshots import (
-    latest_version,
-    read_latest,
-    read_snapshot,
-    write_snapshot,
-)
-
-
-def test_snapshot_versioning_and_latest(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    df1 = spark.range(10).withColumn("tag", F.lit("v1"))
-    df2 = spark.range(20).withColumn("tag", F.lit("v2"))
-    assert latest_version(t) is None
-    with pytest.raises(FileNotFoundError):
-        read_latest(spark, t)
-    assert write_snapshot(df1, t) == 1
-    assert write_snapshot(df2, t) == 2
-    assert latest_version(t) == 2
-    assert sorted(d.name for d in Path(t).glob("v=*")) == ["v=1", "v=2"]
-    latest = read_latest(spark, t)
-    assert latest.count() == 20
-    assert latest.select("tag").distinct().collect()[0]["tag"] == "v2"
-    # time travel: the old snapshot is still intact
-    old = read_snapshot(spark, t, 1)
-    assert old.count() == 10
+"""SCD2 content-version history of a re-crawl fetch log."""
 
 
 def test_scd2_history_collapses_unchanged_fetches(spark):
